@@ -73,13 +73,7 @@ object RewriteBench {
     val idx = Ann.readIvf(spark, idxDir)
     val listSizes = idx.assigned.groupBy(col("centroid_id")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    def cosc(a: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * qVec(i); na += a(i) * a(i); nb += qVec(i) * qVec(i); i += 1 }
-      if (na == 0 || nb == 0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val ranked = idx.centers.zipWithIndex.map { case (c, i) => (i, cosc(c)) }
-      .sortBy { case (i, s) => (-s, i) }.map(_._1)
+    val ranked = Ann.rankCentroids(idx.centers, qVec).map(_._1)
     val probes = Seq(1, 2, 4, 16).filter(_ <= nCentroids).map { np =>
       spark.conf.set(AnnTopKRewrite.ConfKey, "true")
       spark.conf.set(AnnTopKRewrite.NprobeKey, np.toString)

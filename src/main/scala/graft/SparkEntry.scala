@@ -3207,20 +3207,11 @@ object SparkEntry {
       .orderBy(col("vec_id"))
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    def cos(a: Array[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
     val margins = Seq(50, 100, 200, 400)
     // q221's membership rule on 6dp-rounded scores, maxProbe 8
     val probeRows = for {
       (qid, qv) <- qs
-      ranked = index.centers.zipWithIndex
-        .map { case (c, i) => (i, cos(c, qv)) }
-        .sortBy { case (i, sc) => (-sc, i) }
+      ranked = Ann.rankCentroids(index.centers, qv)
       best = BigDecimal(ranked.head._2)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       m <- margins
@@ -6415,14 +6406,7 @@ object SparkEntry {
       .getSeq[Double](0)
     val index = ivfIndexFor(s, dir)
     nprobeCentersForOracle = index.centers
-    def cos(a: Array[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val prank: Map[Int, Int] = index.centers.zipWithIndex
-      .map { case (c, i) => (i, cos(c, qVec)) }
-      .sortBy { case (i, sc) => (-sc, i) }
+    val prank: Map[Int, Int] = Ann.rankCentroids(index.centers, qVec)
       .zipWithIndex.map { case ((cid, _), r) => cid -> (r + 1) }.toMap
     val prankCol = element_at(
       typedLit(prank.map { case (k, v) => (k.toLong, v) }),

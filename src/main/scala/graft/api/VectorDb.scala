@@ -2,7 +2,7 @@ package graft.api
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder
@@ -68,17 +68,22 @@ final class VectorDb(spark: SparkSession, path: String,
 
   /** S7/F5: validate (embedding + content present) and append. Duplicate
     * content accumulates — append is the reference's contract (§2.9.5),
-    * dedup is an explicit downstream operator (graft.dedup).
+    * dedup is an explicit downstream operator (graft.dedup). The added
+    * and dropped counts are observed DURING the write pass — no count
+    * job over the batch.
     */
   def addDocuments(docs: DataFrame): AddResult = {
     require(docs.columns.contains("embedding") && docs.columns.contains("content"),
       "documents need `embedding` and `content` columns " +
         s"(got: ${docs.columns.mkString(", ")})")
-    val n = docs.count()
-    val valid = docs.filter(col("embedding").isNotNull && col("content").isNotNull)
-    val nValid = valid.count()
-    valid.write.mode("append").parquet(path)
-    AddResult(nValid, n - nValid)
+    val isValid = col("embedding").isNotNull && col("content").isNotNull
+    val obs = Observation()
+    docs.observe(obs, count(lit(1)).as("n"), count(when(isValid, 1)).as("added"))
+      .filter(isValid)
+      .write.mode("append").parquet(path)
+    val counts = obs.get
+    val added = counts("added").asInstanceOf[Long]
+    AddResult(added, counts("n").asInstanceOf[Long] - added)
   }
 
   /** Q1-Q5: embed the query text with the store's embedder and run the
@@ -125,11 +130,6 @@ final class VectorDb(spark: SparkSession, path: String,
     DbStats(base.getLong(0), base.getLong(1), base.getDouble(2), avg, byExt)
   }
 
-  /** S8: timestamped backup copy, then truncate. Returns the backup
-    * location (None when there was nothing to back up). The backup is a
-    * file-level copy — the parquet analog of the reference's
-    * `documents.json.backup_<ts>` (`mock_vector_db_api.py:66-74`).
-    */
   /** Depth-first listing of everything under `root` except `root` itself,
     * deepest entries last — reverse it to delete children before parents.
     * A partitioned parquet write produces subdirectories, so both backup
@@ -222,6 +222,11 @@ final class VectorDb(spark: SparkSession, path: String,
     repaired
   }
 
+  /** S8: timestamped backup copy, then truncate. Returns the backup
+    * location (None when there was nothing to back up). The backup is a
+    * file-level copy — the parquet analog of the reference's
+    * `documents.json.backup_<ts>` (`mock_vector_db_api.py:66-74`).
+    */
   def clear(backup: Boolean = true): Option[String] = {
     if (!Files.exists(storeDir)) return None
     val entries = walkTree(storeDir)

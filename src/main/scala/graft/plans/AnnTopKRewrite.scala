@@ -278,38 +278,10 @@ object AnnTopKRewrite extends Rule[LogicalPlan] {
       // eager clearCache() in Ann.writeIvf.
       Some(centersCache.compute(centroidsDir, (_, cur) => {
         if (cur != null && cur._1 == stamp) cur
-        else {
-          val byId = org.apache.spark.sql.SparkSession.active
-            .read.parquet(centroidsDir).collect()
-            .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-          require(byId.nonEmpty, s"IVF centroids at $centroidsDir are empty")
-          val k = byId.keys.max + 1
-          val dim = byId.values.head.length
-          // readIvf's tolerant dense layout: gaps get zero vectors, which
-          // cosine-rank last and are never probed first
-          (stamp, Array.tabulate(k)(i => byId.getOrElse(i, new Array[Double](dim))))
-        }
+        else (stamp, graft.search.Ann.readCenters(
+          org.apache.spark.sql.SparkSession.active, centroidsDir))
       })._2)
     } catch { case _: Exception => None }
-
-  /** ivfSearch's probe ranking, verbatim: centroid cosine desc, id asc. */
-  private def rankProbes(centers: Array[Array[Double]],
-                         q: Array[Double], n: Int): Seq[Int] = {
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length && i < b.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      var j = i
-      while (j < a.length) { na += a(j) * a(j); j += 1 }
-      j = i
-      while (j < b.length) { nb += b(j) * b(j); j += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    centers.zipWithIndex.map { case (c, i) => (i, cos(c, q)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(n).map(_._1).toSeq
-  }
 
   private def ivfProbeFilter(c: CosineSimilarity,
                              child: LogicalPlan): Option[Expression] =
@@ -321,8 +293,12 @@ object AnnTopKRewrite extends Rule[LogicalPlan] {
           cdirStamp <- indexCentroidsDir(child)
           centers <- centersFor(cdirStamp._1, cdirStamp._2)
           qv <- evalVector(q)
+          // a query of another dimension cannot rank this index's
+          // centers: no IVF probe (as when the centers are unreadable)
+          // rather than a planner failure
+          if centers.forall(_.length == qv.length)
         } yield {
-          val probes = rankProbes(centers, qv, nprobe)
+          val probes = graft.search.Ann.probeIds(centers, qv.toSeq, nprobe)
           val lits: Seq[Expression] =
             if (cid.dataType == IntegerType) probes.map(Literal(_))
             else probes.map(p => Literal(p.toLong))

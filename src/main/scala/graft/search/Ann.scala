@@ -829,10 +829,6 @@ object Ann {
     }.foldLeft(0L)(math.max)
   }
 
-  /** Parse a committed manifest (default: latest). Fails with a layout
-    * diagnosis — pre-v3 index, empty dir, non-index path — rather than
-    * Spark's raw path/schema error.
-    */
   /** IVF manifest files opened since JVM start — the observability
     * hook AnnSpec's writer-entry cost assertion counts (a mutation's
     * metadata cost must stay O(1) in index age, VERDICT r18 item 3).
@@ -840,6 +836,10 @@ object Ann {
   private[graft] val ivfManifestReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Parse a committed manifest (default: latest). Fails with a layout
+    * diagnosis — pre-v3 index, empty dir, non-index path — rather than
+    * Spark's raw path/schema error.
+    */
   private[graft] def readIvfManifest(
       spark: org.apache.spark.sql.SparkSession, path: String,
       version: Long = -1L): IvfManifest = {
@@ -1022,20 +1022,37 @@ object Ann {
     graft.plans.AnnTopKRewrite.clearCache()
   }
 
-  /** The driver-resident centroid table of a committed version. */
-  private def readCentersOf(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            m: IvfManifest): Array[Array[Double]] = {
-    val byId = spark.read.parquet(s"$path/${m.centroids}").collect()
+  /** Decode a persisted centroid table (`centroidsDir`, one row per
+    * (centroid_id, centroid)) into the driver-resident dense array
+    * indexed by centroid_id. Ids are contiguous from training, but gaps
+    * are tolerated: a missing id gets a zero vector, which cosine-scores
+    * 0 and is never probed first. The one decoder behind [[readIvf]],
+    * the writers and [[graft.plans.AnnTopKRewrite]].
+    */
+  private[graft] def readCenters(spark: org.apache.spark.sql.SparkSession,
+                                 centroidsDir: String): Array[Array[Double]] = {
+    val byId = spark.read.parquet(centroidsDir).collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .toMap
-    require(byId.nonEmpty, s"IVF store at $path has no centroids")
-    // dense array indexed by centroid_id (ids are contiguous from
-    // training, but tolerate gaps: a missing id gets a zero vector,
-    // which cosine-scores 0 and is never probed first)
+    require(byId.nonEmpty, s"IVF centroid table at $centroidsDir is empty")
     val k = byId.keys.max + 1
     val dim = byId.values.head.length
     Array.tabulate(k)(i => byId.getOrElse(i, new Array[Double](dim)))
+  }
+
+  /** Resolve ONE committed version (default: latest) into its manifest
+    * plus the index it names: centers and inverted lists (minus
+    * tombstones, anti-joined on `idCol`) both come from that manifest,
+    * so a commit landing mid-probe can never pair one version's centers
+    * with another's lists. Every persisted-layout probe resolves
+    * through here exactly once.
+    */
+  private def resolveIvf(spark: org.apache.spark.sql.SparkSession,
+                         path: String, version: Long,
+                         idCol: String): (IvfManifest, IvfIndex) = {
+    val m = readIvfManifest(spark, path, version)
+    (m, IvfIndex(listsMinusTombstones(spark, path, m, idCol),
+      readCenters(spark, s"$path/${m.centroids}")))
   }
 
   /** Reload a persisted IVF index — a PURE read: one manifest resolve,
@@ -1043,16 +1060,13 @@ object Ann {
     * never race a writer's commit; under the manifest protocol it
     * cannot). `version` opts into time travel to any retained commit.
     * The centroid table is driver-sized (nCentroids rows); the
-    * inverted lists stay distributed and partition-prunable.
+    * inverted lists stay distributed and partition-prunable. Deletes
+    * ride along: an index with tombstone dirs reloads as the surviving
+    * rows (no extra plan node when there are none).
     */
   def readIvf(spark: org.apache.spark.sql.SparkSession,
-              path: String, version: Long = -1L): IvfIndex = {
-    val m = readIvfManifest(spark, path, version)
-    // deletes ride along: an index with tombstone dirs reloads as the
-    // surviving rows (no extra plan node when there are none)
-    val assigned = listsMinusTombstonesOf(spark, path, m, "vec_id")
-    IvfIndex(assigned, readCentersOf(spark, path, m))
-  }
+              path: String, version: Long = -1L): IvfIndex =
+    resolveIvf(spark, path, version, "vec_id")._2
 
   // =========================================================================
   // Product quantization (Jégou et al., "Product Quantization for Nearest
@@ -1273,8 +1287,8 @@ object Ann {
                   batch: DataFrame, vecCol: String = "embedding"): Unit = {
     recoverIvf(spark, path) // writer entry: sweep crashed-commit orphans
     val m = readIvfManifest(spark, path)
-    val assigned = withIndexSchema(spark, path, m,
-      assignToCenters(batch, readCentersOf(spark, path, m), vecCol), vecCol)
+    val assigned = withIndexSchema(spark, path, m, assignToCenters(batch,
+      readCenters(spark, s"$path/${m.centroids}"), vecCol), vecCol)
     val v = m.version + 1
     val gen = ivfGenDir(v)
     assigned.write.partitionBy("centroid_id").mode("overwrite")
@@ -1632,6 +1646,35 @@ object Ann {
         col("db_ratio"))
   }
 
+  /** Driver-side cosine over `a`'s length; 0 when either side is all
+    * zeros. The one driver cosine of the engine: probe ranking, MMR
+    * diversity and the centroid tables oracles embed as literals.
+    */
+  private[graft] def cos(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** The one IVF probe-ranking rule: every centroid as (id, cosine to
+    * the query), by cosine desc then id asc; a probe takes a prefix. A
+    * query whose dimension differs from the index's fails here with
+    * both dimensions named.
+    */
+  private[graft] def rankCentroids(centers: Array[Array[Double]],
+                                   queryVec: Seq[Double]): Array[(Int, Double)] = {
+    val q = queryVec.toArray
+    require(centers.forall(_.length == q.length),
+      s"query dimension ${q.length} != index dimension ${centers.head.length}")
+    centers.zipWithIndex.map { case (c, i) => (i, cos(c, q)) }
+      .sortBy { case (i, s) => (-s, i) }
+  }
+
+  /** The `n` best probes of [[rankCentroids]]. */
+  private[graft] def probeIds(centers: Array[Array[Double]],
+                              queryVec: Seq[Double], n: Int): Seq[Int] =
+    rankCentroids(centers, queryVec).take(n).map(_._1).toSeq
+
   /** IVF probe: rank centroids against the query DRIVER-side (the
     * centroid table is tiny), then score only the rows of the `nprobe`
     * nearest inverted lists — a partition-pruned scan when the assigned
@@ -1640,18 +1683,10 @@ object Ann {
   def ivfSearch(index: IvfIndex, queryVec: Seq[Double], k: Int = 5,
                 nprobe: Int = 2, idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    def cos(a: Array[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probes = index.centers.zipWithIndex
-      .map { case (c, i) => (i, cos(c, queryVec)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(nprobe).map(_._1)
+    val probes = probeIds(index.centers, queryVec, nprobe)
     val q = array(queryVec.map(lit): _*)
     index.assigned
-      .filter(col("centroid_id").isin(probes.toSeq: _*))
+      .filter(col("centroid_id").isin(probes: _*))
       .withColumn("score", CosineSimilarity(col(vecCol), q))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
@@ -1703,58 +1738,28 @@ object Ann {
     require(nprobe > 0, s"nprobe must be >= 1, got $nprobe")
     require(maxBroadcastQueries > 0,
       s"maxBroadcastQueries must be > 0, got $maxBroadcastQueries")
-    val centers = readIvf(spark, path).centers
+    val (_, index) = resolveIvf(spark, path, -1L, idCol)
     val qv = asDouble(col(queryVecCol))
-    // (−score, cid) structs sort ascending == (score desc, cid asc):
-    // ivfSearch's exact ranking, as one row-local expression
-    val ranked = sort_array(array(centers.zipWithIndex.map { case (c, i) =>
-      struct((-CosineSimilarity(qv, array(c.map(lit).toSeq: _*))).as("ns"),
-        lit(i).as("cid"))
-    }.toSeq: _*))
     val probeArr = transform(
-      slice(ranked, 1, math.min(nprobe, centers.length)), p => p.getField("cid"))
+      slice(rankCentroidsCol(index.centers, qv), 1,
+        math.min(nprobe, index.centers.length)),
+      p => p.getField("cid"))
     // the probes frame is read TWICE (probe-union collect + the join);
     // a lazy localCheckpoint pins one evaluation, so a non-deterministic
     // queries source can't probe lists absent from the static pruning
     // literal and silently drop rows (ADVICE r15). Lazy: it materializes
-    // inside the collect action below — no extra job (JobAuditSpec).
+    // inside the collect action of the join core — no extra job
+    // (JobAuditSpec).
     val probes = queries.select(col(queryIdCol), qv.as("__qv"),
       explode(probeArr).as("centroid_id")).localCheckpoint(false)
-    // ≤ nCentroids distinct ids: the static partition-pruning literal
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    // tombstone-aware (deleteFromIvf): identical raw scan when the index
-    // has no tombstone table, so the audited q205/q210 plans are unchanged.
     // `pred` is the batched form of [[ivfSearchFiltered]]'s metadata
     // filter: applied directly on the pruned lists scan so it pushes into
     // the parquet reader (shared across the batch — per-query predicates
     // belong in the queries frame as join columns, not here); None adds
     // no plan node
-    val lists = pred.foldLeft(
-        listsMinusTombstones(spark, path, idCol)
-          .filter(col("centroid_id").isin(probedIds.toSeq: _*)))(_.filter(_))
-    // broadcast gated on a bounded count probe (the hardNegatives
-    // discipline — O(cap) work however large the batch is): a serving
-    // micro-batch beyond the cap falls back to a shuffle join on
-    // centroid_id instead of risking a driver/executor OOM on a
-    // batch-sized × nprobe × vector-width broadcast (ADVICE r15). The
-    // count probes the CHECKPOINTED frame (already materialized by the
-    // collect above), so it reads cached blocks, never the source; the
-    // cap is in queries, the frame rows are queries × nprobe.
-    val probeRowCap = math.min(Int.MaxValue.toLong - 1,
-      maxBroadcastQueries.toLong * math.min(nprobe, centers.length)).toInt
-    val probeSide =
-      if (probes.limit(probeRowCap + 1).count() <= probeRowCap)
-        broadcast(probes)
-      else probes
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    val rankedRows = lists.join(probeSide, Seq("centroid_id"))
-      .withColumn("score", CosineSimilarity(col(vecCol), col("__qv")))
-      .select(col(queryIdCol), col(idCol), col("centroid_id"), col("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val rankedRows = probeJoinTopK(index.assigned, probes, pred,
+      math.min(nprobe, index.centers.length), maxBroadcastQueries, k,
+      queryIdCol, idCol, vecCol, carry = Nil)
     // threshold applies to the RAW score BEFORE the 6dp display rounding,
     // so the indexed serving path shares Search.topKBatch's threshold
     // semantic exactly (ADVICE r15: a score within 5e-7 of the threshold
@@ -1767,6 +1772,56 @@ object Ann {
     thresholded
       .select(col(queryIdCol), col(idCol), col("centroid_id"), col("rank"),
         round(col("score"), 6).as("score"))
+  }
+
+  /** [[rankCentroids]] as one row-local expression over the
+    * stored-center literals: (−score, cid) structs sort ascending ==
+    * (score desc, cid asc).
+    */
+  private def rankCentroidsCol(centers: Array[Array[Double]],
+                               qv: Column): Column =
+    sort_array(array(centers.zipWithIndex.map { case (c, i) =>
+      struct((-CosineSimilarity(qv, array(c.map(lit).toSeq: _*))).as("ns"),
+        lit(i).as("cid"))
+    }.toSeq: _*))
+
+  /** The probe-join core of [[ivfSearchBatch]] and [[ivfSearchAdaptive]]
+    * over the checkpointed (queryIdCol, __qv, carry…, centroid_id)
+    * `probes` frame: its distinct probe union (≤ nCentroids ids) is the
+    * static partition-pruning literal on the `lists` scan, then `pred`.
+    * The probe side is broadcast gated on a bounded count probe (the
+    * hardNegatives discipline — O(cap) work however large the batch
+    * is): a micro-batch beyond `maxBroadcastQueries` falls back to a
+    * shuffle join on centroid_id instead of risking an OOM on a
+    * batch-sized × nprobe × vector-width broadcast (ADVICE r15); the
+    * count reads the checkpointed blocks, never the source. Output:
+    * (queryIdCol, idCol, centroid_id, carry…, score, rank), rank 1..k
+    * per query by (score desc, id asc), score raw.
+    */
+  private def probeJoinTopK(lists: DataFrame, probes: DataFrame,
+                            pred: Option[Column], maxProbesPerQuery: Int,
+                            maxBroadcastQueries: Int, k: Int,
+                            queryIdCol: String, idCol: String,
+                            vecCol: String, carry: Seq[String]): DataFrame = {
+    val probedIds = probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    val pruned = pred.foldLeft(
+      lists.filter(col("centroid_id").isin(probedIds.toSeq: _*)))(_.filter(_))
+    val probeRowCap = math.min(Int.MaxValue.toLong - 1,
+      maxBroadcastQueries.toLong * maxProbesPerQuery).toInt
+    val probeSide =
+      if (probes.limit(probeRowCap + 1).count() <= probeRowCap)
+        broadcast(probes)
+      else probes
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(queryIdCol))
+      .orderBy(col("score").desc, col(idCol).asc)
+    pruned.join(probeSide, Seq("centroid_id"))
+      .withColumn("score", CosineSimilarity(col(vecCol), col("__qv")))
+      .select((Seq(queryIdCol, idCol, "centroid_id") ++ carry :+ "score")
+        .map(col): _*)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
   }
 
   /** MARGIN-ADAPTIVE batched IVF probe: instead of a fixed nprobe,
@@ -1799,43 +1854,23 @@ object Ann {
     require(k > 0, s"k must be > 0, got $k")
     require(margin >= 0.0, s"margin must be >= 0, got $margin")
     require(maxProbe > 0, s"maxProbe must be >= 1, got $maxProbe")
-    val centers = readIvf(spark, path).centers
+    val (_, index) = resolveIvf(spark, path, -1L, idCol)
     val qv = asDouble(col(queryVecCol))
-    val ranked = sort_array(array(centers.zipWithIndex.map { case (c, i) =>
-      struct((-CosineSimilarity(qv, array(c.map(lit).toSeq: _*))).as("ns"),
-        lit(i).as("cid"))
-    }.toSeq: _*))
+    val ranked = rankCentroidsCol(index.centers, qv)
     // clamp to the maxProbe best first (row-local, bounded), then keep
     // those within margin of the best — the first element always
     // qualifies, so every query probes >= 1 list
-    val clamped = slice(ranked, 1, math.min(maxProbe, centers.length))
+    val maxProbes = math.min(maxProbe, index.centers.length)
     val probeArr = transform(
-      filter(clamped, p => round(-p.getField("ns"), 6) >=
+      filter(slice(ranked, 1, maxProbes), p => round(-p.getField("ns"), 6) >=
         round(-element_at(ranked, 1).getField("ns"), 6) - lit(margin)),
       p => p.getField("cid"))
     val probes = queries.select(col(queryIdCol), qv.as("__qv"),
         size(probeArr).cast("long").as("n_probes"),
         explode(probeArr).as("centroid_id"))
       .localCheckpoint(false) // one evaluation: pruning literal == join side
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val lists = listsMinusTombstones(spark, path, idCol)
-      .filter(col("centroid_id").isin(probedIds.toSeq: _*))
-    val probeRowCap = math.min(Int.MaxValue.toLong - 1,
-      maxBroadcastQueries.toLong * math.min(maxProbe, centers.length)).toInt
-    val probeSide =
-      if (probes.limit(probeRowCap + 1).count() <= probeRowCap)
-        broadcast(probes)
-      else probes
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryIdCol))
-      .orderBy(col("score").desc, col(idCol).asc)
-    lists.join(probeSide, Seq("centroid_id"))
-      .withColumn("score", CosineSimilarity(col(vecCol), col("__qv")))
-      .select(col(queryIdCol), col(idCol), col("centroid_id"),
-        col("n_probes"), col("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    probeJoinTopK(index.assigned, probes, None, maxProbes, maxBroadcastQueries, k,
+        queryIdCol, idCol, vecCol, carry = Seq("n_probes"))
       .select(col(queryIdCol), col(idCol), col("centroid_id"),
         col("n_probes"), col("rank"), round(col("score"), 6).as("score"))
   }
@@ -1858,12 +1893,7 @@ object Ann {
     * deployment whose tombstones rival the corpus should [[compactIvf]],
     * which this module treats as the compaction contract).
     */
-  private[graft] def listsMinusTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String = "vec_id"): DataFrame =
-    listsMinusTombstonesOf(spark, path, readIvfManifest(spark, path), idCol)
-
-  private def listsMinusTombstonesOf(
+  private def listsMinusTombstones(
       spark: org.apache.spark.sql.SparkSession, path: String,
       m: IvfManifest, idCol: String): DataFrame = {
     val lists = listsFrameOf(spark, path, m)
@@ -2015,7 +2045,7 @@ object Ann {
     val m = readIvfManifest(spark, path)
     if (m.tombstones.isEmpty && m.listDirs.size == 1 &&
         m.listDirs.head.whole) return // already compact
-    val survivors = listsMinusTombstonesOf(spark, path, m, idCol)
+    val survivors = listsMinusTombstones(spark, path, m, idCol)
     require(!survivors.isEmpty,
       s"compactIvf($path): every row is tombstoned — compaction would " +
       "write an unreadable empty lists directory; delete the index " +
@@ -2062,8 +2092,8 @@ object Ann {
     val live = listsFrameOf(spark, path, m)
     val affected = live.filter(col(idCol).isin(ids.toSeq: _*))
       .select(col("centroid_id")).distinct().collect().map(_.getInt(0)).sorted
-    val assigned = withIndexSchema(spark, path, m,
-      assignToCenters(rows, readCentersOf(spark, path, m), vecCol), vecCol)
+    val assigned = withIndexSchema(spark, path, m, assignToCenters(rows,
+      readCenters(spark, s"$path/${m.centroids}"), vecCol), vecCol)
     val newRows =
       if (affected.isEmpty) assigned
       else live.filter(col("centroid_id").isin(affected.toSeq: _*) &&
@@ -2112,12 +2142,9 @@ object Ann {
                               path: String, m: IvfManifest,
                               assigned: DataFrame,
                               vecCol: String): DataFrame =
-    m.sq8Model match {
-      case Some(rel) => assigned.drop("sq8_codes")
-        .withColumn("sq8_codes",
-          sq8CodesCol(readSq8ModelAt(spark, s"$path/$rel"), vecCol))
-      case None => assigned
-    }
+    if (m.sq8Model.isEmpty) assigned
+    else assigned.drop("sq8_codes")
+      .withColumn("sq8_codes", sq8CodesCol(sq8ModelOf(spark, path, m), vecCol))
 
   /** Metadata-FILTERED ANN over a persisted IVF index — the "vector
     * search with a WHERE clause" every vector store serves (cosine
@@ -2153,31 +2180,18 @@ object Ann {
                         vecCol: String = "embedding"): DataFrame = {
     require(k > 0, s"k must be > 0, got $k")
     require(nprobe > 0, s"nprobe must be >= 1, got $nprobe")
-    val centers = readIvf(spark, path).centers
-    def cos(a: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * queryVec(i); na += a(i) * a(i)
-        nb += queryVec(i) * queryVec(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    // ivfSearch's probe ranking exactly (centroid cosine desc, id asc)
-    def probeIds(n: Int): Seq[Int] = centers.zipWithIndex
-      .map { case (c, i) => (i, cos(c)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(n).map(_._1).toSeq
+    val (_, index) = resolveIvf(spark, path, -1L, idCol)
+    val ranked = rankCentroids(index.centers, queryVec).map(_._1).toSeq
     val q = array(queryVec.map(lit): _*)
-    def candidates(n: Int): DataFrame =
-      listsMinusTombstones(spark, path, idCol)
-        .filter(col("centroid_id").isin(probeIds(n): _*))
-        .filter(pred)
+    def candidates(n: Int): DataFrame = index.assigned
+      .filter(col("centroid_id").isin(ranked.take(n): _*))
+      .filter(pred)
     val nEff =
-      if (!widenToFill || nprobe >= centers.length) nprobe
+      if (!widenToFill || nprobe >= index.centers.length) nprobe
       // bounded shortfall probe: reads at most k rows of the filtered
       // pruned scan (limit-pushdown), never the corpus
       else if (candidates(nprobe).limit(k).count() >= k) nprobe
-      else centers.length
+      else index.centers.length
     candidates(nEff)
       .withColumn("score", CosineSimilarity(col(vecCol), q))
       .orderBy(col("score").desc, col(idCol).asc)
@@ -2265,15 +2279,7 @@ object Ann {
     val sub = index.codebooks(0)(0).length
     require(queryVec.length == m * sub,
       s"query dim ${queryVec.length} != index dim ${m * sub}")
-    def cos(a: Array[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probes = index.centers.zipWithIndex
-      .map { case (c, i) => (i, cos(c, queryVec)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(nprobe).map(_._1)
+    val probes = probeIds(index.centers, queryVec, nprobe)
     def distTables(q: IndexedSeq[Double]): Array[Array[Double]] =
       Array.tabulate(m) { j =>
         index.codebooks(j).map { c =>
@@ -2311,7 +2317,7 @@ object Ann {
       }
     val q = array(queryVec.map(lit): _*)
     index.encoded
-      .filter(col("centroid_id").isin(probes.toSeq: _*))
+      .filter(col("centroid_id").isin(probes: _*))
       .withColumn("approx_dist2", adc)
       .orderBy(col("approx_dist2").asc, col(idCol).asc)
       .limit(shortlist)
@@ -2480,19 +2486,18 @@ object Ann {
 
   /** Reload the SQ8 model persisted by [[sq8AugmentIvf]]. */
   def readSq8Model(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Sq8Model = {
-    val m = readIvfManifest(spark, path)
+                   path: String): Sq8Model =
+    sq8ModelOf(spark, path, readIvfManifest(spark, path))
+
+  private def sq8ModelOf(spark: org.apache.spark.sql.SparkSession,
+                         path: String, m: IvfManifest): Sq8Model = {
     require(m.sq8Model.nonEmpty,
       s"no SQ8 model at $path (index was never sq8AugmentIvf'd)")
-    readSq8ModelAt(spark, s"$path/${m.sq8Model.get}")
-  }
-
-  private def readSq8ModelAt(spark: org.apache.spark.sql.SparkSession,
-                             absDir: String): Sq8Model = {
-    val rows = spark.read.parquet(absDir)
+    val dir = s"$path/${m.sq8Model.get}"
+    val rows = spark.read.parquet(dir)
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
       .sortBy(_._1)
-    require(rows.nonEmpty, s"no SQ8 model at $absDir")
+    require(rows.nonEmpty, s"no SQ8 model at $dir")
     Sq8Model(rows.map(_._2), rows.map(_._3))
   }
 
@@ -2514,20 +2519,9 @@ object Ann {
     require(k > 0 && shortlist >= k,
       s"need shortlist >= k > 0, got k=$k shortlist=$shortlist")
     require(nprobe > 0, s"nprobe must be >= 1, got $nprobe")
-    val index = readIvf(spark, path)
-    val model = readSq8Model(spark, path)
-    def cos(a: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * queryVec(i); na += a(i) * a(i)
-        nb += queryVec(i) * queryVec(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val probes = index.centers.zipWithIndex
-      .map { case (c, i) => (i, cos(c)) }
-      .sortBy { case (i, s) => (-s, i) }
-      .take(math.min(nprobe, index.centers.length)).map(_._1).toSeq
+    val (m, index) = resolveIvf(spark, path, -1L, idCol)
+    val model = sq8ModelOf(spark, path, m)
+    val probes = probeIds(index.centers, queryVec, nprobe)
     val qc = model.encode(queryVec)
     val qcArr = array(qc.map(lit): _*)
     val ascore = aggregate(
@@ -2535,8 +2529,7 @@ object Ann {
       lit(0L), (acc, v) => acc + v)
     // tombstone-aware like every persisted-layout probe; no extra plan
     // node when the index has no tombstone table
-    val pruned = listsMinusTombstones(spark, path, idCol)
-      .filter(col("centroid_id").isin(probes: _*))
+    val pruned = index.assigned.filter(col("centroid_id").isin(probes: _*))
     val short = pruned
       .select(col(idCol), col("centroid_id"), ascore.as("ascore"))
       .orderBy(col("ascore").desc, col(idCol).asc)

@@ -283,12 +283,6 @@ object Search {
       case _ => false
     }
 
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Double, Double)]
     val selectedVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
     val remaining = scala.collection.mutable.ArrayBuffer(pool: _*)
@@ -297,7 +291,7 @@ object Search {
       val scored = remaining.map { case (id, rel, v) =>
         val mmr =
           if (selectedVecs.isEmpty) lambda * rel
-          else lambda * rel - (1.0 - lambda) * selectedVecs.map(cos(v, _)).max
+          else lambda * rel - (1.0 - lambda) * selectedVecs.map(Ann.cos(v, _)).max
         (id, rel, mmr)
       }
       // java.lang.Double.compare is a total order, so the fold is
@@ -333,16 +327,11 @@ object Search {
     * literals (the shared-literal float discipline).
     */
   def centroidCosTables(centers: Array[Array[Double]],
-                        queryVecs: Seq[Seq[Double]]): Seq[Array[Double]] = {
-    def cos(a: Array[Double], b: Seq[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+                        queryVecs: Seq[Seq[Double]]): Seq[Array[Double]] =
+    queryVecs.map { q =>
+      val qa = q.toArray
+      centers.map(Ann.cos(_, qa))
     }
-    queryVecs.map(q => centers.map(c => cos(c, q)))
-  }
 
   /** Two-stage MaxSim with centroid pruning — PLAID/ColBERTv2's
     * serving shape (Santhanam et al. 2022, public knowledge): stage 1

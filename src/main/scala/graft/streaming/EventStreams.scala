@@ -30,15 +30,6 @@ object EventStreams {
       .groupBy(window(col("ts"), windowDur), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
 
-  /** Sliding event-time window aggregate — each event lands in
-    * windowDur/slideDur overlapping windows.
-    */
-  def slidingAgg(events: DataFrame, windowDur: String = "10 minutes",
-                 slideDur: String = "5 minutes"): DataFrame =
-    events
-      .groupBy(window(col("ts"), windowDur, slideDur), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-
   /** Session windows per user: events within `gap` of each other merge
     * into one session (built-in `session_window` — state-store-backed
     * session merging when run as a stream).

@@ -36,15 +36,6 @@ object StreamingDedup {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("text_hash")
 
-  /** Unbounded-state variant (exact stream-lifetime dedup): simpler
-    * semantics, state grows with distinct corpus — use only when the
-    * distinct-hash set fits the state store.
-    */
-  def dedupExact(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("text_hash", contentHash(col(textCol)))
-      .dropDuplicates("text_hash")
-
   /** Continuous form of [[graft.dedup.Dedup.incrementalDedup]]: each
     * streaming micro-batch is filtered against the STATIC stored corpus
     * (exact text hash + MinHash-band near-dup, identical semantics and

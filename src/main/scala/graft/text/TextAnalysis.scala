@@ -27,10 +27,6 @@ object TextAnalysis {
   def stopwordHitsIn(w: Column, words: Seq[String]): Column =
     size(filter(w, t => t.isin(words.map(lit): _*)))
 
-  /** Stopword hits for one language list. */
-  def stopwordHits(text: Column, words: Seq[String]): Column =
-    stopwordHitsIn(tokens(text), words)
-
   /** Heuristic language ID over a precomputed token-array column: the
     * language whose stopword list scores the most token hits; ties
     * resolve in [[StopwordLists]] order; zero hits everywhere →

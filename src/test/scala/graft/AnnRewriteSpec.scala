@@ -153,6 +153,15 @@ class AnnRewriteSpec extends SparkSpec {
     }
   }
 
+  test("ivf rewrite: a query of another dimension gets no centroid probe " +
+    "and planning does not fail") {
+    withFlag(true) {
+      val plan = ivfQuery(ivfQVec.take(6), 5).queryExecution.optimizedPlan
+      assert(!plan.toString.contains("centroid_id IN"),
+        s"8-dim index probed for a 6-dim query:\n$plan")
+    }
+  }
+
   test("ivf rewrite honors the nprobe recall knob; all-lists probe == exact") {
     withFlag(true) {
       def ids(n: Int): Seq[Long] = withNprobe(n) {

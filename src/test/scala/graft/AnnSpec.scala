@@ -1247,4 +1247,64 @@ class AnnSpec extends SparkSpec {
       bruteTopK(corp.filter($"label" === 9 &&
         $"vec_id" =!= wantFiltered.head), q0, 5))
   }
+
+  // one persisted SQ8-augmented two-cluster index, label 9 only in
+  // cluster B, shared by the snapshot and dimension cases below
+  private lazy val sq8TwoCluster: String = {
+    val p = java.nio.file.Files
+      .createTempDirectory("graft_ivf_snap").toString + "/ivf"
+    val corp = twoClusterLabeled
+      .withColumn("label", when($"vec_id" >= 12, 9).otherwise($"label"))
+    Ann.writeIvf(Ann.buildIvf(corp, nCentroids = 2, seed = 7L,
+      initMode = "random"), p)
+    Ann.sq8AugmentIvf(spark, p, Ann.sq8Train(corp))
+    p
+  }
+
+  test("every persisted-IVF probe resolves exactly one manifest per call") {
+    val p = sq8TwoCluster
+    val q0 = Seq(1.0, 0.0, 0.0, 0.0)
+    val queries = Seq((0L, q0), (1L, Seq(1.0, 1.0, 0.0, 0.0)))
+      .toDF("query_id", "query_vec")
+    def manifestsOpened(probe: => org.apache.spark.sql.DataFrame): Long = {
+      Ann.ivfManifestReads.set(0L)
+      assert(probe.collect().nonEmpty)
+      Ann.ivfManifestReads.get()
+    }
+    val opened = Map(
+      "ivfSearchBatch" -> manifestsOpened(
+        Ann.ivfSearchBatch(spark, p, queries, k = 5, nprobe = 1)),
+      "ivfSearchAdaptive" -> manifestsOpened(
+        Ann.ivfSearchAdaptive(spark, p, queries, k = 5, maxProbe = 2)),
+      // nprobe 1 near cluster A finds no label-9 row: the shortfall
+      // probe fires and the answer re-probes every list
+      "ivfSearchFiltered(widenToFill)" -> manifestsOpened(
+        Ann.ivfSearchFiltered(spark, p, q0, $"label" === 9, k = 5,
+          nprobe = 1, widenToFill = true)),
+      "ivfSq8Search" -> manifestsOpened(
+        Ann.ivfSq8Search(spark, p, q0, k = 5, nprobe = 1, shortlist = 8)))
+    assert(opened.values.forall(_ == 1L), s"manifests opened per call: $opened")
+  }
+
+  private def assertDimMismatch(probe: => Any): Unit = {
+    val ex = intercept[IllegalArgumentException](probe)
+    assert(ex.getMessage.contains("query dimension 3") &&
+      ex.getMessage.contains("index dimension 4"), ex.getMessage)
+  }
+
+  test("ivfSearch: a query of the wrong dimension fails naming both") {
+    val index = Ann.buildIvf(twoClusterLabeled, nCentroids = 2, seed = 7L,
+      initMode = "random")
+    assertDimMismatch(Ann.ivfSearch(index, Seq(1.0, 0.0, 0.0)))
+  }
+
+  test("ivfSearchFiltered: a query of the wrong dimension fails naming both") {
+    assertDimMismatch(Ann.ivfSearchFiltered(spark, sq8TwoCluster,
+      Seq(1.0, 0.0, 0.0), $"label" === 9, widenToFill = true))
+  }
+
+  test("ivfSq8Search: a query of the wrong dimension fails naming both") {
+    assertDimMismatch(Ann.ivfSq8Search(spark, sq8TwoCluster,
+      Seq(1.0, 0.0, 0.0)))
+  }
 }

@@ -56,6 +56,16 @@ class VectorDbSpec extends SparkSpec {
     assert(db.health().documents == 2L)
   }
 
+  test("add counts come from the write pass: an empty or all-invalid " +
+    "batch reports its counts and appends nothing") {
+    val (db, _) = freshDb()
+    assert(db.addDocuments(sampleCorpus().limit(0)) == db.AddResult(0L, 0L))
+    val allBad = sampleCorpus().withColumn("content", lit(null).cast("string"))
+    assert(db.addDocuments(allBad) == db.AddResult(0L, 3L))
+    db.addDocuments(sampleCorpus())
+    assert(db.health().documents == 3L)
+  }
+
   test("re-ingest APPENDS duplicates (quirk 5)") {
     val (db, _) = freshDb()
     db.addDocuments(sampleCorpus())
