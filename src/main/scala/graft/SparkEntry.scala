@@ -39,6 +39,14 @@ object SparkEntry {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
+  /** The corpus query vector (vec_id 0's embedding as doubles), pulled to
+    * the driver — the probe input of the single-query search family and
+    * of the q222/q225 oracles.
+    */
+  private def queryVec(emb: DataFrame): Seq[Double] =
+    emb.filter(col("vec_id") === 0)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * (vec_id 0 scores 1.0 against itself, so ≥1 row always survives the
     * 0.1 threshold.)
@@ -789,20 +797,14 @@ object SparkEntry {
   /** True-IVF ANN: k-means coarse quantizer (16 lists), nprobe=2 probe
     * for vec_id 0's vector. Driver pulls ONLY the query vector and the
     * 16 centroids; the corpus never leaves the executors. PARTIAL
-    * oracle like q65: the trained centroids are recorded and the oracle
-    * (built after the query ran) replays assignment (argmin squared-L2),
-    * centroid probe ranking, and the in-list cosine top-k in DuckDB.
+    * oracle like q65: the oracle embeds the persisted index's centroids
+    * and replays assignment (argmin squared-L2), centroid probe ranking,
+    * and the in-list cosine top-k in DuckDB.
     * Recall vs the exact scan is additionally asserted in AnnSpec.
     */
-  private def qIvfKmeans(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
-    val index = ivfIndexFor(s, dir)
-    ivfCentersForOracle = index.centers
-    Ann.ivfSearch(index, qVec, k = 5, nprobe = 2)
-  }
+  private def qIvfKmeans(s: SparkSession, dir: String): DataFrame =
+    Ann.ivfSearch(ivfIndexFor(s, dir), queryVec(rd(s, dir, "embeddings")),
+      k = 5, nprobe = 2)
 
   /** Build-once / probe-many seam for q28: the index is trained and
     * persisted (`Ann.writeIvf`, partitioned by inverted list) the first
@@ -879,8 +881,7 @@ object SparkEntry {
   private[graft] def ivfProbeTopKFrame(s: SparkSession, dir: String,
                                        k: Int = 10): DataFrame = {
     ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
-    val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val qVec = queryVec(rd(s, dir, "embeddings"))
     Ann.listsFrame(s, ivfPathFor(s, dir))
       .withColumn("score", graft.functions.CosineSimilarity(
         col("embedding"), array(qVec.map(lit): _*)))
@@ -965,8 +966,7 @@ object SparkEntry {
   private[graft] def filteredAnnFrame(s: SparkSession, dir: String,
                                       nprobe: Int): DataFrame = {
     ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
-    val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val qVec = queryVec(rd(s, dir, "embeddings"))
     Ann.ivfSearchFiltered(s, ivfPathFor(s, dir), qVec,
       pred = col("label") === 3, k = 10, nprobe = nprobe)
   }
@@ -1011,13 +1011,6 @@ object SparkEntry {
     filteredBatchProbeFrame(s, dir, nprobe = 16)
       .select(col("query_id"), col("vec_id"), col("rank"), col("score"))
 
-  /** Centers of the persisted q28 index as probed by the LAST
-    * [[qRetrievalQuality]] run (the [[ivfCentersForOracle]] export
-    * mechanism — q213's oracle must replay assignment + probe ranking
-    * from the exact trained centers).
-    */
-  @volatile private var retrievalCentersForOracle: Array[Array[Double]] = _
-
   /** Graded retrieval-quality metrics for the indexed serving path —
     * NDCG@10 and MRR of the nprobe=2 batched IVF probe against
     * exact-cosine graded relevance, per panel query (vec_id < 8).
@@ -1038,8 +1031,7 @@ object SparkEntry {
     * deployment runs on a sampled panel, never per serve.
     */
   private def qRetrievalQuality(s: SparkSession, dir: String): DataFrame = {
-    val index = ivfIndexFor(s, dir)
-    retrievalCentersForOracle = index.centers
+    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val emb = rd(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"),
@@ -1416,11 +1408,6 @@ object SparkEntry {
         col("max_norm2_micro"))
   }
 
-  /** Centroids trained by the last [[qIvfKmeans]] run (see
-    * [[pqBooksForOracle]] for the export mechanism).
-    */
-  @volatile private var ivfCentersForOracle: Array[Array[Double]] = _
-
   /** DuckDB replay of everything downstream of IVF training: nearest-
     * centroid assignment (argmin squared L2 over the centroid literals,
     * index tie-break — the same rule as spark.ml KMeansModel.transform),
@@ -1620,20 +1607,13 @@ object SparkEntry {
     * k-means codebooks + asymmetric-distance scan (M table lookups per
     * row, no per-row vector math). PARTIAL oracle: k-means training is
     * not DuckDB-replayable, but everything downstream of the trained
-    * codebooks is — the query records its codebooks in
-    * [[pqBooksForOracle]], and [[oracleSql]] (dumped by Verify AFTER the
-    * queries run) embeds them as full-precision literals and replays
-    * encode (per-subspace argmin) + the asymmetric-distance scan in SQL.
+    * codebooks is — [[oracleSql]] reads the codebooks from the same
+    * [[pqIndexFor]] store, embeds them as full-precision literals and
+    * replays encode (per-subspace argmin) + the asymmetric-distance scan.
     */
-  private def qPqTopK(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
-    val index = pqIndexFor(s, dir)
-    pqBooksForOracle = index.codebooks
-    Ann.pqSearch(index, qVec, k = 5)
-  }
+  private def qPqTopK(s: SparkSession, dir: String): DataFrame =
+    Ann.pqSearch(pqIndexFor(s, dir), queryVec(rd(s, dir, "embeddings")),
+      k = 5)
 
   /** Build-once / probe-many seam for the PQ family (VERDICT r14 item 3
     * — the q28 discipline extended to the plain-PQ quantizer): codebooks
@@ -1677,17 +1657,10 @@ object SparkEntry {
       })
     }
 
-  /** Codebooks trained by the last [[qPqTopK]] run, exported into the
-    * q65 oracle SQL as literals (Verify dumps oracle_sql.json after all
-    * queries have executed, so the books the oracle replays are exactly
-    * the books the query used — training determinism is irrelevant).
-    */
-  @volatile private var pqBooksForOracle: Array[Array[Array[Double]]] = _
-
-  /** PQ quantization-distortion audit over a freshly trained q65-shaped
-    * index (per subspace: mean/max integer-micro squared error to the
-    * assigned centroid); see [[graft.search.Ann.pqDistortion]]. Books
-    * exported for the oracle like q65's.
+  /** PQ quantization-distortion audit over q65's build-once index (per
+    * subspace: mean/max integer-micro squared error to the assigned
+    * centroid); see [[graft.search.Ann.pqDistortion]]. The oracle reads
+    * the books from the same [[pqIndexFor]] store, like q65's.
     */
   private def qPqDistortion(s: SparkSession, dir: String): DataFrame = {
     // the persisted codes table deliberately drops the float column (the
@@ -1695,14 +1668,11 @@ object SparkEntry {
     // it joins the source embeddings on vec_id — one equi-join, still
     // read-cost next to the k-means training the gate now amortizes
     val index = pqIndexFor(s, dir)
-    pqDistBooksForOracle = index.codebooks
     val withVec = Ann.PqIndex(
       index.encoded.join(rd(s, dir, "embeddings"), Seq("vec_id")),
       index.codebooks)
     Ann.pqDistortion(withVec)
   }
-
-  @volatile private var pqDistBooksForOracle: Array[Array[Array[Double]]] = _
 
   /** q203's oracle: q65's encode replay (d2-argmin over the exported
     * codebook literals, c-asc tiebreak) but keeping the winning d2 as
@@ -1743,15 +1713,9 @@ object SparkEntry {
     * and DuckDB replays assignment, probe, encode, ADC, shortlist, and
     * rerank end-to-end.
     */
-  private def qIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
-    val index = ivfPqIndexFor(s, dir)
-    ivfPqForOracle = (index.centers, index.codebooks)
-    Ann.ivfPqSearch(index, qVec, k = 5, nprobe = 2, shortlist = 32)
-  }
+  private def qIvfPq(s: SparkSession, dir: String): DataFrame =
+    Ann.ivfPqSearch(ivfPqIndexFor(s, dir),
+      queryVec(rd(s, dir, "embeddings")), k = 5, nprobe = 2, shortlist = 32)
 
   /** Build-once seam for q174, the q28 discipline extended to the PQ
     * stage: the coarse quantizer comes from [[ivfIndexFor]] (already
@@ -1780,9 +1744,6 @@ object SparkEntry {
       })
     }
 
-  @volatile private var ivfPqForOracle
-    : (Array[Array[Double]], Array[Array[Array[Double]]]) = _
-
   /** Residual-coded IVF-PQ gate (VERDICT r15 item 4's follow-through):
     * the SAME three-stage probe as q174 but with FAISS's IVFADC default
     * — codes quantize (vector − assigned coarse center), ADC tables are
@@ -1792,15 +1753,9 @@ object SparkEntry {
     * assignment, probe ranking, residual encode (argmin over the
     * exported codebooks), per-probe ADC, shortlist, exact rerank.
     */
-  private def qIvfPqResidual(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
-    val index = ivfPqResIndexFor(s, dir)
-    ivfPqResForOracle = (index.centers, index.codebooks)
-    Ann.ivfPqSearch(index, qVec, k = 5, nprobe = 2, shortlist = 32)
-  }
+  private def qIvfPqResidual(s: SparkSession, dir: String): DataFrame =
+    Ann.ivfPqSearch(ivfPqResIndexFor(s, dir),
+      queryVec(rd(s, dir, "embeddings")), k = 5, nprobe = 2, shortlist = 32)
 
   /** Build-once seam for q211 (the q174 discipline): residual IVF-PQ
     * trained once per data dir, encoded table localCheckpointed, every
@@ -1823,9 +1778,6 @@ object SparkEntry {
         idx.copy(encoded = enc)
       })
     }
-
-  @volatile private var ivfPqResForOracle
-    : (Array[Array[Double]], Array[Array[Array[Double]]]) = _
 
   /** DuckDB replay of the residual-coded probe (q211): q174's oracle
     * with two deltas — the per-subspace encode argmin runs over the
@@ -1893,16 +1845,9 @@ object SparkEntry {
     * Own index path: augmenting the shared q28 index mid-process would
     * invalidate its cached scan frames (the swapped-out files vanish).
     */
-  private def qIvfSq8(s: SparkSession, dir: String): DataFrame = {
-    val path = ivfSq8IndexFor(s, dir)
-    ivfSq8ForOracle = (Ann.readIvf(s, path).centers, Ann.readSq8Model(s, path))
-    val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    sq8QueryVecForOracle = qVec
-    Ann.ivfSq8Search(s, path, qVec, k = 5, nprobe = 2, shortlist = 32)
-  }
-
-  @volatile private var sq8QueryVecForOracle: Seq[Double] = _
+  private def qIvfSq8(s: SparkSession, dir: String): DataFrame =
+    Ann.ivfSq8Search(s, ivfSq8IndexFor(s, dir),
+      queryVec(rd(s, dir, "embeddings")), k = 5, nprobe = 2, shortlist = 32)
 
   /** Build-once seam for q222: a dedicated IVF index (q28's training
     * recipe) augmented with SQ8 codes, persisted per data dir.
@@ -1930,9 +1875,6 @@ object SparkEntry {
   }
 
   private val ivfSq8Built = collection.mutable.Set.empty[String]
-
-  @volatile private var ivfSq8ForOracle
-    : (Array[Array[Double]], Ann.Sq8Model) = _
 
   /** DuckDB replay of the IVF-SQ8 probe: q28's argmin assignment and
     * probe ranking, q217's encode tree on the probed rows (lo/span
@@ -3157,14 +3099,10 @@ object SparkEntry {
     * bounded windows.
     */
   private def qMatryoshkaCurve(s: SparkSession, dir: String): DataFrame = {
-    val qVec = rd(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
-    matryoshkaQVecForOracle = qVec
+    val qVec = queryVec(rd(s, dir, "embeddings"))
     Ann.matryoshkaRecallCurve(rd(s, dir, "embeddings"), qVec,
       dims = Seq(4, 8, 16, 32, qVec.length), poolK = 50, k = 10)
   }
-
-  @volatile private var matryoshkaQVecForOracle: Seq[Double] = _
 
   /** DuckDB replay of the curve: sliced-prefix cosines, the per-dim
     * pool-50 window, the full-score rerank window, and recall vs the
@@ -3202,24 +3140,7 @@ object SparkEntry {
     */
   private def qMarginFrontier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val index = ivfIndexFor(s, dir)
-    val qs = rd(s, dir, "embeddings").filter(col("vec_id") < 4)
-      .orderBy(col("vec_id"))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    val margins = Seq(50, 100, 200, 400)
-    // q221's membership rule on 6dp-rounded scores, maxProbe 8
-    val probeRows = for {
-      (qid, qv) <- qs
-      ranked = Ann.rankCentroids(index.centers, qv)
-      best = BigDecimal(ranked.head._2)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      m <- margins
-      (cid, sc) <- ranked.take(8)
-      if BigDecimal(sc).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble >= best - m / 1000.0
-    } yield (qid, m, cid)
-    marginFrontierForOracle = (index.centers, probeRows)
+    val (qs, probeRows) = marginProbePlan(s, dir)
     val probes = probeRows.toDF("query_id", "margin_pm", "centroid_id")
     val probedIds = probeRows.map(_._3).distinct.sorted
     val lists = Ann.listsFrame(s, ivfPathFor(s, dir))
@@ -3263,8 +3184,30 @@ object SparkEntry {
       .orderBy(col("margin_pm"))
   }
 
-  @volatile private var marginFrontierForOracle
-    : (Array[Array[Double]], Seq[(Long, Int, Int)]) = _
+  /** q224's driver-side probe plan, shared by the query and its oracle:
+    * the 4-query panel (vec_id < 4) and, per (query, margin in
+    * {50, 100, 200, 400} milli), the centroids of the persisted q28 index
+    * that q221's membership rule admits — 6dp-rounded scores, maxProbe 8.
+    */
+  private def marginProbePlan(s: SparkSession, dir: String)
+      : (Seq[(Long, Seq[Double])], Seq[(Long, Int, Int)]) = {
+    val centers = ivfIndexFor(s, dir).centers
+    val qs = rd(s, dir, "embeddings").filter(col("vec_id") < 4)
+      .orderBy(col("vec_id"))
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    val probeRows = for {
+      (qid, qv) <- qs
+      ranked = Ann.rankCentroids(centers, qv)
+      best = BigDecimal(ranked.head._2)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      m <- Seq(50, 100, 200, 400)
+      (cid, sc) <- ranked.take(8)
+      if BigDecimal(sc).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+        .toDouble >= best - m / 1000.0
+    } yield (qid, m, cid)
+    (qs, probeRows)
+  }
 
   /** DuckDB replay of the frontier: the driver-planned probe sets ship
     * as literals to BOTH engines (probe choice is q221's gate); the
@@ -3320,18 +3263,19 @@ object SparkEntry {
     */
   private def qMaxSimPlaid(s: SparkSession, dir: String): DataFrame = {
     val index = ivfIndexFor(s, dir)
-    val qs = rd(s, dir, "embeddings").filter(col("vec_id").isin(0L, 1L, 2L))
+    Search.maxSimPlaidTopK(
+      index.assigned.withColumn("doc_id", expr("vec_id div 8")),
+      index.centers, plaidQueries(s, dir), k = 5, shortlist = 20)
+  }
+
+  /** q223's query bag (the vectors of vec_id 0, 1, 2, in id order),
+    * shared by the query and its oracle.
+    */
+  private def plaidQueries(s: SparkSession, dir: String): Seq[Seq[Double]] =
+    rd(s, dir, "embeddings").filter(col("vec_id").isin(0L, 1L, 2L))
       .orderBy(col("vec_id"))
       .select(col("embedding").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toSeq).toSeq
-    plaidForOracle = (index.centers, qs)
-    Search.maxSimPlaidTopK(
-      index.assigned.withColumn("doc_id", expr("vec_id div 8")),
-      index.centers, qs, k = 5, shortlist = 20)
-  }
-
-  @volatile private var plaidForOracle
-    : (Array[Array[Double]], Seq[Seq[Double]]) = _
 
   /** DuckDB replay of the PLAID probe: q28's argmin assignment, the
     * per-doc distinct centroid sets, stage-1 maxes over the SAME
@@ -3393,15 +3337,13 @@ object SparkEntry {
     * margin membership, assignment, and the windowed top-k.
     */
   private def qAdaptiveProbe(s: SparkSession, dir: String): DataFrame = {
-    adaptiveCentersForOracle = ivfIndexFor(s, dir).centers
+    ivfIndexFor(s, dir) // build+persist on first touch (the q28 seam)
     val queries = rd(s, dir, "embeddings").filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"),
         col("embedding").cast("array<double>").as("query_vec"))
     Ann.ivfSearchAdaptive(s, ivfPathFor(s, dir), queries, k = 10,
       margin = 0.2, maxProbe = 8)
   }
-
-  @volatile private var adaptiveCentersForOracle: Array[Array[Double]] = _
 
   /** DuckDB replay of the adaptive probe: center cosines ranked raw
     * (ivfSearch's rule), the margin test on 6dp-ROUNDED scores against
@@ -3504,12 +3446,8 @@ object SparkEntry {
     */
   private def qSq8Search(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
-    val model = sq8ModelFor(s, dir)
-    sq8ForOracle = model
-    Ann.sq8AffineTopK(emb, model, qVec, k = 5, shortlist = 32)
+    Ann.sq8AffineTopK(emb, sq8ModelFor(s, dir), queryVec(emb), k = 5,
+      shortlist = 32)
   }
 
   private val sq8Cache = collection.mutable.Map.empty[String, Ann.Sq8Model]
@@ -3519,8 +3457,6 @@ object SparkEntry {
       sq8Cache.getOrElseUpdate(dirCacheKey(s, dir, "embeddings"),
         Ann.sq8Train(rd(s, dir, "embeddings")))
     }
-
-  @volatile private var sq8ForOracle: Ann.Sq8Model = _
 
   /** DuckDB replay of the SQ8 path with the trained lo/span injected as
     * DOUBLE[] literals into BOTH engines: the query AND every corpus
@@ -4031,9 +3967,7 @@ object SparkEntry {
     */
   private def qHammingTopK(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     Ann.hammingTopK(emb, qVec, k = 10)
   }
 
@@ -4222,24 +4156,28 @@ object SparkEntry {
 
   /** SemDeDup over the embeddings table (vec_id < 2000 working set,
     * 8 clusters): Ann.semDedup's keep-first-occurrence semantic dedup.
-    * PARTIAL oracle like q28/q93: the trained centroids are exported and
-    * the oracle replays assignment (argmin squared L2, index tie-break),
-    * the within-cluster lower-id pair scan, and the kept flag in DuckDB.
-    * Quantizer training inside the op is the operator's real shape —
-    * SemDeDup is an offline dedup batch job, not a query-time probe.
+    * PARTIAL oracle like q28/q93: the oracle embeds the centroids of
+    * [[workingSetClustersFor]] and replays assignment (argmin squared L2,
+    * index tie-break), the within-cluster lower-id pair scan, and the
+    * kept flag in DuckDB.
     */
-  private def qSemDedup(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings").filter(col("vec_id") < 2000)
-    val index = Ann.buildIvf(emb, nCentroids = 8, seed = 42L, maxIter = 4,
-      initMode = "random")
-    semdedupCentersForOracle = index.centers
-    Ann.semDedup(index, threshold = 0.92)
-  }
+  private def qSemDedup(s: SparkSession, dir: String): DataFrame =
+    Ann.semDedup(workingSetClustersFor(s, dir), threshold = 0.92)
 
-  /** Centroids trained by the last [[qSemDedup]] run (same export
-    * mechanism as [[ivfCentersForOracle]]).
+  /** The q100/q144 working-set clustering — 8 centroids over
+    * vec_id < 2000 (seed 42, maxIter 4, random init) — trained once per
+    * data dir ([[dirCacheKey]]) and shared by both queries and their
+    * oracles.
     */
-  @volatile private var semdedupCentersForOracle: Array[Array[Double]] = _
+  private val workingSetClusters =
+    collection.mutable.Map.empty[String, Ann.IvfIndex]
+
+  private def workingSetClustersFor(s: SparkSession, dir: String): Ann.IvfIndex =
+    workingSetClusters.synchronized {
+      workingSetClusters.getOrElseUpdate(dirCacheKey(s, dir, "embeddings"),
+        Ann.buildIvf(rd(s, dir, "embeddings").filter(col("vec_id") < 2000),
+          nCentroids = 8, seed = 42L, maxIter = 4, initMode = "random"))
+    }
 
   /** DuckDB replay of everything downstream of SemDeDup training:
     * nearest-centroid assignment over the exported centroid literals,
@@ -4636,9 +4574,7 @@ object SparkEntry {
     * localCheckpoint mid-way, same discipline as q40's CC rounds).
     */
   private def qPageRank(s: SparkSession, dir: String): DataFrame = {
-    val docs = rd(s, dir, "documents").select(col("doc_id"))
-    val n = docs.count()
-    pageRankN = n
+    val (docs, n) = linkGraphNodes(s, dir)
     // non-uniform by construction: the quadratic map skews in-degree,
     // the % 50 link makes the first 50 docs hubs, the affine map keeps
     // the graph connected. (All-coprime affine maps would be bijections
@@ -4666,10 +4602,13 @@ object SparkEntry {
       .select(col("doc_id"), round(col("r"), 6).as("rank"))
   }
 
-  /** N recorded by the last [[qPageRank]] run — the oracle needs the
-    * node count inlined (same dynamic-oracle mechanism as q28/q65/q100).
+  /** q107's node set and its size N, shared by the query and its oracle
+    * (which inlines N as a literal).
     */
-  @volatile private var pageRankN: Long = -1L
+  private def linkGraphNodes(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val docs = rd(s, dir, "documents").select(col("doc_id"))
+    (docs, docs.count())
+  }
 
   /** DuckDB replay: identical synthetic edges, the 8 power iterations
     * unrolled as chained CTEs (no recursive-aggregate support needed),
@@ -4754,9 +4693,7 @@ object SparkEntry {
     */
   private def qHammingRerank(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     val candidates = Ann.hammingTopK(emb, qVec, k = 50)
     val rescored = emb
       .join(broadcast(candidates.select(col("vec_id"))), Seq("vec_id"), "left_semi")
@@ -4894,9 +4831,7 @@ object SparkEntry {
     */
   private def qMatryoshka(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     Ann.matryoshkaTopK(emb, qVec, prefixDim = 16, poolK = 50, k = 10)
       .select(col("vec_id"), round(col("score"), 6).as("score"))
   }
@@ -5016,9 +4951,7 @@ object SparkEntry {
     */
   private def qMmrTopK(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     Search.mmrTopK(emb, qVec, k = 5, lambda = 0.7, poolSize = 50)
   }
 
@@ -5101,9 +5034,7 @@ object SparkEntry {
     */
   private def qSq8Ann(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     Ann.sq8TopK(emb, qVec, poolK = 50, k = 10)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score").desc, col("vec_id").asc)))
@@ -5356,19 +5287,13 @@ object SparkEntry {
   /** Davies–Bouldin cluster-quality audit over the q100 working set's
     * IVF clustering (same subset, seed, and trained centers): per-cluster
     * scatter in exact integer micro-units + the max overlap ratio.
-    * PARTIAL oracle like q28/q100 — centers exported, DuckDB replays
-    * assignment, scatter, and the k×k ratio fold; see
+    * PARTIAL oracle like q28/q100 — the oracle embeds the same
+    * [[workingSetClustersFor]] centers and DuckDB replays assignment,
+    * scatter, and the k×k ratio fold; see
     * [[graft.search.Ann.daviesBouldin]].
     */
-  private def qClusterQuality(s: SparkSession, dir: String): DataFrame = {
-    val emb = rd(s, dir, "embeddings").filter(col("vec_id") < 2000)
-    val index = Ann.buildIvf(emb, nCentroids = 8, seed = 42L, maxIter = 4,
-      initMode = "random")
-    clusterQualityCentersForOracle = index.centers
-    Ann.daviesBouldin(index)
-  }
-
-  @volatile private var clusterQualityCentersForOracle: Array[Array[Double]] = _
+  private def qClusterQuality(s: SparkSession, dir: String): DataFrame =
+    Ann.daviesBouldin(workingSetClustersFor(s, dir))
 
   /** DuckDB replay of q144 downstream of training: nearest-centroid
     * assignment over the exported centroid literals (the q100
@@ -6105,9 +6030,7 @@ object SparkEntry {
     */
   private def qRocchioPrf(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     val top = Search.topK(emb, qVec, k = 10, threshold = -2.0)
       .select(col("vec_id"))
     val fb = emb.join(top, "vec_id")
@@ -6401,11 +6324,8 @@ object SparkEntry {
     */
   private def qNprobeCurve(s: SparkSession, dir: String): DataFrame = {
     val emb = rd(s, dir, "embeddings")
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head()
-      .getSeq[Double](0)
+    val qVec = queryVec(emb)
     val index = ivfIndexFor(s, dir)
-    nprobeCentersForOracle = index.centers
     val prank: Map[Int, Int] = Ann.rankCentroids(index.centers, qVec)
       .zipWithIndex.map { case ((cid, _), r) => cid -> (r + 1) }.toMap
     val prankCol = element_at(
@@ -6440,7 +6360,6 @@ object SparkEntry {
         col("hits"),
         round(col("hits").cast("double") / 5.0, 6).as("recall_at_5"))
   }
-  private var nprobeCentersForOracle: Array[Array[Double]] = _
 
   private def nprobeOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
@@ -6603,7 +6522,6 @@ object SparkEntry {
     */
   private val whitenCache =
     scala.collection.mutable.HashMap.empty[String, (Array[Array[Double]], Array[Double])]
-  @volatile private var whitenForOracle: (Array[Array[Double]], Array[Double]) = _
 
   private def whitenModelFor(s: SparkSession, dir: String,
                              dims: Int): (Array[Array[Double]], Array[Double]) =
@@ -6629,7 +6547,6 @@ object SparkEntry {
   private def qWhitenedTopK(s: SparkSession, dir: String): DataFrame = {
     val dims = 16
     val (w, mean) = whitenModelFor(s, dir, dims)
-    whitenForOracle = (w, mean)
     val white = rd(s, dir, "embeddings").select(col("vec_id"),
       graft.search.Whiten.applyWhitening(col("embedding"), w, mean).as("wv"))
     val q = white.filter(col("vec_id") === 0).select(col("wv").as("qv"))
@@ -6661,15 +6578,6 @@ object SparkEntry {
   }
 
   // ===========================================================================
-
-  /** Bench-only probes: run by [[Bench]] alongside [[queries]] but NOT
-    * dumped by [[Verify]] — the slot for anything with timing signal but
-    * no DuckDB-expressible oracle. Empty since the r12 xxh twins
-    * collapsed into the `spark.graft.hasher` conf ([[hasherSensitive]]):
-    * Bench now measures the xxh production path by flipping the conf on
-    * the SAME registry entries instead of running twin queries.
-    */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 
   /** Queries whose hot kernel honors `spark.graft.hasher`: the oracle
     * gate always runs them on the default (md5); [[Bench]] re-runs them
@@ -7187,41 +7095,61 @@ object SparkEntry {
        |FROM p GROUP BY 1, 2""".stripMargin
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a rows-only check.
-    * q65's entry exists only after [[qPqTopK]] has run in this process
-    * (Verify's dump order guarantees that): its SQL embeds the trained
-    * codebooks, so it cannot be written statically.
+  /** The DuckDB oracle of query `name` on data dir `dir`: equivalent
+    * ANSI SQL runnable on the same parquet tables, or None for a
+    * rows-only query. Most entries are static text. The entries of
+    * queries that train or derive state (centroids, codebooks, SQ8 and
+    * whitening models, driver-planned probe sets) embed that state as
+    * literals, read from the same build-once cache or derivation the
+    * query itself uses — so the oracle is a function of the data dir
+    * alone, whether or not the query has run.
     */
-  def oracleSql: Map[String, String] =
-    oracleSqlStatic ++
-      Option(pqBooksForOracle).map(b => "q65_pq_topk" -> pqOracleSql(b)) ++
-      Option(pqDistBooksForOracle).map(b => "q203_pq_distortion" -> pqDistortionOracleSql(b)) ++
-      Option(ivfPqForOracle).map { case (c, b) => "q174_ivfpq" -> ivfPqOracleSql(c, b) } ++
-      Option(ivfPqResForOracle).map { case (c, b) => "q211_ivfpq_residual" -> ivfPqResOracleSql(c, b) } ++
-      Option(sq8ForOracle).map(m => "q217_sq8_affine" -> sq8OracleSql(m)) ++
-      Option(adaptiveCentersForOracle)
-        .map(c => "q221_adaptive_probe" -> adaptiveOracleSql(c)) ++
-      Option(ivfSq8ForOracle).map { case (c, m) =>
-        "q222_ivf_sq8" -> ivfSq8OracleSql(c, m, m.encode(
-          sq8QueryVecForOracle)) } ++
-      Option(plaidForOracle).map { case (c, q) =>
-        "q223_maxsim_plaid" -> plaidOracleSql(c, q) } ++
-      Option(marginFrontierForOracle).map { case (c, p) =>
-        "q224_margin_frontier" -> marginFrontierOracleSql(c, p) } ++
-      Option(matryoshkaQVecForOracle).map(q =>
-        "q225_matryoshka_curve" -> matryoshkaCurveOracleSql(q.length)) ++
-      Option(ivfCentersForOracle).map(c => "q28_ivf_kmeans" -> ivfOracleSql(c)) ++
-      Option(retrievalCentersForOracle)
-        .map(c => "q213_retrieval_quality" -> retrievalQualityOracleSql(c)) ++
-      Option(nprobeCentersForOracle).map(c => "q186_nprobe_curve" -> nprobeOracleSql(c)) ++
-      Option(semdedupCentersForOracle).map(c => "q100_semdedup" -> semDedupOracleSql(c)) ++
-      (if (pageRankN > 0) Some("q107_pagerank" -> pageRankOracleSql(pageRankN)) else None) ++
-      Option(whitenForOracle).map { case (w, m) => "q126_whitened_topk" -> whitenedOracleSql(w, m) } ++
-      Option(clusterQualityCentersForOracle)
-        .map(c => "q144_cluster_quality" -> clusterQualityOracleSql(c))
+  def oracleSql(s: SparkSession, dir: String, name: String): Option[String] =
+    oracleSqlStatic.get(name).orElse(trainedOracleSql(s, dir, name))
 
-  private def oracleSqlStatic: Map[String, String] = Map(
+  private def trainedOracleSql(s: SparkSession, dir: String,
+                               name: String): Option[String] = name match {
+    case "q28_ivf_kmeans" => Some(ivfOracleSql(ivfIndexFor(s, dir).centers))
+    case "q65_pq_topk" => Some(pqOracleSql(pqIndexFor(s, dir).codebooks))
+    case "q100_semdedup" =>
+      Some(semDedupOracleSql(workingSetClustersFor(s, dir).centers))
+    case "q107_pagerank" => Some(pageRankOracleSql(linkGraphNodes(s, dir)._2))
+    case "q126_whitened_topk" =>
+      val (w, mean) = whitenModelFor(s, dir, 16)
+      Some(whitenedOracleSql(w, mean))
+    case "q144_cluster_quality" =>
+      Some(clusterQualityOracleSql(workingSetClustersFor(s, dir).centers))
+    case "q174_ivfpq" =>
+      val index = ivfPqIndexFor(s, dir)
+      Some(ivfPqOracleSql(index.centers, index.codebooks))
+    case "q186_nprobe_curve" => Some(nprobeOracleSql(ivfIndexFor(s, dir).centers))
+    case "q203_pq_distortion" =>
+      Some(pqDistortionOracleSql(pqIndexFor(s, dir).codebooks))
+    case "q211_ivfpq_residual" =>
+      val index = ivfPqResIndexFor(s, dir)
+      Some(ivfPqResOracleSql(index.centers, index.codebooks))
+    case "q213_retrieval_quality" =>
+      Some(retrievalQualityOracleSql(ivfIndexFor(s, dir).centers))
+    case "q217_sq8_affine" => Some(sq8OracleSql(sq8ModelFor(s, dir)))
+    case "q221_adaptive_probe" =>
+      Some(adaptiveOracleSql(ivfIndexFor(s, dir).centers))
+    case "q222_ivf_sq8" =>
+      val path = ivfSq8IndexFor(s, dir)
+      val model = Ann.readSq8Model(s, path)
+      Some(ivfSq8OracleSql(Ann.readIvf(s, path).centers, model,
+        model.encode(queryVec(rd(s, dir, "embeddings")))))
+    case "q223_maxsim_plaid" =>
+      Some(plaidOracleSql(ivfIndexFor(s, dir).centers, plaidQueries(s, dir)))
+    case "q224_margin_frontier" =>
+      Some(marginFrontierOracleSql(ivfIndexFor(s, dir).centers,
+        marginProbePlan(s, dir)._2))
+    case "q225_matryoshka_curve" =>
+      Some(matryoshkaCurveOracleSql(
+        queryVec(rd(s, dir, "embeddings")).length))
+    case _ => None
+  }
+
+  private lazy val oracleSqlStatic: Map[String, String] = Map(
     "q01_cosine_topk" ->
       s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
          | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
@@ -11019,8 +10947,8 @@ object SparkEntry {
          |    ORDER BY mmr DESC, p.vec_id ASC LIMIT 1))
          |SELECT rank, vec_id, round(rel, 6) AS rel, round(mmr, 6) AS mmr FROM sel""".stripMargin,
 
-    // q28's oracle is dynamic (trained centroids exported as literals —
-    // see ivfOracleSql), merged in oracleSql after the query has run
+    // q28's oracle embeds the trained centroids as literals — see
+    // trainedOracleSql
 
     // The ENTIRE reference pipeline replayed independently: chunker
     // recursive CTE (as q12) → md5-token hash-projection embedding as

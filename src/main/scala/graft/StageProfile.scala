@@ -54,7 +54,7 @@ object StageProfile {
     spark.sparkContext.addSparkListener(listener)
     spark.range(1000).selectExpr("sum(id)").collect() // session warm-up
 
-    val registry = SparkEntry.queries ++ SparkEntry.benchOnly
+    val registry = SparkEntry.queries
     names.foreach { qn =>
       val fn = registry(qn)
       for (p <- 1 to passes) {

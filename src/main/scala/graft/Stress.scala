@@ -194,7 +194,7 @@ object Stress {
       System.err.println(f"[stress] replication done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     } else System.err.println(s"[stress] reusing $workDir")
 
-    val results = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
       val q0 = System.nanoTime()

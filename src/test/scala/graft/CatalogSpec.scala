@@ -18,7 +18,7 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("every registered query appears in the README catalog") {
-    val names = SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet
+    val names = SparkEntry.queries.keySet
     assert(names.size >= 190, s"registry unexpectedly small: ${names.size}")
     val missing = names.filterNot(n => readme.contains(s"`$n`"))
     assert(missing.isEmpty,
@@ -50,7 +50,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(sec8.length > 1000, "SURVEY.md §8 not found or empty")
     // §8 rows cite queries by bare qNN token (sometimes the full name);
     // require at least the bare token for every registered query
-    val names = SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet
+    val names = SparkEntry.queries.keySet
     val tokens = """\bq\d+\b""".r.findAllIn(sec8).toSet
     val missing = names.filterNot { n =>
       tokens.contains(n.takeWhile(c => c != '_')) || sec8.contains(n)
@@ -64,7 +64,7 @@ class CatalogSpec extends AnyFunSuite {
     "(no stale rows)") {
     val catalogued = """`(q[0-9]+[a-z_0-9]*)`""".r
       .findAllMatchIn(readme).map(_.group(1)).toSet
-    val registered = SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet
+    val registered = SparkEntry.queries.keySet
     val stale = catalogued -- registered
     assert(stale.isEmpty,
       s"README catalogs unregistered queries (stale rows): ${stale.toSeq.sorted}")

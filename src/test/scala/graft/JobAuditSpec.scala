@@ -300,7 +300,7 @@ class JobAuditSpec extends SparkSpec {
     // subset (the unknown-budget-entry check is skipped then)
     val only = sys.env.get("GRAFT_JOB_AUDIT_ONLY").map(_.split(",").toSet)
     try {
-      val registry = SparkEntry.queries ++ SparkEntry.benchOnly
+      val registry = SparkEntry.queries
       val failures = scala.collection.mutable.ArrayBuffer.empty[String]
       for (name <- registry.keys.toSeq.sorted
              if only.forall(_.contains(name))) {

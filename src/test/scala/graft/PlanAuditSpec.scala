@@ -194,7 +194,7 @@ class PlanAuditSpec extends SparkSpec {
       val failures = scala.collection.mutable.ArrayBuffer.empty[String]
       val usedWindowAllowlist = scala.collection.mutable.Set.empty[String]
       val usedBroadcastAllowlist = scala.collection.mutable.Set.empty[String]
-      val registry = SparkEntry.queries ++ SparkEntry.benchOnly
+      val registry = SparkEntry.queries
       val names = registry.keys.toSeq.sorted
       for (name <- names) {
         val df =
