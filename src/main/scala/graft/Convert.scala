@@ -52,14 +52,7 @@ object Convert {
       .getOrElse(graft.text.Chunker.DefaultChunkSize)
     val overlap = args.lift(3).map(_.toInt)
       .getOrElse(graft.text.Chunker.DefaultOverlap)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-convert")
     val t0 = System.nanoTime()
     val m = run(spark, srcDir, outDir, chunkSize, overlap)
     println(s"[convert] $srcDir -> $outDir: " +

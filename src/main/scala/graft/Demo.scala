@@ -35,13 +35,7 @@ object Demo {
                           byExtension: Map[String, Long])
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-demo")
     val srcDir = args.headOption.getOrElse(sampleRepo())
     val query = args.lift(1).getOrElse("how does the vector database api work")
     run(spark, srcDir, query)

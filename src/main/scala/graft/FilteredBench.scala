@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.search.Ann
@@ -22,15 +22,7 @@ object FilteredBench {
       java.nio.file.Files.createTempDirectory("graft-fb").toString)
     val nCentroids = args.lift(2).map(_.toInt).getOrElse(64)
     val k = args.lift(3).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-filtered-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-filtered-bench")
 
     // "gen:rows=2000000,dim=128,centers=64" synthesizes a CLUSTERED
     // corpus instead of reading one: center c = seeded Gaussian, row =
@@ -75,8 +67,7 @@ object FilteredBench {
       System.err.println(f"[fb] index built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     } else System.err.println(s"[fb] index reused at $idxDir")
 
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val qVec = SparkEntry.queryVec(emb)
     val filters = Seq(
       ("label=3 (~10%)", col("label") === 3),
       ("label=3 and vec_id%7=0 (~1.4%)",

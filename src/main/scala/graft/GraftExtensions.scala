@@ -12,7 +12,7 @@ import graft.text.Chunker
   * `SELECT simhash32(hs)` work in `spark.sql(...)` as well as through
   * the Column API.
   *
-  * Wire-up: `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * Wire-up: `withExtensions(new GraftExtensions)` on a session builder
   * or `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.plans.AnnTopKRewrite
@@ -23,15 +23,7 @@ object RewriteBench {
       java.nio.file.Files.createTempDirectory("graft-rwb").toString)
     val nCentroids = args.lift(2).map(_.toInt).getOrElse(64)
     val k = args.lift(3).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-rewrite-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-rewrite-bench")
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ AnnTopKRewrite
 
@@ -45,8 +37,7 @@ object RewriteBench {
       System.err.println(f"[rwb] index built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     } else System.err.println(s"[rwb] index reused at $idxDir")
 
-    val qVec = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val qVec = SparkEntry.queryVec(emb)
     def query(): DataFrame = Ann.listsFrame(spark, idxDir)
       .withColumn("score", graft.functions.CosineSimilarity(
         col("embedding"), array(qVec.map(lit): _*)))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Serve the VectorDb HTTP endpoints (the reference's Flask surface)
   * over a parquet store: `runMain graft.Serve <storeDir> [port]`.
   * Blocks until killed.
@@ -10,14 +8,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val store = args.headOption.getOrElse("/tmp/graft-store")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-serve")
     val srv = new api.VectorDbServer(spark, new api.VectorDb(spark, store), port)
     srv.start()
     System.err.println(s"[serve] listening on 127.0.0.1:${srv.boundPort}, store=$store")

@@ -40,10 +40,10 @@ object SparkEntry {
   }
 
   /** The corpus query vector (vec_id 0's embedding as doubles), pulled to
-    * the driver — the probe input of the single-query search family and
-    * of the q222/q225 oracles.
+    * the driver — the probe input of the single-query search family, of
+    * the q222/q225 oracles, and of RewriteBench and FilteredBench.
     */
-  private def queryVec(emb: DataFrame): Seq[Double] =
+  private[graft] def queryVec(emb: DataFrame): Seq[Double] =
     emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profiler for one (or a few) SparkEntry queries — the
   * guide-§1 "where is the time actually going" tool for a headless box
@@ -20,17 +19,7 @@ object StageProfile {
     val names = if (args.length > 1) args(1).split(",").toSeq
                 else Seq("q01_cosine_topk")
     val passes = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stage-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-stage-profile")
 
     case class StageRow(id: Int, name: String, ms: Long, tasks: Int,
                         runMs: Long, cpuMs: Long, shRead: Long,

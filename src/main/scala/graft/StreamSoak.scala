@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{StreamingDistinct, StreamingDrift, StreamingLateness, StreamingQuantile}
@@ -35,14 +35,7 @@ object StreamSoak {
     val resume = args.lift(1).map(_.toInt).getOrElse(40)
     val work = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-soak").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-stream-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
     // Synthetic document stream: `docsPerBatch` rows per file, one file

@@ -165,17 +165,7 @@ object Stress {
     val only = args.lift(3).map(_.split(",").toSet)
     require(eventsFactor > 0 || docsFactor > 0 || factor >= 0,
       s"factor must be >= 0 (0 = reuse workDir), events=N, or docs=N, got $factorArg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-stress")
 
     if (eventsFactor > 0) {
       System.err.println(s"[stress] replicating $sfDir events x$eventsFactor (others x1) -> $workDir")

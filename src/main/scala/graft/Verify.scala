@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.api.VectorDbServer.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json (the dumped queries' oracles), for the driver's
   * DuckDB compare.
@@ -13,14 +13,12 @@ object Verify {
     // the driver always passes exactly two args and dumps everything)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a misspelled name would dump nothing and the oracle compare would
+    // pass over an empty out dir
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     val dumped = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -39,20 +37,8 @@ object Verify {
         None
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

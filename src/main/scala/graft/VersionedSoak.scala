@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Versioned
@@ -28,13 +27,7 @@ object VersionedSoak {
   def main(args: Array[String]): Unit = {
     val epochs = args.headOption.map(_.toInt).getOrElse(120)
     val work = sys.env.getOrElse("SPARK_GRAFT_VSOAK_DIR", "/tmp/graft-vsoak")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-versioned-soak")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-versioned-soak")
     val fs = new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(work), true)

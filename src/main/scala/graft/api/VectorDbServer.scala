@@ -26,6 +26,7 @@ import org.apache.spark.sql.SparkSession
   * HTTP layer is the same `VectorDb` the library embeds.
   */
 final class VectorDbServer(spark: SparkSession, db: VectorDb, port: Int = 0) {
+  import VectorDbServer.jstr
 
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
@@ -67,18 +68,6 @@ final class VectorDbServer(spark: SparkSession, db: VectorDb, port: Int = 0) {
     import spark.implicits._
     spark.read.json(Seq(s).toDS())
   }
-
-  /** JSON string escape (same table as Verify's oracle dump). */
-  private def jstr(s: String): String =
-    "\"" + Option(s).getOrElse("null").flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def err(msg: String): String = s"""{"error": ${jstr(msg)}}"""
 
@@ -182,4 +171,20 @@ object VectorDbServer {
 
   final class BodyTooLarge(got: Long) extends RuntimeException(
     s"request body too large ($got bytes > cap $MaxBodyBytes)")
+
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20); a null becomes the string `"null"`. Also the escaper of
+    * Verify's `oracle_sql.json`, where a raw tab or CR in oracle SQL
+    * would make the DuckDB compare's `json.load` fail.
+    */
+  private[graft] def jstr(s: String): String =
+    "\"" + Option(s).getOrElse("null").flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }
