@@ -184,8 +184,8 @@ object Bench {
 
   /** Budgeted sf1 sub-object for the final stdout line. Caps are hard:
     * 3 slowest, 4 suspects, 4 rechecks, 4 regressions, 3 nonclone rows —
-    * the r15 artifact died because this block carried full xxh maps and
-    * 10-deep lists (BENCH_r15 parsed:null). Full detail lives in
+    * the r15 artifact died because this block carried full per-query maps
+    * and 10-deep lists (BENCH_r15 parsed:null). Full detail lives in
     * perf/bench_full.json and on stderr.
     */
   private[graft] def sf1Compact(value: Double, nQueries: Int, nFailed: Int,
@@ -209,8 +209,8 @@ object Bench {
     * sf0.1 serial_recheck dropped entirely — VERDICT r15 item 1). This
     * form caps every variable-length list (4 headline, 3 failed names,
     * 4 suspects, 4 rechecks, 4 regressions, capped sf1 block), carries
-    * BOTH scales' recheck/regression blocks, and drops queries_xxh and
-    * the corpus fingerprint (both live in perf/bench_full.json + stderr).
+    * BOTH scales' recheck/regression blocks, and drops the corpus
+    * fingerprint (it lives in perf/bench_full.json + stderr).
     * BenchSpec asserts the worst-case assembled length stays under 1900.
     */
   private[graft] def finalLine(total: Double, degraded: Boolean,
@@ -235,7 +235,8 @@ object Bench {
 
   /** Best-effort write of the full (uncapped) bench JSON to a committed
     * path, so nothing depends on the driver's stdout tail window
-    * (VERDICT r15 item 7).
+    * (VERDICT r15 item 7). Only an unfiltered run writes it: a filtered
+    * dev-loop run would replace the full-registry ledger with a few rows.
     */
   private[graft] val FullJsonPath = "perf/bench_full.json"
 
@@ -288,8 +289,8 @@ object Bench {
     * bench run appends its sf1 suspect list to a committed history
     * (last [[SuspectRunsKept]] runs), and any query suspect in BOTH of
     * the two most recent prior runs is auto-promoted into the lane for
-    * this run. Tagged entries (@xxh / @nonclone) are never promoted —
-    * they are measurement variants, not sweep members.
+    * this run. Tagged entries (@nonclone) are never promoted — they are
+    * measurement variants, not sweep members.
     */
   private[graft] val SuspectHistoryPath = "perf/suspect_history.json"
   private[graft] val SuspectRunsKept = 8
@@ -411,13 +412,7 @@ object Bench {
       args.headOption.map(_.split(",").toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // queries whose kernels honor spark.graft.hasher: each pass re-runs
-    // them with the conf flipped to xxh (same registry entry, no twin
-    // queries) so the production-hash rate ships next to the oracle rate
-    val xxhNames = names.filter(p => SparkEntry.hasherSensitive.contains(p._1))
     val samples = collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
-    val samplesXxh = collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     // query -> number of passes in which it threw. Failed passes contribute
     // NO sample (a fast failure must not masquerade as a fast success).
@@ -448,21 +443,6 @@ object Bench {
             System.err.println(s"[bench] pass $pass $name FAILED: ${e.getMessage}")
         }
       }
-      if (xxhNames.nonEmpty) {
-        spark.conf.set(graft.functions.Hashers.ConfKey, "xxh")
-        try xxhNames.foreach { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            samplesXxh(name) = samplesXxh(name) :+ sec
-            System.err.println(f"[bench] pass $pass $name%-24s $sec%8.3f s  (hasher=xxh)")
-          } catch {
-            case e: Throwable => // xxh timing is advisory; never degrades the bench
-              System.err.println(s"[bench] pass $pass $name (xxh) FAILED: ${e.getMessage}")
-          }
-        } finally spark.conf.unset(graft.functions.Hashers.ConfKey)
-      }
     }
 
     // Queries with at least one successful pass report their median/min over
@@ -471,37 +451,28 @@ object Bench {
     val timed = names.filter { case (name, _) => samples(name).nonEmpty }
     val med = timed.map { case (name, _) => name -> median(samples(name)) }
     val mins = timed.map { case (name, _) => name -> samples(name).min }
-    val medXxh = xxhNames.filter { case (name, _) => samplesXxh(name).nonEmpty }
-      .map { case (name, _) => name -> median(samplesXxh(name)) }
     val mainKey = new java.io.File(sfDir.replaceAll("/+$", "")).getName
     val writeHist = sys.env.get("SPARK_GRAFT_WRITE_HISTORY").contains("1")
     val ctlMedian =
       if (controlSamples.nonEmpty) Some(median(controlSamples.toList)) else None
     val ctlEntry = ctlMedian.map(ControlKey -> _).toSeq
-    // the xxh column joins the same ledger/suspect/recheck machinery under
-    // suffixed names (VERDICT r14 item 1: it was the last unadjudicated
-    // number in the artifact next to sf1's nonclone column)
-    val medXxhTagged = medXxh.map { case (n, v) => s"$n@xxh" -> v }
     // read BEFORE write: a WRITE_HISTORY (closing) run must adjudicate
     // against the PREVIOUS ledger, not the one it is about to define —
     // the old order made the builder's own suspect column vacuous
     // (every query compared to itself)
     val mainHist = readHistory(mainKey)
-    if (writeHist) writeHistory(mainKey, med ++ medXxhTagged ++ ctlEntry)
+    if (writeHist) writeHistory(mainKey, med ++ ctlEntry)
     val mainDrift = driftFactor(mainHist, ctlMedian)
     if (mainDrift > 1.0)
       System.err.println(f"[bench] control drift vs ledger: $mainDrift%.2fx — " +
         "suspect rule normalized (VERDICT r14 item 6)")
-    val mainSuspects = suspects(mainHist, med ++ medXxhTagged, mainDrift)
+    val mainSuspects = suspects(mainHist, med, mainDrift)
     // solo re-run of each suspect, AFTER the interleaved passes, so the
-    // artifact adjudicates inflation-vs-regression by itself. Tagged
-    // names route themselves: @xxh flips the hasher conf, @nonclone runs
-    // against the perturbed replica.
+    // artifact adjudicates inflation-vs-regression by itself. Names tagged
+    // @nonclone run against the perturbed replica.
     def soloRun(dir: String, ncDir: => Option[String] = None)(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val xxh = name.endsWith("@xxh")
       val d = if (name.endsWith("@nonclone")) ncDir.getOrElse(return None) else dir
-      if (xxh) spark.conf.set(graft.functions.Hashers.ConfKey, "xxh")
       val t0 = System.nanoTime()
       try {
         fn(spark, d).write.format("noop").mode("overwrite").save()
@@ -511,10 +482,9 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] recheck $name FAILED: ${e.getMessage}")
         None
-      } finally if (xxh) spark.conf.unset(graft.functions.Hashers.ConfKey)
+      }
     }
-    val mainRegistry = names ++ xxhNames.map { case (n, f) => (s"$n@xxh", f) }
-    val mainRecheck = recheckSuspects(mainRegistry, mainSuspects, soloRun(sfDir))
+    val mainRecheck = recheckSuspects(names, mainSuspects, soloRun(sfDir))
     val mainStillBad = suspects(mainHist, mainRecheck, mainDrift)
     val suspectJson = s""""inflation_suspect":${jsonNames(mainSuspects)}"""
     def recheckJson(rc: Seq[(String, Double)], still: Seq[String]): String =
@@ -549,17 +519,19 @@ object Bench {
     val degraded = failures.nonEmpty
     val fullJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","degraded":$degraded,""" +
-      f""""queries":${jsonMap(med)},"queries_xxh":${jsonMap(medXxh)},""" +
+      f""""queries":${jsonMap(med)},""" +
       f""""queries_min":${jsonMap(mins)},"passes":$passes,"failed":$failedJson,""" +
       suspectJson + "," + recheckJson(mainRecheck, mainStillBad) + "," +
       ctl + "," + diffJson + "," + corpusJson + f""","sf":"$sfDir"}"""
     // The consumer captures only the LAST ~2000 chars of stdout and
     // parses the final JSON line it finds there. The full per-query line
     // above is ~6 KB at 100+ queries, so it ships on stderr AND to the
-    // committed perf/bench_full.json; stdout ends with the budgeted
-    // finalLine (see its doc — r15's final line overflowed the window).
+    // committed perf/bench_full.json (unfiltered runs only); stdout ends
+    // with the budgeted finalLine (see its doc — r15's final line
+    // overflowed the window).
     System.err.println(fullJson)
-    writeFull(fullJson)
+    if (only.isEmpty) writeFull(fullJson)
+    else System.err.println(s"[bench] filtered run: $FullJsonPath not written")
     val headline = (med.filter(_._1 == "q01_cosine_topk") ++
       med.sortBy(-_._2).take(3)).distinctBy(_._1)
     val failedNames = failures.keys.toSeq.sorted
@@ -619,24 +591,6 @@ object Bench {
         // chronic contention rows measured last, each after a driver GC
         // (shuffle files unlink on GC) — see SoloLane
         laneQs.foreach { case (n, f) => System.gc(); sf1Run("  (lane)")(n, f) }
-        // production-hash column at sf1 too (same registry entries,
-        // conf flipped — the former q137x/q175x twins' sf1 signal)
-        val sf1Xxh = collection.mutable.ListBuffer.empty[(String, Double)]
-        if (xxhNames.nonEmpty) {
-          spark.conf.set(graft.functions.Hashers.ConfKey, "xxh")
-          try xxhNames.foreach { case (name, fn) =>
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, dir).write.format("noop").mode("overwrite").save()
-              val sec = (System.nanoTime() - t0) / 1e9
-              sf1Xxh += name -> sec
-              System.err.println(f"[bench] sf1 $name%-24s $sec%8.3f s  (hasher=xxh)")
-            } catch {
-              case e: Throwable =>
-                System.err.println(s"[bench] sf1 $name (xxh) FAILED: ${e.getMessage}")
-            }
-          } finally spark.conf.unset(graft.functions.Hashers.ConfKey)
-        }
         // The id-shift replica turns every doc into a 10-clone clique, so
         // the dedup family's sf1 numbers measure worst-case (clone-pair)
         // output. Re-run those queries against a perturbed-text replica
@@ -687,18 +641,16 @@ object Bench {
         val ncJson =
           if (ncOk) s""""nonclone":${jsonMap(ncSamples.toSeq)}"""
           else """"nonclone":null"""
-        // all three sf1 columns share one ledger key, distinguished by
-        // suffix; the drift factor reuses the session control (measured
-        // once per pass on the main run — same JVM, same machine state)
-        val sf1XxhTagged = sf1Xxh.toSeq.map { case (n, v) => s"$n@xxh" -> v }
+        // both sf1 columns share one ledger key, distinguished by suffix;
+        // the drift factor reuses the session control (measured once per
+        // pass on the main run — same JVM, same machine state)
         val ncTagged = ncSamples.toSeq.map { case (n, v) => s"$n@nonclone" -> v }
-        val sf1All = sf1Samples.toSeq ++ sf1XxhTagged ++ ncTagged
+        val sf1All = sf1Samples.toSeq ++ ncTagged
         val sf1Hist = readHistory("sf1") // before the write — see mainHist
         if (writeHist) writeHistory("sf1", sf1All ++ ctlEntry)
         val sf1Drift = driftFactor(sf1Hist, ctlMedian)
         val sf1Suspects = suspects(sf1Hist, sf1All, sf1Drift)
         val sf1Registry = names ++
-          xxhNames.map { case (n, f) => (s"$n@xxh", f) } ++
           names.filter(n => nonCloneQs.contains(n._1))
             .map { case (n, f) => (s"$n@nonclone", f) }
         val sf1Recheck = recheckSuspects(sf1Registry, sf1Suspects,
@@ -711,7 +663,7 @@ object Bench {
         val sf1Total = sf1Samples.map(_._2).sum
         val sf1Slow = sf1Samples.sortBy(-_._2).take(5).toSeq
         // budgeted block for the stdout line; the uncapped twin (full
-        // per-query map, xxh column, full suspect/recheck lists) goes to
+        // per-query map, full suspect/recheck lists) goes to
         // perf/bench_full.json + stderr
         sf1Json = sf1Compact(sf1Total, sf1Samples.size, sf1Failed, sf1Slow,
           sf1Suspects.size, sf1Suspects, sf1Recheck, sf1StillBad,
@@ -720,7 +672,6 @@ object Bench {
           f""""sf1":{"value":$sf1Total%.3f,"n_queries":${sf1Samples.size},""" +
           f""""n_failed":$sf1Failed,"factor":10,""" +
           f""""queries":${jsonMap(sf1Samples.toSeq)},""" +
-          f""""queries_xxh":${jsonMap(sf1Xxh.toSeq)},""" +
           f""""n_inflation_suspect":${sf1Suspects.size},""" +
           f""""inflation_suspect":${jsonNames(sf1Suspects)},""" +
           recheckJson(sf1Recheck, sf1StillBad) + "," + ncJson + "}"

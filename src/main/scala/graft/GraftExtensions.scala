@@ -146,7 +146,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
                 s"cdc_cuts modulus must be a non-null integer, got $other")
             }
           }
-        graft.functions.CdcCutPositions(exprs.head, modulus, useXxHash = false)
+        graft.functions.CdcCutPositions(exprs.head, modulus)
       }))
     e.injectFunction((
       FunctionIdentifier("char_class_counts"),

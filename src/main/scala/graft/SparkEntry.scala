@@ -1258,7 +1258,7 @@ object SparkEntry {
   private def qTokenPositionBias(s: SparkSession, dir: String): DataFrame =
     // STRING-keyed on purpose (r15, VERDICT r14 items 2+8): the
     // hash-domain twin (tokenPositionBiasHashed, spec-witnessed) measured
-    // 3.0× SLOWER at 100× (15.4 → 45.9 s md5, 31.4 s xxh) — single-token
+    // 3.0× SLOWER at 100× (15.4 → 45.9 s) — single-token
     // keys are short, map-side combine already shrinks the string
     // shuffle, and md5-per-token + the winner-recovery scan dominate.
     // The q69 negative-result class; PERF.md r15 records the A/B.
@@ -5443,9 +5443,7 @@ object SparkEntry {
     // asc), mirrored in the oracle (tied freqs contribute the same mass,
     // so coverage at every k is unchanged by the reorder)
     val grams = rdWide(s, dir, "documents")
-      .select(explode(graft.functions.TokenBigramHashes(col("text"),
-        graft.functions.Hashers.resolve(s, graft.functions.Hashers.FromConf) == "xxh"))
-        .as("gram"))
+      .select(explode(graft.functions.TokenBigramHashes(col("text"))).as("gram"))
       .groupBy(col("gram")).agg(count(lit(1)).as("freq"))
     val total = grams.agg(sum(col("freq")).as("total"))
     val top = grams.orderBy(col("freq").desc, col("gram").asc).limit(1000)
@@ -6578,25 +6576,6 @@ object SparkEntry {
   }
 
   // ===========================================================================
-
-  /** Queries whose hot kernel honors `spark.graft.hasher`: the oracle
-    * gate always runs them on the default (md5); [[Bench]] re-runs them
-    * with the conf set to `xxh` and reports the production-hash timing
-    * as `queries_xxh` next to the md5 column, from the same registry
-    * entry (VERDICT r12 item 3 — formerly the q137x/q175x twins).
-    */
-  val hasherSensitive: Seq[String] =
-    Seq("q137_quality_classifier", "q175_cdc_dedup",
-      // r14 (VERDICT r13 item 8): the 60-bit-hash-domain kernel
-      // consumers — TokenNgramHashes / TokenBigramHashes /
-      // TokenPairHashes all honor the conf now (xxh = seed-42 XXH64
-      // over the identical window bytes, full 64-bit keys)
-      "q121_intradoc_repeats", "q139_vocab_coverage",
-      "q156_bigram_coverage", "q160_kn_score")
-    // q197/q199 are NOT here: their hash-domain twins measured 2-3×
-    // slower at 100× (the q69 class — short single-token keys, winners
-    // need string recovery), so the registered forms are string-keyed
-    // and hasher-independent. PERF.md r15 has the A/B.
 
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,8 +2,9 @@ package graft.api
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, TimestampType}
 
 import graft.embed.Embedder
 import graft.search.Search
@@ -117,17 +118,32 @@ final class VectorDb(spark: SparkSession, path: String,
   /** A1-A5: the `/stats` report in one pass over the corpus (plus the
     * tiny per-extension histogram), computed with the same last-wins
     * semantics the reference's chunk map has (§2.9.6).
+    *
+    * Only `embedding` and `content` are required (§1.2): an absent
+    * `path`, `extension`, `total_chunks` or `orderCol` column reads as
+    * null, as the reference's `.get` defaults do. Empty and missing paths
+    * are no file (A3), a missing extension counts as "unknown" (A2), and
+    * a sum or average over no value (a store of zero rows, or no chunk
+    * count anywhere) reads 0.0.
     */
   def stats(orderCol: String = "ingested_at"): DbStats = {
-    val c = corpus()
-    val base = Stats.corpusStats(c, "path", "content").head()
-    val avg = Stats.avgChunksPerFile(c, "path", "total_chunks", orderCol)
-      .head().getDouble(0)
+    val raw = corpus()
+    def opt(name: String, t: DataType): Column =
+      (if (raw.columns.contains(name)) col(name) else lit(null).cast(t)).as(name)
+    val c = raw.select(col("content"), opt("path", StringType),
+      opt("extension", StringType), opt("total_chunks", IntegerType),
+      opt(orderCol, TimestampType))
+    val base = Stats.corpusStats(
+      c.withColumn("__file", when(col("path") =!= "", col("path"))),
+      "__file", "content").head()
+    val avg = Stats.avgChunksPerFile(c, "path", "total_chunks", orderCol).head()
     val byExt = c
       .groupBy(coalesce(col("extension"), lit("unknown")).as("extension"))
       .count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    DbStats(base.getLong(0), base.getLong(1), base.getDouble(2), avg, byExt)
+    def orZero(r: Row, i: Int): Double =
+      if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+    DbStats(base.getLong(0), base.getLong(1), orZero(base, 2), orZero(avg, 0), byExt)
   }
 
   /** Depth-first listing of everything under `root` except `root` itself,

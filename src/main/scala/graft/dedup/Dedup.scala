@@ -1743,28 +1743,15 @@ object Dedup {
     * and the chunk⋈dup-hash equi-join, both keyed on content hashes.
     * Documents with empty text carry no mass and are excluded on both
     * engines.
-    *
-    * `hasher` picks the per-position digest: "md5" (default — DuckDB-
-    * portable, the oracle path) or "xxh" (xxhash64, the claimed
-    * production swap). MEASURED in round 12 (PERF.md): like q137's
-    * digest experiment, the choice is what the numbers say it is — the
-    * boundary selection differs per hasher, so the two variants are
-    * separate audits of the same corpus, not bit-identical outputs.
     */
   def cdcSharedChunks(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text", groupCol: String = "source",
                       modulus: Int = 64,
-                      hasher: String = graft.functions.Hashers.FromConf,
                       kernelCuts: Boolean = true): DataFrame = {
     require(modulus >= 2, s"need modulus >= 2, got $modulus")
-    val h = graft.functions.Hashers.resolve(docs.sparkSession, hasher)
     def posHash(sub: String): String =
-      if (h == "md5")
-        s"cast(conv(substring(md5(cast($sub as binary)), 1, 8), 16, 10) as bigint)"
-      else s"xxhash64(cast($sub as binary))"
-    def chunkHash(sub: String): String =
-      if (h == "md5") s"md5(cast($sub as binary))"
-      else s"cast(xxhash64(cast($sub as binary)) as string)"
+      s"cast(conv(substring(md5(cast($sub as binary)), 1, 8), 16, 10) as bigint)"
+    def chunkHash(sub: String): String = s"md5(cast($sub as binary))"
     // composed per-position form: DedupSpec's equivalence witness for the
     // native kernel (the q137 discipline — the expression tree pays an
     // md5-hex-parse chain PER CHARACTER POSITION; the kernel digests the
@@ -1779,7 +1766,7 @@ object Dedup {
          |ELSE array(0, length($textCol)) END""".stripMargin.replaceAll("\n", " ")
     val cuts =
       if (kernelCuts)
-        graft.functions.CdcCutPositions(col(textCol), modulus, h != "md5")
+        graft.functions.CdcCutPositions(col(textCol), modulus)
       else expr(cutsSql)
     val chunks = docs
       .filter(length(col(textCol)) > 0)

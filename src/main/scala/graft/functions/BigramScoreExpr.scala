@@ -17,26 +17,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * `aggregate`) pays, PER BIGRAM: an array `slice`, an `array_join`
   * string allocation, an md5 → HEX STRING → `substring` → `conv` parse
   * chain, and a boxed lambda step — and the round-11/12 measurements
-  * proved the digest itself is NOT the cost (md5 vs xxhash64 was a wash:
-  * 322.6 vs 294.2 s at 100×), the per-bigram expression machinery is.
-  * This kernel tokenizes once (identical semantics:
+  * proved the digest itself is NOT the cost, the per-bigram expression
+  * machinery is. This kernel tokenizes once (identical semantics:
   * `split(lower(trim(text)), '\s+')` with Spark's keep-trailing-empties
   * limit = -1), then per bigram feeds the two token byte slices straight
-  * into a thread-local MD5 (or Spark's XXH64) and indexes the broadcast
-  * weight table — no hex strings, no per-bigram arrays, no lambda.
+  * into a thread-local MD5 and indexes the broadcast weight table — no
+  * hex strings, no per-bigram arrays, no lambda.
   *
-  * Semantics are bit-identical to the composed form for BOTH hashers
-  * (md5: first-4-bytes-big-endian of md5("tok1 tok2") mod buckets, the
-  * `HashFunctions.md5Int32` contract the DuckDB oracle replays; xxhash64:
-  * Spark's own seed-42 XXH64 with pmod) — CorpusOpsSpec asserts kernel ==
-  * composed on both paths.
+  * Semantics are bit-identical to the composed form (first-4-bytes-
+  * big-endian of md5("tok1 tok2") mod buckets, the
+  * `HashFunctions.md5Int32` contract the DuckDB oracle replays) —
+  * CorpusOpsSpec asserts kernel == composed.
   *
   * Returns struct(wsum BIGINT, n_bigrams BIGINT); a sub-2-token text
   * yields (0, 0), which the caller's `n_bigrams > 0` filter drops —
   * exactly the composed form's empty-array semantics.
   */
-case class BigramWeightSum(child: Expression, weights: IndexedSeq[Long],
-                           useXxHash: Boolean)
+case class BigramWeightSum(child: Expression, weights: IndexedSeq[Long])
   extends UnaryExpression {
 
   // case-class field is an IndexedSeq (content equals/hashCode) so two
@@ -56,12 +53,12 @@ case class BigramWeightSum(child: Expression, weights: IndexedSeq[Long],
   }
 
   override def nullSafeEval(input: Any): Any =
-    BigramWeightSum.compute(input.asInstanceOf[UTF8String], weightsArr, useXxHash)
+    BigramWeightSum.compute(input.asInstanceOf[UTF8String], weightsArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val w = ctx.addReferenceObj("bigramWeights", weightsArr, "long[]")
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.BigramWeightSum.compute($a, $w, $useXxHash);")
+      s"${ev.value} = graft.functions.BigramWeightSum.compute($a, $w);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -79,8 +76,7 @@ case class BigramWeightSum(child: Expression, weights: IndexedSeq[Long],
   * composed `element_at` form kept them too). Sub-2-token text yields
   * an empty array.
   */
-case class TokenBigramHashes(child: Expression,
-                             useXxHash: Boolean = false) extends UnaryExpression {
+case class TokenBigramHashes(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -93,11 +89,11 @@ case class TokenBigramHashes(child: Expression,
   }
 
   override def nullSafeEval(input: Any): Any =
-    TokenBigramHashes.compute(input.asInstanceOf[UTF8String], useXxHash)
+    TokenBigramHashes.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenBigramHashes.compute($a, $useXxHash);")
+      s"${ev.value} = graft.functions.TokenBigramHashes.compute($a);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -105,43 +101,15 @@ case class TokenBigramHashes(child: Expression,
 
 object TokenBigramHashes {
 
-  def apply(c: Column): Column = apply(c, useXxHash = false)
-
-  def apply(c: Column, useXxHash: Boolean): Column =
-    ColumnShim.column(TokenBigramHashes(ColumnShim.expression(c), useXxHash))
+  def apply(c: Column): Column =
+    ColumnShim.column(TokenBigramHashes(ColumnShim.expression(c)))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** xxh mode (`spark.graft.hasher=xxh`, timing-only — no DuckDB twin):
-    * Spark's own seed-42 XXH64 over the identical "tok SP tok" bytes,
-    * full 64-bit value (the keys are shuffle/group keys only, so no
-    * 60-bit masking is needed). Bit-identical to
-    * `xxhash64(concat(tok1, ' ', tok2))` — CorpusOpsSpec pins it.
-    */
-  private[functions] def xxhWindow(bytes: Array[Array[Byte]],
-                                   from: Int, n: Int): Long = {
-    var len = n - 1
-    var i = from
-    while (i < from + n) { len += bytes(i).length; i += 1 }
-    val buf = new Array[Byte](len)
-    var off = 0
-    i = from
-    while (i < from + n) {
-      val b = bytes(i)
-      System.arraycopy(b, 0, buf, off, b.length)
-      off += b.length
-      if (i < from + n - 1) { buf(off) = ' '; off += 1 }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, buf.length, 42L)
-  }
-
-  def compute(s: UTF8String,
-              useXxHash: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < 2)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -151,15 +119,6 @@ object TokenBigramHashes {
     while (i < toks.length) {
       bytes(i) = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       i += 1
-    }
-    if (useXxHash) {
-      val out = new Array[Long](toks.length - 1)
-      var j = 0
-      while (j < toks.length - 1) {
-        out(j) = xxhWindow(bytes, j, 2)
-        j += 1
-      }
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
     }
     val md = digestLocal.get()
     val out = new Array[Long](toks.length - 1)
@@ -192,8 +151,7 @@ object TokenBigramHashes {
   * (tokenNgrams' `size >= n` semantics); tokenization is
   * `split(lower(trim(text)), '\s+')` limit -1, no empty filter.
   */
-case class TokenNgramHashes(child: Expression, n: Int,
-                            useXxHash: Boolean = false) extends UnaryExpression {
+case class TokenNgramHashes(child: Expression, n: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -208,11 +166,11 @@ case class TokenNgramHashes(child: Expression, n: Int,
     }
 
   override def nullSafeEval(input: Any): Any =
-    TokenNgramHashes.compute(input.asInstanceOf[UTF8String], n, useXxHash)
+    TokenNgramHashes.compute(input.asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenNgramHashes.compute($a, $n, $useXxHash);")
+      s"${ev.value} = graft.functions.TokenNgramHashes.compute($a, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -220,18 +178,15 @@ case class TokenNgramHashes(child: Expression, n: Int,
 
 object TokenNgramHashes {
 
-  def apply(c: Column, n: Int): Column = apply(c, n, useXxHash = false)
-
-  def apply(c: Column, n: Int, useXxHash: Boolean): Column =
-    ColumnShim.column(TokenNgramHashes(ColumnShim.expression(c), n, useXxHash))
+  def apply(c: Column, n: Int): Column =
+    ColumnShim.column(TokenNgramHashes(ColumnShim.expression(c), n))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String, n: Int,
-              useXxHash: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -243,16 +198,6 @@ object TokenNgramHashes {
       i += 1
     }
     val out = new Array[Long](toks.length - n + 1)
-    if (useXxHash) {
-      // seed-42 XXH64 over the same window bytes, full 64-bit keys
-      // (shuffle/group keys only — see TokenBigramHashes.xxhWindow)
-      var j = 0
-      while (j < out.length) {
-        out(j) = TokenBigramHashes.xxhWindow(bytes, j, n)
-        j += 1
-      }
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    }
     val md = digestLocal.get()
     var j = 0
     while (j < out.length) {
@@ -295,8 +240,7 @@ object TokenNgramHashes {
   * vocabulary are ~V²/2^61 (V = 10⁶ → 4·10⁻⁷) — and the oracle replays
   * the identical hash, so a collision changes both engines identically.
   */
-case class TokenPairHashes(child: Expression,
-                           useXxHash: Boolean = false) extends UnaryExpression {
+case class TokenPairHashes(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = TokenPairHashes.Schema
 
@@ -309,11 +253,11 @@ case class TokenPairHashes(child: Expression,
   }
 
   override def nullSafeEval(input: Any): Any =
-    TokenPairHashes.compute(input.asInstanceOf[UTF8String], useXxHash)
+    TokenPairHashes.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenPairHashes.compute($a, $useXxHash);")
+      s"${ev.value} = graft.functions.TokenPairHashes.compute($a);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -325,10 +269,8 @@ object TokenPairHashes {
     StructField("h1", LongType, nullable = false),
     StructField("h2", LongType, nullable = false))), containsNull = false)
 
-  def apply(c: Column): Column = apply(c, useXxHash = false)
-
-  def apply(c: Column, useXxHash: Boolean): Column =
-    ColumnShim.column(TokenPairHashes(ColumnShim.expression(c), useXxHash))
+  def apply(c: Column): Column =
+    ColumnShim.column(TokenPairHashes(ColumnShim.expression(c)))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -348,8 +290,7 @@ object TokenPairHashes {
     (h << 4) | ((d(7) & 0xf0L) >> 4)
   }
 
-  def compute(s: UTF8String,
-              useXxHash: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < 2)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -360,11 +301,7 @@ object TokenPairHashes {
     var i = 0
     while (i < toks.length) {
       val b = toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      hs(i) =
-        if (useXxHash)
-          org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-        else h60(md, b)
+      hs(i) = h60(md, b)
       i += 1
     }
     val out = new Array[Any](toks.length - 1)
@@ -439,9 +376,8 @@ object BigramWeightSum {
     StructField("wsum", LongType, nullable = false),
     StructField("n_bigrams", LongType, nullable = false)))
 
-  def apply(c: Column, weights: IndexedSeq[Long], useXxHash: Boolean): Column =
-    ColumnShim.column(BigramWeightSum(
-      ColumnShim.expression(c), weights, useXxHash))
+  def apply(c: Column, weights: IndexedSeq[Long]): Column =
+    ColumnShim.column(BigramWeightSum(ColumnShim.expression(c), weights))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -454,8 +390,7 @@ object BigramWeightSum {
     * lower) → split("\\s+", -1) (Spark's keep-trailing-empties split) →
     * per-window digest of "tokᵢ SP tokᵢ₊₁" bytes → weight-table sum.
     */
-  def compute(s: UTF8String, weights: Array[Long],
-              useXxHash: Boolean): InternalRow = {
+  def compute(s: UTF8String, weights: Array[Long]): InternalRow = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     val n = math.max(toks.length - 1, 0).toLong
     if (n == 0L) return new GenericInternalRow(Array[Any](0L, 0L))
@@ -467,37 +402,19 @@ object BigramWeightSum {
       i += 1
     }
     var wsum = 0L
-    if (useXxHash) {
-      // Spark xxhash64: XXH64 over the concatenated UTF-8 bytes, seed 42
-      var j = 0
-      while (j < toks.length - 1) {
-        val a = bytes(j); val b = bytes(j + 1)
-        val buf = new Array[Byte](a.length + 1 + b.length)
-        System.arraycopy(a, 0, buf, 0, a.length)
-        buf(a.length) = ' '
-        System.arraycopy(b, 0, buf, a.length + 1, b.length)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-            buf.length, 42L)
-        val m = ((h % buckets) + buckets) % buckets // pmod
-        wsum += weights(m.toInt)
-        j += 1
-      }
-    } else {
-      val md = digestLocal.get()
-      var j = 0
-      while (j < toks.length - 1) {
-        md.reset()
-        md.update(bytes(j))
-        md.update(Space)
-        md.update(bytes(j + 1))
-        val d = md.digest()
-        // first 4 bytes big-endian unsigned = HashFunctions.md5Int32
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-        wsum += weights((h % buckets).toInt)
-        j += 1
-      }
+    val md = digestLocal.get()
+    var j = 0
+    while (j < toks.length - 1) {
+      md.reset()
+      md.update(bytes(j))
+      md.update(Space)
+      md.update(bytes(j + 1))
+      val d = md.digest()
+      // first 4 bytes big-endian unsigned = HashFunctions.md5Int32
+      val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      wsum += weights((h % buckets).toInt)
+      j += 1
     }
     new GenericInternalRow(Array[Any](wsum, n))
   }

@@ -18,17 +18,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * `conv` parse chain — the same per-element expression overhead the
   * q137 kernel eliminated (21× there, r12). This kernel walks the code
   * points once and feeds each trailing 4-gram's UTF-8 bytes straight
-  * into a thread-local MD5 (or Spark's seed-42 XXH64) — no hex strings,
-  * no per-position arrays.
+  * into a thread-local MD5 — no hex strings, no per-position arrays.
   *
-  * Bit-identical contract (DedupSpec asserts kernel == composed, both
-  * hashers): positions are 1-based SQL-substring positions over CODE
+  * Bit-identical contract (DedupSpec asserts kernel == composed):
+  * positions are 1-based SQL-substring positions over CODE
   * POINTS (Spark `length`/`substring` semantics); the returned array is
   * `[0, interior cuts asc, length]` exactly as the composed
   * `concat(array(0), filter(...), array(len))`, with texts shorter than
   * 4 chars yielding `[0, len]`.
   */
-case class CdcCutPositions(child: Expression, modulus: Int, useXxHash: Boolean)
+case class CdcCutPositions(child: Expression, modulus: Int)
   extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -44,11 +43,11 @@ case class CdcCutPositions(child: Expression, modulus: Int, useXxHash: Boolean)
   }
 
   override def nullSafeEval(input: Any): Any =
-    CdcCutPositions.compute(input.asInstanceOf[UTF8String], modulus, useXxHash)
+    CdcCutPositions.compute(input.asInstanceOf[UTF8String], modulus)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.CdcCutPositions.compute($a, $modulus, $useXxHash);")
+      s"${ev.value} = graft.functions.CdcCutPositions.compute($a, $modulus);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -56,16 +55,15 @@ case class CdcCutPositions(child: Expression, modulus: Int, useXxHash: Boolean)
 
 object CdcCutPositions {
 
-  def apply(c: Column, modulus: Int, useXxHash: Boolean): Column =
-    ColumnShim.column(CdcCutPositions(
-      ColumnShim.expression(c), modulus, useXxHash))
+  def apply(c: Column, modulus: Int): Column =
+    ColumnShim.column(CdcCutPositions(ColumnShim.expression(c), modulus))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String, modulus: Int, useXxHash: Boolean): ArrayData = {
+  def compute(s: UTF8String, modulus: Int): ArrayData = {
     val str = s.toString
     val nChars = str.codePointCount(0, str.length)
     if (nChars < 4)
@@ -94,27 +92,15 @@ object CdcCutPositions {
     }
     val cuts = scala.collection.mutable.ArrayBuilder.make[Any]
     cuts += 0
-    if (useXxHash) {
-      var p = 4
-      while (p < nChars) {
-        val b = gramBytes(p)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-            b.length, 42L)
-        if (((h % modulus) + modulus) % modulus == 0) cuts += p
-        p += 1
-      }
-    } else {
-      val md = digestLocal.get()
-      var p = 4
-      while (p < nChars) {
-        md.reset()
-        val d = md.digest(gramBytes(p))
-        val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-          ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-        if (h % modulus == 0) cuts += p
-        p += 1
-      }
+    val md = digestLocal.get()
+    var p = 4
+    while (p < nChars) {
+      md.reset()
+      val d = md.digest(gramBytes(p))
+      val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      if (h % modulus == 0) cuts += p
+      p += 1
     }
     cuts += nChars
     new GenericArrayData(cuts.result())

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * both yield the same non-negative integer (k <= 15 keeps it within a
   * signed 64-bit range). md5 is overkill cryptographically but it is the
-  * one hash both engines share bit-for-bit.
+  * one hash both engines share bit-for-bit, and it is the only hasher the
+  * text and dedup kernels use: there is no switch to another hash.
   */
 object HashFunctions {
 
@@ -46,42 +47,4 @@ object HashFunctions {
 
   def minhashA(j: Int): Long = 2L * j + 1 // odd multipliers
   def minhashB(j: Int): Long = 1000000007L * (j + 1) % MinhashPrime
-}
-
-/** The engine-wide hasher switch: `spark.graft.hasher` = `md5` (default —
-  * the oracle-replayable path every CORRECTNESS check runs) or `xxh` (the
-  * production path: Spark-native XXH64 with no digest allocation — the
-  * measured −37%…2.2× on the hot kernels at 100×, PERF.md r12 — but no
-  * DuckDB twin, so never the default for an engine gated on hash-exact
-  * oracle comparison).
-  *
-  * Hasher-parametric operators ([[graft.text.CorpusOps.hashedBigramQuality]],
-  * [[graft.dedup.Dedup.cdcSharedChunks]]) default their `hasher` argument
-  * to [[Hashers.FromConf]] and resolve it against the session at
-  * COLUMN-CONSTRUCTION time — the kernels receive a fixed boolean, so
-  * canonicalization, codegen, and plan caching never see a conf read in
-  * the hot path, and flipping the conf mid-session affects only plans
-  * built afterwards.
-  */
-object Hashers {
-
-  val ConfKey = "spark.graft.hasher"
-
-  /** Sentinel default for `hasher` parameters: resolve from the session
-    * conf (md5 unless `spark.graft.hasher` says otherwise).
-    */
-  val FromConf = "conf"
-
-  /** Canonicalize to "md5" | "xxh"; `FromConf` reads the session conf.
-    * "xxhash64" is accepted as an alias of "xxh".
-    */
-  def resolve(spark: org.apache.spark.sql.SparkSession, hasher: String): String = {
-    val raw = if (hasher == FromConf) spark.conf.get(ConfKey, "md5") else hasher
-    raw match {
-      case "md5" => "md5"
-      case "xxh" | "xxhash64" => "xxh"
-      case other => throw new IllegalArgumentException(
-        s"hasher must be md5 or xxh (conf $ConfKey), got '$other'")
-    }
-  }
 }

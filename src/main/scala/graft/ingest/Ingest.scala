@@ -21,6 +21,17 @@ object Ingest {
 
   val MaxFileBytes: Long = 10L * 1024 * 1024 // repo_to_vector.py:207-211
 
+  /** F4, the one non-empty rule of both front-ends ([[scanFiles]] and the
+    * `graft-chunks` source): a file is kept when its content holds a
+    * character outside `Blank` (space, `\t`, `\n`, `\r`, `\x0b`,
+    * `\x0c`), the whitespace the reference's `content.strip()` test drops
+    * (repo_to_vector.py:222-225). Spark's one-argument `trim` strips only
+    * spaces, so it cannot state this rule.
+    */
+  private[graft] val Blank: String = " \t\n\r\u000b\f"
+
+  private[graft] def nonBlank(s: String): Boolean = s.exists(c => Blank.indexOf(c) < 0)
+
   /** Scan a directory tree of source files into a (path, extension, size,
     * content) table, applying the reference's filters F1-F4 + P1
     * (SURVEY.md §2.2): hidden-path prune, extension allowlist, 10 MB size
@@ -42,7 +53,7 @@ object Ingest {
       .filter(col("extension").isin(extensions: _*))             // F2 ext
       .filter(col("length") <= MaxFileBytes)                     // F3 size
       .withColumn("content", col("content").cast("string"))      // S3 decode
-      .filter(trim(col("content")) =!= "")                       // F4 empty
+      .filter(trim(col("content"), Blank) =!= "")                // F4 empty
       .select(col("path"), col("extension"), col("length").as("size"),
         col("content"))
   }

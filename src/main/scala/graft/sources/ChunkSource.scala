@@ -155,7 +155,7 @@ private class ChunkPartitionReader(p: ChunkPartition)
       val full = Paths.get(p.root, curPath)
       // lossy UTF-8 decode = the reference's errors='ignore' read (S3)
       val text = new String(Files.readAllBytes(full), StandardCharsets.UTF_8)
-      if (text.trim.nonEmpty) { // F4 non-empty filter
+      if (graft.ingest.Ingest.nonBlank(text)) { // F4 non-empty filter
         curExt = {
           val i = curPath.lastIndexOf('.')
           if (i >= 0 && i > curPath.lastIndexOf('/')) curPath.substring(i) else ""

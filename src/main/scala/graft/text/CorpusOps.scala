@@ -277,11 +277,8 @@ object CorpusOps {
     * weights stay in [0, 2000] so the mean divides non-negatives (Spark
     * `div` truncates toward zero, DuckDB `//` floors — they agree only on
     * non-negative operands), centering happens after the division.
-    *
-    * `hasher` picks the per-bigram feature hash: "md5" replays bit-exact
-    * in the DuckDB oracle (the correctness surface); "xxhash64" is the
-    * production serving path — Spark's native codegen hash, ~4× less
-    * per-occurrence work, same plan shape (PERF.md carries both rates).
+    * The per-bigram feature hash is md5, which the DuckDB oracle replays
+    * bit-exact.
     */
   /** The q137 weight table — the MODEL: `buckets` longs, materialized
     * once on the driver and shipped as a plan literal (the
@@ -299,25 +296,18 @@ object CorpusOps {
   }
 
   def hashedBigramQuality(docs: DataFrame, buckets: Int = 4096,
-                          topK: Int = 20,
-                          hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
+                          topK: Int = 20): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    val h = graft.functions.Hashers.resolve(docs.sparkSession, hasher)
     val weights = bigramWeightTable(buckets)
-    // Per-occurrence feature hash — the ONLY per-token cost knob. md5 is
-    // the oracle-replayable default (DuckDB computes the identical
-    // bucket); xxhash64 is the production path (Spark-native codegen
-    // hash, no digest allocation), same plan, same weight table.
     // ONE codegen kernel per row (tokenize once, digest raw bytes per
     // bigram, weight-table sum) — bit-identical to the composed
     // tokenNgrams→transform→aggregate form below, which stays as the
     // spec-asserted equivalence witness. The r12 measurement that
     // motivated it: the composed form's per-bigram expression machinery
     // (slice + array_join + md5-hex-parse chain) was the cost, not the
-    // digest (md5 vs xxh was a wash at 100×).
+    // digest.
     docs.select(col("doc_id"), col("source"),
-        graft.functions.BigramWeightSum(col("text"), weights,
-          useXxHash = h != "md5").as("__bg"))
+        graft.functions.BigramWeightSum(col("text"), weights).as("__bg"))
       .select(col("doc_id"), col("source"),
         col("__bg").getField("n_bigrams").as("n_bigrams"),
         col("__bg").getField("wsum").as("__wsum"))
@@ -332,20 +322,14 @@ object CorpusOps {
   /** Built-ins-only composed form of [[hashedBigramQuality]]'s scoring —
     * the per-bigram expression-tree pipeline the native kernel replaced.
     * Kept as the kernel's spec-asserted equivalence witness (the
-    * blocklistAudit discipline): CorpusOpsSpec pins kernel == composed
-    * on both hashers.
+    * blocklistAudit discipline): CorpusOpsSpec pins kernel == composed.
     */
   def hashedBigramQualityComposed(docs: DataFrame, buckets: Int = 4096,
-                                  topK: Int = 20,
-                                  hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
+                                  topK: Int = 20): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    val h = graft.functions.Hashers.resolve(docs.sparkSession, hasher)
     val weights = bigramWeightTable(buckets)
-    val bucketOf: Column => Column = h match {
-      case "md5" => g =>
-        (graft.functions.HashFunctions.md5Int32(g) % buckets).cast("int")
-      case _ => g => pmod(xxhash64(g), lit(buckets.toLong)).cast("int")
-    }
+    val bucketOf: Column => Column = g =>
+      (graft.functions.HashFunctions.md5Int32(g) % buckets).cast("int")
     val weightOf: Column => Column = g =>
       element_at(typedLit(weights), bucketOf(g) + 1)
     docs.select(col("doc_id"), col("source"),
@@ -407,13 +391,11 @@ object CorpusOps {
     * (~V²/2^61). Shuffles move fixed 8-byte longs instead of
     * variable-length bigram strings — the measured ~2× class (q83/q160).
     */
-  def bigramVocabCoverageHashed(docs: DataFrame, vocabSize: Int = 256,
-                                hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
+  def bigramVocabCoverageHashed(docs: DataFrame, vocabSize: Int = 256): DataFrame = {
     require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
-    val xxh = graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh"
     val stc = docs
       .select(col("source"),
-        explode(graft.functions.TokenBigramHashes(col("text"), xxh)).as("g"))
+        explode(graft.functions.TokenBigramHashes(col("text"))).as("g"))
       .groupBy(col("source"), col("g"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -437,11 +419,9 @@ object CorpusOps {
     * identical hash so both engines move together). CorpusOpsSpec pins
     * hashed == string on clone/adversarial corpora.
     */
-  def intraDocRepeatsHashed(docs: DataFrame, n: Int = 5, topK: Int = 20,
-                            hasher: String = graft.functions.Hashers.FromConf): DataFrame =
+  def intraDocRepeatsHashed(docs: DataFrame, n: Int = 5, topK: Int = 20): DataFrame =
     docs.select(col("doc_id"),
-        explode(graft.functions.TokenNgramHashes(col("text"), n,
-          graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh")).as("ng"))
+        explode(graft.functions.TokenNgramHashes(col("text"), n)).as("ng"))
       .groupBy(col("doc_id"), col("ng"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("doc_id"))
@@ -654,14 +634,12 @@ object CorpusOps {
     * identical per-token hash, so Spark and oracle move together even on
     * a collision.
     */
-  def kneserNeyPerSourceHashed(docs: DataFrame, discount: Double = 0.75,
-                               hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
+  def kneserNeyPerSourceHashed(docs: DataFrame, discount: Double = 0.75): DataFrame = {
     require(discount > 0.0 && discount < 1.0, s"need 0 < discount < 1, got $discount")
     val d = lit(discount)
     val pairs = docs
       .select(col("source"),
-        explode(graft.functions.TokenPairHashes(col("text"),
-          graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh")).as("b"))
+        explode(graft.functions.TokenPairHashes(col("text"))).as("b"))
       .select(col("source"), col("b.h1").as("h1"), col("b.h2").as("h2"))
       .groupBy(col("source"), col("h1"), col("h2"))
       .agg(count(lit(1)).as("n"))
@@ -714,8 +692,7 @@ object CorpusOps {
   def qualitySignalAgreement(docs: DataFrame, buckets: Int = 4096): DataFrame = {
     val weights = bigramWeightTable(buckets)
     val x = docs.select(col("doc_id"), col("source"),
-        graft.functions.BigramWeightSum(col("text"), weights,
-          useXxHash = false).as("__bg"))
+        graft.functions.BigramWeightSum(col("text"), weights).as("__bg"))
       .select(col("doc_id"), col("source"),
         col("__bg").getField("n_bigrams").as("__nb"),
         col("__bg").getField("wsum").as("__ws"))
@@ -777,13 +754,11 @@ object CorpusOps {
     * broadcast 1-row crossJoin.
     */
   def docInformativeness(docs: DataFrame, idCol: String = "doc_id",
-                         textCol: String = "text", srcCol: String = "source",
-                         hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
-    val xxh = graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh"
+                         textCol: String = "text", srcCol: String = "source"): DataFrame = {
     val tk = docs
       .select(col(idCol), col(srcCol),
         explode(array_distinct(graft.functions.TokenNgramHashes(
-          coalesce(col(textCol), lit("")), 1, xxh))).as("h"))
+          coalesce(col(textCol), lit("")), 1))).as("h"))
       .localCheckpoint(eager = true) // df aggregate + idf join both read it
     val nd = docs.agg(count(lit(1)).as("nd"))
     val dfreq = tk.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -933,8 +908,8 @@ object CorpusOps {
 
   /** [[tokenPositionBias]] in the 60-bit hash domain — built for
     * VERDICT r14 item 2 and then MEASURED SLOWER, so q197 registers the
-    * string form (PERF.md r15: 15.4 s string vs 45.9 s md5-hash vs
-    * 31.4 s xxh at 100× — the q69 negative-result class: single-token
+    * string form (PERF.md r15: 15.4 s string vs 45.9 s md5-hash at
+    * 100× — the q69 negative-result class: single-token
     * keys are short, map-side combine already shrinks the string
     * shuffle to the per-partition vocabulary, and the per-token digest
     * plus the winner-recovery scan dominate). Kept as the library's
@@ -947,12 +922,10 @@ object CorpusOps {
     * in 60 bits (~V²/2^61); CorpusOpsSpec pins parity.
     */
   def tokenPositionBiasHashed(docs: DataFrame, textCol: String = "text",
-                              topK: Int = 20,
-                              hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
-    val xxh = graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh"
+                              topK: Int = 20): DataFrame = {
     val t = coalesce(col(textCol), lit(""))
     val winners = docs
-      .select(graft.functions.TokenNgramHashes(t, 1, xxh).as("__h"))
+      .select(graft.functions.TokenNgramHashes(t, 1).as("__h"))
       .filter(size(col("__h")) >= 2)
       .select(size(col("__h")).as("__len"),
         posexplode(col("__h")).as(Seq("pos", "tokh")))
@@ -968,7 +941,7 @@ object CorpusOps {
       // k rows, read twice (semi-join build + name re-attach): pin them
       // so the vocabulary aggregate runs once
       .localCheckpoint(eager = true)
-    recoverTokens(docs, winners, textCol, xxh)
+    recoverTokens(docs, winners, textCol)
       .select(col("token"), col("n_occ"), col("mean_pos_ppm"), col("bias_ppm"))
       .orderBy(col("bias_ppm").desc, col("token").asc)
   }
@@ -981,13 +954,11 @@ object CorpusOps {
     * (dispersion asc, HASH asc) is the cut's total order.
     */
   def tokenDispersionHashed(docs: DataFrame, idCol: String = "doc_id",
-                            textCol: String = "text", topK: Int = 20,
-                            hasher: String = graft.functions.Hashers.FromConf): DataFrame = {
-    val xxh = graft.functions.Hashers.resolve(docs.sparkSession, hasher) == "xxh"
+                            textCol: String = "text", topK: Int = 20): DataFrame = {
     val t = coalesce(col(textCol), lit(""))
     val winners = docs
       .select(col(idCol),
-        explode(graft.functions.TokenNgramHashes(t, 1, xxh)).as("tokh"))
+        explode(graft.functions.TokenNgramHashes(t, 1)).as("tokh"))
       .groupBy(col(idCol), col("tokh")).agg(count(lit(1)).as("__c"))
       .groupBy(col("tokh"))
       .agg(count(lit(1)).as("df"), sum(col("__c")).as("cf"))
@@ -996,7 +967,7 @@ object CorpusOps {
       .orderBy(col("dispersion_ppm").asc, col("tokh").asc)
       .limit(topK)
       .localCheckpoint(eager = true)
-    recoverTokens(docs, winners, textCol, xxh)
+    recoverTokens(docs, winners, textCol)
       .select(col("token"), col("df"), col("cf"), col("dispersion_ppm"))
       .orderBy(col("dispersion_ppm").asc, col("token").asc)
   }
@@ -1013,10 +984,10 @@ object CorpusOps {
     * registration notes on the two Hashed forms above.
     */
   private def recoverTokens(docs: DataFrame, winners: DataFrame,
-                            textCol: String, xxh: Boolean): DataFrame = {
+                            textCol: String): DataFrame = {
     val t = coalesce(col(textCol), lit(""))
     val z = zip_with(TextAnalysis.tokens(t),
-      graft.functions.TokenNgramHashes(t, 1, xxh),
+      graft.functions.TokenNgramHashes(t, 1),
       (tok, h) => struct(tok.as("token"), h.as("tokh")))
     val names = docs.select(explode(z).as("__p"))
       .select(col("__p.token").as("token"), col("__p.tokh").as("tokh"))

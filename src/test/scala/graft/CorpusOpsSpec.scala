@@ -180,71 +180,28 @@ class CorpusOpsSpec extends SparkSpec {
     val child = org.apache.spark.sql.catalyst.expressions.Literal("some text")
     val w1 = IndexedSeq(1L, 2L, 3L)
     val w2 = IndexedSeq(1L, 2L, 3L) // distinct instance, equal content
-    val a = graft.functions.BigramWeightSum(child, w1, useXxHash = false)
-    val b = graft.functions.BigramWeightSum(child, w2, useXxHash = false)
+    val a = graft.functions.BigramWeightSum(child, w1)
+    val b = graft.functions.BigramWeightSum(child, w2)
     assert(a == b && a.hashCode == b.hashCode)
     assert(a.semanticEquals(b))
     assert(!a.semanticEquals(a.copy(weights = IndexedSeq(9L, 2L, 3L))))
   }
 
-  test("spark.graft.hasher conf drives the default hasher (md5 unset, xxh set)") {
-    val d = docs(
-      (1L, "alpha beta gamma delta", "s"),
-      (3L, "alpha beta", "t"),
-      (4L, "kappa lambda mu", "u"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    // default (conf unset) == explicit md5, the oracle path
-    val viaDefault = rows(CorpusOps.hashedBigramQuality(d, topK = 10))
-    assert(viaDefault == rows(
-      CorpusOps.hashedBigramQuality(d, topK = 10, hasher = "md5")))
-    spark.conf.set(graft.functions.Hashers.ConfKey, "xxh")
-    try {
-      // conf=xxh == explicit xxhash64, from the same call site
-      assert(rows(CorpusOps.hashedBigramQuality(d, topK = 10)) == rows(
-        CorpusOps.hashedBigramQuality(d, topK = 10, hasher = "xxhash64")))
-      // an explicit argument always beats the conf
-      assert(rows(CorpusOps.hashedBigramQuality(d, topK = 10, hasher = "md5"))
-        == viaDefault)
-    } finally spark.conf.unset(graft.functions.Hashers.ConfKey)
-    spark.conf.set(graft.functions.Hashers.ConfKey, "blake3")
-    try intercept[IllegalArgumentException](
-      CorpusOps.hashedBigramQuality(d, topK = 10))
-    finally spark.conf.unset(graft.functions.Hashers.ConfKey)
-  }
-
-  test("hashedBigramQuality hasher parity: xxhash64 twin keeps plan semantics") {
-    val d = docs(
-      (1L, "alpha beta gamma delta", "s"),
-      (2L, "single", "s"),       // 0 bigrams -> excluded under BOTH hashers
-      (3L, "alpha beta", "t"),
-      (4L, "kappa lambda mu", "u"))
-    val md5 = CorpusOps.hashedBigramQuality(d, buckets = 4096, topK = 10)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    val xxh = CorpusOps.hashedBigramQuality(d, buckets = 4096, topK = 10,
-        hasher = "xxhash64")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    // bucketing differs, so SCORES may differ — but the doc set, source,
-    // and bigram counts are hash-independent and must agree exactly
-    assert(md5.map(t => (t._1, t._2, t._3)).toSet ==
-      xxh.map(t => (t._1, t._2, t._3)).toSet, s"md5=${md5.toSeq} xxh=${xxh.toSeq}")
-    assert(!xxh.exists(_._1 == 2L))
-    // deterministic across runs (typedLit weight table + codegen hash)
-    val again = CorpusOps.hashedBigramQuality(d, buckets = 4096, topK = 10,
-        hasher = "xxhash64")
-      .collect().map(r => (r.getLong(0), r.getLong(3)))
-    val first = CorpusOps.hashedBigramQuality(d, buckets = 4096, topK = 10,
-        hasher = "xxhash64")
-      .collect().map(r => (r.getLong(0), r.getLong(3)))
-    assert(again.toSeq == first.toSeq)
-    // scores stay in the centered milli range under any hasher
-    assert(xxh.nonEmpty)
-    CorpusOps.hashedBigramQuality(d, topK = 10, hasher = "xxhash64")
-      .collect().foreach { r =>
-        val sc = r.getLong(3)
-        assert(sc >= -1000 && sc <= 1000, s"score out of range: $sc")
-      }
+  test("a stale spark.graft.hasher=xxh conf changes no hashed query's rows") {
+    // md5 is the only hasher: the key is read by nothing, so the seven
+    // queries whose kernels once honoured it answer the same with it set
+    val dir = "/root/testdata/sf0.001"
+    val qs = Seq("q121_intradoc_repeats", "q137_quality_classifier",
+      "q139_vocab_coverage", "q156_bigram_coverage", "q160_kn_score",
+      "q175_cdc_dedup", "q195_doc_informativeness")
+    def rows(q: String): Seq[String] =
+      SparkEntry.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
+    val plain = qs.map(q => q -> rows(q)).toMap
+    spark.conf.set("spark.graft.hasher", "xxh")
+    val stale =
+      try qs.map(q => q -> rows(q)).toMap
+      finally spark.conf.unset("spark.graft.hasher")
+    qs.foreach(q => assert(stale(q) == plain(q), q))
   }
 
   test("hashedBigramQuality native kernel == composed expression tree, " +
@@ -262,17 +219,14 @@ class CorpusOpsSpec extends SparkSpec {
       (6L, "single", "t"),             // drops on both paths
       (7L, "  padded  ", "u"),         // spaces trimmed -> 1 token, drops
       (8L, "tab\tsep\ttokens", "u"))
-    for (h <- Seq("md5", "xxhash64")) {
-      val kernel = CorpusOps.hashedBigramQuality(d, buckets = 4096,
-          topK = 20, hasher = h)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getBoolean(4))).toSeq
-      val composed = CorpusOps.hashedBigramQualityComposed(d, buckets = 4096,
-          topK = 20, hasher = h)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getBoolean(4))).toSeq
-      assert(kernel == composed, s"$h: kernel=$kernel composed=$composed")
-    }
+    val kernel = CorpusOps.hashedBigramQuality(d, buckets = 4096, topK = 20)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getBoolean(4))).toSeq
+    val composed = CorpusOps.hashedBigramQualityComposed(d, buckets = 4096,
+        topK = 20)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getBoolean(4))).toSeq
+    assert(kernel == composed, s"kernel=$kernel composed=$composed")
   }
 
   test("qualitySignalAgreement matches a JVM replica of both signals") {
@@ -474,12 +428,6 @@ class CorpusOpsSpec extends SparkSpec {
       rows(CorpusOps.tokenPositionBias(d, topK = k)))
     assert(rows(CorpusOps.tokenDispersionHashed(d, topK = k)) ==
       rows(CorpusOps.tokenDispersion(d, topK = k)))
-    // hasher-invariant: hash longs are shuffle/cut keys only — they
-    // never reach the output once the winners' strings are recovered
-    assert(rows(CorpusOps.tokenPositionBiasHashed(d, topK = k, hasher = "xxh")) ==
-      rows(CorpusOps.tokenPositionBiasHashed(d, topK = k, hasher = "md5")))
-    assert(rows(CorpusOps.tokenDispersionHashed(d, topK = k, hasher = "xxh")) ==
-      rows(CorpusOps.tokenDispersionHashed(d, topK = k, hasher = "md5")))
   }
 
   test("kneserNeyPerSourceHashed == string-keyed form (the q160 hash-domain witness)") {
@@ -501,63 +449,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(hsh == str, s"$hsh vs $str")
   }
 
-  test("xxh kernel mode == composed xxhash64 phrasing; hash-domain ops are " +
-    "hasher-invariant on count-shaped outputs (r14, VERDICT r13 item 8)") {
-    val d = docs(
-      (1L, "a b c a b c a b c d e", "s"),
-      (2L, "\tx  y z x y z", "s"),            // tab + empty token
-      (3L, "one two", "t"),
-      (4L, "The  CAT the cat p q r s t p q", "t"))
-    // TokenNgramHashes(xxh) == xxhash64 over the composed window strings
-    for (n <- Seq(2, 3)) {
-      val rows = d.select(
-          graft.functions.TokenNgramHashes(col("text"), n, useXxHash = true)
-            .as("k"),
-          when(size(split(lower(trim(col("text"))), "\\s+")) >= n,
-            expr(s"transform(sequence(0, size(split(lower(trim(text)), '\\\\s+')) - $n), " +
-              s"i -> xxhash64(array_join(slice(split(lower(trim(text)), '\\\\s+'), i + 1, $n), ' ')))"))
-            .otherwise(expr("cast(array() as array<bigint>)")).as("c"))
-        .collect()
-      assert(rows.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1)),
-        s"n=$n kernel != composed xxhash64")
-    }
-    // TokenBigramHashes(xxh) == TokenNgramHashes(2, xxh)
-    val bg = d.select(
-        graft.functions.TokenBigramHashes(col("text"), useXxHash = true).as("a"),
-        graft.functions.TokenNgramHashes(col("text"), 2, useXxHash = true).as("b"))
-      .collect()
-    assert(bg.forall(r => r.getSeq[Long](0) == r.getSeq[Long](1)))
-    // TokenPairHashes(xxh): each slot is xxhash64 of the single token
-    val tp = d.select(
-        graft.functions.TokenPairHashes(col("text"), useXxHash = true).as("p"),
-        expr("transform(split(lower(trim(text)), '\\\\s+'), t -> xxhash64(t))").as("h"))
-      .collect()
-    tp.foreach { r =>
-      val p = r.getSeq[org.apache.spark.sql.Row](0)
-      val h = r.getSeq[Long](1)
-      p.zipWithIndex.foreach { case (pr, i) =>
-        assert(pr.getLong(0) == h(i) && pr.getLong(1) == h(i + 1))
-      }
-    }
-    // flipping the hasher changes shuffle keys only — the count-shaped
-    // outputs are identical (hash values never reach the output)
-    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      df.collect().map(_.toSeq).toSeq
-    assert(rowsOf(CorpusOps.intraDocRepeatsHashed(d, hasher = "xxh")) ==
-      rowsOf(CorpusOps.intraDocRepeatsHashed(d, hasher = "md5")))
-    assert(rowsOf(CorpusOps.kneserNeyPerSourceHashed(d, hasher = "xxh")) ==
-      rowsOf(CorpusOps.kneserNeyPerSourceHashed(d, hasher = "md5")))
-    // coverage: single source (count TIES at the global vocab cut order
-    // differently per hasher; within one source tied grams carry equal
-    // mass, so oov is invariant — multi-source redistribution is the
-    // documented tie caveat, same as the string-vs-hash witness)
-    val single = docs(
-      (1L, "a b " * 8 + "c d " * 4 + "e f " * 2 + "g h", "s"),
-      (2L, "a b a b c d q r", "s"))
-    assert(rowsOf(CorpusOps.bigramVocabCoverageHashed(single, 3, hasher = "xxh")).toSet ==
-      rowsOf(CorpusOps.bigramVocabCoverageHashed(single, 3, hasher = "md5")).toSet)
-  }
-
   test("docInformativeness: hand-computed rational idf, null text as '', " +
     "hasher-invariant") {
     val d = docs(
@@ -572,11 +463,6 @@ class CorpusOpsSpec extends SparkSpec {
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got("s") == ((2L, 2666666L, 2666666L, 2666666L)), got("s"))
     assert(got("t") == ((2L, 2666666L, 1333333L, 4000000L)), got("t"))
-    // hash domain is keys-only: md5 and xxh give identical outputs
-    val xxh = CorpusOps.docInformativeness(d, hasher = "xxh")
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(xxh == got)
   }
 
   test("charEntropy: hand-mirrored 9dp-ln fold, micro-units, other bucket, " +

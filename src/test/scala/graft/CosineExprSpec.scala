@@ -114,7 +114,7 @@ class CosineExprSpec extends SparkSpec {
         exprs(1).eval().asInstanceOf[Number].intValue), "built-in")
     reg.createOrReplaceTempFunction("cdc_cuts",
       exprs => graft.functions.CdcCutPositions(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue, useXxHash = false),
+        exprs(1).eval().asInstanceOf[Number].intValue),
       "built-in")
     val hs = spark.sql("SELECT kgram_hashes('abcdef', 3) AS h")
       .as[Seq[Long]].head()

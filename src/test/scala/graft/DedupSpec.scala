@@ -867,38 +867,21 @@ class DedupSpec extends SparkSpec {
       Dedup.cdcSharedChunks(tiny, modulus = 1))
   }
 
-  test("cdcSharedChunks: xxhash64 hasher parity — same invariants, same " +
-    "verdict class as md5") {
+  test("cdcSharedChunks: mass conservation, clone-pair frac 1.0, shift robustness") {
     import spark.implicits._
     val base = new scala.util.Random(42).alphanumeric.take(2000).mkString
-    // the two hashers pick DIFFERENT boundaries (that's inherent), but
-    // every invariant the audit reports on must hold under both: exact
-    // mass conservation, clone-pair frac 1.0, shift robustness
+    // every invariant the audit reports on: exact mass conservation,
+    // clone-pair frac 1.0, shift robustness
     val clones = Seq((1L, base, "s1"), (2L, base, "s1"))
       .toDF("doc_id", "text", "source")
     val shifted = Seq((1L, base, "s1"), (2L, "X" + base, "s1"))
       .toDF("doc_id", "text", "source")
-    for (h <- Seq("md5", "xxh")) {
-      val gc = Dedup.cdcSharedChunks(clones, hasher = h).collect().head
-      assert(gc.getAs[Long]("total_chars") == 4000L, s"$h: ${gc.toString}")
-      assert(gc.getAs[Double]("shared_frac") == 1.0, s"$h: ${gc.toString}")
-      val gs = Dedup.cdcSharedChunks(shifted, hasher = h).collect().head
-      assert(gs.getAs[Double]("shared_frac") > 0.5,
-        s"$h lost alignment after a 1-char shift: ${gs.toString}")
-    }
-    intercept[IllegalArgumentException](
-      Dedup.cdcSharedChunks(clones, hasher = "sha1"))
-    // spark.graft.hasher conf drives the default-arg path (item the
-    // q175x twin used to cover): conf=xxh == explicit xxh, bit-exact
-    spark.conf.set(graft.functions.Hashers.ConfKey, "xxh")
-    try {
-      val viaConf = Dedup.cdcSharedChunks(clones).collect().head
-      val explicit = Dedup.cdcSharedChunks(clones, hasher = "xxh").collect().head
-      assert(viaConf.toString == explicit.toString)
-    } finally spark.conf.unset(graft.functions.Hashers.ConfKey)
-    val defaultIsMd5 = Dedup.cdcSharedChunks(clones).collect().head
-    assert(defaultIsMd5.toString ==
-      Dedup.cdcSharedChunks(clones, hasher = "md5").collect().head.toString)
+    val gc = Dedup.cdcSharedChunks(clones).collect().head
+    assert(gc.getAs[Long]("total_chars") == 4000L, gc.toString)
+    assert(gc.getAs[Double]("shared_frac") == 1.0, gc.toString)
+    val gs = Dedup.cdcSharedChunks(shifted).collect().head
+    assert(gs.getAs[Double]("shared_frac") > 0.5,
+      s"lost alignment after a 1-char shift: ${gs.toString}")
   }
 
   test("cdcSharedChunks: native cut kernel == composed per-position form, " +
@@ -911,13 +894,11 @@ class DedupSpec extends SparkSpec {
       (5L, "abcd", "s2"),  // exactly 4: one interior position candidate? (p<len -> none)
       (6L, "ab cd ef gh ij", "s3"))
       .toDF("doc_id", "text", "source")
-    for (h <- Seq("md5", "xxh")) {
-      val kernel = Dedup.cdcSharedChunks(docs, hasher = h)
-        .collect().map(_.toString).sorted.toSeq
-      val composed = Dedup.cdcSharedChunks(docs, hasher = h, kernelCuts = false)
-        .collect().map(_.toString).sorted.toSeq
-      assert(kernel == composed, s"$h: kernel=$kernel composed=$composed")
-    }
+    val kernel = Dedup.cdcSharedChunks(docs)
+      .collect().map(_.toString).sorted.toSeq
+    val composed = Dedup.cdcSharedChunks(docs, kernelCuts = false)
+      .collect().map(_.toString).sorted.toSeq
+    assert(kernel == composed, s"kernel=$kernel composed=$composed")
   }
 
   test("templateDupGroups: digit/case/ws families; exact clones excluded") {

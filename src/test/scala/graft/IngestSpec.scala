@@ -44,9 +44,14 @@ class IngestSpec extends SparkSpec {
     put(".hidden/skip.py", "nope")
     put("skip.bin", "binary-ish")
     put("empty.py", "   ")
+    put("blank.py", "\n\t\n")
     val got = Ingest.scanFiles(spark, dir.getAbsolutePath)
       .select($"path").as[String].collect().toSet
     assert(got == Set("keep.py", "sub/keep.md"))
+    // graft-chunks drops the same blank files (it has no extension filter)
+    val chunked = spark.read.format("graft-chunks").load(dir.getAbsolutePath)
+      .select($"path").distinct().as[String].collect().toSet
+    assert(chunked == Set("keep.py", "sub/keep.md", "skip.bin"))
   }
 
   test("Convert main: synthesized worktree -> document-chunk parquet, append semantics") {

@@ -105,6 +105,25 @@ class VectorDbServerSpec extends SparkSpec {
     }
   }
 
+  test("/stats answers 200 on a store of only content and embedding") {
+    withServer { (port, _) =>
+      // the reference requires only these two fields; every other /stats
+      // input is optional
+      val add = post(port, "/add_documents", """{"documents": [""" +
+        """{"content": "alpha beta", "embedding": [1.0, 0.0]},""" +
+        """{"content": "gamma", "embedding": [0.0, 1.0]}]}""")
+      assert(add.statusCode() == 200, add.body())
+      val r = get(port, "/stats")
+      assert(r.statusCode() == 200, r.body())
+      val st = parse(r.body()).head()
+      assert(st.getAs[Long]("total_documents") == 2L)
+      assert(st.getAs[Long]("unique_files") == 0L)
+      assert(st.getAs[Double]("avg_chunks_per_file") == 0.0)
+      assert(st.getAs[org.apache.spark.sql.Row]("by_extension")
+        .getAs[Long]("unknown") == 2L)
+    }
+  }
+
   test("/health stays responsive while slow requests occupy the pool") {
     withServer { (port, _) =>
       // three concurrent slow-ish requests (each runs a Spark job) must

@@ -66,6 +66,12 @@ class VectorDbSpec extends SparkSpec {
     assert(db.health().documents == 3L)
   }
 
+  test("stats of a store whose only batch was all-invalid reads zeros") {
+    val (db, _) = freshDb()
+    db.addDocuments(sampleCorpus().withColumn("content", lit(null).cast("string")))
+    assert(db.stats() == db.DbStats(0L, 0L, 0.0, 0.0, Map.empty))
+  }
+
   test("re-ingest APPENDS duplicates (quirk 5)") {
     val (db, _) = freshDb()
     db.addDocuments(sampleCorpus())
