@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, expr, length, when}
 
 /** Benchmark main: runs every SparkEntry query against
   * $SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -195,7 +196,7 @@ object Bench {
                                 regression: Seq[String],
                                 nonclone: Option[Seq[(String, Double)]]): String =
     f""""sf1":{"value":$value%.3f,"n_queries":$nQueries,"n_failed":$nFailed,""" +
-      s""""factor":10,"slowest":${jsonMapCapped(slowest, 105)},""" +
+      s""""factor":$Sf1Factor,"slowest":${jsonMapCapped(slowest, 105)},""" +
       s""""n_inflation_suspect":$nSuspect,""" +
       s""""inflation_suspect":${jsonNamesCapped(suspectNames, 100)},""" +
       s""""serial_recheck":${jsonMapCapped(recheck, 140)},""" +
@@ -275,8 +276,8 @@ object Bench {
     * predecessors whose shuffle files only unlink on a driver GC, so
     * the measurement pays the debris of the queries before it. Lane
     * members are pulled out of the sweep and measured LAST, each after
-    * an explicit `System.gc()` (the Stress battery discipline), under
-    * their normal ledger keys — same artifact fields, quieter readings.
+    * an explicit `System.gc()`, under their normal ledger keys — same
+    * artifact fields, quieter readings.
     */
   private[graft] val SoloLane: Set[String] = Set(
     "q131_kmv_overlap", "q25_decode_stats", "q26_lang_histogram",
@@ -349,6 +350,91 @@ object Bench {
     System.err.println(s"[bench] suspect history write failed: ${e.getMessage}")
   }
 
+  /** The sf1 replicas are 10 copies of sf0.1. */
+  private val Sf1Factor = 10
+  private val IdStride = 1000000000L // 1e9: far above any testdata key
+  private val UserStride = 1000000L
+
+  /** Replicate every fact table of `sfDir` [[Sf1Factor]]× into `workDir`
+    * with disjoint id spaces, so joins/windows/dedup see a genuinely
+    * bigger corpus rather than a corrupted one. Replica r shifts
+    * documents.doc_id and embeddings.vec_id by r·1e9, events.user_id by
+    * r·1e6, and c_custkey/o_orderkey (and their FKs) by r·1e9.
+    * region/nation/part/supplier are dimensions: single-copy, FKs into
+    * them unshifted (facts grow, dims do not).
+    */
+  private def replicateDir(spark: SparkSession, sfDir: String,
+                           workDir: String): Unit = {
+    def replicate(name: String, shifts: Map[String, Long]): Unit = {
+      val src = s"$sfDir/$name.parquet"
+      if (!new java.io.File(src).exists()) return
+      val df = spark.read.parquet(src)
+      val out =
+        if (shifts.isEmpty) df
+        else {
+          val reps = spark.range(Sf1Factor).withColumnRenamed("id", "__rep")
+          val crossed = df.crossJoin(reps)
+          shifts.foldLeft(crossed) { case (d, (c, stride)) =>
+            if (!df.columns.contains(c)) d
+            else d.withColumn(c, col(c) + col("__rep") * stride)
+          }.drop("__rep")
+        }
+      out.write.mode("overwrite").parquet(s"$workDir/$name.parquet")
+    }
+    replicate("documents", Map("doc_id" -> IdStride))
+    replicate("embeddings", Map("vec_id" -> IdStride))
+    replicate("events", Map("user_id" -> UserStride))
+    replicate("customer", Map("c_custkey" -> IdStride))
+    replicate("orders", Map("o_orderkey" -> IdStride, "o_custkey" -> IdStride))
+    replicate("lineitem", Map("l_orderkey" -> IdStride))
+    Seq("region", "nation", "part", "supplier").foreach(replicate(_, Map.empty))
+  }
+
+  /** NON-CLONE documents replica: ids shift like [[replicateDir]], but each
+    * replica r > 0 also has EVERY word SUBSTITUTED by a same-length
+    * md5-derived pseudo-word keyed on (word, replica) — a per-replica
+    * bijective RENAMING of the vocabulary. Within a replica all organic
+    * structure is preserved exactly (same word → same pseudo-word, so
+    * token/shingle Jaccard between any two docs of one replica equals
+    * the base corpus's), the token frequency profile is identical (the
+    * support is renamed, not reweighted), and char/token mass match the
+    * base byte-for-byte in length. Across replicas the overlap is ~0.
+    *
+    * History: the first cut (r15) substituted only every 4TH word, which
+    * kept cross-replica VERIFIED similarity below every battery
+    * threshold but left ~25% of token n-grams shared between a doc and
+    * its perturbed twins — SUB-threshold candidate cliques quadratic in
+    * the factor. q97's guaranteed-recall prefix-filter join must
+    * enumerate such candidates, so at a 1000× replica the candidate
+    * shuffle filled the disk. "Organic near-dups only" requires
+    * cross-replica overlap ~0 at the GRAM level too, which the full
+    * renaming provides. Replica 0 keeps the original text byte-for-byte.
+    * Writes ONLY documents.parquet — the queries benched against it read
+    * nothing else.
+    */
+  private def replicateDocsPerturbed(spark: SparkSession, sfDir: String,
+                                     workDir: String): Unit = {
+    val df = spark.read.parquet(s"$sfDir/documents.parquet")
+    val reps = spark.range(Sf1Factor).withColumnRenamed("id", "__rep")
+    val perturbed = expr(
+      """array_join(
+        |  transform(split(text, ' '),
+        |    x -> IF(length(x) > 0,
+        |      substring(repeat(md5(concat(x, ':', __rep)),
+        |                       1 + int(length(x) / 32)), 1, length(x)),
+        |      x)),
+        |  ' ')""".stripMargin)
+    var out = df.crossJoin(reps)
+      .withColumn("doc_id", col("doc_id") + col("__rep") * IdStride)
+      .withColumn("text",
+        when(col("__rep") === 0, col("text")).otherwise(perturbed))
+    if (df.columns.contains("n_chars"))
+      out = out.withColumn("n_chars",
+        length(col("text")).cast(df.schema("n_chars").dataType))
+    out.drop("__rep")
+      .write.mode("overwrite").parquet(s"$workDir/documents.parquet")
+  }
+
   /** Fixed-size CPU-bound job used as the per-pass noise floor: a 2^22-row
     * range with a multiply-hash aggregate. No I/O, no shuffle beyond the
     * final single-partition agg; any variance in this number is the
@@ -367,6 +453,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
+    // optional arg: comma-separated query-name filter (dev loop — the
+    // driver always runs argless and benches everything)
+    val only: Option[Set[String]] =
+      args.headOption.map(_.split(",").toSet)
+    only.foreach(SparkEntry.requireKnown)
     val spark = GraftSession("graft-bench")
 
     // Warm the JVM/session once (codegen, parquet footer cache paths) and
@@ -406,10 +497,6 @@ object Bench {
     val corpusJson = fp.mkString("\"corpus\":{", ",", "}")
     System.err.println(s"[bench] $corpusJson")
 
-    // optional arg: comma-separated query-name filter (dev loop — the
-    // driver always runs argless and benches everything)
-    val only: Option[Set[String]] =
-      args.headOption.map(_.split(",").toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val samples = collection.mutable.Map.empty[String, List[Double]]
@@ -559,8 +646,8 @@ object Bench {
         val marker = new java.io.File(dir, "_GRAFT_SF1_OK")
         if (!marker.exists()) {
           val r0 = System.nanoTime()
-          Stress.replicateDir(spark, sfDir, 10, dir)
-          java.nio.file.Files.write(marker.toPath, "10\n".getBytes)
+          replicateDir(spark, sfDir, dir)
+          java.nio.file.Files.write(marker.toPath, s"$Sf1Factor\n".getBytes)
           System.err.println(f"[bench] sf1 replica built in ${(System.nanoTime() - r0) / 1e9}%.1f s")
         } else System.err.println(s"[bench] sf1 replica reused at $dir")
         val sf1Samples = collection.mutable.ListBuffer.empty[(String, Double)]
@@ -610,8 +697,8 @@ object Bench {
           val ncMarker = new java.io.File(ncDir, "_GRAFT_SF1_OK_v2")
           if (!ncMarker.exists()) {
             val r0 = System.nanoTime()
-            Stress.replicateDocsPerturbed(spark, sfDir, 10, ncDir)
-            java.nio.file.Files.write(ncMarker.toPath, "10\n".getBytes)
+            replicateDocsPerturbed(spark, sfDir, ncDir)
+            java.nio.file.Files.write(ncMarker.toPath, s"$Sf1Factor\n".getBytes)
             System.err.println(f"[bench] sf1 non-clone replica built in ${(System.nanoTime() - r0) / 1e9}%.1f s")
           } else System.err.println(s"[bench] sf1 non-clone replica reused at $ncDir")
           // 3 interleaved samples per query, MEDIAN reported: the single
@@ -670,7 +757,7 @@ object Bench {
           if (ncOk) Some(ncSamples.toSeq) else None)
         sf1Full =
           f""""sf1":{"value":$sf1Total%.3f,"n_queries":${sf1Samples.size},""" +
-          f""""n_failed":$sf1Failed,"factor":10,""" +
+          f""""n_failed":$sf1Failed,"factor":$Sf1Factor,""" +
           f""""queries":${jsonMap(sf1Samples.toSeq)},""" +
           f""""n_inflation_suspect":${sf1Suspects.size},""" +
           f""""inflation_suspect":${jsonNames(sf1Suspects)},""" +

@@ -12,6 +12,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
+    SparkEntry.requireKnown(names)
     val spark = GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

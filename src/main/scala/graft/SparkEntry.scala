@@ -40,10 +40,10 @@ object SparkEntry {
   }
 
   /** The corpus query vector (vec_id 0's embedding as doubles), pulled to
-    * the driver — the probe input of the single-query search family, of
-    * the q222/q225 oracles, and of RewriteBench and FilteredBench.
+    * the driver — the probe input of the single-query search family and
+    * of the q222/q225 oracles.
     */
-  private[graft] def queryVec(emb: DataFrame): Seq[Double] =
+  private def queryVec(emb: DataFrame): Seq[Double] =
     emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
 
@@ -6830,6 +6830,16 @@ object SparkEntry {
     "q249_check_constraints" -> (qCheckConstraints _),
     "q250_table_history" -> (qTableHistory _),
   )
+
+  /** Fail a main that is handed a name [[queries]] does not hold, before
+    * it builds a session: a misspelled name would otherwise run nothing
+    * (and exit 0) or throw only after the session is up.
+    */
+  private[graft] def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.toSet -- queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
 
   /** Shared DuckDB SQL fragment: cosine(e, q) over DOUBLE[] with the
     * reference's zero-norm guard — bit-compatible with

@@ -19,6 +19,7 @@ object StageProfile {
     val names = if (args.length > 1) args(1).split(",").toSeq
                 else Seq("q01_cosine_topk")
     val passes = if (args.length > 2) args(2).toInt else 2
+    SparkEntry.requireKnown(names)
     val spark = GraftSession("graft-stage-profile")
 
     case class StageRow(id: Int, name: String, ms: Long, tasks: Int,

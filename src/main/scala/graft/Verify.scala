@@ -13,11 +13,7 @@ object Verify {
     // the driver always passes exactly two args and dumps everything)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // a misspelled name would dump nothing and the oracle compare would
-    // pass over an empty out dir
-    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    only.foreach(SparkEntry.requireKnown)
     val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     val dumped = SparkEntry.queries

@@ -26,8 +26,8 @@ import graft.text.Chunker
   *
   * Generators are evaluated via `GenerateExec` (never inside
   * whole-stage codegen), so CodegenFallback costs nothing here; the
-  * chunking itself runs the same JVM kernel as `Dataset.flatMap` form
-  * in graft.ingest.
+  * chunking itself runs the same JVM kernel as
+  * `graft.ingest.Ingest.chunkDocuments`.
   */
 case class ChunkText(child: Expression, chunkSize: Int, overlap: Int)
     extends UnaryExpression with CollectionGenerator with CodegenFallback {

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.Chunker
 import graft.embed.Embedder
@@ -21,16 +21,13 @@ object Ingest {
 
   val MaxFileBytes: Long = 10L * 1024 * 1024 // repo_to_vector.py:207-211
 
-  /** F4, the one non-empty rule of both front-ends ([[scanFiles]] and the
-    * `graft-chunks` source): a file is kept when its content holds a
-    * character outside `Blank` (space, `\t`, `\n`, `\r`, `\x0b`,
-    * `\x0c`), the whitespace the reference's `content.strip()` test drops
-    * (repo_to_vector.py:222-225). Spark's one-argument `trim` strips only
-    * spaces, so it cannot state this rule.
+  /** F4, the non-empty rule of [[scanFiles]]: a file is kept when its
+    * content holds a character outside `Blank` (space, `\t`, `\n`, `\r`,
+    * `\x0b`, `\x0c`), the whitespace the reference's `content.strip()`
+    * test drops (repo_to_vector.py:222-225). Spark's one-argument `trim`
+    * strips only spaces, so it cannot state this rule.
     */
   private[graft] val Blank: String = " \t\n\r\u000b\f"
-
-  private[graft] def nonBlank(s: String): Boolean = s.exists(c => Blank.indexOf(c) < 0)
 
   /** Scan a directory tree of source files into a (path, extension, size,
     * content) table, applying the reference's filters F1-F4 + P1
@@ -73,33 +70,6 @@ object Ingest {
       .withColumn("total_chunks", size(col("chunks")))
       .select(keep ++ Seq(col("total_chunks"),
         posexplode(col("chunks")).as(Seq("chunk_index", "content"))): _*)
-  }
-
-  /** One input document for the typed chunker tier. */
-  final case class DocRow(doc_id: Long, text: String)
-
-  /** One output chunk row (the §1.1 document-chunk shape, typed). */
-  final case class ChunkRow(doc_id: Long, chunk_index: Int,
-                            total_chunks: Int, content: String)
-
-  /** Typed `Dataset.flatMap` form of [[chunkDocuments]] — SURVEY.md §2.3
-    * tier (a): the same [[Chunker.chunk]] kernel behind case-class
-    * Encoders instead of a UDF + posexplode plan. Use when the
-    * surrounding pipeline is already typed; the untyped form optimizes
-    * identically and keeps column pruning. Equality of the two tiers
-    * (and the `chunk_text` Generator) is asserted in IngestSpec /
-    * ChunkTextGeneratorSpec.
-    */
-  def chunkDocumentsTyped(docs: Dataset[DocRow],
-                          chunkSize: Int = Chunker.DefaultChunkSize,
-                          overlap: Int = Chunker.DefaultOverlap): Dataset[ChunkRow] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { d =>
-      val cs = Chunker.chunk(d.text, chunkSize, overlap)
-      cs.iterator.zipWithIndex.map { case (c, i) =>
-        ChunkRow(d.doc_id, i, cs.length, c)
-      }
-    }
   }
 
   /** Full ingest: chunk + embed + timestamp — the document-chunk table of

@@ -205,7 +205,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("hashedBigramQuality native kernel == composed expression tree, " +
-    "both hashers, adversarial whitespace") {
+    "adversarial whitespace") {
     // edge inputs chosen to catch tokenization drift between the kernel
     // and Spark's split(lower(trim(text)), '\\s+'): leading/trailing
     // TABS (trim removes only spaces -> empty edge tokens), repeated
@@ -449,8 +449,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(hsh == str, s"$hsh vs $str")
   }
 
-  test("docInformativeness: hand-computed rational idf, null text as '', " +
-    "hasher-invariant") {
+  test("docInformativeness: hand-computed rational idf, null text as ''") {
     val d = docs(
       (1L, "a b", "s"),
       (2L, "a c", "s"),

@@ -885,7 +885,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cdcSharedChunks: native cut kernel == composed per-position form, " +
-    "both hashers, boundary-length texts") {
+    "boundary-length texts") {
     import spark.implicits._
     val base = new scala.util.Random(42).alphanumeric.take(2000).mkString
     val docs = Seq(

@@ -48,10 +48,6 @@ class IngestSpec extends SparkSpec {
     val got = Ingest.scanFiles(spark, dir.getAbsolutePath)
       .select($"path").as[String].collect().toSet
     assert(got == Set("keep.py", "sub/keep.md"))
-    // graft-chunks drops the same blank files (it has no extension filter)
-    val chunked = spark.read.format("graft-chunks").load(dir.getAbsolutePath)
-      .select($"path").distinct().as[String].collect().toSet
-    assert(chunked == Set("keep.py", "sub/keep.md", "skip.bin"))
   }
 
   test("Convert main: synthesized worktree -> document-chunk parquet, append semantics") {
@@ -140,22 +136,6 @@ class IngestSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Ingest.packSequences(rows, "g", "id", "w", budget = 0L)
     }
-  }
-
-  test("typed flatMap chunker equals the UDF+posexplode tier row-for-row") {
-    val docs = Seq(
-      (1L, "alpha beta gamma " * 40),
-      (2L, "tiny"),
-      (3L, ("line one\n" * 60) + "tail")
-    ).toDF("doc_id", "text")
-    val untyped = Ingest.chunkDocuments(docs, "text", chunkSize = 100, overlap = 20)
-      .select($"doc_id", $"chunk_index", $"total_chunks", $"content")
-      .as[(Long, Int, Int, String)].collect().toSet
-    val typed = Ingest.chunkDocumentsTyped(
-        docs.as[Ingest.DocRow], chunkSize = 100, overlap = 20)
-      .collect().map(c => (c.doc_id, c.chunk_index, c.total_chunks, c.content))
-      .toSet
-    assert(typed == untyped && typed.nonEmpty)
   }
 
   test("packSequences: tied order values still bin by running row sum (ROWS frame)") {

@@ -12,11 +12,10 @@ import graft.streaming.{PartialStore, StreamingQuantile}
 object Slow extends Tag("graft.Slow")
 
 /** Bounded per-round soak of the crash-safe partial store (VERDICT r12
-  * item 7): the full [[graft.StreamSoak]] protocol — many REAL
-  * micro-batches through one streaming session, a mid-run compaction, an
-  * injected crash + restore, and an append-after-compact resume — shrunk
-  * to 50 + 10 batches so it rides `sbt test` every round instead of
-  * being a manually-run main. Every read along the way is asserted
+  * item 7): many REAL micro-batches through one streaming session, a
+  * mid-run compaction, an injected crash + restore, and an
+  * append-after-compact resume, at 50 + 10 batches so it rides
+  * `sbt test` every round. Every read along the way is asserted
   * EQUAL to the batch-computed sketch over the same rows (not just
   * non-empty), so a regression in the store layout, the lock protocol,
   * or checkpoint resume fails the suite, not a PERF.md footnote.

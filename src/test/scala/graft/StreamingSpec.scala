@@ -783,8 +783,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("partial-store compaction cadence: compact every N batches, reads stay exact") {
-    // The long-session discipline (soaked at 200+ batches by the
-    // StreamSoak main; PERF.md carries the latencies): a stream that
+    // The long-session discipline (PERF.md carries the latencies of
+    // 200+-batch soaks): a stream that
     // appends one partial per micro-batch (maxFilesPerTrigger = 1),
     // compacted every 4 batches, must read bucket-for-bucket equal to
     // the one-shot batch sketch after EVERY compaction, and batch ids
