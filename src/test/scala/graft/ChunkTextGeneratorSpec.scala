@@ -7,7 +7,7 @@ import graft.ingest.Ingest
 class ChunkTextGeneratorSpec extends SparkSpec {
   import spark.implicits._
 
-  test("generator output equals the flatMap/udf ingest form") {
+  test("generator output equals the UDF + posexplode ingest form") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val viaGen = docs.select($"doc_id",
         ChunkText($"text", 200, 50).as(Seq("chunk_index", "total_chunks", "content")))

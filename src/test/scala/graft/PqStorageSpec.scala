@@ -27,14 +27,24 @@ class PqStorageSpec extends SparkSpec {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
+  /** `root` is a published build-once artifact: the root exists and no
+    * staging sibling of it is left behind.
+    */
+  private def assertPublished(root: String): Unit = {
+    val r = java.nio.file.Paths.get(root)
+    assert(java.nio.file.Files.isDirectory(r), s"$root not published")
+    val staging = r.getParent.toFile.list()
+      .filter(_.startsWith(s".${r.getFileName}.staging-"))
+    assert(staging.isEmpty, s"staging left beside $root: ${staging.mkString(", ")}")
+  }
+
   test("PQ gate: build-once + persisted store + marker; key rolls on data change") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pq_gate").toString
     writeEmbeddings(dir, 64)
 
     val p1 = SparkEntry.pqPathFor(spark, dir)
     val i1 = SparkEntry.pqIndexFor(spark, dir)
-    val marker1 = java.nio.file.Paths.get(p1, "PQ_FORMAT")
-    assert(java.nio.file.Files.exists(marker1), s"no marker at $p1")
+    assertPublished(p1)
 
     // same JVM, same data -> the cached instance, no rebuild
     assert(SparkEntry.pqIndexFor(spark, dir) eq i1)
@@ -57,7 +67,7 @@ class PqStorageSpec extends SparkSpec {
     assert(p2 != p1, "data change did not roll the PQ store key")
     val i2 = SparkEntry.pqIndexFor(spark, dir)
     assert(!(i2 eq i1), "stale PQ index served after data change")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p2, "PQ_FORMAT")))
+    assertPublished(p2)
     assert(i2.encoded.count() == 80L)
   }
 }
