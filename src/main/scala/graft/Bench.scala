@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, expr, length, when}
+import org.apache.spark.sql.graft.ListenerDrain
 
 /** Benchmark main: runs every SparkEntry query against
   * $SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
-  * Self-defending against container-level timing noise (observed ±5x on
-  * identical code across driver windows — see PERF.md):
+  * Wall time on a shared box is noisy (observed ±5x on identical code
+  * across runs — see PERF.md), so:
   *   - each query runs SPARK_GRAFT_BENCH_PASSES times (default 3),
   *     INTERLEAVED (pass 1 over all queries, then pass 2, ...) so a
   *     transient slowdown hits one pass of many queries rather than all
@@ -17,14 +21,12 @@ import org.apache.spark.sql.functions.{col, expr, length, when}
   *     MEDIANS across passes; per-query minima ship alongside in
   *     "queries_min" for cross-checking;
   *   - a fixed no-op control job ("__control") runs once per pass and is
-  *     reported separately as the noise floor — if the control's spread is
-  *     wide, the window itself was noisy and cross-round deltas in that
-  *     window are not code-attributable;
-  *   - any query whose median reads > 3× its committed serial-history
-  *     ledger is stamped "inflation_suspect" AND re-run once solo after
-  *     all passes finish: "serial_recheck" ships the solo seconds and
-  *     "recheck_regression" the suspects still >3× — the artifact
-  *     adjudicates inflation-vs-regression by itself (VERDICT r13).
+  *     reported separately as the noise floor;
+  *   - every query run also records the Spark work it caused ([[Work]]:
+  *     jobs, tasks, executor CPU, shuffle and spill bytes), whose
+  *     per-counter medians ship in "work". Jobs, tasks and bytes are
+  *     exact counts, so two artifacts compare directly: wall time up
+  *     with the counts flat is the machine, not the code.
   *
   * Each query is materialized through the noop sink (full evaluation of
   * every column, no driver collect, no pruned-count shortcut) after a
@@ -37,107 +39,100 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
-  /** Per-query serial-history ledger (VERDICT r12 item 1): quiet-window
-    * medians recorded by the builder's closing bench (run with
-    * SPARK_GRAFT_WRITE_HISTORY=1) and committed at perf/serial_history
-    * .json. Every later bench compares its in-bench medians against the
-    * ledger and stamps "inflation_suspect" on any query reading > 3× its
-    * serial history (with a 1 s absolute floor so sub-second jitter
-    * never flags) — the mechanical form of the "driver windows carry
-    * 2–6× multiprogramming inflation" adjudication PERF.md used to
-    * record by hand each round. Keys: the sfDir basename ("sf0.1") for
-    * the main run, "sf1" for the replica pass.
-    */
-  private[graft] val HistoryPath = "perf/serial_history.json"
+  /** The Spark work one query run caused. */
+  private[graft] final case class Work(jobs: Long, tasks: Long, cpuMs: Long,
+                                       shuffleBytes: Long, spillBytes: Long) {
+    def json: String =
+      s"""{"jobs":$jobs,"tasks":$tasks,"cpu_ms":$cpuMs,""" +
+        s""""shuffle_bytes":$shuffleBytes,"spill_bytes":$spillBytes}"""
+    override def toString: String =
+      s"jobs=$jobs tasks=$tasks cpu_ms=$cpuMs shuffle=$shuffleBytes spill=$spillBytes"
+  }
 
-  private[graft] def readHistory(key: String,
-                                 path: String = HistoryPath): Map[String, Double] = try {
-    val f = new java.io.File(path)
-    if (!f.exists()) Map.empty
-    else {
-      val sub = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).get(key)
-      if (sub == null) Map.empty
-      else {
-        val it = sub.fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) {
-          val e = it.next(); b += e.getKey -> e.getValue.asDouble()
-        }
-        b.result()
+  private[graft] object Work {
+    private def mid(xs: Seq[Long]): Long = xs.sorted.apply((xs.length - 1) / 2)
+
+    /** Per-counter lower median: each field is the median of that field,
+      * and of two samples the smaller one (a first pass may also build).
+      */
+    def median(ws: Seq[Work]): Work = Work(mid(ws.map(_.jobs)),
+      mid(ws.map(_.tasks)), mid(ws.map(_.cpuMs)), mid(ws.map(_.shuffleBytes)),
+      mid(ws.map(_.spillBytes)))
+
+    def sum(ws: Seq[Work]): Work = Work(ws.map(_.jobs).sum,
+      ws.map(_.tasks).sum, ws.map(_.cpuMs).sum, ws.map(_.shuffleBytes).sum,
+      ws.map(_.spillBytes).sum)
+  }
+
+  /** One completed stage of a recorded run. */
+  private[graft] final case class Stage(id: Int, name: String, wallMs: Long,
+                                        tasks: Int, cpuMs: Long,
+                                        shuffleBytes: Long, spillBytes: Long)
+
+  /** Counts the jobs, tasks and stages the session finishes, and hands
+    * out the part of them that one run caused. Listener events arrive on
+    * Spark's bus thread after the action has returned, so [[record]]
+    * drains the bus on both sides of the run: without that, the tail of
+    * one run lands in the next one's window.
+    */
+  private[graft] final class Recorder(sc: SparkContext) extends SparkListener {
+    private var jobs, tasks, cpuNs, shuffleBytes, spillBytes = 0L
+    private val stages = collection.mutable.ArrayBuffer.empty[Stage]
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { jobs += 1 }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      val m = e.taskMetrics
+      if (m != null) {
+        cpuNs += m.executorCpuTime
+        shuffleBytes += m.shuffleReadMetrics.totalBytesRead +
+          m.shuffleWriteMetrics.bytesWritten
+        spillBytes += m.diskBytesSpilled
       }
     }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] serial history unreadable: ${e.getMessage}")
-    Map.empty
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      val wall = (for { s <- si.submissionTime; c <- si.completionTime }
+        yield c - s).getOrElse(-1L)
+      synchronized {
+        stages += Stage(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+          wall, si.numTasks, m.executorCpuTime / 1000000,
+          m.shuffleReadMetrics.totalBytesRead + m.shuffleWriteMetrics.bytesWritten,
+          m.diskBytesSpilled)
+      }
+    }
+
+    private def snapshot(): Seq[Long] =
+      synchronized(Seq(jobs, tasks, cpuNs, shuffleBytes, spillBytes))
+
+    /** Runs `f` and returns its wall seconds, its work and its stages.
+      * Only `f` is timed; the drains are not.
+      */
+    def record(f: => Unit): (Double, Work, Seq[Stage]) = {
+      ListenerDrain(sc)
+      val before = snapshot()
+      synchronized(stages.clear())
+      val t0 = System.nanoTime()
+      f
+      val sec = (System.nanoTime() - t0) / 1e9
+      ListenerDrain(sc)
+      val Seq(j, t, cpu, sh, sp) = snapshot().zip(before).map { case (a, b) => a - b }
+      (sec, Work(j, t, cpu / 1000000, sh, sp), synchronized(stages.toList))
+    }
+
+    def close(): Unit = sc.removeSparkListener(this)
   }
-
-  private[graft] def writeHistory(key: String, med: Seq[(String, Double)],
-                                  path: String = HistoryPath): Unit = try {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val f = new java.io.File(path)
-    val root: com.fasterxml.jackson.databind.node.ObjectNode =
-      if (f.exists()) mapper.readTree(f).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else mapper.createObjectNode()
-    val sub = root.`with`(key) // merge: existing queries not in this run survive
-    med.foreach { case (n, v) => sub.put(n, math.rint(v * 1000) / 1000) }
-    Option(f.getParentFile).foreach(_.mkdirs())
-    mapper.writerWithDefaultPrettyPrinter().writeValue(f, root)
-    System.err.println(s"[bench] serial history updated: $path [$key] ${med.size} queries")
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] serial history write failed: ${e.getMessage}")
-  }
-
-  /** The ledger row that stamps each history write with ITS machine
-    * state: the control median of the session that recorded it. The
-    * suspect rule then compares like with like across machine states —
-    * r14's close showed a uniform ~+30% ambient drift that made raw
-    * cross-round comparisons noisy (VERDICT r14 item 6).
-    */
-  private[graft] val ControlKey = "__control"
-
-  /** Normalization factor for the >3× rule: how much slower THIS
-    * session's control runs than the ledger-writing session's. Clamped
-    * below at 1.0 — a faster machine keeps the raw rule (suspects only
-    * get MORE scrutiny, never less) — and above at 10 so a pathological
-    * control reading can't disable the tripwire entirely.
-    */
-  private[graft] def driftFactor(hist: Map[String, Double],
-                                 ctlNow: Option[Double]): Double =
-    (for { h <- hist.get(ControlKey) if h > 0; c <- ctlNow if c > 0 }
-      yield math.min(10.0, math.max(1.0, c / h))).getOrElse(1.0)
-
-  private[graft] def suspects(hist: Map[String, Double],
-                              med: Seq[(String, Double)],
-                              drift: Double = 1.0): Seq[String] =
-    med.filter { case (n, t) =>
-      n != ControlKey &&
-        hist.get(n).exists(h => t > 3 * h * drift && t - h * drift > 1.0)
-    }.map(_._1).sorted
-
-  /** Solo re-run of every inflation suspect after ALL passes finish
-    * (VERDICT r13 item 1): the in-bench number rode a multiprogrammed
-    * window; one more measurement with nothing else queued adjudicates
-    * inflation-vs-regression inside the artifact itself — BENCH_rN.json
-    * carries "serial_recheck" (the solo seconds) and
-    * "recheck_regression" (suspects STILL >3× their serial history
-    * after the solo run — the only ones worth a human's attention).
-    * Generic in the query type so the adjudication logic is
-    * spec-coverable without a SparkSession.
-    */
-  private[graft] def recheckSuspects[F](names: Seq[(String, F)],
-                                        suspectNames: Seq[String],
-                                        runOnce: (String, F) => Option[Double])
-      : Seq[(String, Double)] =
-    suspectNames.flatMap(n => names.find(_._1 == n).flatMap {
-      case (_, fn) => runOnce(n, fn).map(n -> _)
-    })
 
   private[graft] def jsonMap(kv: Seq[(String, Double)]): String =
     kv.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
 
-  private[graft] def jsonNames(ns: Seq[String]): String =
-    ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+  private[graft] def jsonWork(kv: Seq[(String, Work)]): String =
+    kv.map { case (k, w) => "\"" + k + "\":" + w.json }.mkString("{", ",", "}")
 
   /** Take rendered JSON fragments while their joined length fits a
     * character budget — entry-count caps alone can't bound the compact
@@ -156,88 +151,45 @@ object Bench {
   private[graft] def jsonNamesCapped(ns: Seq[String], budget: Int): String =
     capChars(ns.map("\"" + _ + "\""), budget).mkString("[", ",", "]")
 
-  /** Round-over-round comparison as a mechanical artifact field (VERDICT
-    * r15 item 7): the sum of this run's medians over exactly the queries
-    * the committed ledger also carries, vs the ledger's sum over the same
-    * set, raw and control-normalized (ratio divided by the UNCLAMPED
-    * control drift, so a uniformly slower machine reads ~1.0). What the
-    * judge reconstructed by hand from r14→r15 ledger diffs now ships in
-    * the bench JSON itself.
-    */
-  private[graft] def ledgerDiff(hist: Map[String, Double],
-                                med: Seq[(String, Double)],
-                                driftRaw: Option[Double]): String = {
-    val common = med.filter { case (n, _) => n != ControlKey && hist.contains(n) }
-    if (common.isEmpty) """"ledger_diff":null"""
-    else {
-      val now = common.map(_._2).sum
-      val led = common.map { case (n, _) => hist(n) }.sum
-      if (led <= 0) """"ledger_diff":null"""
-      else {
-        val ratio = now / led
-        f""""ledger_diff":{"n_common":${common.size},"sum_now":$now%.1f,""" +
-          f""""sum_ledger":$led%.1f,"ratio":$ratio%.3f""" +
-          driftRaw.filter(_ > 0).map(d => f""","ratio_ctl_norm":${ratio / d}%.3f""")
-            .getOrElse("") + "}"
-      }
-    }
-  }
-
-  /** Budgeted sf1 sub-object for the final stdout line. Caps are hard:
-    * 3 slowest, 4 suspects, 4 rechecks, 4 regressions, 3 nonclone rows —
-    * the r15 artifact died because this block carried full per-query maps
-    * and 10-deep lists (BENCH_r15 parsed:null). Full detail lives in
-    * perf/bench_full.json and on stderr.
+  /** Budgeted sf1 sub-object for the final stdout line: 3 slowest and 3
+    * nonclone rows at most, plus the summed work of the pass. Full
+    * detail lives in perf/bench_full.json and on stderr.
     */
   private[graft] def sf1Compact(value: Double, nQueries: Int, nFailed: Int,
-                                slowest: Seq[(String, Double)],
-                                nSuspect: Int, suspectNames: Seq[String],
-                                recheck: Seq[(String, Double)],
-                                regression: Seq[String],
+                                slowest: Seq[(String, Double)], work: Work,
                                 nonclone: Option[Seq[(String, Double)]]): String =
     f""""sf1":{"value":$value%.3f,"n_queries":$nQueries,"n_failed":$nFailed,""" +
       s""""factor":$Sf1Factor,"slowest":${jsonMapCapped(slowest, 105)},""" +
-      s""""n_inflation_suspect":$nSuspect,""" +
-      s""""inflation_suspect":${jsonNamesCapped(suspectNames, 100)},""" +
-      s""""serial_recheck":${jsonMapCapped(recheck, 140)},""" +
-      s""""recheck_regression":${jsonNamesCapped(regression, 100)},""" +
+      s""""work":${work.json},""" +
       nonclone.map(nc => s""""nonclone":${jsonMapCapped(nc, 105)}""")
         .getOrElse(""""nonclone":null""") + "}"
 
   /** The ONE stdout line the driver parses, assembled under a hard budget:
     * the consumer captures only the last ~2000 chars of stdout, and r15's
-    * final line overflowed it (headline value truncated out of the window,
-    * sf0.1 serial_recheck dropped entirely — VERDICT r15 item 1). This
-    * form caps every variable-length list (4 headline, 3 failed names,
-    * 4 suspects, 4 rechecks, 4 regressions, capped sf1 block), carries
-    * BOTH scales' recheck/regression blocks, and drops the corpus
-    * fingerprint (it lives in perf/bench_full.json + stderr).
-    * BenchSpec asserts the worst-case assembled length stays under 1900.
+    * final line overflowed it (headline value truncated out of the
+    * window). This form caps every variable-length list (4 headline,
+    * 3 failed names, capped sf1 block) and drops the corpus fingerprint
+    * and the per-query work (they live in perf/bench_full.json +
+    * stderr). BenchSpec asserts the worst-case assembled length stays
+    * under 1900.
     */
   private[graft] def finalLine(total: Double, degraded: Boolean,
                                nQueries: Int, nFailed: Int,
                                failedNames: Seq[String], passes: Int,
-                               headline: Seq[(String, Double)],
-                               nSuspect: Int, suspectNames: Seq[String],
-                               recheck: Seq[(String, Double)],
-                               regression: Seq[String],
-                               ctlJson: String, ledgerDiffJson: String,
-                               sf1Json: Option[String], sfDir: String): String =
+                               headline: Seq[(String, Double)], work: Work,
+                               ctlJson: String, sf1Json: Option[String],
+                               sfDir: String): String =
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","degraded":$degraded,""" +
       s""""n_queries":$nQueries,"n_failed":$nFailed,""" +
       s""""failed":${jsonNamesCapped(failedNames, 80)},"passes":$passes,""" +
       s""""queries":${jsonMapCapped(headline, 140)},""" +
-      s""""n_inflation_suspect":$nSuspect,""" +
-      s""""inflation_suspect":${jsonNamesCapped(suspectNames, 100)},""" +
-      s""""serial_recheck":${jsonMapCapped(recheck, 140)},""" +
-      s""""recheck_regression":${jsonNamesCapped(regression, 100)},""" +
-      ctlJson + "," + ledgerDiffJson +
+      s""""work":${work.json},""" + ctlJson +
       sf1Json.map("," + _).getOrElse("") + s""","sf":"$sfDir"}"""
 
   /** Best-effort write of the full (uncapped) bench JSON to a committed
     * path, so nothing depends on the driver's stdout tail window
     * (VERDICT r15 item 7). Only an unfiltered run writes it: a filtered
-    * dev-loop run would replace the full-registry ledger with a few rows.
+    * dev-loop run would replace the full-registry artifact with a few rows.
     */
   private[graft] val FullJsonPath = "perf/bench_full.json"
 
@@ -267,88 +219,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] full JSON write failed: ${e.getMessage}")
     }
-
-  /** The SOLO LANE (VERDICT r17 item 3): queries whose sf1 readings have
-    * needed in-band adjudication three rounds running — the in-bench
-    * number reads 5–50× the committed ledger, every solo recheck lands
-    * back at 0.1–3.7 s. The divergence is not the queries: it is WHERE
-    * they sit in the single-pass sf1 sweep — right after heavyweight
-    * predecessors whose shuffle files only unlink on a driver GC, so
-    * the measurement pays the debris of the queries before it. Lane
-    * members are pulled out of the sweep and measured LAST, each after
-    * an explicit `System.gc()`, under their normal ledger keys — same
-    * artifact fields, quieter readings.
-    */
-  private[graft] val SoloLane: Set[String] = Set(
-    "q131_kmv_overlap", "q25_decode_stats", "q26_lang_histogram",
-    "q27_display_results", "q28_ivf_kmeans")
-
-  /** SELF-TUNING lane membership (VERDICT r18 item 7): the hand-listed
-    * [[SoloLane]] quieted its five chronic rows, but each round a NEW
-    * contention set appears wherever the sweep's heavyweight
-    * predecessors moved — hand-listing chases it one round late. Every
-    * bench run appends its sf1 suspect list to a committed history
-    * (last [[SuspectRunsKept]] runs), and any query suspect in BOTH of
-    * the two most recent prior runs is auto-promoted into the lane for
-    * this run. Tagged entries (@nonclone) are never promoted — they are
-    * measurement variants, not sweep members.
-    */
-  private[graft] val SuspectHistoryPath = "perf/suspect_history.json"
-  private[graft] val SuspectRunsKept = 8
-
-  private[graft] def dynamicLane(runs: Seq[Seq[String]]): Set[String] =
-    runs.takeRight(2) match {
-      case Seq(a, b) => a.toSet.intersect(b.toSet).filterNot(_.contains("@"))
-      case _         => Set.empty
-    }
-
-  private[graft] def readSuspectRuns(key: String,
-                                     path: String = SuspectHistoryPath): Seq[Seq[String]] = try {
-    val f = new java.io.File(path)
-    if (!f.exists()) Seq.empty
-    else {
-      val sub = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(f).get(key)
-      if (sub == null || !sub.isArray) Seq.empty
-      else {
-        val b = Seq.newBuilder[Seq[String]]
-        sub.forEach { run =>
-          val r = Seq.newBuilder[String]
-          run.forEach(n => r += n.asText())
-          b += r.result()
-        }
-        b.result()
-      }
-    }
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] suspect history unreadable: ${e.getMessage}")
-    Seq.empty
-  }
-
-  private[graft] def appendSuspectRun(key: String, suspects: Seq[String],
-                                      path: String = SuspectHistoryPath): Unit = try {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val f = new java.io.File(path)
-    val root: com.fasterxml.jackson.databind.node.ObjectNode =
-      if (f.exists())
-        mapper.readTree(f).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else mapper.createObjectNode()
-    val runs = (readSuspectRuns(key, path) :+ suspects.sorted)
-      .takeRight(SuspectRunsKept)
-    val arr = mapper.createArrayNode()
-    runs.foreach { run =>
-      val a = mapper.createArrayNode()
-      run.foreach(a.add)
-      arr.add(a)
-    }
-    root.set(key, arr)
-    Option(f.getParentFile).foreach(_.mkdirs())
-    mapper.writerWithDefaultPrettyPrinter().writeValue(f, root)
-    System.err.println(s"[bench] suspect history appended: $path [$key] " +
-      s"${suspects.size} suspects, ${runs.size} runs kept")
-  } catch { case e: Throwable =>
-    System.err.println(s"[bench] suspect history write failed: ${e.getMessage}")
-  }
 
   /** The sf1 replicas are 10 copies of sf0.1. */
   private val Sf1Factor = 10
@@ -459,6 +329,7 @@ object Bench {
       args.headOption.map(_.split(",").toSet)
     only.foreach(SparkEntry.requireKnown)
     val spark = GraftSession("graft-bench")
+    val recorder = new Recorder(spark.sparkContext)
 
     // Warm the JVM/session once (codegen, parquet footer cache paths) and
     // touch every table's footer/file listing so per-query numbers measure
@@ -499,7 +370,18 @@ object Bench {
 
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val samples = collection.mutable.Map.empty[String, List[Double]]
+    // One timed, recorded run of a query through the noop sink; throws
+    // what the query throws. A filtered run keeps each query's stages of
+    // its last successful pass for the per-stage view printed at the end.
+    val lastStages = collection.mutable.Map.empty[String, Seq[Stage]]
+    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+            dir: String): (Double, Work) = {
+      val (sec, work, stages) = recorder.record(
+        fn(spark, dir).write.format("noop").mode("overwrite").save())
+      if (only.nonEmpty) lastStages(name) = stages
+      (sec, work)
+    }
+    val samples = collection.mutable.Map.empty[String, List[(Double, Work)]]
       .withDefaultValue(Nil)
     // query -> number of passes in which it threw. Failed passes contribute
     // NO sample (a fast failure must not masquerade as a fast success).
@@ -518,12 +400,10 @@ object Bench {
           System.err.println(s"[bench] pass $pass __control FAILED: ${e.getMessage}")
       }
       names.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          samples(name) = samples(name) :+ sec
-          System.err.println(f"[bench] pass $pass $name%-24s $sec%8.3f s")
+          val (sec, work) = run(name, fn, sfDir)
+          samples(name) = samples(name) :+ (sec -> work)
+          System.err.println(f"[bench] pass $pass $name%-24s $sec%8.3f s  $work")
         } catch {
           case e: Throwable =>
             failures(name) += 1
@@ -536,55 +416,15 @@ object Bench {
     // the successful passes only; queries that failed every pass are omitted
     // from the timing maps and appear solely under "failed".
     val timed = names.filter { case (name, _) => samples(name).nonEmpty }
-    val med = timed.map { case (name, _) => name -> median(samples(name)) }
-    val mins = timed.map { case (name, _) => name -> samples(name).min }
-    val mainKey = new java.io.File(sfDir.replaceAll("/+$", "")).getName
-    val writeHist = sys.env.get("SPARK_GRAFT_WRITE_HISTORY").contains("1")
+    val med = timed.map { case (name, _) => name -> median(samples(name).map(_._1)) }
+    val mins = timed.map { case (name, _) => name -> samples(name).map(_._1).min }
+    val medWork = timed.map { case (name, _) => name -> Work.median(samples(name).map(_._2)) }
     val ctlMedian =
       if (controlSamples.nonEmpty) Some(median(controlSamples.toList)) else None
-    val ctlEntry = ctlMedian.map(ControlKey -> _).toSeq
-    // read BEFORE write: a WRITE_HISTORY (closing) run must adjudicate
-    // against the PREVIOUS ledger, not the one it is about to define —
-    // the old order made the builder's own suspect column vacuous
-    // (every query compared to itself)
-    val mainHist = readHistory(mainKey)
-    if (writeHist) writeHistory(mainKey, med ++ ctlEntry)
-    val mainDrift = driftFactor(mainHist, ctlMedian)
-    if (mainDrift > 1.0)
-      System.err.println(f"[bench] control drift vs ledger: $mainDrift%.2fx — " +
-        "suspect rule normalized (VERDICT r14 item 6)")
-    val mainSuspects = suspects(mainHist, med, mainDrift)
-    // solo re-run of each suspect, AFTER the interleaved passes, so the
-    // artifact adjudicates inflation-vs-regression by itself. Names tagged
-    // @nonclone run against the perturbed replica.
-    def soloRun(dir: String, ncDir: => Option[String] = None)(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val d = if (name.endsWith("@nonclone")) ncDir.getOrElse(return None) else dir
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, d).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] recheck $name%-24s $sec%8.3f s  (solo)")
-        Some(sec)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] recheck $name FAILED: ${e.getMessage}")
-        None
-      }
-    }
-    val mainRecheck = recheckSuspects(names, mainSuspects, soloRun(sfDir))
-    val mainStillBad = suspects(mainHist, mainRecheck, mainDrift)
-    val suspectJson = s""""inflation_suspect":${jsonNames(mainSuspects)}"""
-    def recheckJson(rc: Seq[(String, Double)], still: Seq[String]): String =
-      s""""serial_recheck":${jsonMap(rc)},""" +
-        s""""recheck_regression":${jsonNames(still)}"""
     val failedJson = failures.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + s"""\":$v""" }.mkString("{", ",", "}")
-    // unclamped control drift for the ledger_diff normalization (the
-    // clamped driftFactor is for the suspect rule only)
-    val driftRaw = for { h <- mainHist.get(ControlKey) if h > 0
-                         c <- ctlMedian if c > 0 } yield c / h
-    val diffJson = ledgerDiff(mainHist, med, driftRaw)
     val total = med.map(_._2).sum
+    val totalWork = Work.sum(medWork.map(_._2))
     // Cross-round totals are only comparable when divided by the noise
     // floor: the container's control median moved 1.7x between r9 and r10
     // on untouched code, making raw totals unreadable. value_per_control
@@ -607,25 +447,35 @@ object Bench {
     val fullJson =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","degraded":$degraded,""" +
       f""""queries":${jsonMap(med)},""" +
-      f""""queries_min":${jsonMap(mins)},"passes":$passes,"failed":$failedJson,""" +
-      suspectJson + "," + recheckJson(mainRecheck, mainStillBad) + "," +
-      ctl + "," + diffJson + "," + corpusJson + f""","sf":"$sfDir"}"""
+      f""""queries_min":${jsonMap(mins)},"work":${jsonWork(medWork)},""" +
+      s""""work_total":${totalWork.json},"passes":$passes,"failed":$failedJson,""" +
+      ctl + "," + corpusJson + f""","sf":"$sfDir"}"""
     // The consumer captures only the LAST ~2000 chars of stdout and
     // parses the final JSON line it finds there. The full per-query line
-    // above is ~6 KB at 100+ queries, so it ships on stderr AND to the
+    // above is tens of KB at 250 queries, so it ships on stderr AND to the
     // committed perf/bench_full.json (unfiltered runs only); stdout ends
     // with the budgeted finalLine (see its doc — r15's final line
     // overflowed the window).
     System.err.println(fullJson)
     if (only.isEmpty) writeFull(fullJson)
-    else System.err.println(s"[bench] filtered run: $FullJsonPath not written")
+    else {
+      System.err.println(s"[bench] filtered run: $FullJsonPath not written")
+      // per-stage view of each query's last pass: its 3 heaviest stages
+      lastStages.toSeq.sortBy(_._1).foreach { case (name, stages) =>
+        System.err.println(s"[bench] stages $name (${stages.size}):")
+        stages.sortBy(-_.wallMs).take(3).foreach { st =>
+          System.err.println(f"[bench]   stage ${st.id}%5d ${st.wallMs}%7d ms " +
+            f"${st.tasks}%5d tasks ${st.cpuMs}%7d cpu_ms " +
+            f"${st.shuffleBytes}%11d shuffle ${st.spillBytes}%9d spill  ${st.name}")
+        }
+      }
+    }
     val headline = (med.filter(_._1 == "q01_cosine_topk") ++
       med.sortBy(-_._2).take(3)).distinctBy(_._1)
     val failedNames = failures.keys.toSeq.sorted
     def stdoutLine(sf1: Option[String]): String =
       finalLine(total, degraded, med.size, failures.size, failedNames,
-        passes, headline, mainSuspects.size, mainSuspects,
-        mainRecheck, mainStillBad, ctl, diffJson, sf1, sfDir)
+        passes, headline, totalWork, ctl, sf1, sfDir)
     println(stdoutLine(None))
     if (degraded)
       System.err.println(s"[bench] DEGRADED: failures in ${failures.keys.toSeq.sorted.mkString(", ")} — 'value' excludes them")
@@ -651,44 +501,28 @@ object Bench {
           System.err.println(f"[bench] sf1 replica built in ${(System.nanoTime() - r0) / 1e9}%.1f s")
         } else System.err.println(s"[bench] sf1 replica reused at $dir")
         val sf1Samples = collection.mutable.ListBuffer.empty[(String, Double)]
+        val sf1Works = collection.mutable.ListBuffer.empty[(String, Work)]
         var sf1Failed = 0
-        // lane = the hand-pinned chronic set + any query suspect in both
-        // of the two most recent prior runs (self-tuning, r18 item 7)
-        val promoted = dynamicLane(readSuspectRuns("sf1"))
-        if (promoted.nonEmpty)
-          System.err.println(s"[bench] sf1 lane auto-promotions: " +
-            promoted.toSeq.sorted.mkString(", "))
-        val lane = SoloLane ++ promoted
-        val (laneQs, sweepQs) = names.partition(n => lane.contains(n._1))
-        def sf1Run(tag: String)(name: String,
-            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-          val t0 = System.nanoTime()
+        names.foreach { case (name, fn) =>
           try {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
+            val (sec, work) = run(name, fn, dir)
             sf1Samples += name -> sec
-            System.err.println(f"[bench] sf1 $name%-24s $sec%8.3f s$tag")
+            sf1Works += name -> work
+            System.err.println(f"[bench] sf1 $name%-24s $sec%8.3f s  $work")
           } catch {
             case e: Throwable =>
               sf1Failed += 1
               System.err.println(s"[bench] sf1 $name FAILED: ${e.getMessage}")
           }
         }
-        sweepQs.foreach { case (n, f) => sf1Run("")(n, f) }
-        // chronic contention rows measured last, each after a driver GC
-        // (shuffle files unlink on GC) — see SoloLane
-        laneQs.foreach { case (n, f) => System.gc(); sf1Run("  (lane)")(n, f) }
         // The id-shift replica turns every doc into a 10-clone clique, so
         // the dedup family's sf1 numbers measure worst-case (clone-pair)
         // output. Re-run those queries against a perturbed-text replica
         // whose only near-dups are the base corpus's organic ones, and
-        // ship both variants' numbers (VERDICT r10 item 6). Measured
-        // BEFORE the ledger write so the @nonclone entries ride the same
-        // suspect/recheck machinery as everything else (r14 item 1: the
-        // single cold post-pass number stamped q119 at 86.8 s where the
-        // quiet-window close read 9.9 s, and nothing in-band said so).
+        // ship both variants' numbers (VERDICT r10 item 6).
         val nonCloneQs = Seq("q14_minhash_pairs", "q110_leak_split", "q119_dedup_curve")
         val ncSamples = collection.mutable.ListBuffer.empty[(String, Double)]
+        val ncWorks = collection.mutable.ListBuffer.empty[(String, Work)]
         var ncOk = false
         val ncDir = sys.env.getOrElse("SPARK_GRAFT_SF1_NC_DIR", "/tmp/graft-sf1-nonclone")
         try {
@@ -703,65 +537,44 @@ object Bench {
           } else System.err.println(s"[bench] sf1 non-clone replica reused at $ncDir")
           // 3 interleaved samples per query, MEDIAN reported: the single
           // cold read this column used to ship moved 11.6 → 31.5 s across
-          // two same-code closes (replica first-touch + ambient) — the
-          // exact ambiguity class the r14 verdict flagged. The first
-          // pass absorbs the cold first-touch; the median lands on a
-          // warm read.
-          val ncRaw = collection.mutable.Map.empty[String, List[Double]]
+          // two same-code closes (replica first-touch + ambient). The
+          // first pass absorbs the cold first-touch; the median lands on
+          // a warm read.
+          val ncRaw = collection.mutable.Map.empty[String, List[(Double, Work)]]
             .withDefaultValue(Nil)
           for (p <- 1 to 3) {
             names.filter(n => nonCloneQs.contains(n._1)).foreach { case (name, fn) =>
-              val t0 = System.nanoTime()
-              fn(spark, ncDir).write.format("noop").mode("overwrite").save()
-              val sec = (System.nanoTime() - t0) / 1e9
-              ncRaw(name) = ncRaw(name) :+ sec
-              System.err.println(f"[bench] sf1-nonclone pass $p $name%-24s $sec%8.3f s")
+              val (sec, work) = run(name, fn, ncDir)
+              ncRaw(name) = ncRaw(name) :+ (sec -> work)
+              System.err.println(f"[bench] sf1-nonclone pass $p $name%-24s $sec%8.3f s  $work")
             }
           }
-          nonCloneQs.filter(ncRaw.contains).foreach(n =>
-            ncSamples += n -> median(ncRaw(n)))
+          nonCloneQs.filter(ncRaw.contains).foreach { n =>
+            ncSamples += n -> median(ncRaw(n).map(_._1))
+            ncWorks += n -> Work.median(ncRaw(n).map(_._2))
+          }
           ncOk = true
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] sf1 non-clone pass aborted: ${e.getMessage}")
         }
         val ncJson =
-          if (ncOk) s""""nonclone":${jsonMap(ncSamples.toSeq)}"""
+          if (ncOk) s""""nonclone":${jsonMap(ncSamples.toSeq)},""" +
+            s""""nonclone_work":${jsonWork(ncWorks.toSeq)}"""
           else """"nonclone":null"""
-        // both sf1 columns share one ledger key, distinguished by suffix;
-        // the drift factor reuses the session control (measured once per
-        // pass on the main run — same JVM, same machine state)
-        val ncTagged = ncSamples.toSeq.map { case (n, v) => s"$n@nonclone" -> v }
-        val sf1All = sf1Samples.toSeq ++ ncTagged
-        val sf1Hist = readHistory("sf1") // before the write — see mainHist
-        if (writeHist) writeHistory("sf1", sf1All ++ ctlEntry)
-        val sf1Drift = driftFactor(sf1Hist, ctlMedian)
-        val sf1Suspects = suspects(sf1Hist, sf1All, sf1Drift)
-        val sf1Registry = names ++
-          names.filter(n => nonCloneQs.contains(n._1))
-            .map { case (n, f) => (s"$n@nonclone", f) }
-        val sf1Recheck = recheckSuspects(sf1Registry, sf1Suspects,
-          soloRun(dir, if (ncOk) Some(ncDir) else None))
-        val sf1StillBad = suspects(sf1Hist, sf1Recheck, sf1Drift)
-        // feed the self-tuning lane: this run's suspects become the
-        // promotion evidence for the next run
-        appendSuspectRun("sf1", sf1Suspects)
-        System.err.println(s"[bench] sf1 inflation_suspect: $sf1Suspects")
         val sf1Total = sf1Samples.map(_._2).sum
+        val sf1Work = Work.sum(sf1Works.map(_._2).toSeq)
         val sf1Slow = sf1Samples.sortBy(-_._2).take(5).toSeq
         // budgeted block for the stdout line; the uncapped twin (full
-        // per-query map, full suspect/recheck lists) goes to
-        // perf/bench_full.json + stderr
+        // per-query maps) goes to perf/bench_full.json + stderr
         sf1Json = sf1Compact(sf1Total, sf1Samples.size, sf1Failed, sf1Slow,
-          sf1Suspects.size, sf1Suspects, sf1Recheck, sf1StillBad,
-          if (ncOk) Some(ncSamples.toSeq) else None)
+          sf1Work, if (ncOk) Some(ncSamples.toSeq) else None)
         sf1Full =
           f""""sf1":{"value":$sf1Total%.3f,"n_queries":${sf1Samples.size},""" +
           f""""n_failed":$sf1Failed,"factor":$Sf1Factor,""" +
           f""""queries":${jsonMap(sf1Samples.toSeq)},""" +
-          f""""n_inflation_suspect":${sf1Suspects.size},""" +
-          f""""inflation_suspect":${jsonNames(sf1Suspects)},""" +
-          recheckJson(sf1Recheck, sf1StillBad) + "," + ncJson + "}"
+          s""""work":${jsonWork(sf1Works.toSeq)},"work_total":${sf1Work.json},""" +
+          ncJson + "}"
         System.err.println(f"[bench] sf1 total $sf1Total%.1f s over ${sf1Samples.size} queries, $sf1Failed failed")
       } catch {
         case e: Throwable =>
@@ -775,6 +588,7 @@ object Bench {
     // Exit 0 even with per-query failures: the "failed" JSON field carries
     // the signal, and a nonzero rc would make the driver discard the whole
     // line (r6: rc=1 -> parsed:null, no benchmark for the round).
+    recorder.close()
     spark.stop()
   }
 }

@@ -239,10 +239,10 @@ object SparkEntry {
     // HINT: Catalyst auto-broadcasts it while its stats fit and degrades
     // to a shuffle join at 100 TB — a hint would force the broadcast at
     // every scale
-    // r19 (guide §3.1, StageProfile at sf1): Catalyst's size ESTIMATE of
-    // orders pruned to (o_orderkey, o_custkey) stays under the broadcast
-    // threshold long after the real build cost stops being small — at
-    // sf1 the driver spent ~5 s of a 7 s query single-threadedly
+    // r19 (guide §3.1, the r19 per-stage profile at sf1): Catalyst's size
+    // ESTIMATE of orders pruned to (o_orderkey, o_custkey) stays under the
+    // broadcast threshold long after the real build cost stops being small —
+    // at sf1 the driver spent ~5 s of a 7 s query single-threadedly
     // building a 1.5 M-row broadcast hash relation (wall 7.1 s vs 6 s of
     // TOTAL task time, 3.2 MB shuffled). lineitem⋈orders are the two
     // SF-scaling fact tables — that join can never broadcast at real
@@ -1711,8 +1711,12 @@ object SparkEntry {
       ivfPqCache.getOrElseUpdate(key, {
         val ivf = ivfIndexFor(s, dir)
         val t0 = System.nanoTime()
-        val pq = Ann.buildPq(ivf.assigned, m = 2, ks = 16, seed = 42L,
-          maxIter = 2, initMode = "random")
+        // the persisted lists' row order follows their random part-file
+        // names; k-means' seeded sample and sums must not, so the
+        // training input is one partition in vec_id order
+        val pq = Ann.buildPq(
+          ivf.assigned.repartition(1).sortWithinPartitions("vec_id"),
+          m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random")
         val enc = pq.encoded.localCheckpoint()
         System.err.println(
           f"[graft] q174 PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -3755,7 +3759,7 @@ object SparkEntry {
     * bigram stream against its own stats — no windows, no broadcasts of
     * anything data-sized (V is one row).
     *
-    * r19 optimization (guide §2.3/§2.4, profiled with StageProfile):
+    * r19 optimization (guide §2.3/§2.4, the r19 per-stage profile):
     * the original phrasing consumed the exploded bigram stream THREE
     * ways (c2 aggregate, join probe vs c2, join probe output vs c1), so
     * the documents scan + tokenize + explosion ran twice and the
@@ -4145,9 +4149,9 @@ object SparkEntry {
     val qs = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 3200)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val e = col("embedding"); val q = col("qv")
-    // r19 restructure (guide §2.3/§2.4, StageProfile): ranking the FULL
-    // panel×corpus frame three ways and left-joining it corpus-wide only
-    // to keep ranks ≤ 10/50 paid three full window sorts plus a
+    // r19 restructure (guide §2.3/§2.4, the r19 per-stage profile): ranking
+    // the FULL panel×corpus frame three ways and left-joining it corpus-wide
+    // only to keep ranks ≤ 10/50 paid three full window sorts plus a
     // corpus-sized join. Each rank filter now sits DIRECTLY above its
     // window, so Spark's WindowGroupLimit prunes to per-partition top-k
     // before the sort, and the hit counts become joins of ≤ panel×50-row

@@ -55,10 +55,10 @@ object Dedup {
     * intersect (r19): every consumer below that only ever needs
     * |A∩B| / |A∪B| / equality of shingles compares 8-byte longs instead
     * of materializing shingle STRINGS through interpreted HOFs
-    * (StageProfile measured the composed string form at ~19 ms/doc
-    * before any set work). Values are md5Int60 of the exact same
-    * shingle strings ([[graft.functions.ShingleHashes]], spec-pinned),
-    * so intersect/union SIZES — and every downstream jaccard,
+    * (the r19 per-stage profile measured the composed string form at
+    * ~19 ms/doc before any set work). Values are md5Int60 of the exact
+    * same shingle strings ([[graft.functions.ShingleHashes]],
+    * spec-pinned), so intersect/union SIZES — and every downstream jaccard,
     * containment, decile, and threshold count — are unchanged; two
     * distinct shingles colliding in 60 bits is the same measure-zero
     * caveat the q97 inverted index pinned, and every oracle gate
@@ -1022,8 +1022,8 @@ object Dedup {
       : (DataFrame, DataFrame) = {
     // lazy cut (r20): `groups` feeds the reps semi-join AND whatever the
     // caller does with the group frame (q162's rollup re-read it, which
-    // re-ran the corpus-wide md5 aggregate — StageProfile showed the
-    // exactDupGroups stage twice per run). Lazy, not eager: the reps
+    // re-ran the corpus-wide md5 aggregate — the r19 per-stage profile showed
+    // the exactDupGroups stage twice per run). Lazy, not eager: the reps
     // pipeline inside nearDupPairs' construction-time checkpoint is the
     // first reader and completes before any second consumer starts, so
     // the blocks fill race-free without spending a dedicated job.
@@ -1606,15 +1606,16 @@ object Dedup {
     // shape's df aggregate also stays skew-proof: a boilerplate gram
     // occurring 1M times is one counter, never a buffered group.
     // r20 (guide §2.3/§1.2): the doc-freq count SKIPS the partial
-    // aggregate. Grams are mostly distinct within a map task (StageProfile
-    // sf1: the partial's per-task hashmap burned ~30 of the stage's 49
-    // CPU-seconds to combine ~nothing, and its exchange carried a count
-    // column per row: 140 MB for ~12M grams), so the pre-shuffle combine
-    // is pure overhead here — the explicit repartition ships bare 8-byte
-    // hashes and the reduce side builds the ONE hashmap the final
-    // aggregate always needed. Width is pinned at the session's shuffle
-    // parallelism (the q97 lesson: a CPU-dense few-MB exchange gets
-    // AQE-coalesced to 2-4 tasks at bench SF). Trade-off kept in view: a
+    // aggregate. Grams are mostly distinct within a map task (the
+    // per-stage profile at sf1: the partial's per-task hashmap burned ~30
+    // of the stage's 49 CPU-seconds to combine ~nothing, and its exchange
+    // carried a count column per row: 140 MB for ~12M grams), so the
+    // pre-shuffle combine is pure overhead here — the explicit
+    // repartition ships bare 8-byte hashes and the reduce side builds the
+    // ONE hashmap the final aggregate always needed. Width is pinned at
+    // the session's shuffle parallelism (the q97 lesson: a CPU-dense
+    // few-MB exchange gets AQE-coalesced to 2-4 tasks at bench SF).
+    // Trade-off kept in view: a
     // boilerplate gram occurring 1M times now ships 1M rows into one
     // partition instead of combining map-side — one 8 MB counter-feed at
     // worst, still never a buffered group, vs the partial hashmap taxing

@@ -25,10 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * order joined with " ", `cleaned_n_chars` its code-point length and
   * `cleaned_hash` its md5Int32 (first 8 md5 hex chars as a long).
   *
-  * Why native (r19, StageProfile on q133 at sf1): keep-first-within-doc
-  * has NO cross-document interaction, yet the composed form exploded
-  * every segment, shuffled the segment STRINGS corpus-wide twice (a
-  * (doc, seg) row_number window, then a groupBy(doc) whose aggregate
+  * Why native (the r19 per-stage profile of q133 at sf1):
+  * keep-first-within-doc has NO cross-document interaction, yet the composed
+  * form exploded every segment, shuffled the segment STRINGS corpus-wide
+  * twice (a (doc, seg) row_number window, then a groupBy(doc) whose aggregate
   * re-built the cleaned text via collect_list + array_sort +
   * array_join), ~70 MB of shuffle per run at sf1 — ALSO the round-18
   * chronic contention source, since those shuffle files stay on disk

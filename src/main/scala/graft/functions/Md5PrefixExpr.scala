@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[HashFunctions.md5Int32]] (hexLen = 8) / [[HashFunctions.md5Int60]]
   * (hexLen = 15) contract, computed straight from the digest bytes.
   *
-  * Why native (r19, StageProfile on q140/q57): the composed
+  * Why native (the r19 per-stage profile of q140/q57): the composed
   * `conv(substring(md5(cast(x as binary)), 1, k), 16, 10)` chain
   * allocates the 32-char hex string, substrings it, and re-parses it
   * base-16 on EVERY evaluation — q140 evaluated it 8× per token

@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (idx = nseg) is NOT emitted, exactly like the `idx < nseg` filter it
   * replaces.
   *
-  * Why native (r19, StageProfile on q85/q96): the composed counting
+  * Why native (the r19 per-stage profile of q85/q96): the composed counting
   * pass re-ran tokenize + slice + array_join — a string allocation per
   * segment — purely to hash and drop the string; the rewrite side needs
   * those strings (the output text), the counting side never did.

@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * q97 inverted index pinned (the oracle replays the identical
   * md5-prefix hash, so parity is unaffected).
   *
-  * Why native (r19, StageProfile on q131/q130): the composed form pays
-  * interpreted higher-order functions per shingle (transform + slice +
+  * Why native (the r19 per-stage profile of q131/q130): the composed form
+  * pays interpreted higher-order functions per shingle (transform + slice +
   * concat_ws allocate a string per window) plus array_distinct over
   * strings — measured ~19 ms/doc at sf0.1, 94 CPU-seconds for a 5 k-doc
   * corpus before a single hash left the map stage. This kernel runs one

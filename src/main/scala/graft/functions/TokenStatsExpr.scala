@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[TokenBigramHashes]], [[TokenHashes32]]) pins against the composed
   * form in its spec.
   *
-  * Why native (r19, StageProfile): the composed quality score paid an
+  * Why native (the r19 per-stage profile): the composed quality score paid an
   * interpreted higher-order `filter(isin)` plus `array_distinct` over
   * string arrays per row (the q131 overhead class), and the per-doc
   * token histogram behind the per-mille-TTR score (q155/q172) was

@@ -114,50 +114,6 @@ object Ingest {
   /** Name under which [[observedIngest]] registers its metrics. */
   val MetricsName = "graft_ingest"
 
-  /** Compact a parquet table's small files into `targetFiles` outputs —
-    * the maintenance pass an append-only store needs (every streaming
-    * micro-batch / ingest run leaves its own files; thousands of tiny
-    * files make listing and scan planning the bottleneck long before
-    * data size does). Rewrites into a temp dir first and swaps only
-    * after success, so a failed compaction never damages the table.
-    * Readers concurrent with the swap see the table vanish briefly —
-    * single-writer maintenance windows only (a table format with
-    * transactional commit is the 100 TB answer; plain parquet has no
-    * atomic directory swap).
-    */
-  def compact(spark: SparkSession, path: String, targetFiles: Int): Unit = {
-    require(targetFiles > 0, s"targetFiles must be > 0, got $targetFiles")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // the filesystem that OWNS the path (s3a/hdfs/...), not the default FS
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    val bak = new org.apache.hadoop.fs.Path(path + ".compact.old")
-    if (fs.exists(bak)) {
-      throw new IllegalStateException(
-        s"compact: leftover $bak from a previous run — resolve it first")
-    }
-    spark.read.parquet(path)
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // Hadoop rename reports failure by RETURNING FALSE; each step checks.
-    // Failing the first rename leaves the live table untouched.
-    if (!fs.rename(dst, bak)) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compact: could not move live table aside ($dst -> $bak); table untouched")
-    }
-    if (!fs.rename(tmp, dst)) {
-      if (!fs.rename(bak, dst)) {
-        throw new IllegalStateException(
-          s"compact: swap failed AND restore failed — table preserved at $bak")
-      }
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compact: could not swap $tmp into $dst; original restored")
-    }
-    fs.delete(bak, true)
-  }
-
   /** Ingest with observed metrics — the A8 ingest counters of the
     * reference (`repo_to_vector.py:58-64,452-467`: chunks created,
     * content bytes, files processed) as `df.observe` aggregates: computed

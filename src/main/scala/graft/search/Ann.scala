@@ -884,14 +884,12 @@ object Ann {
     IvfManifest(v, centroids, lists.toSeq, tombs.toSeq, sq8)
   }
 
-  /** Serialize + atomically commit `m` as version `m.version` with
-    * CREATE-IF-ABSENT semantics: POSIX rename overwrites an existing
-    * destination, so a same-version race between two maintenance
-    * writers could silently clobber the winner's manifest — instead
-    * the publish is a hard link on `file:` (the kernel atomically
-    * fails it with EEXIST) / guarded rename elsewhere, and the loser
-    * surfaces as [[graft.sources.ConcurrentCommitException]] with its
-    * orphan generation left for [[recoverIvf]] (VERDICT r18 item 2:
+  /** Serialize + atomically commit `m` as version `m.version` through
+    * the table log's create-if-absent publish
+    * ([[graft.sources.Versioned.publish]]): a same-version race between
+    * two maintenance writers cannot clobber the winner's manifest, and
+    * the loser surfaces as [[graft.sources.ConcurrentCommitException]]
+    * with its orphan generation left for [[recoverIvf]] (VERDICT r18 item 2:
     * the index keeps the documented single-maintenance-writer
     * contract, and a violation now fails CLEANLY instead of losing a
     * commit). The `IVF_FORMAT` marker is stamped on first commit only
@@ -916,23 +914,7 @@ object Ann {
     val out = fs.create(tmp, true)
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    val dst = ivfManifestPath(path, m.version)
-    def lost(): Nothing = {
-      fs.delete(tmp, false)
-      throw new graft.sources.ConcurrentCommitException(
-        s"IVF ${dst.getName} was committed by a concurrent writer at " +
-        s"$path — this writer lost the race; its generation is an " +
-        "orphan (recoverIvf sweeps it). The index mutators require a " +
-        "single maintenance writer.")
-    }
-    if (fs.exists(dst)) lost()
-    if ("file" == fs.getUri.getScheme) {
-      val t = java.nio.file.Paths.get(fs.makeQualified(tmp).toUri)
-      val d = java.nio.file.Paths.get(fs.makeQualified(dst).toUri)
-      try java.nio.file.Files.createLink(d, t)
-      catch { case _: java.nio.file.FileAlreadyExistsException => lost() }
-      fs.delete(tmp, false)
-    } else if (!fs.rename(tmp, dst)) lost()
+    graft.sources.Versioned.publish(fs, tmp, ivfManifestPath(path, m.version), lines)
     val marker = new org.apache.hadoop.fs.Path(path, "IVF_FORMAT")
     if (!fs.exists(marker)) {
       val mo = fs.create(marker, true)

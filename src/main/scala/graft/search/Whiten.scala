@@ -50,8 +50,8 @@ object Whiten {
   def covarianceFixedPoint(emb: DataFrame, vecCol: String = "embedding",
                            dims: Int = 16, scale: Double = 1e6): DataFrame = {
     require(dims >= 1 && dims <= 64, s"dims must be in [1,64], got $dims")
-    // r19 (guide §2.3, StageProfile): exploding dims·(dims+1)/2 structs
-    // per row shipped the row machinery 136× per vector before the
+    // r19 (guide §2.3, the r19 per-stage profile): exploding dims·(dims+1)/2
+    // structs per row shipped the row machinery 136× per vector before the
     // partial aggregate collapsed it. One global aggregate with a sum
     // column per (i, j) pair keeps the whole pass inside one codegen
     // stage (aggregate state = 137 longs), and the single aggregated

@@ -338,7 +338,8 @@ object Versioned {
     resolveEntries(spark, root, v).map(pathOf)
 
   /** Publish `tmp` as `dst` with CREATE-IF-ABSENT semantics — the
-    * optimistic-concurrency commit point. POSIX rename OVERWRITES an
+    * optimistic-concurrency commit point of both this log and the IVF
+    * index's manifests (`Ann.commitIvfManifest`). POSIX rename OVERWRITES an
     * existing destination, so a bare rename would let the loser of a
     * same-version race silently clobber the winner's committed delta
     * (a lost commit — strictly worse than a crash). On `file:` the
@@ -348,14 +349,14 @@ object Versioned {
     * rename + read-back verification. The loser always surfaces as
     * [[ConcurrentCommitException]] with the winner's commit intact.
     */
-  private def publish(f: org.apache.hadoop.fs.FileSystem, tmp: Path,
-                      dst: Path, written: Seq[String]): Unit = {
+  private[graft] def publish(f: org.apache.hadoop.fs.FileSystem, tmp: Path,
+                             dst: Path, written: Seq[String]): Unit = {
     def lost(): Nothing = {
       f.delete(tmp, false)
       throw new ConcurrentCommitException(
-        s"${dst.getName} was committed by a concurrent writer — this " +
-        "writer lost the optimistic race; its data batch is an orphan " +
-        "(vacuum reclaims it)")
+        s"$dst was committed by a concurrent writer — this writer lost " +
+        "the optimistic race; the data it staged for the commit is an " +
+        "orphan (vacuum / recoverIvf reclaims it)")
     }
     if (f.exists(dst)) lost()
     if ("file" == f.getUri.getScheme) {

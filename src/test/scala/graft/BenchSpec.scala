@@ -1,193 +1,79 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 
-/** The inflation_suspect mechanics (VERDICT r12 item 1): the ledger
-  * round-trips, merging preserves other keys/queries, and the 3×-with-
-  * 1s-floor rule flags exactly the multiprogramming-inflation class —
-  * no SparkSession needed, so this runs in milliseconds.
-  */
-class BenchSpec extends AnyFunSuite {
-
-  test("serial-history ledger: write/read round-trip, merge semantics") {
-    val p = java.nio.file.Files.createTempDirectory("graft_bench")
-      .resolve("hist.json").toString
-    assert(Bench.readHistory("sf0.1", p).isEmpty) // missing file -> empty
-    Bench.writeHistory("sf0.1", Seq("q1" -> 1.234, "q2" -> 0.5), p)
-    Bench.writeHistory("sf1", Seq("q1" -> 10.0), p)
-    assert(Bench.readHistory("sf0.1", p) == Map("q1" -> 1.234, "q2" -> 0.5))
-    assert(Bench.readHistory("sf1", p) == Map("q1" -> 10.0))
-    // re-write merges per key: q2 survives a run that only measured q1
-    Bench.writeHistory("sf0.1", Seq("q1" -> 2.0), p)
-    assert(Bench.readHistory("sf0.1", p) == Map("q1" -> 2.0, "q2" -> 0.5))
-    assert(Bench.readHistory("nope", p).isEmpty)
-    // corrupt file reads as empty (bench must never die on its ledger)
-    java.nio.file.Files.write(java.nio.file.Paths.get(p),
-      "not json".getBytes)
-    assert(Bench.readHistory("sf0.1", p).isEmpty)
-  }
-
-  test("inflation_suspect: >3x serial AND >1s absolute; unknown queries never flag") {
-    val hist = Map("slow" -> 10.0, "fast" -> 0.1, "mid" -> 2.0)
-    val med = Seq(
-      "slow" -> 35.0,   // 3.5x and +25s -> flagged
-      "fast" -> 0.9,    // 9x but sub-second absolute -> NOT flagged
-      "mid" -> 5.9,     // 2.95x -> NOT flagged (under 3x)
-      "new" -> 99.0)    // no history -> NOT flagged
-    assert(Bench.suspects(hist, med) == Seq("slow"))
-    // boundary: exactly 3x is not a suspect (strict >)
-    assert(Bench.suspects(Map("q" -> 2.0), Seq("q" -> 6.0)).isEmpty)
-    assert(Bench.suspects(Map("q" -> 2.0), Seq("q" -> 6.1)) == Seq("q"))
-  }
-
-  test("control normalization: drift factor scales the 3x rule (VERDICT r14 item 6)") {
-    // ledger written on a quiet machine (control 0.4 s); this session's
-    // control reads 0.8 s -> everything ambient is ~2x slower, so the
-    // suspect threshold stretches to 6x
-    val hist = Map(Bench.ControlKey -> 0.4, "q" -> 10.0)
-    assert(Bench.driftFactor(hist, Some(0.8)) == 2.0)
-    assert(Bench.suspects(hist, Seq("q" -> 35.0), 2.0).isEmpty)  // 3.5x raw, 1.75x normalized
-    assert(Bench.suspects(hist, Seq("q" -> 61.0), 2.0) == Seq("q")) // >6x
-    // faster machine: clamped at 1.0 — the raw rule stays in force
-    assert(Bench.driftFactor(hist, Some(0.2)) == 1.0)
-    // pathological control can't disable the tripwire (cap 10)
-    assert(Bench.driftFactor(hist, Some(400.0)) == 10.0)
-    // missing control on either side -> no normalization
-    assert(Bench.driftFactor(Map("q" -> 1.0), Some(0.8)) == 1.0)
-    assert(Bench.driftFactor(hist, None) == 1.0)
-    // the control row itself never flags, whatever it reads
-    assert(Bench.suspects(hist, Seq(Bench.ControlKey -> 99.0)).isEmpty)
-  }
-
-  test("tagged columns (@xxh/@nonclone) ride the same ledger and recheck path") {
-    val p = java.nio.file.Files.createTempDirectory("graft_bench")
-      .resolve("hist.json").toString
-    // one ledger key holds plain, tagged, and control rows side by side
-    Bench.writeHistory("sf1", Seq("q119" -> 10.0, "q119@nonclone" -> 6.1,
-      "q119@xxh" -> 8.0, Bench.ControlKey -> 0.4), p)
-    val hist = Bench.readHistory("sf1", p)
-    assert(hist("q119@nonclone") == 6.1 && hist(Bench.ControlKey) == 0.4)
-    // the r14 ambiguity, adjudicated in-band: nonclone's cold post-pass
-    // single reads 86.8 s vs its 6.1 s ledger -> stamped suspect...
-    val medd = Seq("q119" -> 11.0, "q119@nonclone" -> 86.8, "q119@xxh" -> 9.0)
-    assert(Bench.suspects(hist, medd) == Seq("q119@nonclone"))
-    // ...and the solo recheck (warm, quiet) reads 9.9 s -> inflation
-    // confirmed, no regression
-    val reg = Seq(("q119", 0), ("q119@nonclone", 1), ("q119@xxh", 2))
-    val rc = Bench.recheckSuspects(reg, Seq("q119@nonclone"),
-      (n: String, _: Int) => Some(9.9))
-    assert(rc == Seq("q119@nonclone" -> 9.9))
-    assert(Bench.suspects(hist, rc).isEmpty)
-  }
-
-  test("serial_recheck: suspects re-run solo; still->3x adjudicates regression") {
-    // registry: query name -> the "query" (here just its solo seconds)
-    val names = Seq("qa" -> 2.0, "qb" -> 50.0, "qc" -> 1.0)
-    val ran = collection.mutable.ListBuffer.empty[String]
-    def runOnce(n: String, solo: Double): Option[Double] = {
-      ran += n
-      if (n == "qc") None else Some(solo) // qc's solo run throws -> no sample
-    }
-    // only flagged suspects re-run, in suspect order; missing names skipped
-    val rc = Bench.recheckSuspects(names, Seq("qa", "qb", "qc", "zz"), runOnce)
-    assert(ran.toList == List("qa", "qb", "qc"))
-    assert(rc == Seq("qa" -> 2.0, "qb" -> 50.0))
-    // the adjudication: history says qa=1.5 (solo 2.0 -> clean, inflation
-    // confirmed), qb=10 (solo 50 -> STILL >3x, a real regression)
-    val still = Bench.suspects(Map("qa" -> 1.5, "qb" -> 10.0), rc)
-    assert(still == Seq("qb"))
-    // no suspects -> no re-runs at all
-    assert(Bench.recheckSuspects(names, Nil, runOnce) == Nil)
-  }
+/** Bench's stdout contract and its per-run work recorder. */
+class BenchSpec extends SparkSpec {
 
   test("final stdout line stays under the driver's tail window at worst case (VERDICT r15 item 1)") {
     // worst case across every variable-length part: long query names
     // (longest real name + @nonclone suffix class), 5-digit seconds,
-    // hundreds of failures/suspects on BOTH scales, nonclone present.
+    // 12-digit counters, hundreds of failures, nonclone present.
     val name = "q199_token_entropy_window@nonclone" // 34 chars, > any real name
     def kv(n: Int) = (1 to n).map(i => f"$name$i%03d" -> 99999.999)
     def ns(n: Int) = (1 to n).map(i => f"$name$i%03d")
+    val big = 999999999999L
+    val workWorst = Bench.Work(big, big, big, big, big)
     val ctlWorst =
       """"control":{"median":99.999,"min":99.999,"max":999.999},""" +
         """"value_per_control":99999.9"""
-    val diffWorst =
-      """"ledger_diff":{"n_common":999,"sum_now":99999.9,""" +
-        """"sum_ledger":99999.9,"ratio":99.999,"ratio_ctl_norm":99.999}"""
-    val sf1Worst = Bench.sf1Compact(99999.999, 999, 999, kv(50),
-      999, ns(50), kv(50), ns(50), Some(kv(10)))
+    val sf1Worst = Bench.sf1Compact(99999.999, 999, 999, kv(50), workWorst,
+      Some(kv(10)))
     val line = Bench.finalLine(99999.999, degraded = true, 999, 999,
-      ns(50), 3, kv(50), 999, ns(50), kv(50), ns(50),
-      ctlWorst, diffWorst, Some(sf1Worst), "/root/testdata/sf0.1")
+      ns(50), 3, kv(50), workWorst, ctlWorst, Some(sf1Worst),
+      "testdata/sf0.1")
     assert(line.length < 1900, s"final line ${line.length} chars:\n$line")
-    // the line must still carry BOTH scales' recheck blocks (the r15
-    // artifact dropped the sf0.1 one) and the headline query map
-    assert(line.indexOf("\"serial_recheck\":") >= 0)
-    assert(line.indexOf("\"serial_recheck\":", line.indexOf("\"sf1\":")) > 0)
-    assert(line.contains("\"recheck_regression\":"))
-    assert(line.contains("\"queries\":{"))
-    assert(line.contains("\"ledger_diff\":"))
-    // and it must be parseable JSON with at least the top entries of every
-    // capped list surviving (char-budgeted, not count-capped)
+    // it must be parseable JSON with at least the top entries of every
+    // capped list surviving (char-budgeted, not count-capped) and both
+    // scales' work totals
     val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(tree.get("value").asDouble() == 99999.999)
     assert(tree.get("n_failed").asInt() == 999)
-    assert(tree.get("sf1").get("serial_recheck").size() >= 2)
-    assert(tree.get("serial_recheck").size() >= 2)
-    assert(tree.get("n_inflation_suspect").asInt() == 999) // full count always ships
-    // with realistic name lengths the budgets carry ~3 entries per list
+    assert(tree.get("queries").size() >= 2)
+    assert(tree.get("failed").size() >= 1)
+    assert(tree.get("work").get("shuffle_bytes").asLong() == big)
+    assert(tree.get("sf1").get("work").get("jobs").asLong() == big)
+    assert(tree.get("sf1").get("slowest").size() >= 2)
+    assert(tree.get("sf1").get("nonclone").size() >= 2)
+    // with realistic name lengths the headline budget carries ~3 entries
     val realKv = (1 to 9).map(i => f"q119_dedup_curve@nonclone$i" -> 12.345)
     val realLine = Bench.finalLine(398.8, degraded = false, 209, 0, Nil, 3,
-      realKv.take(4), 18, realKv.map(_._1), realKv, realKv.map(_._1),
-      ctlWorst, diffWorst, None, "/root/testdata/sf0.1")
+      realKv.take(4), Bench.Work(4000, 90000, 800000, 123456789L, 0),
+      ctlWorst, None, "testdata/sf0.1")
     val rt = new com.fasterxml.jackson.databind.ObjectMapper().readTree(realLine)
-    assert(rt.get("serial_recheck").size() >= 3)
     assert(rt.get("queries").size() >= 3)
+    assert(rt.get("work").get("jobs").asLong() == 4000L)
   }
 
-  test("ledger_diff: common-query ratio, control-normalized, null when no overlap") {
-    val hist = Map("qa" -> 2.0, "qb" -> 4.0, Bench.ControlKey -> 0.5)
-    val med = Seq("qa" -> 3.0, "qb" -> 6.0, "qc" -> 99.0, Bench.ControlKey -> 1.0)
-    // common = qa,qb: now 9.0 vs ledger 6.0 -> ratio 1.5; control drifted
-    // 2x -> normalized 0.75 (the machine, not the code)
-    val j = Bench.ledgerDiff(hist, med, Some(2.0))
-    val t = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree("{" + j + "}").get("ledger_diff")
-    assert(t.get("n_common").asInt() == 2)
-    assert(t.get("ratio").asDouble() == 1.5)
-    assert(t.get("ratio_ctl_norm").asDouble() == 0.75)
-    assert(Bench.ledgerDiff(Map.empty, med, None) == """"ledger_diff":null""")
-    assert(Bench.ledgerDiff(hist, Seq("qz" -> 1.0), None) == """"ledger_diff":null""")
-  }
-
-  test("self-tuning solo lane (VERDICT r18 item 7): a query suspect in " +
-    "BOTH of the two most recent runs is promoted; one-off suspects " +
-    "and tagged measurement variants are not; history round-trips " +
-    "capped") {
-    // promotion logic: two consecutive rounds required
-    assert(Bench.dynamicLane(Seq.empty) == Set.empty[String])
-    assert(Bench.dynamicLane(Seq(Seq("qa"))) == Set.empty[String])
-    assert(Bench.dynamicLane(Seq(Seq("qa", "qb"), Seq("qb", "qc"))) ==
-      Set("qb"))
-    // only the two MOST RECENT runs count — a stale chronic that went
-    // quiet is not re-promoted
-    assert(Bench.dynamicLane(
-      Seq(Seq("qa"), Seq("qa", "qb"), Seq("qb"))) == Set("qb"))
-    // tagged variants never promote (they are conf-flipped re-measures,
-    // not sweep members the lane could reorder)
-    assert(Bench.dynamicLane(
-      Seq(Seq("qa@xxh", "qb"), Seq("qa@xxh", "qb"))) == Set("qb"))
-    // persistence: append/read round-trip, capped at SuspectRunsKept
-    val tmp = java.nio.file.Files.createTempDirectory("graft_susp")
-      .resolve("h.json").toString
-    (1 to Bench.SuspectRunsKept + 3).foreach(i =>
-      Bench.appendSuspectRun("sf1", Seq(s"q$i"), tmp))
-    val runs = Bench.readSuspectRuns("sf1", tmp)
-    assert(runs.size == Bench.SuspectRunsKept, s"cap broken: ${runs.size}")
-    assert(runs.last == Seq(s"q${Bench.SuspectRunsKept + 3}"))
-    // keys are independent; a missing key reads empty
-    assert(Bench.readSuspectRuns("sf0.1", tmp).isEmpty)
-    Bench.appendSuspectRun("sf1", Seq("qx", "qy"), tmp)
-    Bench.appendSuspectRun("sf1", Seq("qy", "qz"), tmp)
-    assert(Bench.dynamicLane(Bench.readSuspectRuns("sf1", tmp)) == Set("qy"))
+  test("recorder: an exchange records jobs and shuffle bytes, a narrow " +
+    "query none, and back-to-back records do not bleed into each other") {
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val wide = spark.range(0, 20000, 1, 4).selectExpr("id % 97 as k").groupBy("k").count()
+    val narrow = spark.range(0, 1000, 1, 2).selectExpr("id * 2 as x")
+    // a slow listener on the same bus queue holds the recorder's events
+    // back the way a busy bus does, so a record that does not drain the
+    // bus misses its own tail and counts the previous run's
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(20)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val rec = new Bench.Recorder(spark.sparkContext)
+    try {
+      val runs = (1 to 5).map { _ =>
+        val (_, w, stages) = rec.record(noop(wide))
+        val (_, n, _) = rec.record(noop(narrow))
+        assert(w.jobs >= 1 && w.shuffleBytes > 0 && stages.nonEmpty, w)
+        // exactly its own one job of two tasks: the wide run's tail is
+        // not counted here, and none of this run's events are missed
+        assert(n == Bench.Work(1, 2, n.cpuMs, 0, 0), n)
+        w
+      }
+      assert(runs.map(w => (w.jobs, w.tasks, w.shuffleBytes)).distinct.size == 1,
+        runs.mkString("\n"))
+    } finally {
+      rec.close()
+      spark.sparkContext.removeSparkListener(slow)
+    }
   }
 }

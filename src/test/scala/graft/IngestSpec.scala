@@ -82,26 +82,6 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 2 * n1)
   }
 
-  test("compact collapses many small appends into targetFiles, content intact") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/store"
-    // 10 appends of 2 rows → ≥10 parquet part files
-    (0 until 10).foreach { i =>
-      Seq((i.toLong * 2, s"doc ${i}a"), (i.toLong * 2 + 1, s"doc ${i}b"))
-        .toDF("doc_id", "text")
-        .write.mode("append").parquet(path)
-    }
-    def partFiles() = new java.io.File(path).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    val before = spark.read.parquet(path).orderBy("doc_id").collect()
-    assert(partFiles() >= 10)
-    Ingest.compact(spark, path, targetFiles = 2)
-    assert(partFiles() == 2)
-    val after = spark.read.parquet(path).orderBy("doc_id").collect()
-    assert(after.toSeq == before.toSeq)
-  }
-
   test("observedIngest reports A8 counters inline with the ingest pass") {
     val obs = new org.apache.spark.sql.Observation("ingest_test")
     val docs = Seq(

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every main builds its session through [[GraftSession]], so conf such
-  * as the shuffle width and `nanosAsLong` cannot drift between mains.
-  * A source scan: no SparkSession needed.
+  * as the shuffle width and `nanosAsLong` cannot drift between mains, and
+  * the one listener in src/main is Bench's recorder. A source scan: no
+  * SparkSession needed.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
@@ -28,5 +29,9 @@ class SessionFactorySpec extends AnyFunSuite {
 
   test("src/main reads SPARK_GRAFT_CPUS in exactly one place, the factory") {
     assert(hits("SPARK_GRAFT_CPUS") == Seq("GraftSession.scala" -> 1))
+  }
+
+  test("src/main has exactly one SparkListener, Bench's recorder") {
+    assert(hits("extends SparkListener") == Seq("Bench.scala" -> 1))
   }
 }

@@ -18,8 +18,7 @@ class VerifySpec extends AnyFunSuite {
   Seq[(String, () => Unit)](
     "Verify" -> (() => Verify.main(Array("/nonexistent-sf", out.toString, names))),
     "Bench" -> (() => Bench.main(Array(names))),
-    "Explain" -> (() => Explain.main("/nonexistent-sf" +: names.split(","))),
-    "StageProfile" -> (() => StageProfile.main(Array("/nonexistent-sf", names)))
+    "Explain" -> (() => Explain.main("/nonexistent-sf" +: names.split(",")))
   ).foreach { case (main, run) =>
     test(s"an unknown name in $main's filter fails before a session is built") {
       val before = SparkSession.getDefaultSession
