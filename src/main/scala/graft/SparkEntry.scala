@@ -839,7 +839,7 @@ object SparkEntry {
 
   /** The one build-once protocol behind every persisted fixture: the
     * artifact `tag` of `dir`'s `table` lives at
-    * `graft-built/graft-<tag>-<key>` under the JVM temp dir (key:
+    * `<BuiltHome>/graft-<tag>-<key>` under the JVM temp dir (key:
     * [[dirCacheKey]]) and counts as built iff that root exists. A
     * missing root is built by `build` into a writer-unique hidden
     * sibling staging dir and published with ONE atomic rename, so a
@@ -855,7 +855,7 @@ object SparkEntry {
                            tag: String)(build: String => Unit): String =
     builtLock.synchronized {
       import java.nio.file.{Files, Paths, StandardCopyOption}
-      val root = Paths.get(sys.props("java.io.tmpdir"), "graft-built",
+      val root = Paths.get(sys.props("java.io.tmpdir"), BuiltHome,
         s"graft-$tag-${dirCacheKey(s, dir, table)}")
       if (!Files.exists(root)) {
         Files.createDirectories(root.getParent)
@@ -875,6 +875,12 @@ object SparkEntry {
     }
 
   private val builtLock = new Object
+
+  /** The directory under the JVM temp dir that holds every published
+    * root. Its name changes whenever the on-disk form of an artifact
+    * changes, so no root written in an older form is ever read.
+    */
+  private[graft] val BuiltHome = "graft-built-v2"
 
   /** Named counts/bounds a build records beside its artifact when the
     * artifact itself does not carry them (read back by [[factsOf]]).
@@ -2037,8 +2043,7 @@ object SparkEntry {
     val pre = Versioned.readAsOf(s, root, 6L)
       .agg(count(lit(1)).as("pre_rows"),
         sum(col("n_chars")).as("pre_chars"))
-    val minId = rd(s, dir, "documents")
-      .agg(min(col("doc_id"))).head().getLong(0)
+    val minId = factsOf(root)("min_id")
     val (narrow, nRead, _) =
       Versioned.readWhere(s, root, "doc_id", minId, minId)
     val nar = narrow.agg(count(lit(1)).as("narrow_rows"))
@@ -2052,7 +2057,8 @@ object SparkEntry {
   /** Build-once seam for q230: six single-file stat commits
     * (doc_id % 6 slices — the per-epoch tiny files a streaming sink
     * accretes) then one compact(numFiles = 2, range-arranged on
-    * doc_id). The file counts are the v6 → v7 manifest diff.
+    * doc_id). The file counts are the v6 → v7 manifest diff; the
+    * point read's probe is the `min_id` fact.
     */
   private def compactedVersionedFor(s: SparkSession, dir: String): String =
     built(s, dir, "documents", "vcompact") { p =>
@@ -2062,6 +2068,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 6 === i).repartition(1), "doc_id")
       }
       Versioned.compact(s, p, numFiles = 2, statCol = Some("doc_id"))
+      writeFacts(p, "min_id" -> docs.agg(min(col("doc_id"))).head().getLong(0))
     }
 
   /** The doc_ids q231 deletes: a fixed, scale-independent panel, all
@@ -2141,7 +2148,7 @@ object SparkEntry {
     * .Versioned.appendWithValueStats]] + [[Versioned.readWhereEq]]) —
     * Hive/Iceberg-style partition pruning WITHOUT the physical
     * partition layout: four commits bucket the 20 sources, each file's
-    * manifest entry records its distinct source SET, and a read of one
+    * manifest entry records its `#source:` value set, and a read of one
     * source opens 1 of the 4 files — decided entirely from the
     * manifest. Emits the skip counts plus the source's row/char mass
     * (pruning must lose nothing).
@@ -2436,8 +2443,8 @@ object SparkEntry {
     }
 
   /** q241: METADATA-ONLY count(*)
-    * ([[graft.sources.Versioned.appendCounted]] + [[graft.sources
-    * .Versioned.countAsOf]]) — per-file row counts ride the manifest,
+    * ([[graft.sources.Versioned.appendWithStats]] + [[graft.sources
+    * .Versioned.countAsOf]]) — per-file `^N` row counts ride the manifest,
     * so each version's count is answered without opening ONE data
     * file (zero Spark jobs — JobAuditSpec pins the ceiling): the
     * Delta/Iceberg discipline for the most common query on a 100 TB
@@ -2453,15 +2460,15 @@ object SparkEntry {
   }
 
   /** Build-once seam for q241: v1 = even doc_ids, v2 = odd — both
-    * counted commits carrying doc_id zone stats.
+    * stats commits (doc_id zone stats plus per-file row counts).
     */
   private def countedVersionedFor(s: SparkSession, dir: String): String =
     built(s, dir, "documents", "vcount") { p =>
       val docs = rd(s, dir, "documents")
-      Versioned.appendCounted(s, p,
-        docs.filter(col("doc_id") % 2 === 0).repartition(2), Seq("doc_id"))
-      Versioned.appendCounted(s, p,
-        docs.filter(col("doc_id") % 2 =!= 0).repartition(2), Seq("doc_id"))
+      Versioned.appendWithStats(s, p,
+        docs.filter(col("doc_id") % 2 === 0).repartition(2), "doc_id")
+      Versioned.appendWithStats(s, p,
+        docs.filter(col("doc_id") % 2 =!= 0).repartition(2), "doc_id")
     }
 
   /** q242: BLOOM-pruned point lookup

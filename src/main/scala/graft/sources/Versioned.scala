@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions}
 
 /** A commit lost an optimistic-concurrency race: another writer
   * published the same version number first. The loser's DATA files are
@@ -42,8 +42,8 @@ final class ConcurrentCommitException(msg: String)
   *
   * Layout: `root/data/batch-<v>/part-*.parquet` (immutable),
   * `root/_manifests/v<00000v>.delta` (lines `+\t<entry>` /
-  * `-\t<relpath>`; an entry is `relpath` or `relpath\tmin\tmax` with
-  * zone stats) and `root/_manifests/v<00000v>.checkpoint` (the full
+  * `-\t<relpath>`; an entry is `relpath` plus the file's named stats,
+  * see [[pathOf]]) and `root/_manifests/v<00000v>.checkpoint` (the full
   * resolved entry list — a read CACHE, never the commit point: a
   * missing checkpoint only means a longer delta replay). Manifests
   * are staged to a hidden writer-unique `.tmp` and PUBLISHED with
@@ -132,15 +132,14 @@ object Versioned {
     finally in.close()
   }
 
-  /** The relpath of a manifest entry — entries are `relpath` (no
-    * stats), `relpath\tmin\tmax` (single numeric zone stats),
-    * `relpath\t#v1|v2` (categorical value set),
-    * `relpath\t@col:min:max\t@col2:min:max…` (NAMED multi-column zone
-    * stats — what [[compact]]'s z-order rewrite records),
-    * `…\t^N` (per-file row count — [[appendCounted]]), or
-    * `…\t&col:m:k:base64` (per-file bloom filter —
-    * [[appendWithBloom]]); every path consumer MUST strip the stats
-    * columns.
+  /** The relpath of a manifest entry. An entry is `relpath` (a plain
+    * append records no stats) followed by tab-separated per-file stats
+    * fields, each naming its column: `@col:min:max` (integer range),
+    * `#col:v1|v2` (distinct value set, `#col:*` past [[MaxDistinct]]),
+    * `&col:m:k:base64` (bloom filter, `:*` when the bits live in a
+    * sidecar) and `^N` (row count — every stats-bearing batch records
+    * it, see [[writeBatch]]). A column with no field is never pruned on.
+    * Every path consumer MUST strip the stats fields.
     */
   private def pathOf(entry: String): String = entry.split('\t').head
 
@@ -153,47 +152,33 @@ object Versioned {
   private def absPath(root: String, rel: String): String =
     if (rel.startsWith("/") || rel.contains("://")) rel else s"$root/$rel"
 
-  /** The named per-column [min, max] stats of an entry (empty for the
-    * legacy/categorical/stat-less forms).
-    */
-  private def namedStatsOf(entry: String): Map[String, (Long, Long)] =
-    entry.split('\t').drop(1).collect {
-      case s if s.startsWith("@") && s.count(_ == ':') == 2 =>
-        val parts = s.substring(1).split(':')
-        parts(0) -> ((parts(1).toLong, parts(2).toLong))
-    }.toMap
+  /** The body of the first stats field of `entry` starting with `prefix`. */
+  private def fieldOf(entry: String, prefix: String): Option[String] =
+    entry.split('\t').iterator.drop(1).collectFirst {
+      case f if f.startsWith(prefix) => f.substring(prefix.length)
+    }
 
-  /** The categorical value set an entry records for `catCol`:
-    * `None` = no usable stats for this column (conservatively read);
-    * `Some(None)` = recorded but overflowed (`*` — read-always);
-    * `Some(Some(set))` = prune on membership. The NAMED form
-    * `#col:v1|v2` (multi-column — [[appendWithValueStatsMulti]]) wins
-    * when present; the legacy anonymous `#v1|v2` form (single-column
-    * [[appendWithValueStats]]) applies under the caller-vouches
-    * contract, exactly like the anonymous numeric stats. `:` is
-    * reserved in values so the two forms can never be confused.
+  /** The `@col:min:max` range an entry records for `col`. None = no
+    * range recorded for that column: the file cannot be pruned on it.
+    */
+  private def statRangeOf(entry: String, col: String): Option[(Long, Long)] =
+    fieldOf(entry, s"@$col:").map { s =>
+      val Array(mn, mx) = s.split(':')
+      (mn.toLong, mx.toLong)
+    }
+
+  /** The `#col:` value set an entry records for `col`: `None` = no set
+    * recorded (read the file); `Some(None)` = overflowed (`*` —
+    * read-always); `Some(Some(set))` = prune on membership.
     */
   private def valueSetOf(entry: String,
-                         catCol: String): Option[Option[Set[String]]] = {
-    val fields = entry.split('\t').drop(1).filter(_.startsWith("#"))
-    fields.collectFirst {
-      case f if f.startsWith(s"#$catCol:") =>
-        val s = f.substring(catCol.length + 2)
-        if (s == "*") None else Some(s.split('|').toSet)
-    }.orElse(fields.collectFirst {
-      case f if !f.drop(1).contains(':') =>
-        val s = f.substring(1)
-        if (s == "*") None else Some(s.split('|').toSet)
-    })
-  }
+                         col: String): Option[Option[Set[String]]] =
+    fieldOf(entry, s"#$col:").map(s =>
+      if (s == "*") None else Some(s.split('|').toSet))
 
-  /** The per-file ROW COUNT an entry records (`^N` field), when the
-    * committing writer recorded one ([[appendCounted]]).
-    */
+  /** The per-file ROW COUNT an entry records (`^N`). */
   private def rowCountOf(entry: String): Option[Long] =
-    entry.split('\t').drop(1).collectFirst {
-      case f if f.startsWith("^") => f.drop(1).toLong
-    }
+    fieldOf(entry, "^").map(_.toLong)
 
   /** The per-file BLOOM FILTER an entry records for `col`
     * (`&col:m:k:base64` or `&col:m:k:*` — [[appendWithBloom]]): m
@@ -207,16 +192,15 @@ object Versioned {
     */
   private def bloomOf(entry: String, col: String)
       : Option[(Int, Int, Option[java.util.BitSet])] =
-    entry.split('\t').drop(1).collectFirst {
-      case f if f.startsWith(s"&$col:") =>
-        // limit -1: an all-null column's bloom is the EMPTY base64
-        // string, and the default split would drop the trailing field
-        val parts = f.substring(col.length + 2).split(":", -1)
-        val bits =
-          if (parts(2) == "*") None
-          else Some(java.util.BitSet.valueOf(
-            java.util.Base64.getDecoder.decode(parts(2))))
-        (parts(0).toInt, parts(1).toInt, bits)
+    fieldOf(entry, s"&$col:").map { f =>
+      // limit -1: an all-null column's bloom is the EMPTY base64
+      // string, and the default split would drop the trailing field
+      val parts = f.split(":", -1)
+      val bits =
+        if (parts(2) == "*") None
+        else Some(java.util.BitSet.valueOf(
+          java.util.Base64.getDecoder.decode(parts(2))))
+      (parts(0).toInt, parts(1).toInt, bits)
     }
 
   /** Load a sidecar bloom (`<data file>.bloom`). Absent sidecar =
@@ -446,11 +430,8 @@ object Versioned {
       val parent = resolveState(spark, root, v - 1)
       if (parent.constraints.nonEmpty) {
         import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-        val files = added.map(e => absPath(root, pathOf(e)))
-        val df = readSchema(spark, schema.orElse(parent.schema)) match {
-          case Some(st) => spark.read.schema(st).parquet(files: _*)
-          case None     => spark.read.parquet(files: _*)
-        }
+        val df = readFiles(spark, schema.orElse(parent.schema),
+          added.map(e => absPath(root, pathOf(e))))
         parent.constraints.toSeq.sortBy(_._1).foreach { case (name, pred) =>
           val bad = df.filter(not(coalesce(expr(pred), lit(false)))).count()
           if (bad > 0) throw new IllegalArgumentException(
@@ -622,23 +603,51 @@ object Versioned {
     }
   }
 
-  /** The schema a snapshot read applies: recorded DDL when present
-    * (O(1) from the manifest — old files' missing columns null-fill
-    * under it), else None (pre-schema tables read file-inferred).
+  /** Read parquet `files` under the recorded schema `sch` when there
+    * is one (O(1) from the manifest — old files' missing columns
+    * null-fill under it, and no footer merge), else file-inferred
+    * (pre-schema tables).
     */
-  private def readSchema(spark: SparkSession,
-                         sch: Option[String]): Option[org.apache.spark.sql.types.StructType] =
-    sch.map(org.apache.spark.sql.types.StructType.fromDDL)
+  private def readFiles(spark: SparkSession, sch: Option[String],
+                        files: Seq[String]): DataFrame = sch match {
+    case Some(ddl) =>
+      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        .parquet(files: _*)
+    case None => spark.read.parquet(files: _*)
+  }
 
-  /** Write `df` into `data/<name>` and return its manifest entries
-    * (with `statCol` zone stats when given — min/max per file,
-    * computed in ONE pass over the just-written batch grouped by
-    * `input_file_name()`).
+  /** A file recording more distinct values of a `#col` column than
+    * this records `#col:*` (read-always): a high-cardinality column
+    * belongs in range stats or a bloom, not a value list.
     */
-  private def writeBatchDir(spark: SparkSession, root: String,
-                            name: String, df: DataFrame,
-                            statCol: Option[String]): Seq[String] = {
+  private val MaxDistinct = 16
+
+  /** Bloom sizing: bits per actual row (floored at 8192 bits per
+    * file) and salted probes per value — at these values the per-file
+    * false-positive rate stays near 1e-3 regardless of batch size.
+    */
+  private val BloomBitsPerRow = 16L
+  private val BloomHashes = 6
+
+  /** The one batch writer. Refuses to reuse `data/<name>` when a
+    * committed version references it, writes `df` there, and returns
+    * the batch's manifest entries. Without stats columns the entries
+    * are the listed file names (zero extra jobs). Otherwise ONE
+    * aggregate over the just-written batch, grouped by
+    * `input_file_name()`, records per file the row count `^N`,
+    * `@c:min:max` for each of `ranges` (integer columns; omitted for a
+    * file where `c` is all null) and `#c:set` for each of `values`
+    * (low-cardinality columns, `#c:*` past [[MaxDistinct]]). Column
+    * names and recorded values must not contain tab, colon, pipe or
+    * newline — the field separators.
+    */
+  private def writeBatch(spark: SparkSession, root: String, name: String,
+                         df: DataFrame, ranges: Seq[String] = Nil,
+                         values: Seq[String] = Nil): Seq[String] = {
     import org.apache.spark.sql.functions._
+    def reserved(s: String) = s.exists(ch => "\t:|\n".contains(ch))
+    (ranges ++ values).foreach(c => require(!reserved(c),
+      s"stats column name '$c' carries a reserved character"))
     val f = fs(spark, root)
     val batch = new Path(root, s"data/$name")
     if (f.exists(batch)) {
@@ -654,63 +663,34 @@ object Versioned {
       f.delete(batch, true)
     }
     df.write.mode("overwrite").parquet(batch.toString)
-    statCol match {
-      case None =>
-        f.listStatus(batch)
-          .filter(s => s.getPath.getName.endsWith(".parquet"))
-          .map(s => s"data/$name/${s.getPath.getName}").sorted.toSeq
-      case Some(c) =>
-        spark.read.parquet(batch.toString)
-          .groupBy(input_file_name().as("__f"))
-          .agg(min(col(c).cast("long")).as("__mn"),
-            max(col(c).cast("long")).as("__mx"))
-          .collect()
-          .map { r =>
-            // URI scheme spellings vary (file:/ vs file:///): key on
-            // the basename — batch files sit flat under data/<name>/
-            val base = r.getString(0).split('/').last
-            s"data/$name/$base\t${r.getLong(1)}\t${r.getLong(2)}"
-          }.sorted.toSeq
-    }
-  }
-
-  /** [[writeBatchDir]] recording NAMED zone stats for SEVERAL integer
-    * columns per file (`relpath\t@col:min:max…`) — what a multi-column
-    * clustering rewrite needs: a z-ordered file is selective on every
-    * interleaved column, so the manifest must carry every column's
-    * range for [[readWhereBox]] to prune on any of them. One pass over
-    * the just-written batch, all columns' min/max in a single
-    * aggregate. Requires `statCols` non-empty and tab/colon-free.
-    */
-  private def writeBatchDirNamed(spark: SparkSession, root: String,
-                                 name: String, df: DataFrame,
-                                 statCols: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions._
-    require(statCols.nonEmpty, "writeBatchDirNamed needs >= 1 stat column")
-    statCols.foreach(c => require(!c.exists(ch => ch == '\t' || ch == ':'),
-      s"stat column name '$c' carries a reserved character"))
-    val f = fs(spark, root)
-    val batch = new Path(root, s"data/$name")
-    if (f.exists(batch)) {
-      require(!dirEverCommitted(spark, root, name),
-        s"refusing to overwrite data/$name at $root: a committed " +
-        "version references it")
-      f.delete(batch, true)
-    }
-    df.write.mode("overwrite").parquet(batch.toString)
-    val aggs = statCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"__mn_$c"),
-      max(col(c).cast("long")).as(s"__mx_$c")))
+    if (ranges.isEmpty && values.isEmpty)
+      return f.listStatus(batch)
+        .filter(s => s.getPath.getName.endsWith(".parquet"))
+        .map(s => s"data/$name/${s.getPath.getName}").sorted.toSeq
+    val aggs = count(lit(1)) +: (ranges.flatMap(c => Seq(
+      min(col(c).cast("long")), max(col(c).cast("long")))) ++
+      values.map(c => sort_array(collect_set(col(c).cast("string")))))
     spark.read.parquet(batch.toString)
-      .groupBy(input_file_name().as("__f"))
+      .groupBy(input_file_name())
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { r =>
-        val base = r.getString(0).split('/').last
-        val stats = statCols.zipWithIndex.map { case (c, i) =>
-          s"@$c:${r.getLong(1 + 2 * i)}:${r.getLong(2 + 2 * i)}"
+        val rangeFields = ranges.indices.collect {
+          case i if !r.isNullAt(2 + 2 * i) =>
+            s"@${ranges(i)}:${r.getLong(2 + 2 * i)}:${r.getLong(3 + 2 * i)}"
         }
-        s"data/$name/$base\t${stats.mkString("\t")}"
+        val valueFields = values.indices.map { i =>
+          val vs = r.getSeq[String](2 + 2 * ranges.size + i)
+          vs.foreach(x => require(!reserved(x),
+            s"$root: ${values(i)} value '$x' carries a reserved character " +
+            "(tab/colon/pipe/newline)"))
+          s"#${values(i)}:${if (vs.size > MaxDistinct) "*" else vs.mkString("|")}"
+        }
+        // URI scheme spellings vary (file:/ vs file:///): key on the
+        // basename — batch files sit flat under data/<name>/
+        val path = s"data/$name/${r.getString(0).split('/').last}"
+        ((path +: rangeFields) ++ valueFields :+ s"^${r.getLong(1)}")
+          .mkString("\t")
       }.sorted.toSeq
   }
 
@@ -796,13 +776,26 @@ object Versioned {
     * scan ([[graft.streaming.StreamingVersionedSink]]).
     */
   def appendNamed(spark: SparkSession, root: String, df: DataFrame,
-                  dirName: String): Long = {
+                  dirName: String): Long =
+    appendBatch(spark, root, df, dirName)
+
+  /** Every single-writer append: `df` lands in `data/<dirName>`
+    * (default `batch-<v>`) through [[writeBatch]] with the given stats
+    * columns, `finish` may add fields to the entries, and ONE delta
+    * commits them as the next version, which is returned.
+    */
+  private def appendBatch(spark: SparkSession, root: String, df: DataFrame,
+                          dirName: String = null,
+                          ranges: Seq[String] = Nil,
+                          values: Seq[String] = Nil,
+                          finish: Seq[String] => Seq[String] = identity)
+      : Long = {
     require(!df.isEmpty, s"refusing to commit an empty version to $root")
     val v = latestVersion(spark, root) + 1
     val name = Option(dirName).getOrElse(s"batch-$v")
     require(!name.contains('/') && !name.contains('\t'),
       s"bad batch dir name: $name")
-    val added = writeBatchDir(spark, root, name, df, None)
+    val added = finish(writeBatch(spark, root, name, df, ranges, values))
     commitDelta(spark, root, v, added, Seq.empty,
       schema = nextSchema(spark, root, v, df), op = "append")
     v
@@ -826,7 +819,7 @@ object Versioned {
                        maxRetries: Int = 20): Long = {
     require(!df.isEmpty, s"refusing to commit an empty version to $root")
     val name = "txn-" + java.util.UUID.randomUUID().toString.take(12)
-    val added = writeBatchDir(spark, root, name, df, None)
+    val added = writeBatch(spark, root, name, df)
     var attempt = 0
     while (true) {
       val v = latestVersion(spark, root) + 1
@@ -998,31 +991,32 @@ object Versioned {
     */
   def readAsOf(spark: SparkSession, root: String,
                version: Long = -1L): DataFrame = {
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    val st0 = resolveState(spark, root, v)
-    val (entries, sch) = (st0.entries, st0.schema)
-    val files = entries.map(e => absPath(root, pathOf(e)))
-    require(files.nonEmpty,
+    val v = versionOr(spark, root, version)
+    val st = resolveState(spark, root, v)
+    require(st.entries.nonEmpty,
       s"version $v at $root is removal-only down to zero files — " +
       "an empty frame has no schema; read an earlier version")
-    readSchema(spark, sch) match {
-      // the manifest-recorded schema AS OF v: evolved-away gaps
-      // null-fill, later columns don't exist yet — and no footer merge
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
+    // the manifest-recorded schema AS OF v: evolved-away gaps
+    // null-fill, later columns don't exist yet
+    readFiles(spark, st.schema, st.entries.map(e => absPath(root, pathOf(e))))
+  }
+
+  /** `version`, or the latest one when negative; fails on a table with
+    * no commits.
+    */
+  private def versionOr(spark: SparkSession, root: String,
+                        version: Long): Long = {
+    val v = if (version < 0) latestVersion(spark, root) else version
+    require(v > 0, s"no committed versions at $root")
+    v
   }
 
   /** The CHECK constraints in force at `version` (name → SQL
     * predicate).
     */
   def constraintsOf(spark: SparkSession, root: String,
-                    version: Long = -1L): Map[String, String] = {
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    resolveState(spark, root, v).constraints
-  }
+                    version: Long = -1L): Map[String, String] =
+    resolveState(spark, root, versionOr(spark, root, version)).constraints
 
   /** ADD a CHECK constraint — Delta's `ALTER TABLE … ADD CONSTRAINT
     * CHECK (pred)` (public semantics): the EXISTING snapshot is
@@ -1244,90 +1238,38 @@ object Versioned {
     Some((from, latest))
   }
 
-  /** [[append]] that ALSO records per-file min/max zone stats of
-    * `statCol` (an integer column) in the manifest — Iceberg-style
-    * file-level stats (public knowledge). Stats ride the manifest as
-    * `relpath\tmin\tmax` entries (stat-less entries stay readable and
-    * are simply never skipped). A [[readWhere]] on `statCol` then
-    * opens ONLY the overlapping files — the manifest IS the zone map,
-    * so a selective read on a 100 TB table is decided by small
-    * metadata files, before any footer is touched.
+  /** [[append]] that ALSO records per-file `@col:min:max` zone stats
+    * of each of `statCols` (integer columns) and the row count `^N` in
+    * the manifest — Iceberg-style file-level stats (public knowledge),
+    * computed in one pass over the just-written batch. A [[readWhere]]
+    * or [[readWhereBox]] on any recorded column then opens ONLY the
+    * overlapping files — the manifest IS the zone map, so a selective
+    * read on a 100 TB table is decided by small metadata files, before
+    * any footer is touched — and [[countAsOf]] answers `count(*)` from
+    * the manifest alone.
     */
   def appendWithStats(spark: SparkSession, root: String, df: DataFrame,
-                      statCol: String): Long = {
-    require(!df.isEmpty, s"refusing to commit an empty version to $root")
-    val v = latestVersion(spark, root) + 1
-    val added = writeBatchDir(spark, root, s"batch-$v", df, Some(statCol))
-    commitDelta(spark, root, v, added, Seq.empty,
-      schema = nextSchema(spark, root, v, df), op = "append")
-    v
-  }
-
-  /** [[append]] that ALSO records each file's ROW COUNT in the
-    * manifest (`^N` entry field), plus NAMED zone stats for
-    * `statCols` when given — what lets [[countAsOf]] answer
-    * `count(*)` from metadata alone (the Delta/Iceberg trick: file
-    * row counts live in the transaction log, so the most common
-    * query on a 100 TB table never opens a data file). One pass over
-    * the just-written batch computes count and ranges together.
-    */
-  def appendCounted(spark: SparkSession, root: String, df: DataFrame,
-                    statCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions._
-    require(!df.isEmpty, s"refusing to commit an empty version to $root")
-    statCols.foreach(c => require(!c.exists(ch => ch == '\t' || ch == ':'),
-      s"stat column name '$c' carries a reserved character"))
-    val v = latestVersion(spark, root) + 1
-    val name = s"batch-$v"
-    val f = fs(spark, root)
-    val batch = new Path(root, s"data/$name")
-    if (f.exists(batch)) {
-      require(!dirEverCommitted(spark, root, name),
-        s"refusing to overwrite data/$name at $root: a committed " +
-        "version references it")
-      f.delete(batch, true)
-    }
-    df.write.mode("overwrite").parquet(batch.toString)
-    val aggs = count(lit(1)).as("__n") +: statCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"__mn_$c"),
-      max(col(c).cast("long")).as(s"__mx_$c")))
-    val added = spark.read.parquet(batch.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val base = r.getString(0).split('/').last
-        val stats = statCols.zipWithIndex.map { case (c, i) =>
-          s"@$c:${r.getLong(2 + 2 * i)}:${r.getLong(3 + 2 * i)}"
-        }
-        (Seq(s"data/$name/$base") ++ stats ++ Seq(s"^${r.getLong(1)}"))
-          .mkString("\t")
-      }.sorted.toSeq
-    commitDelta(spark, root, v, added, Seq.empty,
-      schema = nextSchema(spark, root, v, df), op = "append")
-    v
+                      statCols: String*): Long = {
+    require(statCols.nonEmpty, "appendWithStats needs >= 1 stats column")
+    appendBatch(spark, root, df, ranges = statCols)
   }
 
   /** METADATA-ONLY `count(*)`: the snapshot's row count summed from
     * the manifest's per-file `^N` fields — zero data files opened,
     * zero Spark jobs, the answer a table format owes its most common
-    * query at any scale. Fails loudly if ANY entry lacks a recorded
-    * count (a rewrite by a non-counting writer — merge, compact —
-    * breaks the proof; re-commit with [[appendCounted]] discipline or
-    * count the slow way), rather than silently mixing metadata and
+    * query at any scale. Every stats-bearing writer records the
+    * counts; a file committed by a plain append carries none, and
+    * then this fails loudly rather than silently mixing metadata and
     * guesswork.
     */
   def countAsOf(spark: SparkSession, root: String,
-                version: Long = -1L): Long = {
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    resolveEntries(spark, root, v).map { e =>
+                version: Long = -1L): Long =
+    resolveEntries(spark, root, versionOr(spark, root, version)).map { e =>
       rowCountOf(e).getOrElse(throw new IllegalArgumentException(
         s"countAsOf($root): file ${pathOf(e)} carries no row count — " +
         "the table has commits from a non-counting writer; a " +
         "metadata-only count would be a guess"))
     }.sum
-  }
 
   /** [[append]] recording a per-file BLOOM FILTER over a
     * HIGH-CARDINALITY integer column (`&col:m:k:base64` manifest
@@ -1335,14 +1277,16 @@ object Versioned {
     * point-lookup complement of zone stats: interleaved id ranges make
     * min/max prune nothing and a value set overflows, but a bloom
     * answers "id definitely not in this file" in k bit probes from
-    * metadata alone. Sizing is per-batch: `bitsPerRow` (default 16)
-    * bits per actual row, floored at 8192 bits — at k=6 that holds the
-    * per-file false-positive rate near 1e-3 REGARDLESS of batch size,
-    * so pruning survives a 100× replica battery instead of saturating.
-    * The build is DISTRIBUTED and one-pass: per file only the DISTINCT
-    * bit positions (bounded by m, never the values) reach the driver.
-    * NULL values set no bits (a null probe is not supported —
-    * [[readWhereBloom]] takes a concrete id).
+    * metadata alone. Sizing is per file: [[BloomBitsPerRow]] bits per
+    * recorded row, so pruning survives a 100× replica battery instead
+    * of saturating. The bit pass runs on top of [[writeBatch]]'s stats
+    * pass (which also records the column's `@col:min:max`: the range
+    * check is free at lookup time, and it makes a bloom table
+    * mergeable/deletable/updatable on its bloom column) and is
+    * DISTRIBUTED: per file only the DISTINCT bit positions (bounded by
+    * m, never the values) reach the driver. NULL values set no bits (a
+    * null probe is not supported — [[readWhereBloom]] takes a concrete
+    * id).
     *
     * Blooms up to `maxInlineBits` ride the manifest entry inline
     * (`:base64` — one manifest read serves every lookup); a bigger
@@ -1350,393 +1294,193 @@ object Versioned {
     * file and the entry records `:*` — a 100 GB file carries a
     * ~200 MB bloom, and inlining that would fatten every manifest
     * replay for every reader forever (Delta keeps bloom indexes in
-    * sidecar files for the same reason). By default the same one-pass
-    * aggregate ALSO records NAMED `@col:min:max` range stats: the
-    * range check is free at lookup time, so [[readWhereBloom]] opens a
-    * sidecar only for files the range could not already clear — and
-    * the named stats satisfy the COW precondition, making a bloom
-    * table mergeable/deletable/updatable on its bloom column.
+    * sidecar files for the same reason).
     */
   def appendWithBloom(spark: SparkSession, root: String, df: DataFrame,
-                      bloomCol: String, bitsPerRow: Int = 16,
-                      hashes: Int = 6,
-                      maxInlineBits: Int = 1 << 20,
-                      withRangeStats: Boolean = true): Long = {
-    import org.apache.spark.sql.functions._
-    require(!df.isEmpty, s"refusing to commit an empty version to $root")
-    require(!bloomCol.exists(ch => ch == '\t' || ch == ':'),
-      s"bloom column name '$bloomCol' carries a reserved character")
-    require(bitsPerRow >= 1 && hashes >= 1, "need bitsPerRow, hashes >= 1")
-    val v = latestVersion(spark, root) + 1
-    val name = s"batch-$v"
-    val f = fs(spark, root)
-    val batch = new Path(root, s"data/$name")
-    if (f.exists(batch)) {
-      require(!dirEverCommitted(spark, root, name),
-        s"refusing to overwrite data/$name at $root: a committed " +
-        "version references it")
-      f.delete(batch, true)
-    }
-    df.write.mode("overwrite").parquet(batch.toString)
-    val written = spark.read.parquet(batch.toString)
-    // per-file row counts size each file's bloom (rounded up to a
-    // whole byte); the `^N` row count and (by default) the NAMED
-    // range stats ride the same one-pass aggregate — the range check
-    // is FREE at lookup time, so composed pruning clears most files
-    // before any sidecar bloom is even opened
-    val statRows = written.groupBy(input_file_name().as("__f"))
-      .agg(count(lit(1)).as("__n"),
-        min(col(bloomCol).cast("long")).as("__mn"),
-        max(col(bloomCol).cast("long")).as("__mx")).collect()
-    val counts = statRows
-      .map(r => r.getString(0).split('/').last -> r.getLong(1)).toMap
-    val ranges: Map[String, Option[(Long, Long)]] = statRows.map { r =>
-      r.getString(0).split('/').last ->
-        (if (r.isNullAt(2) || !withRangeStats) None
-         else Some((r.getLong(2), r.getLong(3))))
-    }.toMap
-    val mOf: Map[String, Int] = counts.map { case (base, n) =>
-      base -> math.max(8192L, ((n * bitsPerRow.toLong + 7) / 8) * 8).toInt
-    }
-    // every (file, bit position) pair, distinct — the shuffle is
-    // bounded by files × m bits, never by rows
-    val mExpr = element_at(
-      map(mOf.toSeq.flatMap { case (b, m) =>
-        Seq(lit(b), lit(m)) }: _*),
-      element_at(split(input_file_name(), "/"), -1))
-    val posCols = (0 until hashes).map(j =>
-      pmod(xxhash64(lit(j), col(bloomCol).cast("long")), mExpr.cast("long"))
-        .cast("int"))
-    val bits = written
-      .where(col(bloomCol).isNotNull)
-      .select(element_at(split(input_file_name(), "/"), -1).as("__f"),
-        explode(array(posCols: _*)).as("__pos"))
-      .distinct()
-      .groupBy(col("__f")).agg(collect_set(col("__pos")).as("__ps"))
-      .collect()
-      .map { r =>
-        val bs = new java.util.BitSet(mOf(r.getString(0)))
-        r.getSeq[Int](1).foreach(bs.set)
-        r.getString(0) -> bs
+                      bloomCol: String,
+                      maxInlineBits: Int = 1 << 20): Long =
+    appendBatch(spark, root, df, ranges = Seq(bloomCol), finish = { entries =>
+      import org.apache.spark.sql.functions._
+      def base(e: String) = pathOf(e).split('/').last
+      // m per file from its recorded row count, a whole number of bytes
+      val mOf: Map[String, Int] = entries.map { e =>
+        base(e) -> math.max(8192L,
+          ((rowCountOf(e).get * BloomBitsPerRow + 7) / 8) * 8).toInt
       }.toMap
-    val added = counts.toSeq.map { case (base, n) =>
-      val m = mOf(base)
-      val bs = bits.getOrElse(base, new java.util.BitSet(m))
-      val payload =
-        if (m <= maxInlineBits)
-          java.util.Base64.getEncoder.encodeToString(bs.toByteArray)
-        else {
-          val side = new Path(batch, s"$base.bloom")
-          val out = f.create(side, true)
-          try out.write(bs.toByteArray) finally out.close()
-          "*"
-        }
-      val range = ranges.getOrElse(base, None)
-        .map { case (mn, mx) => s"\t@$bloomCol:$mn:$mx" }.getOrElse("")
-      s"data/$name/$base$range\t&$bloomCol:$m:$hashes:$payload\t^$n"
-    }.sorted
-    commitDelta(spark, root, v, added, Seq.empty,
-      schema = nextSchema(spark, root, v, df), op = "append")
-    v
-  }
+      val file = element_at(split(input_file_name(), "/"), -1)
+      val mExpr = element_at(
+        map(mOf.toSeq.flatMap { case (b, m) => Seq(lit(b), lit(m)) }: _*),
+        file)
+      val posCols = (0 until BloomHashes).map(j =>
+        pmod(xxhash64(lit(j), col(bloomCol).cast("long")), mExpr.cast("long"))
+          .cast("int"))
+      // every (file, bit position) pair, distinct — the shuffle is
+      // bounded by files × m bits, never by rows. The batch is read
+      // back under its own schema: a second footer inference would
+      // cost one more job than the stats pass already paid.
+      val bits = spark.read.schema(df.schema)
+        .parquet(entries.map(e => absPath(root, pathOf(e))): _*)
+        .where(col(bloomCol).isNotNull)
+        .select(file.as("__f"), explode(array(posCols: _*)).as("__pos"))
+        .distinct()
+        .groupBy(col("__f")).agg(collect_set(col("__pos")))
+        .collect()
+        .map { r =>
+          val bs = new java.util.BitSet(mOf(r.getString(0)))
+          r.getSeq[Int](1).foreach(bs.set)
+          r.getString(0) -> bs
+        }.toMap
+      entries.map { e =>
+        val m = mOf(base(e))
+        val bs = bits.getOrElse(base(e), new java.util.BitSet(m))
+        val payload =
+          if (m <= maxInlineBits)
+            java.util.Base64.getEncoder.encodeToString(bs.toByteArray)
+          else {
+            val out = fs(spark, root).create(
+              new Path(absPath(root, pathOf(e)) + ".bloom"), true)
+            try out.write(bs.toByteArray) finally out.close()
+            "*"
+          }
+        s"$e\t&$bloomCol:$m:$BloomHashes:$payload"
+      }
+    })
 
   /** Point lookup pruned by the per-file blooms: a file is opened ONLY
-    * if every one of its bloom's k probe bits is set for `value`
-    * (files without a bloom for the column read conservatively). The
-    * decision is pure manifest metadata — k bit tests per file, zero
-    * jobs — and the surviving files still get the equality pushed into
-    * their parquet row-group stats. Returns (frame, filesRead,
-    * filesTotal); an all-pruned lookup returns an empty frame under
-    * the table schema.
+    * if its recorded range admits `value` and every one of its bloom's
+    * k probe bits is set for it (files without a bloom for the column
+    * read conservatively). The decision is pure manifest metadata — k
+    * bit tests per file, zero jobs — and the surviving files still get
+    * the equality pushed into their parquet row-group stats. Returns
+    * (frame, filesRead, filesTotal), like every [[readPruned]] reader.
     */
   def readWhereBloom(spark: SparkSession, root: String, bloomCol: String,
                      value: Long,
-                     version: Long = -1L): (DataFrame, Int, Int) = {
-    // resolve the version BEFORE importing functions._ — the import
-    // would shadow the `version` parameter (sql.functions.version())
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    import org.apache.spark.sql.functions._
-    val st = resolveState(spark, root, v)
-    val keep = st.entries.filter { e =>
+                     version: Long = -1L): (DataFrame, Int, Int) =
+    readPruned(spark, root, version,
+      functions.col(bloomCol).cast("long") === value) { e =>
       // FREE range check first: a recorded [min, max] that excludes
       // the value prunes the file without touching its bloom — the
       // composed discipline that keeps sidecar reads off the files
       // cheaper metadata could already clear
-      val rangeHit = statRangeOf(e, bloomCol) match {
-        case Some((mn, mx)) => mn <= value && value <= mx
-        case None           => true
-      }
-      rangeHit && (bloomOf(e, bloomCol) match {
-        case None => true // no bloom — cannot prove absent
-        case Some((m, k, Some(bs))) =>
-          bloomPositions(value, m, k).forall(bs.get)
-        case Some((m, k, None)) => // sidecar form — pay one small read
-          sidecarBloom(spark, root, e) match {
-            case Some(bs) => bloomPositions(value, m, k).forall(bs.get)
-            case None     => true // sidecar lost — read, never fail
-          }
-      })
+      statRangeOf(e, bloomCol).forall { case (mn, mx) =>
+        mn <= value && value <= mx } &&
+        (bloomOf(e, bloomCol) match {
+          case None => true // no bloom — cannot prove absent
+          case Some((m, k, inline)) =>
+            // sidecar form: pay one small read; a lost sidecar reads
+            // the file, never fails the query
+            inline.orElse(sidecarBloom(spark, root, e))
+              .forall(bs => bloomPositions(value, m, k).forall(bs.get))
+        })
     }
-    val all = st.entries.map(e => absPath(root, pathOf(e)))
-    val schemaOf = readSchema(spark, st.schema)
-    def read(files: Seq[String]) = schemaOf match {
-      case Some(s0) => spark.read.schema(s0).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
-    val frame =
-      if (keep.isEmpty) read(all).limit(0) // schema-stable empty
-      else read(keep.map(e => absPath(root, pathOf(e))))
-    (frame.filter(col(bloomCol).cast("long") === value),
-      keep.size, st.entries.size)
-  }
 
-  /** [[append]] that records each file's DISTINCT VALUE SET of a
-    * low-cardinality string column in the manifest — the categorical
-    * complement of [[appendWithStats]]'s numeric zone stats, i.e.
-    * Hive/Iceberg partition pruning without the physical partition
-    * layout (the value set rides the manifest as
-    * `relpath\t#v1|v2|…`). A [[readWhereEq]] on the column then opens
-    * ONLY the files whose set contains the value. A file exceeding
-    * `maxDistinct` values records `#*` (read-always — a high-cardinality
-    * column belongs in numeric zone stats or a sort order, not a value
-    * list); values must not contain tab/pipe/newline.
+  /** [[append]] that records each file's DISTINCT VALUE SET of each
+    * low-cardinality column of `catCols` in the manifest
+    * (`#col:v1|v2`, overflow `#col:*` past [[MaxDistinct]]) plus its
+    * row count — the categorical complement of [[appendWithStats]]'s
+    * numeric zone stats, i.e. Hive/Iceberg partition pruning without
+    * the physical partition layout (a table physically partitioned by
+    * (source, lang) explodes into the directory cross-product; value
+    * sets cost one manifest line per file). A [[readWhereEq]] on any
+    * recorded column then opens ONLY the files whose set contains the
+    * value. Values must not contain tab/colon/pipe/newline.
     */
   def appendWithValueStats(spark: SparkSession, root: String, df: DataFrame,
-                           catCol: String, maxDistinct: Int = 16): Long = {
-    import org.apache.spark.sql.functions._
-    require(!df.isEmpty, s"refusing to commit an empty version to $root")
-    val v = latestVersion(spark, root) + 1
-    val name = s"batch-$v"
-    val f = fs(spark, root)
-    val batch = new Path(root, s"data/$name")
-    if (f.exists(batch)) {
-      require(!dirEverCommitted(spark, root, name),
-        s"refusing to overwrite data/$name at $root: a committed " +
-        "version references it")
-      f.delete(batch, true)
-    }
-    df.write.mode("overwrite").parquet(batch.toString)
-    val added = spark.read.parquet(batch.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(sort_array(collect_set(col(catCol).cast("string"))).as("__vs"))
-      .collect()
-      .map { r =>
-        val base = r.getString(0).split('/').last
-        val vs = r.getSeq[String](1)
-        vs.foreach(s0 => require(
-          s0 != null && !s0.exists(c =>
-            c == '\t' || c == '|' || c == '\n' || c == ':'),
-          s"appendWithValueStats($root): $catCol value '$s0' carries a " +
-          "reserved character (tab/pipe/newline/colon — colon is the " +
-          "named-form separator, see appendWithValueStatsMulti)"))
-        val set = if (vs.size > maxDistinct) "*" else vs.mkString("|")
-        s"data/$name/$base\t#$set"
-      }.sorted.toSeq
-    commitDelta(spark, root, v, added, Seq.empty,
-      schema = nextSchema(spark, root, v, df), op = "append")
-    v
+                           catCols: String*): Long = {
+    require(catCols.nonEmpty, "appendWithValueStats needs >= 1 column")
+    appendBatch(spark, root, df, values = catCols)
   }
 
   /** Value-pruned snapshot read: open only the files whose recorded
-    * value set contains `value` (or that carry no / overflowed value
-    * stats — conservatively read), then apply the exact equality on
-    * the survivors. Returns (frame, filesRead, filesTotal).
+    * `catCol` value set contains `value` (or that carry no / an
+    * overflowed set — conservatively read), then apply the exact
+    * equality on the survivors. Returns (frame, filesRead, filesTotal).
     */
   def readWhereEq(spark: SparkSession, root: String, catCol: String,
                   value: String,
-                  version: Long = -1L): (DataFrame, Int, Int) = {
-    // functions._ would shadow the `version` param (functions.version)
-    import org.apache.spark.sql.functions.col
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    val st0 = resolveState(spark, root, v)
-    val (rawEntries, sch) = (st0.entries, st0.schema)
-    val keep = rawEntries.filter { line =>
-      valueSetOf(line, catCol) match {
-        case Some(Some(set)) => set.contains(value)
-        case _               => true // overflow / no usable stats: read
-      }
+                  version: Long = -1L): (DataFrame, Int, Int) =
+    readPruned(spark, root, version,
+      functions.col(catCol).cast("string") === value) { e =>
+      valueSetOf(e, catCol).flatten.forall(_.contains(value))
     }
-    require(keep.nonEmpty || rawEntries.isEmpty,
-      s"readWhereEq($root): every file skipped — empty frame has no " +
-      s"schema; no file contains $catCol = '$value'")
-    val files = keep.map(e => absPath(root, pathOf(e)))
-    val base = readSchema(spark, sch) match {
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
-    (base.filter(col(catCol).cast("string") === value), keep.size,
-      rawEntries.size)
-  }
 
-  /** [[appendWithValueStats]] for SEVERAL low-cardinality columns per
-    * file: each file's manifest entry records a NAMED value set per
-    * column (`relpath\t#col:v1|v2\t#col2:x|y`, overflow `#col:*`), so
-    * [[readWhereEq]] prunes on ANY of them — the Hive multi-level
-    * partition key without the physical layout (a table physically
-    * partitioned by (source, lang) explodes into the directory
-    * cross-product; value sets cost one manifest line per file).
-    * Reserved characters per value: tab/pipe/newline AND `:` (the
-    * name/set separator).
-    */
-  def appendWithValueStatsMulti(spark: SparkSession, root: String,
-                                df: DataFrame, catCols: Seq[String],
-                                maxDistinct: Int = 16): Long = {
-    import org.apache.spark.sql.functions._
-    require(!df.isEmpty, s"refusing to commit an empty version to $root")
-    require(catCols.nonEmpty, "appendWithValueStatsMulti needs >= 1 column")
-    catCols.foreach(c => require(!c.exists(ch =>
-      ch == '\t' || ch == ':' || ch == '|' || ch == '\n'),
-      s"column name '$c' carries a reserved character"))
-    val v = latestVersion(spark, root) + 1
-    val name = s"batch-$v"
-    val f = fs(spark, root)
-    val batch = new Path(root, s"data/$name")
-    if (f.exists(batch)) {
-      require(!dirEverCommitted(spark, root, name),
-        s"refusing to overwrite data/$name at $root: a committed " +
-        "version references it")
-      f.delete(batch, true)
-    }
-    df.write.mode("overwrite").parquet(batch.toString)
-    val aggs = catCols.map(c =>
-      sort_array(collect_set(col(c).cast("string"))).as(s"__vs_$c"))
-    val added = spark.read.parquet(batch.toString)
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val base = r.getString(0).split('/').last
-        val sets = catCols.zipWithIndex.map { case (c, i) =>
-          val vs = r.getSeq[String](1 + i)
-          vs.foreach(s0 => require(s0 != null && !s0.exists(ch =>
-            ch == '\t' || ch == '|' || ch == '\n' || ch == ':'),
-            s"appendWithValueStatsMulti($root): $c value '$s0' carries " +
-            "a reserved character (tab/pipe/newline/colon)"))
-          val set = if (vs.size > maxDistinct) "*" else vs.mkString("|")
-          s"#$c:$set"
-        }
-        s"data/$name/$base\t${sets.mkString("\t")}"
-      }.sorted.toSeq
-    commitDelta(spark, root, v, added, Seq.empty,
-      schema = nextSchema(spark, root, v, df), op = "append")
-    v
-  }
-
-  /** Stats-pruned snapshot read: keep only the files whose recorded
-    * [min, max] overlaps [lo, hi] — file skipping decided entirely
-    * from the manifest — then apply the exact predicate on the
-    * survivors (pruning is a superset cut, never a semantic change).
-    * Files committed without stats are conservatively always read.
-    * Returns (frame, filesRead, filesTotal) so callers can report the
-    * skipping win.
+  /** Stats-pruned snapshot read on one column: [[readWhereBox]] with a
+    * one-dimensional box.
     */
   def readWhere(spark: SparkSession, root: String, statCol: String,
                 lo: Long, hi: Long,
-                version: Long = -1L): (DataFrame, Int, Int) = {
-    val v = if (version < 0) latestVersion(spark, root) else version
-    import org.apache.spark.sql.functions._
-    require(v > 0, s"no committed versions at $root")
-    val st0 = resolveState(spark, root, v)
-    val (rawEntries, sch) = (st0.entries, st0.schema)
-    val entries = rawEntries.map(line => (pathOf(line), statRangeOf(line, statCol)))
-    val keep = entries.filter {
-      case (_, Some((mn, mx))) => mx >= lo && mn <= hi
-      case (_, None)           => true // stat-less: cannot skip
-    }
-    require(keep.nonEmpty || entries.isEmpty,
-      s"readWhere($root): every file skipped — empty frame has no " +
-      "schema; read a wider range or readAsOf + filter")
-    val files = keep.map(e => absPath(root, e._1))
-    val base = readSchema(spark, sch) match {
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
-    val frame = base.filter(col(statCol).cast("long").between(lo, hi))
-    (frame, keep.size, entries.size)
-  }
+                version: Long = -1L): (DataFrame, Int, Int) =
+    readWhereBox(spark, root, Seq((statCol, lo, hi)), version)
 
-  /** MULTI-COLUMN box read over named zone stats: open only the files
-    * whose recorded [min, max] overlaps EVERY box dimension — the read
-    * path that makes [[compact]]'s z-order rewrite pay (a z-ordered
-    * file covers a small hyper-rectangle of the interleaved key space,
-    * so a box on ANY subset of the clustered columns skips most
-    * files). A file lacking a named range for some queried column is
-    * conservatively read (pruning is a superset cut, never a semantic
-    * change); the exact conjunctive predicate applies on the
-    * survivors. Returns (frame, filesRead, filesTotal).
+  /** MULTI-COLUMN box read over the `@col:min:max` zone stats: open
+    * only the files whose recorded [min, max] overlaps EVERY box
+    * dimension — the read path that makes [[compact]]'s z-order
+    * rewrite pay (a z-ordered file covers a small hyper-rectangle of
+    * the interleaved key space, so a box on ANY subset of the
+    * clustered columns skips most files). A file lacking a range for
+    * some queried column is conservatively read; the exact
+    * conjunctive predicate applies on the survivors. Returns (frame,
+    * filesRead, filesTotal).
     */
   def readWhereBox(spark: SparkSession, root: String,
                    box: Seq[(String, Long, Long)],
                    version: Long = -1L): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.col
     require(box.nonEmpty, "readWhereBox needs >= 1 (column, lo, hi)")
-    val v = if (version < 0) latestVersion(spark, root) else version
-    require(v > 0, s"no committed versions at $root")
-    val st0 = resolveState(spark, root, v)
-    val (rawEntries, sch) = (st0.entries, st0.schema)
-    // NAMED stats only: the legacy anonymous `mn\tmx` form doesn't
-    // record WHICH column it describes, and a multi-column box has no
-    // single caller-vouched column — pruning a b-box with a-stats
-    // would silently lose rows. Unnamed files are conservatively read.
-    val keep = rawEntries.filter { line =>
-      val named = namedStatsOf(line)
+    readPruned(spark, root, version, box.map { case (c, lo, hi) =>
+      functions.col(c).cast("long").between(lo, hi) }.reduce(_ && _)) { e =>
       box.forall { case (c, lo, hi) =>
-        named.get(c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None           => true // unprovable: read it
-        }
+        statRangeOf(e, c).forall { case (mn, mx) => mx >= lo && mn <= hi }
       }
     }
-    require(keep.nonEmpty || rawEntries.isEmpty,
-      s"readWhereBox($root): every file skipped — empty frame has no " +
-      "schema; widen the box or readAsOf + filter")
-    val files = keep.map(e => absPath(root, pathOf(e)))
-    val base = readSchema(spark, sch) match {
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
-    val frame = box.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).cast("long").between(lo, hi))
-    }
-    (frame, keep.size, rawEntries.size)
   }
 
-  /** The [min, max] range an entry records for `statCol`: the legacy
-    * anonymous `relpath\tmn\tmx` form (the caller vouches for which
-    * column it was committed on, as [[readWhere]] always has), or the
-    * named `@col:mn:mx` form looked up BY NAME. None = this entry
-    * cannot prove anything about `statCol` — conservatively read.
+  /** The one pruned-read skeleton: resolve `version`, keep the entries
+    * `keep` admits (decided from the manifest alone), read them under
+    * the recorded schema and apply the exact `filter` — pruning is a
+    * superset cut, never a semantic change. When every file is pruned
+    * the frame is the table's schema-stable empty read (0 files
+    * opened). Returns (frame, filesRead, filesTotal) so callers can
+    * report the skipping win.
     */
-  private def statRangeOf(entry: String,
-                          statCol: String): Option[(Long, Long)] = {
-    val parts = entry.split('\t')
-    if (parts.length == 3 && !parts(1).startsWith("@") &&
-        !parts(1).startsWith("#"))
-      try Some((parts(1).toLong, parts(2).toLong))
-      catch { case _: NumberFormatException => None }
-    else namedStatsOf(entry).get(statCol)
+  private def readPruned(spark: SparkSession, root: String, version: Long,
+                         filter: Column)
+                        (keep: String => Boolean): (DataFrame, Int, Int) = {
+    val v = versionOr(spark, root, version)
+    val st = resolveState(spark, root, v)
+    require(st.entries.nonEmpty,
+      s"version $v at $root is removal-only down to zero files")
+    val kept = st.entries.filter(keep)
+    def read(es: Seq[String]) =
+      readFiles(spark, st.schema, es.map(e => absPath(root, pathOf(e))))
+    val frame = if (kept.nonEmpty) read(kept) else read(st.entries).limit(0)
+    (frame.filter(filter), kept.size, st.entries.size)
   }
 
-  /** The stat-carrying entries of a version (legacy single-column or
-    * named multi-column form), failing loudly on any file without a
-    * usable `keyCol` range — the precondition shared by every COW
-    * rewrite (a file without stats cannot be proven untouched).
+  /** The shared front half of every copy-on-write rewrite: the head
+    * version, its files split by `hit(min, max)` on their `keyCol`
+    * range into (affected relpaths, kept count), and a reader of the
+    * affected files under the head schema. Fails loudly on any file
+    * without a recorded `keyCol` range — such a file cannot be proven
+    * untouched.
     */
-  private def statEntries(spark: SparkSession, root: String, v: Long,
-                          keyCol: String,
-                          op: String): Seq[(String, Long, Long)] =
-    resolveEntries(spark, root, v).map { line =>
-      statRangeOf(line, keyCol) match {
-        case Some((mn, mx)) => (pathOf(line), mn, mx)
-        case None => throw new IllegalArgumentException(
-          s"$op($root): file ${pathOf(line)} carries no numeric $keyCol " +
-          "stats — this rewrite needs a fully stat-committed table " +
-          "(appendWithStats; categorical value stats cannot prove a " +
-          "key range untouched)")
-      }
+  private def cowSplit(spark: SparkSession, root: String, keyCol: String,
+                       op: String)(hit: (Long, Long) => Boolean)
+      : (Long, Seq[String], Int, () => DataFrame) = {
+    val prev = latestVersion(spark, root)
+    require(prev > 0, s"no committed versions at $root to $op")
+    val st = resolveState(spark, root, prev)
+    val (affected, kept) = st.entries.partition { e =>
+      val (mn, mx) = statRangeOf(e, keyCol).getOrElse(
+        throw new IllegalArgumentException(
+          s"$op($root): file ${pathOf(e)} carries no numeric $keyCol " +
+          "stats — this rewrite needs a table whose every file recorded " +
+          s"a $keyCol range (appendWithStats)"))
+      hit(mn, mx)
     }
+    (prev, affected.map(pathOf), kept.size,
+      () => readFiles(spark, st.schema, affected.map(e => absPath(root, pathOf(e)))))
+  }
 
   /** Any of the SORTED `keys` inside [mn, mx]? Binary search — the
     * per-file pruning test is O(log keys), not O(keys) (ADVICE r17).
@@ -1810,34 +1554,19 @@ object Versioned {
   def mergeByKey(spark: SparkSession, root: String, updates: DataFrame,
                  keyCol: String,
                  maxKeys: Int = 100000): (Long, Int, Int) = {
-    import org.apache.spark.sql.functions._
     require(!updates.isEmpty, s"refusing an empty merge into $root")
-    val prev = latestVersion(spark, root)
-    require(prev > 0, s"no committed versions at $root to merge into")
     val keys = collectKeys(updates, keyCol, maxKeys, s"mergeByKey($root)")
-    val entries = statEntries(spark, root, prev, keyCol, "mergeByKey")
-    val (affected, kept) = entries.partition { case (_, mn, mx) =>
-      anyKeyInRange(keys, mn, mx)
-    }
+    val (prev, affected, kept, scan) = cowSplit(spark, root, keyCol,
+      "mergeByKey")(anyKeyInRange(keys, _, _))
     val v = prev + 1
-    val sch = readSchema(spark, resolveState(spark, root, prev).schema)
+    // survivors read under the table schema so a schema-evolved
+    // table's older files null-fill before the strict union
     val survivors =
       if (affected.isEmpty) updates
-      else {
-        val files = affected.map(e => absPath(root, e._1))
-        // survivors read under the table schema so a schema-evolved
-        // table's older files null-fill before the strict union
-        val scan = sch match {
-          case Some(st) => spark.read.schema(st).parquet(files: _*)
-          case None     => spark.read.parquet(files: _*)
-        }
-        scan.filter(survivorPred(keyCol, keys)).unionByName(updates)
-      }
-    val added = writeBatchDir(spark, root, s"batch-$v", survivors,
-      Some(keyCol))
-    commitDelta(spark, root, v, added, affected.map(_._1),
-      op = "merge")
-    (v, affected.size, kept.size)
+      else scan().filter(survivorPred(keyCol, keys)).unionByName(updates)
+    val added = writeBatch(spark, root, s"batch-$v", survivors, Seq(keyCol))
+    commitDelta(spark, root, v, added, affected, op = "merge")
+    (v, affected.size, kept)
   }
 
   /** Copy-on-write DELETE by key: same file-granular discipline as
@@ -1854,23 +1583,14 @@ object Versioned {
   def deleteWhere(spark: SparkSession, root: String, keyDf: DataFrame,
                   keyCol: String,
                   maxKeys: Int = 100000): (Long, Long, Int, Int) = {
-    import org.apache.spark.sql.functions._
     require(!keyDf.isEmpty, s"refusing an empty delete at $root")
-    val prev = latestVersion(spark, root)
-    require(prev > 0, s"no committed versions at $root to delete from")
     val keys = collectKeys(keyDf, keyCol, maxKeys, s"deleteWhere($root)")
-    val entries = statEntries(spark, root, prev, keyCol, "deleteWhere")
-    val (affected, kept) = entries.partition { case (_, mn, mx) =>
-      anyKeyInRange(keys, mn, mx)
-    }
+    val (prev, affected, kept, scanOf) = cowSplit(spark, root, keyCol,
+      "deleteWhere")(anyKeyInRange(keys, _, _))
     require(affected.nonEmpty,
       s"deleteWhere($root): no file's key range overlaps the batch — " +
       "nothing to delete")
-    val files = affected.map(e => absPath(root, e._1))
-    val scan = readSchema(spark, resolveState(spark, root, prev).schema) match {
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
+    val scan = scanOf()
     val hit = scan.filter(keyPred(keyCol, keys)).count()
     require(hit > 0,
       s"deleteWhere($root): the key batch matches no rows — refusing " +
@@ -1879,9 +1599,9 @@ object Versioned {
     val v = prev + 1
     val added =
       if (survivors.isEmpty) Seq.empty[String] // whole files deleted
-      else writeBatchDir(spark, root, s"batch-$v", survivors, Some(keyCol))
-    commitDelta(spark, root, v, added, affected.map(_._1), op = "delete")
-    (v, hit, affected.size, kept.size)
+      else writeBatch(spark, root, s"batch-$v", survivors, Seq(keyCol))
+    commitDelta(spark, root, v, added, affected, op = "delete")
+    (v, hit, affected.size, kept)
   }
 
   /** Copy-on-write UPDATE by key — `UPDATE t SET col = expr WHERE key
@@ -1908,21 +1628,13 @@ object Versioned {
       "rewrite it as delete + append, the zone-stat pruning proof " +
       "cannot survive a key mutation")
     require(!keyDf.isEmpty, s"refusing an empty update at $root")
-    val prev = latestVersion(spark, root)
-    require(prev > 0, s"no committed versions at $root to update")
     val keys = collectKeys(keyDf, keyCol, maxKeys, s"updateWhere($root)")
-    val entries = statEntries(spark, root, prev, keyCol, "updateWhere")
-    val (affected, kept) = entries.partition { case (_, mn, mx) =>
-      anyKeyInRange(keys, mn, mx)
-    }
+    val (prev, affected, kept, scanOf) = cowSplit(spark, root, keyCol,
+      "updateWhere")(anyKeyInRange(keys, _, _))
     require(affected.nonEmpty,
       s"updateWhere($root): no file's key range overlaps the batch — " +
       "nothing to update")
-    val files = affected.map(e => absPath(root, e._1))
-    val scan = readSchema(spark, resolveState(spark, root, prev).schema) match {
-      case Some(st) => spark.read.schema(st).parquet(files: _*)
-      case None     => spark.read.parquet(files: _*)
-    }
+    val scan = scanOf()
     set.keys.foreach(c => require(scan.columns.contains(c),
       s"updateWhere($root): no column $c to set"))
     val hit = scan.filter(keyPred(keyCol, keys)).count()
@@ -1934,11 +1646,9 @@ object Versioned {
       df.withColumn(c, when(matched, expr(e)).otherwise(col(c)))
     }
     val v = prev + 1
-    val added = writeBatchDir(spark, root, s"batch-$v", rewritten,
-      Some(keyCol))
-    commitDelta(spark, root, v, added, affected.map(_._1),
-      op = "update")
-    (v, hit, affected.size, kept.size)
+    val added = writeBatch(spark, root, s"batch-$v", rewritten, Seq(keyCol))
+    commitDelta(spark, root, v, added, affected, op = "update")
+    (v, hit, affected.size, kept)
   }
 
   /** `INSERT OVERWRITE … WHERE` — the partition-overwrite / backfill
@@ -1961,38 +1671,26 @@ object Versioned {
     require(lo <= hi, s"overwriteWhere($root): need lo <= hi, got $lo > $hi")
     require(!df.isEmpty, s"refusing an empty overwrite at $root " +
       "(use deleteWhere to empty a band)")
-    val leaked = df.filter(not(coalesce(
-      col(statCol).cast("long").between(lo, hi), lit(false)))).count()
+    val inBand = coalesce(
+      col(statCol).cast("long").between(lo, hi), lit(false))
+    val leaked = df.filter(not(inBand)).count()
     require(leaked == 0,
       s"overwriteWhere($root): $leaked replacement row(s) fall outside " +
       s"[$lo, $hi] on $statCol (or have a null key) — a replacement " +
       "must stay inside its declared band")
-    val prev = latestVersion(spark, root)
-    require(prev > 0, s"no committed versions at $root to overwrite")
-    val entries = statEntries(spark, root, prev, statCol, "overwriteWhere")
-    val (affected, kept) = entries.partition { case (_, mn, mx) =>
-      mn <= hi && mx >= lo
-    }
+    val (prev, affected, kept, scanOf) = cowSplit(spark, root, statCol,
+      "overwriteWhere")((mn, mx) => mn <= hi && mx >= lo)
     val v = prev + 1
-    val inBand = coalesce(
-      col(statCol).cast("long").between(lo, hi), lit(false))
     val (newData, replaced) =
       if (affected.isEmpty) (df, 0L)
       else {
-        val files = affected.map(e => absPath(root, e._1))
-        val scan =
-          readSchema(spark, resolveState(spark, root, prev).schema) match {
-            case Some(st) => spark.read.schema(st).parquet(files: _*)
-            case None     => spark.read.parquet(files: _*)
-          }
+        val scan = scanOf()
         (scan.filter(not(inBand)).unionByName(df),
           scan.filter(inBand).count())
       }
-    val added = writeBatchDir(spark, root, s"batch-$v", newData,
-      Some(statCol))
-    commitDelta(spark, root, v, added, affected.map(_._1),
-      op = "overwrite")
-    (v, replaced, affected.size, kept.size)
+    val added = writeBatch(spark, root, s"batch-$v", newData, Seq(statCol))
+    commitDelta(spark, root, v, added, affected, op = "overwrite")
+    (v, replaced, affected.size, kept)
   }
 
   /** OPTIMIZE — the version-preserving small-file rewrite: read the
@@ -2028,7 +1726,7 @@ object Versioned {
     val before = resolveEntries(spark, root, prev)
     val snapshot = readAsOf(spark, root, prev)
     val v = prev + 1
-    val added = zorderBy match {
+    val arranged = zorderBy match {
       case Seq(a, b) =>
         // corpus min/max per column (driver literals, exact ints) feed
         // the equal-width bucketing; 8 bits/dim = a 65k-cell grid, the
@@ -2044,19 +1742,18 @@ object Versioned {
           s"((cast($c as long) - ${lo}L) * ${1L << bits}L) div " +
           s"(${hi}L - ${lo}L + 1))")
         val zv = Layout.interleave(zb(a, la, ha), zb(b, lb, hb), bits)
-        val arranged = snapshot.withColumn("__zv", zv)
+        snapshot.withColumn("__zv", zv)
           .repartitionByRange(numFiles, col("__zv"))
           .sortWithinPartitions(col("__zv"))
           .drop("__zv")
-        writeBatchDirNamed(spark, root, s"batch-$v", arranged, zorderBy)
-      case _ =>
-        val arranged = statCol match {
-          case Some(c) if numFiles > 1 =>
-            snapshot.repartitionByRange(numFiles, col(c))
-          case _ => snapshot.repartition(numFiles)
-        }
-        writeBatchDir(spark, root, s"batch-$v", arranged, statCol)
+      case _ => statCol match {
+        case Some(c) if numFiles > 1 =>
+          snapshot.repartitionByRange(numFiles, col(c))
+        case _ => snapshot.repartition(numFiles)
+      }
     }
+    val added = writeBatch(spark, root, s"batch-$v", arranged,
+      zorderBy ++ statCol)
     commitDelta(spark, root, v, added, before.map(pathOf),
       op = "compact")
     (v, before.size, added.size)
@@ -2112,21 +1809,16 @@ object Versioned {
       if (fromV == 0) Set.empty[String]
       else resolveEntries(spark, root, fromV).map(pathOf).toSet
     val toState = resolveState(spark, root, toV)
-    val (toEntries, toSchema) = (toState.entries, toState.schema)
-    val toFiles = toEntries.map(pathOf).toSet
+    val toFiles = toState.entries.map(pathOf).toSet
     val added = (toFiles -- fromFiles).toSeq.sorted
     val removed = (fromFiles -- toFiles).toSeq.sorted
     require(added.nonEmpty || removed.nonEmpty,
       s"readChanges($root): v$fromV and v$toV share every file — no changes")
     // BOTH sides read under toV's schema (when recorded) so the
     // EXCEPT ALLs align even across a schema-evolving range
-    val st = readSchema(spark, toSchema)
     def frame(files: Seq[String], other: Seq[String]): DataFrame = {
-      val fs0 = (if (files.nonEmpty) files else other).map(p => absPath(root, p))
-      val df = st match {
-        case Some(s) => spark.read.schema(s).parquet(fs0: _*)
-        case None    => spark.read.parquet(fs0: _*)
-      }
+      val df = readFiles(spark, toState.schema,
+        (if (files.nonEmpty) files else other).map(p => absPath(root, p)))
       if (files.nonEmpty) df else df.limit(0)
     }
     (frame(added, removed), frame(removed, added))

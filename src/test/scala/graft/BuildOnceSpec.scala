@@ -97,7 +97,7 @@ class BuildOnceSpec extends SparkSpec {
       Files.copy(Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
         dir.resolve(s"$t.parquet"))
     }
-    val home = Paths.get(sys.props("java.io.tmpdir"), "graft-built")
+    val home = Paths.get(sys.props("java.io.tmpdir"), SparkEntry.BuiltHome)
     def entries(): Set[String] =
       if (Files.isDirectory(home)) home.toFile.list().toSet else Set.empty
     val before = entries()

@@ -87,14 +87,82 @@ class VersionedSpec extends SparkSpec {
     val (f3, read3, total3) = Versioned.readWhere(spark, root, "v", 100L, 109L)
     assert((read3, total3) == (2, 4), "stat-less file must be read")
     assert(f3.count() == 10L, "exact predicate must drop stat-less rows")
-    // every file skipped -> refused (empty frame has no schema)
-    val ex = intercept[IllegalArgumentException](
-      Versioned.readWhere(spark, root, "v", 5000L, 6000L, version = 3L))
-    assert(ex.getMessage.contains("every file skipped"))
+    // every file skipped -> 0 files read, an empty frame that still
+    // carries the table's columns
+    val (f5, read5, total5) =
+      Versioned.readWhere(spark, root, "v", 5000L, 6000L, version = 3L)
+    assert((read5, total5) == (0, 3) && f5.count() == 0L)
+    assert(f5.columns.toSeq == Seq("id", "v"))
     // time travel composes with pruning: at v1 only the first file exists
     val (_, read4, total4) = Versioned.readWhere(spark, root, "v", 0L, 9L,
       version = 1L)
     assert((read4, total4) == (1, 1))
+  }
+
+  /** Two files with range stats recorded on `a` only: file 1 has
+    * a in [0, 9], b in [100, 109]; file 2 has a in [10, 19], b in [0, 9].
+    */
+  private def statsOnAOnly(): String = {
+    val root = freshRoot()
+    Versioned.appendWithStats(spark, root, (0L until 10L)
+      .map(i => (i, 100L + i, "old")).toDF("a", "b", "s").repartition(1), "a")
+    Versioned.appendWithStats(spark, root, (10L until 20L)
+      .map(i => (i, i - 10L, "old")).toDF("a", "b", "s").repartition(1), "a")
+    root
+  }
+
+  test("range stats recorded on one column never prune a read on " +
+    "another") {
+    val root = statsOnAOnly()
+    val (f, read, total) = Versioned.readWhere(spark, root, "b", 100L, 109L)
+    assert((read, total) == (2, 2), s"read $read/$total files")
+    assert(f.count() == 10L)
+  }
+
+  test("a COW merge keyed on a column with no recorded range is " +
+    "refused and leaves the table as it was") {
+    val root = statsOnAOnly()
+    val ex = intercept[IllegalArgumentException](
+      Versioned.mergeByKey(spark, root,
+        Seq((5L, 105L, "new")).toDF("a", "b", "s").repartition(1), "b"))
+    assert(ex.getMessage.contains("carries no numeric b stats"),
+      ex.getMessage)
+    assert(Versioned.latestVersion(spark, root) == 2L)
+    assert(Versioned.readAsOf(spark, root).count() == 20L)
+  }
+
+  test("every stats-bearing writer records only named stats fields " +
+    "(@col:, #col:, &col:) and a ^N row count") {
+    val rows = (0L until 40L).map(i => (i, i * 2, s"l${i % 3}"))
+    def half(lo: Long, hi: Long) = rows.filter(r => r._1 >= lo && r._1 < hi)
+      .toDF("id", "x", "lang").repartition(1)
+    val cow = freshRoot()
+    Versioned.appendWithStats(spark, cow, half(0L, 20L), "id")
+    Versioned.appendWithStats(spark, cow, half(20L, 40L), "id")
+    Versioned.mergeByKey(spark, cow,
+      Seq((5L, 0L, "m")).toDF("id", "x", "lang").repartition(1), "id")
+    Versioned.deleteWhere(spark, cow, Seq(25L).toDF("id"), "id")
+    Versioned.updateWhere(spark, cow, Seq(30L).toDF("id"), "id",
+      Map("x" -> "x + 1"))
+    Versioned.overwriteWhere(spark, cow,
+      Seq((1L, 7L, "o")).toDF("id", "x", "lang").repartition(1), "id", 0L, 3L)
+    Versioned.compact(spark, cow, numFiles = 2, statCol = Some("id"))
+    Versioned.compact(spark, cow, numFiles = 2, zorderBy = Seq("id", "x"))
+    val values = freshRoot()
+    Versioned.appendWithValueStats(spark, values, half(0L, 40L), "lang")
+    val bloom = freshRoot()
+    Versioned.appendWithBloom(spark, bloom, half(0L, 40L), "id")
+    val named = "(@[^:]+:-?\\d+:-?\\d+|#[^:]+:.*|&[^:]+:.*|\\^\\d+)".r
+    for (root <- Seq(cow, values, bloom);
+         d <- new java.io.File(root, "_manifests").listFiles()
+           if d.getName.endsWith(".delta");
+         l <- java.nio.file.Files.readString(d.toPath).split('\n')
+           if l.startsWith("+\t")) {
+      val fields = l.split('\t').drop(2).toSeq
+      assert(fields.exists(_.startsWith("^")), s"${d.getName}: no row count: $l")
+      fields.foreach(f => assert(named.matches(f),
+        s"${d.getName}: unnamed stats field '$f' in $l"))
+    }
   }
 
   test("mergeByKey: file-granular copy-on-write — untouched files keep " +
@@ -374,7 +442,7 @@ class VersionedSpec extends SparkSpec {
     // a high-cardinality file overflows to #* (read-always)
     Versioned.appendWithValueStats(spark, root,
       (0 until 40).map(i => (100L + i, s"z$i")).toDF("id", "lang")
-        .repartition(1), "lang", maxDistinct = 16)
+        .repartition(1), "lang")
     val (f1, read1, total1) = Versioned.readWhereEq(spark, root, "lang", "de")
     assert((read1, total1) == (2, 3), s"expected 2/3 files, got $read1/$total1")
     assert(f1.as[(Long, String)].collect().toSeq == Seq((3L, "de")))
@@ -401,20 +469,19 @@ class VersionedSpec extends SparkSpec {
 
   test("multi-column value stats: named per-column sets prune " +
     "readWhereEq on ANY recorded column, overflow is per-column, " +
-    "reserved colon refused, anonymous single-column form coexists") {
+    "reserved colon refused") {
     val root = freshRoot()
     // two files: (en, web) and (de, book) + a 40-distinct lang column
     // in the third file that overflows ONLY on lang
-    Versioned.appendWithValueStatsMulti(spark, root,
+    Versioned.appendWithValueStats(spark, root,
       Seq((1L, "en", "web"), (2L, "en", "web")).toDF("id", "lang", "kind")
-        .repartition(1), Seq("lang", "kind"))
-    Versioned.appendWithValueStatsMulti(spark, root,
+        .repartition(1), "lang", "kind")
+    Versioned.appendWithValueStats(spark, root,
       Seq((3L, "de", "book")).toDF("id", "lang", "kind")
-        .repartition(1), Seq("lang", "kind"))
-    Versioned.appendWithValueStatsMulti(spark, root,
+        .repartition(1), "lang", "kind")
+    Versioned.appendWithValueStats(spark, root,
       (0 until 40).map(i => (100L + i, s"z$i", "web"))
-        .toDF("id", "lang", "kind").repartition(1),
-      Seq("lang", "kind"), maxDistinct = 16)
+        .toDF("id", "lang", "kind").repartition(1), "lang", "kind")
     // prune on the FIRST column
     val (f1, r1, t1) = Versioned.readWhereEq(spark, root, "lang", "de")
     assert((r1, t1) == (2, 3), s"got $r1/$t1") // de file + lang-overflow file
@@ -430,16 +497,7 @@ class VersionedSpec extends SparkSpec {
     // an UNRECORDED column can never prune
     val (_, r5, t5) = Versioned.readWhereEq(spark, root, "id", "1")
     assert(r5 == t5)
-    // anonymous single-column commits coexist (caller-vouched)
-    Versioned.appendWithValueStats(spark, root,
-      Seq((500L, "fr", "web")).toDF("id", "lang", "kind")
-        .repartition(1), "lang")
-    val (f6, r6, t6) = Versioned.readWhereEq(spark, root, "lang", "fr")
-    assert(t6 == 4 && r6 == 2 && f6.count() == 1L)
-    // colon is reserved in both forms
-    intercept[IllegalArgumentException](
-      Versioned.appendWithValueStatsMulti(spark, root,
-        Seq((9L, "a:b", "x")).toDF("id", "lang", "kind"), Seq("lang")))
+    // colon (the name/set separator) is reserved in values
     intercept[IllegalArgumentException](
       Versioned.appendWithValueStats(spark, root,
         Seq((9L, "a:b", "x")).toDF("id", "lang", "kind"), "lang"))
@@ -901,16 +959,15 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.readAsOf(spark, root).count() == 101L)
   }
 
-  test("appendCounted + countAsOf: count(*) answered from the manifest " +
-    "alone — zero Spark jobs — and a non-counting rewrite breaks the " +
-    "proof loudly") {
+  test("appendWithStats + countAsOf: count(*) answered from the manifest " +
+    "alone — zero Spark jobs — and a COW rewrite keeps the counts") {
     val root = freshRoot()
-    Versioned.appendCounted(spark, root,
+    Versioned.appendWithStats(spark, root,
       (0L until 37L).map(i => (i, s"r$i")).toDF("id", "s")
-        .repartition(3), Seq("id"))
-    Versioned.appendCounted(spark, root,
+        .repartition(3), "id")
+    Versioned.appendWithStats(spark, root,
       (37L until 50L).map(i => (i, s"r$i")).toDF("id", "s")
-        .repartition(1), Seq("id"))
+        .repartition(1), "id")
     val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     assert(Versioned.countAsOf(spark, root, 1L) == 37L)
     assert(Versioned.countAsOf(spark, root) == 50L)
@@ -920,12 +977,10 @@ class VersionedSpec extends SparkSpec {
     val (_, _, rw, kp) = Versioned.updateWhere(spark, root,
       Seq(40L).toDF("id"), "id", Map("s" -> "'upd'"))
     assert(rw == 1)
-    // ... but the rewritten file has no count, so the metadata count
-    // now refuses rather than guessing
-    val ex = intercept[IllegalArgumentException] {
-      Versioned.countAsOf(spark, root)
-    }
-    assert(ex.getMessage.contains("no row count"))
+    // ... and the rewrite records its files' counts too
+    assert(Versioned.countAsOf(spark, root) ==
+      Versioned.readAsOf(spark, root).count())
+    assert(Versioned.countAsOf(spark, root) == 50L)
     // older versions still metadata-count
     assert(Versioned.countAsOf(spark, root, 2L) == 50L)
   }
@@ -1323,8 +1378,8 @@ class VersionedSpec extends SparkSpec {
     "violating writer fails validation (not the race), and the " +
     "metadata count stays exact") {
     val root = freshRoot()
-    Versioned.appendCounted(spark, root,
-      Seq((0L, 1L)).toDF("id", "x").repartition(1), Seq("id"))
+    Versioned.appendWithStats(spark, root,
+      Seq((0L, 1L)).toDF("id", "x").repartition(1), "id")
     Versioned.addConstraint(spark, root, "x_pos", "x > 0")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -1399,9 +1454,8 @@ class VersionedSpec extends SparkSpec {
     "identical across the pass; a tidy table is a no-op") {
     val root = freshRoot()
     (0 until 12).foreach { i =>
-      Versioned.appendCounted(spark, root,
-        Seq((i.toLong, i.toLong)).toDF("id", "x").repartition(1),
-        Seq("id"))
+      Versioned.appendWithStats(spark, root,
+        Seq((i.toLong, i.toLong)).toDF("id", "x").repartition(1), "id")
     }
     // plant an old orphan
     val orphan = new java.io.File(root, "data/orphan-z")
@@ -1427,14 +1481,14 @@ class VersionedSpec extends SparkSpec {
       statCol = Some("id"), keepVersions = 3, vacuumRetentionMs = 0L)
     assert(rep2.compactedTo.isEmpty && rep2.expired.isEmpty &&
       rep2.vacuumed.isEmpty)
-    // history carries per-version row counts for counted commits
-    // (null for the compact rewrite — a non-counting writer)
+    // history carries per-version row counts for counted commits,
+    // the stats-arranged compact rewrite included
     val h = Versioned.history(spark, root)
       .select($"version", $"operation", $"n_rows_added").collect()
     val byOp = h.map(r => r.getString(1) ->
       (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
     assert(byOp("append") == Some(1L))
-    assert(byOp("compact").isEmpty) // un-counted rewrite -> null
+    assert(byOp("compact") == Some(12L))
   }
 
   test("updateWhere: stats-pruned COW update — SET expressions hit " +
