@@ -17,8 +17,6 @@ import graft.text.Chunker
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    // opt-in ANN routing: inert unless spark.graft.ann.topkRewrite=true
-    e.injectOptimizerRule(_ => graft.plans.AnnTopKRewrite)
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),

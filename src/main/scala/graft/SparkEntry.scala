@@ -912,29 +912,9 @@ object SparkEntry {
       ivfIndexCache.getOrElseUpdate(path, Ann.readIvf(s, path)))
   }
 
-  /** The user-written exact top-k over the persisted q28 index's `lists`
-    * layout — the frame [[qIvfProbeTopK]] executes with the rewrite on,
-    * exposed uncollected so PlanAuditSpec can assert the REWRITTEN
-    * physical plan (probe filter in the scan's PartitionFilters).
-    * Mirrors q01's output shape: sort key is the raw CosineSimilarity
-    * attribute (the narrow shape [[graft.plans.AnnTopKRewrite]]
-    * matches), rounding applied above the limit.
-    */
-  private[graft] def ivfProbeTopKFrame(s: SparkSession, dir: String,
-                                       k: Int = 10): DataFrame = {
-    val qVec = queryVec(rd(s, dir, "embeddings"))
-    Ann.listsFrame(s, ivfPathFor(s, dir))
-      .withColumn("score", graft.functions.CosineSimilarity(
-        col("embedding"), array(qVec.map(lit): _*)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("score"), 6).as("score"))
-  }
-
   /** The BATCHED probe over the persisted q28 index, exposed uncollected
     * so PlanAuditSpec can assert the lists scan partition-prunes on the
-    * probe-union literal (the q193 discipline for the batch shape,
-    * VERDICT r14 item 5).
+    * probe-union literal (VERDICT r14 item 5).
     */
   private[graft] def ivfBatchProbeFrame(s: SparkSession, dir: String,
                                         nprobe: Int): DataFrame = {
@@ -1190,41 +1170,22 @@ object SparkEntry {
     ivfUpsertProbeFrame(s, dir, nprobe = 16)
       .select(col("query_id"), col("vec_id"), col("rank"), col("score"))
 
-  /** q28's index queried through the OPT-IN plan rewrite, in the
-    * hash-exact gate (VERDICT r13 item 2): an unmodified exact cosine
-    * top-10 over the persisted `lists` layout runs with
-    * `spark.graft.ann.topkRewrite=true` at nprobe=16 — every inverted
-    * list probed, so recall is 1.0 BY CONSTRUCTION and the plain
-    * exact-scan DuckDB oracle must stay hash-exact — while the
-    * optimizer still inserts the `centroid_id IN (...)` probe and the
-    * scan partition-prunes on it (PlanAuditSpec asserts the rewritten
-    * physical plan's PartitionFilters). This proves the REWRITTEN PLAN
-    * end-to-end, not just the rule: probe ranking, IN-filter insertion,
-    * partition pruning, and result assembly all sit inside the oracle
-    * gate. The conf is scoped to this query's own materialization
-    * (set → collect k rows → restore), so the approximation knob can
-    * never leak into q01/q02's exact top-k gates; the k collected rows
-    * are bounded by construction (k=10).
+  /** Exact cosine top-10 over the persisted q28 index's `lists` layout
+    * (`Ann.listsFrame`: every inverted list, partitioned by
+    * centroid_id), mirroring q01's output shape. The DuckDB oracle is
+    * the plain exact scan over `embeddings`, so this is a completeness
+    * gate on the partitioned layout: a row lost or doubled by the IVF
+    * write (or read back from the wrong generation) changes the top-10
+    * and breaks the hash.
     */
   private def qIvfProbeTopK(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.AnnTopKRewrite
-    if (!s.experimental.extraOptimizations.contains(AnnTopKRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ AnnTopKRewrite
-    val df = ivfProbeTopKFrame(s, dir)
-    val prevOn = s.conf.getOption(AnnTopKRewrite.ConfKey)
-    val prevNp = s.conf.getOption(AnnTopKRewrite.NprobeKey)
-    s.conf.set(AnnTopKRewrite.ConfKey, "true")
-    s.conf.set(AnnTopKRewrite.NprobeKey, "16") // = q28's nCentroids: all lists
-    try {
-      val rows = df.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-    } finally {
-      prevOn.fold(s.conf.unset(AnnTopKRewrite.ConfKey))(
-        v => s.conf.set(AnnTopKRewrite.ConfKey, v))
-      prevNp.fold(s.conf.unset(AnnTopKRewrite.NprobeKey))(
-        v => s.conf.set(AnnTopKRewrite.NprobeKey, v))
-    }
+    val qVec = queryVec(rd(s, dir, "embeddings"))
+    Ann.listsFrame(s, ivfPathFor(s, dir))
+      .withColumn("score", graft.functions.CosineSimilarity(
+        col("embedding"), array(qVec.map(lit): _*)))
+      .orderBy(col("score").desc, col("vec_id").asc)
+      .limit(10)
+      .select(col("vec_id"), col("label"), round(col("score"), 6).as("score"))
   }
 
   /** MinHash-LSH banding planner over the corpus signature: measured
@@ -9869,11 +9830,10 @@ object SparkEntry {
         | ((1000000 * sum(nt)) // (sum(pieces) * 512))::BIGINT AS utilization_ppm
         |FROM p GROUP BY 1""".stripMargin,
 
-    // the rewritten-plan gate (VERDICT r13 item 2): the Spark side runs
-    // the partition-pruned centroid IN-probe over the persisted q28
-    // index at nprobe=16 (= all 16 inverted lists, recall 1.0 by
-    // construction), so the oracle is the PLAIN exact scan — any probe
-    // ranking / IN-filter / pruning defect breaks the hash match
+    // the completeness gate on the partitioned lists layout: the Spark
+    // side scores every row of the persisted q28 index's inverted lists,
+    // so the oracle is the PLAIN exact scan — a lost or doubled row
+    // breaks the hash match
     "q193_ivf_probe_topk" ->
       s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
          | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),

@@ -11,10 +11,8 @@ import org.apache.spark.sql.types._
 /** Native sign-LSH bucket id: bit i of the result is set iff component i
   * of the vector is > 0 (null/missing components contribute no bit) —
   * identical to the HOF phrasing in [[graft.search.Ann.signBucket]] and
-  * its DuckDB oracle, as a single codegen-able pass. Exists primarily so
-  * [[graft.plans.AnnTopKRewrite]] can inject the bucket predicate as a
-  * plain Catalyst expression; also the fast path for
-  * `Ann.withBucket`-style bulk bucketing.
+  * its DuckDB oracle, as a single codegen-able pass: the fast path for
+  * `Ann.withBucket`-style bulk bucketing, and `sign_bucket` in SQL.
   */
 case class SignBucket(child: Expression, bits: Int = 8)
     extends UnaryExpression {

@@ -787,7 +787,7 @@ object Ann {
     * contributing `cids`' lists to the version. `whole` records that
     * the dir's physical partition set equals `cids`, so readers scan it
     * BARE — a single relation with PartitionFilters intact (the
-    * q28/q193 plan gates). A dir some of whose lists were superseded by
+    * q205/q210 plan gates). A dir some of whose lists were superseded by
     * a later generation is partial (`whole = false`) and is scanned
     * with an explicit `centroid_id IN (live)` filter — still partition
     * pruning, never row filtering.
@@ -892,9 +892,7 @@ object Ann {
     * with its orphan generation left for [[recoverIvf]] (VERDICT r18 item 2:
     * the index keeps the documented single-maintenance-writer
     * contract, and a violation now fails CLEANLY instead of losing a
-    * commit). The `IVF_FORMAT` marker is stamped on first commit only
-    * (the manifest version, not the marker mtime, is the freshness
-    * signal — [[graft.plans.AnnTopKRewrite]]).
+    * commit).
     */
   private def commitIvfManifest(spark: org.apache.spark.sql.SparkSession,
                                 path: String, m: IvfManifest): Unit = {
@@ -915,12 +913,6 @@ object Ann {
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     graft.sources.Versioned.publish(fs, tmp, ivfManifestPath(path, m.version), lines)
-    val marker = new org.apache.hadoop.fs.Path(path, "IVF_FORMAT")
-    if (!fs.exists(marker)) {
-      val mo = fs.create(marker, true)
-      try mo.write("ivf-v3:manifest\n".getBytes("UTF-8"))
-      finally mo.close()
-    }
   }
 
   /** Test seam for the manifest publish: commit a crafted manifest at
@@ -998,18 +990,14 @@ object Ann {
     val cids = physicalCids(spark, s"$path/$gen/lists")
     commitIvfManifest(spark, path, IvfManifest(v, s"$gen/centroids",
       Seq(IvfListDir(s"$gen/lists", cids, whole = true)), Nil, None))
-    // ADVICE r13: an in-place rebuild must not leave the plan rewrite
-    // pruning on the old centers — the rewrite's cache is keyed on the
-    // manifest version (bumped by the commit above) AND dropped eagerly
-    graft.plans.AnnTopKRewrite.clearCache()
   }
 
   /** Decode a persisted centroid table (`centroidsDir`, one row per
     * (centroid_id, centroid)) into the driver-resident dense array
     * indexed by centroid_id. Ids are contiguous from training, but gaps
     * are tolerated: a missing id gets a zero vector, which cosine-scores
-    * 0 and is never probed first. The one decoder behind [[readIvf]],
-    * the writers and [[graft.plans.AnnTopKRewrite]].
+    * 0 and is never probed first. The one decoder behind [[readIvf]]
+    * and the writers.
     */
   private[graft] def readCenters(spark: org.apache.spark.sql.SparkSession,
                                  centroidsDir: String): Array[Array[Double]] = {
@@ -1698,10 +1686,9 @@ object Ann {
     * list L is scored once per query that probed L and never for the
     * others.
     *
-    * Why this is a FUNCTION and not an [[graft.plans.AnnTopKRewrite]]
-    * case: the batched top-k's query vectors are join ATTRIBUTES, not
-    * foldable literals, so plan-time probe ranking is impossible — see
-    * the rule's Scaladoc.
+    * The probe is an explicit call, not an optimizer rule: the batched
+    * top-k's query vectors are join ATTRIBUTES, not foldable literals,
+    * so no plan-time rule could rank probes against them.
     *
     * Output: (queryIdCol, idCol, centroid_id, rank, score), rank 1..k
     * per query (score desc, id asc — topKBatch's window contract),
@@ -1868,7 +1855,7 @@ object Ann {
     * index has no tombstone table (the common case: [[deleteFromIvf]]
     * never ran, or [[compactIvf]] folded them in) the frame is the raw
     * lists scan with NO extra plan node, so the existing probe plans
-    * (q193/q205/q210, PlanAuditSpec) are untouched. With tombstones
+    * (q205/q210, PlanAuditSpec) are untouched. With tombstones
     * present, exclusion is a LEFT ANTI join on the id — broadcastable
     * while the tombstone table is small (AQE decides from its actual
     * size; deletes are assumed rare relative to the corpus — a
@@ -2041,7 +2028,6 @@ object Ann {
     commitIvfManifest(spark, path, m.copy(version = v,
       listDirs = Seq(IvfListDir(s"$gen/lists", cids, whole = true)),
       tombstones = Nil))
-    graft.plans.AnnTopKRewrite.clearCache()
   }
 
   /** UPSERT on a persisted IVF index: replace any existing rows carrying
@@ -2111,7 +2097,6 @@ object Ann {
     commitIvfManifest(spark, path, m.copy(version = v,
       listDirs = prunedDirs :+ IvfListDir(s"$gen/lists", cids, whole = true),
       tombstones = tombLines))
-    graft.plans.AnnTopKRewrite.clearCache()
   }
 
   /** Align an assigned batch with the index's stored row schema: on an
@@ -2463,7 +2448,6 @@ object Ann {
     commitIvfManifest(spark, path, m.copy(version = v,
       listDirs = Seq(IvfListDir(s"$gen/lists", cids, whole = true)),
       sq8Model = Some(s"$gen/sq8_model")))
-    graft.plans.AnnTopKRewrite.clearCache()
   }
 
   /** Reload the SQ8 model persisted by [[sq8AugmentIvf]]. */

@@ -1459,14 +1459,17 @@ object Versioned {
 
   /** The shared front half of every copy-on-write rewrite: the head
     * version, its files split by `hit(min, max)` on their `keyCol`
-    * range into (affected relpaths, kept count), and a reader of the
-    * affected files under the head schema. Fails loudly on any file
-    * without a recorded `keyCol` range — such a file cannot be proven
-    * untouched.
+    * range into (affected relpaths, kept count), a reader of the
+    * affected files under the head schema, and the stats the rewritten
+    * batch records again — `keyCol` plus every `@col` range and `#col`
+    * value-set column recorded on an affected file and still in the
+    * head schema, so a rewrite never drops the pruning its inputs had.
+    * Fails loudly on any file without a recorded `keyCol` range — such
+    * a file cannot be proven untouched.
     */
   private def cowSplit(spark: SparkSession, root: String, keyCol: String,
                        op: String)(hit: (Long, Long) => Boolean)
-      : (Long, Seq[String], Int, () => DataFrame) = {
+      : (Long, Seq[String], Int, () => DataFrame, Seq[String], Seq[String]) = {
     val prev = latestVersion(spark, root)
     require(prev > 0, s"no committed versions at $root to $op")
     val st = resolveState(spark, root, prev)
@@ -1478,8 +1481,15 @@ object Versioned {
           s"a $keyCol range (appendWithStats)"))
       hit(mn, mx)
     }
+    val headCols = st.schema.map(org.apache.spark.sql.types.StructType
+      .fromDDL(_).fieldNames.toSet)
+    def recorded(kind: String): Seq[String] = affected
+      .flatMap(_.split('\t').drop(1).filter(_.startsWith(kind))
+        .map(_.drop(1).takeWhile(_ != ':')))
+      .distinct.sorted.filter(c => headCols.forall(_.contains(c)))
     (prev, affected.map(pathOf), kept.size,
-      () => readFiles(spark, st.schema, affected.map(e => absPath(root, pathOf(e)))))
+      () => readFiles(spark, st.schema, affected.map(e => absPath(root, pathOf(e)))),
+      (keyCol +: recorded("@")).distinct, recorded("#"))
   }
 
   /** Any of the SORTED `keys` inside [mn, mx]? Binary search — the
@@ -1556,15 +1566,15 @@ object Versioned {
                  maxKeys: Int = 100000): (Long, Int, Int) = {
     require(!updates.isEmpty, s"refusing an empty merge into $root")
     val keys = collectKeys(updates, keyCol, maxKeys, s"mergeByKey($root)")
-    val (prev, affected, kept, scan) = cowSplit(spark, root, keyCol,
-      "mergeByKey")(anyKeyInRange(keys, _, _))
+    val (prev, affected, kept, scan, ranges, values) = cowSplit(spark, root,
+      keyCol, "mergeByKey")(anyKeyInRange(keys, _, _))
     val v = prev + 1
     // survivors read under the table schema so a schema-evolved
     // table's older files null-fill before the strict union
     val survivors =
       if (affected.isEmpty) updates
       else scan().filter(survivorPred(keyCol, keys)).unionByName(updates)
-    val added = writeBatch(spark, root, s"batch-$v", survivors, Seq(keyCol))
+    val added = writeBatch(spark, root, s"batch-$v", survivors, ranges, values)
     commitDelta(spark, root, v, added, affected, op = "merge")
     (v, affected.size, kept)
   }
@@ -1585,8 +1595,8 @@ object Versioned {
                   maxKeys: Int = 100000): (Long, Long, Int, Int) = {
     require(!keyDf.isEmpty, s"refusing an empty delete at $root")
     val keys = collectKeys(keyDf, keyCol, maxKeys, s"deleteWhere($root)")
-    val (prev, affected, kept, scanOf) = cowSplit(spark, root, keyCol,
-      "deleteWhere")(anyKeyInRange(keys, _, _))
+    val (prev, affected, kept, scanOf, ranges, values) = cowSplit(spark,
+      root, keyCol, "deleteWhere")(anyKeyInRange(keys, _, _))
     require(affected.nonEmpty,
       s"deleteWhere($root): no file's key range overlaps the batch — " +
       "nothing to delete")
@@ -1599,7 +1609,7 @@ object Versioned {
     val v = prev + 1
     val added =
       if (survivors.isEmpty) Seq.empty[String] // whole files deleted
-      else writeBatch(spark, root, s"batch-$v", survivors, Seq(keyCol))
+      else writeBatch(spark, root, s"batch-$v", survivors, ranges, values)
     commitDelta(spark, root, v, added, affected, op = "delete")
     (v, hit, affected.size, kept)
   }
@@ -1629,8 +1639,8 @@ object Versioned {
       "cannot survive a key mutation")
     require(!keyDf.isEmpty, s"refusing an empty update at $root")
     val keys = collectKeys(keyDf, keyCol, maxKeys, s"updateWhere($root)")
-    val (prev, affected, kept, scanOf) = cowSplit(spark, root, keyCol,
-      "updateWhere")(anyKeyInRange(keys, _, _))
+    val (prev, affected, kept, scanOf, ranges, values) = cowSplit(spark,
+      root, keyCol, "updateWhere")(anyKeyInRange(keys, _, _))
     require(affected.nonEmpty,
       s"updateWhere($root): no file's key range overlaps the batch — " +
       "nothing to update")
@@ -1646,7 +1656,7 @@ object Versioned {
       df.withColumn(c, when(matched, expr(e)).otherwise(col(c)))
     }
     val v = prev + 1
-    val added = writeBatch(spark, root, s"batch-$v", rewritten, Seq(keyCol))
+    val added = writeBatch(spark, root, s"batch-$v", rewritten, ranges, values)
     commitDelta(spark, root, v, added, affected, op = "update")
     (v, hit, affected.size, kept)
   }
@@ -1678,8 +1688,8 @@ object Versioned {
       s"overwriteWhere($root): $leaked replacement row(s) fall outside " +
       s"[$lo, $hi] on $statCol (or have a null key) — a replacement " +
       "must stay inside its declared band")
-    val (prev, affected, kept, scanOf) = cowSplit(spark, root, statCol,
-      "overwriteWhere")((mn, mx) => mn <= hi && mx >= lo)
+    val (prev, affected, kept, scanOf, ranges, values) = cowSplit(spark,
+      root, statCol, "overwriteWhere")((mn, mx) => mn <= hi && mx >= lo)
     val v = prev + 1
     val (newData, replaced) =
       if (affected.isEmpty) (df, 0L)
@@ -1688,7 +1698,7 @@ object Versioned {
         (scan.filter(not(inBand)).unionByName(df),
           scan.filter(inBand).count())
       }
-    val added = writeBatch(spark, root, s"batch-$v", newData, Seq(statCol))
+    val added = writeBatch(spark, root, s"batch-$v", newData, ranges, values)
     commitDelta(spark, root, v, added, affected, op = "overwrite")
     (v, replaced, affected.size, kept)
   }

@@ -32,6 +32,23 @@ class AnnSpec extends SparkSpec {
     assert(got.head._2 == 1.0)
   }
 
+  test("native SignBucket equals the HOF signBucket phrasing") {
+    val rnd = new scala.util.Random(3)
+    val vecs = (Seq.tabulate(50)(i =>
+        (i.toLong, Seq.fill(12)(rnd.nextGaussian().toFloat))) :+
+        (99L, Seq.fill(12)(0.0f)))
+      .toDF("vec_id", "embedding")
+    val mism = vecs.select(
+        graft.functions.SignBucket(col("embedding"), 8).as("native"),
+        Ann.signBucket("embedding", 8).as("hof"))
+      .filter(!(col("native") <=> col("hof"))).count()
+    assert(mism == 0L)
+    // short vector: only existing components contribute bits
+    val short = Seq(Tuple1(Seq(1.0f, -1.0f))).toDF("embedding")
+      .select(graft.functions.SignBucket(col("embedding"), 8)).as[Long].head()
+    assert(short == 1L)
+  }
+
   test("nearDupPairs only pairs same-bucket vectors above threshold") {
     val got = Ann.nearDupPairs(corpus, threshold = 0.5, bits = 4)
       .as[(Long, Long, Double)].collect()
@@ -976,6 +993,25 @@ class AnnSpec extends SparkSpec {
     assert(Ann.listsFrame(spark, p).filter($"vec_id" === 99L).count() == 1)
   }
 
+  test("ivfSearchBatch at nprobe = all equals the exact topKBatch over listsFrame") {
+    val rnd = new scala.util.Random(41)
+    val corp = (0L until 48L).map(i =>
+      (i, Seq.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
+      .repartition(4) // multi-file lists
+    val p = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
+    Ann.writeIvf(Ann.buildIvf(corp, nCentroids = 4, seed = 7L), p)
+    val queries = Ann.listsFrame(spark, p)
+      .filter($"vec_id" < 2)
+      .select($"vec_id".as("query_id"),
+        $"embedding".cast("array<double>").as("query_vec"))
+    val exact = Search.topKBatch(Ann.listsFrame(spark, p), queries,
+        k = 3, threshold = -2.0)
+      .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
+    val probed = Ann.ivfSearchBatch(spark, p, queries, k = 3, nprobe = 4)
+      .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
+    assert(probed.size == 6 && probed == exact)
+  }
+
   test("ivf-v3 manifest protocol: crashed commits are invisible and " +
     "swept; probes planned before a mutation collect correctly after " +
     "it; gcIvf enforces the retention contract (VERDICT r17 item 1)") {
@@ -990,7 +1026,6 @@ class AnnSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qA = Seq(1.0, 0.0, 0.0, 0.0)
     def probe(): Seq[Long] = {
-      graft.plans.AnnTopKRewrite.clearCache()
       val qdf = Seq((0L, qA.map(_.toFloat)))
         .toDF("query_id", "query_vec")
       Ann.ivfSearchBatch(spark, p, qdf, k = 5, nprobe = 2)

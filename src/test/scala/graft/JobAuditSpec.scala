@@ -28,6 +28,11 @@ package graft
   *
   * Dump mode (env GRAFT_JOB_AUDIT_DUMP=1) additionally prints every
   * query's measured count — the tool that built this table.
+  *
+  * The same loop also checks that a query leaves the shared session as
+  * it found it: the session conf and `spark.experimental.extraOptimizations`
+  * must be equal before and after each query, so no query's result can
+  * depend on which queries ran before it in the same session.
   */
 class JobAuditSpec extends SparkSpec {
 
@@ -52,11 +57,11 @@ class JobAuditSpec extends SparkSpec {
     * builders, each entry citing why its count is inherent
     * (constant-iteration training, constant-round graph protocols,
     * constant-stage pipelines — never data-dependent loops). The r12
-    * bound of 15 entries grew to 16 in r14: q193 is the rewritten-plan
-    * correctness gate the r13 verdict itself prescribed (item 2), and
-    * it must OPEN the persisted q28 index, so its cold path pays the
-    * same constant-Lloyd-iteration build as q28/q186/q144 — the fifth
-    * member of that one class, not a new job shape.
+    * bound of 15 entries grew to 16 in r14: q193, the exact top-k over
+    * the persisted lists layout, must OPEN the persisted q28 index, so
+    * its cold path pays the same constant-Lloyd-iteration build as
+    * q28/q186/q144 — the fifth member of that one class, not a new job
+    * shape.
     */
   private val budgets: Map[String, (Int, String)] = Map(
     // ---- k-means builders (the only ceilings allowed above 25):
@@ -73,8 +78,8 @@ class JobAuditSpec extends SparkSpec {
         "(constant-iteration k-means) before its one-pass scatter aggregate"),
     "q193_ivf_probe_topk" -> (40,
       "rides the same q28 index (cold build = constant Lloyd iterations); " +
-        "warm runs pay the query-vector head, the k-row rewritten-probe " +
-        "collect, and the noop write (~4)"),
+        "warm runs pay the query-vector head, the lists read and the " +
+        "noop write of the exact top-k (measured 4)"),
     "q205_ivf_batch_probe" -> (40,
       "rides the same q28 index (cold build = constant Lloyd iterations); " +
         "warm runs pay the centroids collect, the bounded probe-union " +
@@ -293,8 +298,12 @@ class JobAuditSpec extends SparkSpec {
     val sc = spark.sparkContext
     val conf = spark.conf
     val aqeBefore = conf.get("spark.sql.adaptive.enabled", "true")
+    val nanosBefore = conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     // AQE re-plans add jobs nondeterministically; count the static shape
     conf.set("spark.sql.adaptive.enabled", "false")
+    // what GraftSession sets for every main: readEvents' own set of it is
+    // then a no-op, not a session-state change
+    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dump = sys.env.get("GRAFT_JOB_AUDIT_DUMP").contains("1")
     // dev-loop filter: GRAFT_JOB_AUDIT_ONLY=q179_...,q160_... audits a
     // subset (the unknown-budget-entry check is skipped then)
@@ -305,6 +314,8 @@ class JobAuditSpec extends SparkSpec {
       for (name <- registry.keys.toSeq.sorted
              if only.forall(_.contains(name))) {
         val group = s"jobaudit-$name"
+        val confBefore = conf.getAll
+        val rulesBefore = spark.experimental.extraOptimizations
         sc.setJobGroup(group, name, interruptOnCancel = false)
         try {
           registry(name)(spark, sfDir)
@@ -319,12 +330,27 @@ class JobAuditSpec extends SparkSpec {
         } catch {
           case e: Exception => failures += s"$name: execution failed: ${e.getMessage}"
         } finally sc.clearJobGroup()
+        val confAfter = conf.getAll
+        if (confAfter != confBefore) {
+          val changed = (confBefore.keySet ++ confAfter.keySet).toSeq.sorted
+            .filter(k => confBefore.get(k) != confAfter.get(k))
+            .map(k => s"$k: ${confBefore.get(k)} -> ${confAfter.get(k)}")
+          failures += s"$name: left the session conf changed: " +
+            changed.mkString(", ")
+        }
+        if (spark.experimental.extraOptimizations != rulesBefore)
+          failures += s"$name: left extraOptimizations changed: " +
+            s"$rulesBefore -> ${spark.experimental.extraOptimizations}"
       }
       // every budget entry must name a registered query (catch renames)
       val unknown = budgets.keySet -- registry.keySet
       if (only.isEmpty && unknown.nonEmpty)
         failures += s"budget entries for unregistered queries: $unknown"
       assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
-    } finally conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    } finally {
+      conf.set("spark.sql.adaptive.enabled", aqeBefore)
+      nanosBefore.fold(conf.unset("spark.sql.legacy.parquet.nanosAsLong"))(
+        v => conf.set("spark.sql.legacy.parquet.nanosAsLong", v))
+    }
   }
 }

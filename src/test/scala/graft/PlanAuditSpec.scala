@@ -223,39 +223,6 @@ class PlanAuditSpec extends SparkSpec {
     } finally conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
 
-  test("q193's rewritten plan partition-prunes the persisted q28 index " +
-    "(probe in PartitionFilters, VERDICT r13 item 2)") {
-    import graft.plans.AnnTopKRewrite
-    if (!spark.experimental.extraOptimizations.contains(AnnTopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ AnnTopKRewrite
-    val prev = spark.conf.getOption(AnnTopKRewrite.ConfKey)
-    spark.conf.set(AnnTopKRewrite.ConfKey, "true")
-    // nprobe 2 here: the PRUNING must be visible (16-of-16 also passes
-    // the filter-shape check but scans everything); the registered q193
-    // runs at 16 so its ORACLE stays exact — same plan shape, one knob
-    spark.conf.set(AnnTopKRewrite.NprobeKey, "2")
-    try {
-      val df = SparkEntry.ivfProbeTopKFrame(spark, sfDir)
-      val scans = df.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }
-      assert(scans.nonEmpty, "expected a FileSourceScanExec over lists/")
-      assert(scans.head.partitionFilters.exists(
-        _.references.exists(_.name == "centroid_id")),
-        s"probe not in partitionFilters: ${scans.map(_.partitionFilters)}")
-      // and at nprobe=2 the scan reads 2 of the 16 list directories
-      val selected = scans.head.relation.location
-        .listFiles(scans.head.partitionFilters, Nil)
-      assert(selected.size == 2,
-        s"expected 2 pruned partitions, got ${selected.size}")
-    } finally {
-      prev.fold(spark.conf.unset(AnnTopKRewrite.ConfKey))(
-        v => spark.conf.set(AnnTopKRewrite.ConfKey, v))
-      spark.conf.unset(AnnTopKRewrite.NprobeKey)
-    }
-  }
-
   test("q205's batched probe partition-prunes the persisted q28 index to " +
     "the probe UNION (VERDICT r14 item 5)") {
     // nprobe 2 here so the pruning is visible: 3 queries × 2 probes can
@@ -263,7 +230,7 @@ class PlanAuditSpec extends SparkSpec {
     // share probes). The registered q205 runs nprobe=16 so its ORACLE
     // stays exact — same plan shape, one knob. AQE off: the join-bearing
     // plan otherwise wraps in AdaptiveSparkPlanExec and the scan isn't
-    // visible until execution (q193's single-scan plan dodges AQE).
+    // visible until execution (a single-scan plan dodges AQE).
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

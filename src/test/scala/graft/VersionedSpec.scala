@@ -131,6 +131,26 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.readAsOf(spark, root).count() == 20L)
   }
 
+  test("a COW merge re-records every stats column of the files it " +
+    "rewrites, so a read on a non-key column still prunes") {
+    val root = freshRoot()
+    Versioned.appendWithStats(spark, root, (0L until 10L)
+      .map(i => (i, 100L + i)).toDF("a", "b").repartition(1), "a", "b")
+    Versioned.appendWithStats(spark, root, (10L until 20L)
+      .map(i => (i, i - 10L)).toDF("a", "b").repartition(1), "a", "b")
+    val (v, rewritten, _) = Versioned.mergeByKey(spark, root,
+      Seq((5L, 105L)).toDF("a", "b").repartition(1), "a")
+    assert(rewritten == 1)
+    val (f, read, total) = Versioned.readWhere(spark, root, "b", 0L, 9L)
+    assert(read < total, s"read $read/$total files")
+    assert(f.count() == 10L)
+    val added = java.nio.file.Files.readString(
+        new java.io.File(root, f"_manifests/v$v%06d.delta").toPath)
+      .split('\n').filter(_.startsWith("+\t")).toSeq
+    assert(added.nonEmpty && added.forall(_.contains("\t@b:")),
+      added.mkString("\n"))
+  }
+
   test("every stats-bearing writer records only named stats fields " +
     "(@col:, #col:, &col:) and a ^N row count") {
     val rows = (0L until 40L).map(i => (i, i * 2, s"l${i % 3}"))
