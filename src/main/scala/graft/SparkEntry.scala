@@ -1002,11 +1002,10 @@ object SparkEntry {
     filteredAnnFrame(s, dir, nprobe = 16)
 
   /** The BATCHED filtered probe (q212's predicate through
-    * [[graft.search.Ann.ivfSearchBatch]]'s `pred` seam — the serving
-    * shape [[graft.streaming.StreamingSearch.filteredIndexedScan]]
-    * routes), exposed uncollected for PlanAuditSpec: the lists scan
-    * must carry the probe-union PartitionFilters AND the pushed label
-    * predicate simultaneously in the join-bearing batch plan.
+    * [[graft.search.Ann.ivfSearchBatch]]'s `pred` seam), exposed
+    * uncollected for PlanAuditSpec: the lists scan must carry the
+    * probe-union PartitionFilters AND the pushed label predicate
+    * simultaneously in the join-bearing batch plan.
     */
   private[graft] def filteredBatchProbeFrame(s: SparkSession, dir: String,
                                              nprobe: Int): DataFrame = {
@@ -4184,11 +4183,9 @@ object SparkEntry {
     * bucket-count-sized data (totals broadcast, no global window).
     */
   private def qDriftPsi(s: SparkSession, dir: String): DataFrame = {
-    // bucketing + PSI math live in StreamingDrift (one definition serves
-    // the batch gate AND the streaming monitor, so they cannot drift
-    // apart); paired one-pass form — the corpus is scanned ONCE with the
-    // ref/cur parity flag, not once per side
-    graft.streaming.StreamingDrift.psiPaired(
+    // paired one-pass form: the corpus is scanned ONCE with the ref/cur
+    // parity flag, not once per side
+    graft.stats.Stats.psiPaired(
         rdWide(s, dir, "documents")
           .withColumn("__is_ref", col("doc_id") % 2 === 0), "__is_ref")
       .select(col("feature"), col("n_buckets"), col("psi"))

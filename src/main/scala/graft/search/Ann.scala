@@ -1665,9 +1665,8 @@ object Ann {
   }
 
   /** Batched IVF probe over a PERSISTED index (VERDICT r14 item 5) —
-    * the production serving shape behind [[Search.topKBatch]] /
-    * [[graft.streaming.StreamingSearch.serveTopK]] when an index
-    * exists: every query row probes its own `nprobe` inverted lists,
+    * the production serving shape behind [[Search.topKBatch]] when an
+    * index exists: every query row probes its own `nprobe` inverted lists,
     * and the lists scan is partition-pruned to the UNION of all
     * queries' probes.
     *

@@ -59,8 +59,7 @@ object DistinctSketch {
   /** The sketch state itself: (group, bucket, rmax) — at most m rows per
     * group regardless of input size, and MERGEABLE by max(rmax), which
     * is what lets partial sketches from partitions, batches, or days be
-    * combined without touching raw data (the streaming twin appends
-    * per-batch registers and folds them with one more max).
+    * combined without touching raw data.
     */
   def hllRegisters(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val h = HashFunctions.md5Int60(col(valueCol))

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * sketch reduces a group's entire value distribution to at most
   * 64·M = 2048 integer bucket counts that MERGE BY SUM — across
   * partitions, batches, or days — so a per-source length distribution
-  * over a petabyte costs one |sources|·2048-row exchange, and
-  * streaming partials fold with one more sum (same mergeability
-  * contract as the HLL registers, spec-asserted bucket-for-bucket).
+  * over a petabyte costs one |sources|·2048-row exchange (same
+  * mergeability contract as the HLL registers, spec-asserted
+  * bucket-for-bucket).
   *
   * The bucket family is DDSketch's relative-error design (Masson,
   * Lee & Rigollet, VLDB 2019) in its log₂-linear parameterization —

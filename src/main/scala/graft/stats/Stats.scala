@@ -3,6 +3,8 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.text.TextAnalysis
+
 /** Corpus statistics — the reference's `/stats` endpoint aggregations
   * (`/root/reference/mock_vector_db_api.py:314-379`, SURVEY.md §2.6),
   * generalized over any chunk/document table. All are single partial→final
@@ -379,9 +381,8 @@ object Stats {
     retentionFromGrid(activityGrid(events, userCol, tsCol))
 
   /** The (user, ISO-week) activity grid — retention's minimal sufficient
-    * statistic, and its mergeable partial: grids of event sub-streams
-    * union-distinct to the grid of the whole stream, which is what
-    * [[graft.streaming.StreamingRetention]] stores per micro-batch.
+    * statistic, and its mergeable partial: grids of disjoint event
+    * subsets union-distinct to the grid of their union.
     */
   def activityGrid(events: DataFrame, userCol: String = "user_id",
                    tsCol: String = "ts"): DataFrame =
@@ -391,9 +392,8 @@ object Stats {
       .distinct()
 
   /** Retention from an already-distinct (user_id, week) activity grid
-    * ([[activityGrid]] of a batch, or the merged micro-batch partials of
-    * a stream). Input MUST be distinct per (user_id, week) — both
-    * producers guarantee it; a duplicated row would double-count.
+    * ([[activityGrid]]'s output). Input MUST be distinct per
+    * (user_id, week); a duplicated row would double-count.
     */
   def retentionFromGrid(gridIn: DataFrame): DataFrame = {
     val grid = gridIn
@@ -465,6 +465,45 @@ object Stats {
             (col("__n") - col("__ns")).cast("double")))
       .groupBy(col(groupCol))
       .agg(max(col("__ns")).as("n_rows"), round(max(col("__d")), 6).as("ks_d"))
+  }
+
+  /** Population stability index (q106) of the quality-score and
+    * doc-length distributions between the two halves of ONE document
+    * scan, split by the boolean `isRefCol` (true = reference snapshot):
+    * one pass with a flag instead of one scan per side. Fixed buckets
+    * (quality ×10 → 11 buckets, token count /20 capped at 9 → 10
+    * buckets) and add-one smoothing by the feature's full bucket-range
+    * cardinality keep every number an exact integer until the final ln.
+    * Buckets seen on one side only take part with count 0 on the other.
+    * Output: (feature, n_buckets, psi), one row per feature present.
+    */
+  def psiPaired(docs: DataFrame, isRefCol: String): DataFrame = {
+    val base = docs
+      .withColumn("__w", TextAnalysis.tokens(col("text")))
+      .select(col(isRefCol),
+        TextAnalysis.qualityScoreFromTokens(col("text"), col("__w")).as("__q"),
+        size(col("__w")).cast("long").as("__n_tokens"))
+    val quality = base.select(col(isRefCol), lit("quality").as("feature"),
+      floor(col("__q") * 10).cast("long").as("bucket"))
+    val length = base.select(col(isRefCol), lit("length").as("feature"),
+      least(floor(col("__n_tokens") / 20), lit(9L)).cast("long").as("bucket"))
+    val flagged = quality.unionByName(length)
+      .groupBy(col("feature"), col("bucket"))
+      .agg(sum(when(col(isRefCol), 1L).otherwise(0L)).as("n_ref"),
+        sum(when(!col(isRefCol), 1L).otherwise(0L)).as("n_cur"))
+      .withColumn("__nb",
+        when(col("feature") === "quality", lit(11)).otherwise(lit(10)))
+    val totals = flagged.groupBy(col("feature"))
+      .agg(sum(col("n_ref")).as("t_ref"), sum(col("n_cur")).as("t_cur"))
+    flagged.join(broadcast(totals), Seq("feature"))
+      .withColumn("p_ref",
+        (col("n_ref") + 1).cast("double") / (col("t_ref") + col("__nb")))
+      .withColumn("p_cur",
+        (col("n_cur") + 1).cast("double") / (col("t_cur") + col("__nb")))
+      .groupBy(col("feature"))
+      .agg(count(lit(1)).as("n_buckets"),
+        round(sum((col("p_cur") - col("p_ref")) *
+          log(col("p_cur") / col("p_ref"))), 6).as("psi"))
   }
 
   /** Burstiness of each event type as the Fano factor of its per-hour
@@ -578,17 +617,12 @@ object Stats {
     finishLateness(
       latenessHistogram(events, typeCol, tsCol, arrivalCol, blockSize), typeCol)
 
-  /** The (type, lateness_s, cnt) histogram [[disorderAudit]] is finished
-    * from — exposed separately because it is lateness's MERGEABLE
-    * partial: histograms of consecutive arrival segments sum to the
-    * whole-stream histogram PROVIDED each later segment knows the
-    * running max the earlier ones reached, which is what `floorSec`
-    * carries (the streaming twin chains it across micro-batches).
+  /** The (type, lateness_s, cnt) histogram [[disorderAudit]] is
+    * finished from.
     */
   def latenessHistogram(events: DataFrame, typeCol: String = "event_type",
                         tsCol: String = "ts", arrivalCol: String = "event_id",
-                        blockSize: Long = 65536L,
-                        floorSec: Option[Long] = None): DataFrame = {
+                        blockSize: Long = 65536L): DataFrame = {
     require(blockSize >= 2, s"need blockSize >= 2, got $blockSize")
     val w = org.apache.spark.sql.expressions.Window
     val ev = events.select(col(typeCol), col(tsCol), col(arrivalCol))
@@ -597,16 +631,12 @@ object Stats {
       .withColumn("__prevmax", max(col("__blkmax")).over(
         w.orderBy(col("__blk")).rowsBetween(w.unboundedPreceding, -1)))
       .select(col("__blk"), col("__prevmax"))
-    val floored = floorSec match {
-      case Some(f) => (c: Column) => greatest(c, timestamp_seconds(lit(f)))
-      case None => (c: Column) => c
-    }
     ev.join(blkPrefix, Seq("__blk"))
       .withColumn("__inmax", max(col(tsCol)).over(
         w.partitionBy(col("__blk")).orderBy(col(arrivalCol))
           .rowsBetween(w.unboundedPreceding, 0)))
-      .withColumn("__runmax", floored(
-        greatest(col("__inmax"), coalesce(col("__prevmax"), col("__inmax")))))
+      .withColumn("__runmax",
+        greatest(col("__inmax"), coalesce(col("__prevmax"), col("__inmax"))))
       .select(col(typeCol),
         (unix_timestamp(col("__runmax")) - unix_timestamp(col(tsCol)))
           .as("lateness_s"))
@@ -615,8 +645,7 @@ object Stats {
   }
 
   /** q117 cum-mass finisher over a (type, lateness_s, cnt) histogram —
-    * shared by the batch audit (q171) and the streaming lateness
-    * monitor, so stream == batch is structural.
+    * the batch audit's (q171) last step.
     */
   def finishLateness(hist: DataFrame,
                      typeCol: String = "event_type"): DataFrame = {

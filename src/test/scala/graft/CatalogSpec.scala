@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * item 6): every registered query and every GraftExtensions SQL
   * function must appear in README.md, so adding an operator without
   * cataloguing it fails the build instead of leaving users to read
-  * SparkEntry. Regenerate the query table with `tools/gen_catalog.py`.
-  * No SparkSession needed — the registries are plain maps and the
+  * SparkEntry. The query table is kept by hand: add a row for each new
+  * query. No SparkSession needed — the registries are plain maps and the
   * function list is read from the extensions source.
   */
 class CatalogSpec extends AnyFunSuite {
@@ -22,8 +22,8 @@ class CatalogSpec extends AnyFunSuite {
     assert(names.size >= 190, s"registry unexpectedly small: ${names.size}")
     val missing = names.filterNot(n => readme.contains(s"`$n`"))
     assert(missing.isEmpty,
-      s"queries missing from README catalog (run tools/gen_catalog.py " +
-        s"and update README.md): ${missing.toSeq.sorted.mkString(", ")}")
+      s"queries missing from README catalog (add a row to README.md's " +
+        s"query table): ${missing.toSeq.sorted.mkString(", ")}")
   }
 
   test("every GraftExtensions SQL function appears in the README catalog") {

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Skew
 
-/** Salted skew join (q219) — output identity with the plain join. */
+/** Salted skew join (q219) and salted aggregation — output identity
+  * with the plain join and the direct aggregation.
+  */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
 
@@ -70,5 +72,22 @@ class SkewSpec extends SparkSpec {
     val ex3 = intercept[IllegalArgumentException](
       Skew.saltedJoin(big, dim, "k", Seq("k1"), joinType = "full"))
     assert(ex3.getMessage.contains("inner/left"))
+  }
+
+  test("saltedCountSum equals the direct aggregation (decomposable aggs)") {
+    val df = (Seq.fill(500)(("hot", 2.0)) ++
+      Seq(("a", 1.0), ("a", 3.0), ("b", -5.0)))
+      .toDF("k", "v").repartition(8)
+    val salted = Skew.saltedCountSum(df, "k", "v", salt = 8)
+      .orderBy("k")
+      .select($"k", $"n_rows", $"sum_value", $"min_value", $"max_value", $"avg_value")
+      .as[(String, Long, Double, Double, Double, Double)].collect().toSeq
+    val direct = df.groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("s"),
+        min($"v").as("mn"), max($"v").as("mx"),
+        (sum($"v") / count(lit(1))).as("av"))
+      .orderBy("k")
+      .as[(String, Long, Double, Double, Double, Double)].collect().toSeq
+    assert(salted == direct)
   }
 }

@@ -356,6 +356,49 @@ class StatsSpec extends SparkSpec {
     assert(Stats.ksDrift(df, "v", "g").count() == 0L)
   }
 
+  test("psiPaired: empty input yields no rows; all-reference input equals " +
+    "the add-one-smoothed PSI computed on the driver") {
+    import org.apache.spark.sql.functions.{floor, least, lit, size}
+    import graft.text.TextAnalysis
+    val noDocs = Seq.empty[(String, Boolean)].toDF("text", "is_ref")
+    assert(Stats.psiPaired(noDocs, "is_ref").collect().isEmpty)
+
+    // every row is reference, so n_cur = 0 in every bucket
+    def words(n: Int) = (1 to n).map(i => s"word$i").mkString(" ")
+    val docs = Seq("short note", "another short note here",
+      "The quick brown fox jumps over the lazy dog. It was a sunny day.",
+      words(45), words(150), words(300))
+      .map(t => (t, true)).toDF("text", "is_ref")
+    // each doc's bucket per feature (quality ×10, token count /20 capped
+    // at 9), then PSI per feature over its observed buckets: t_cur = 0,
+    // p_ref = (n_ref + 1) / (N + nb), p_cur = 1 / nb
+    val toks = TextAnalysis.tokens(col("text"))
+    val buckets = docs.select(
+        floor(TextAnalysis.qualityScoreFromTokens(col("text"), toks) * 10)
+          .cast("long"),
+        least(floor(size(toks) / 20), lit(9L)).cast("long"))
+      .as[(Long, Long)].collect().toSeq
+    def psi(bs: Seq[Long], nb: Int): (Long, Double) = {
+      val counts = bs.groupBy(identity).values.map(_.length).toSeq
+      val pCur = 1.0 / nb
+      (counts.length.toLong, counts.map { c =>
+        val pRef = (c + 1).toDouble / (bs.length + nb)
+        (pCur - pRef) * math.log(pCur / pRef)
+      }.sum)
+    }
+    val want = Map("quality" -> psi(buckets.map(_._1), 11),
+      "length" -> psi(buckets.map(_._2), 10))
+    assert(want("length")._1 == 4L, want.toString) // 0, 2, 7, 9
+    val got = Stats.psiPaired(docs, "is_ref")
+      .as[(String, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(got.keySet == want.keySet, got.toString)
+    for ((f, (nb, p)) <- want) {
+      assert(got(f)._1 == nb, s"$f: $got vs $want")
+      // Spark rounds to 6 places and may sum the buckets in another order
+      assert(math.abs(got(f)._2 - p) <= 1e-6, s"$f: $got vs $want")
+    }
+  }
+
   test("fanoFactor: hand-computed variance-to-mean over the corpus hour grid") {
     // hours H0..H2 observed corpus-wide (H2 only via type B). Type A:
     // H0 -> 3 events, H1 -> 1, H2 -> 0 (zero hour counts in n only):
