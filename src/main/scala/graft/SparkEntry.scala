@@ -13,13 +13,13 @@ import graft.sources.Versioned
 import graft.stats.Stats
 import graft.text.TextAnalysis
 
-/** Driver contract — see SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is one operator from SURVEY.md §2 (or a
-  * scale-oriented extension); entries with a DuckDB-expressible equivalent
-  * also appear in [[oracleSql]] (the driver hash-compares both outputs on
-  * sf0.01). Column names/aliases are kept identical on both sides — the
-  * driver sorts columns by name before hashing.
+  * Every entry in [[registry]] is one operator from SURVEY.md §2 (or a
+  * scale-oriented extension) together with its DuckDB oracle; the driver
+  * reads them through [[queries]] and [[oracleSql]] and hash-compares both
+  * outputs on sf0.01. Column names/aliases are kept identical on both
+  * sides — the driver sorts columns by name before hashing.
   */
 object SparkEntry {
 
@@ -1362,6 +1362,27 @@ object SparkEntry {
         col("max_norm2_micro"))
   }
 
+  /** The `ctr(cid, c)` rows of a trained oracle: one `VALUES` tuple per
+    * centroid literal, one per line.
+    */
+  private def centroidValues(centers: Array[Array[Double]]): String =
+    centers.zipWithIndex.map { case (c, i) =>
+      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
+    }.mkString(",\n   ")
+
+  /** The `assign(vec_id, e, cid)` CTE over `base` × `ctr`: each vector's
+    * nearest centroid by squared L2 over `d` dims, index tie-break (the
+    * rule of spark.ml KMeansModel.transform). Returned without a `|`
+    * margin, ready to interpolate into a caller's stripMargin text.
+    */
+  private def nearestCentroidCte(d: Int): String =
+    s"""assign AS (SELECT vec_id, e, cid FROM (
+       |    SELECT vec_id, e, cid,
+       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
+       |                for i in range(0, $d)]) AS d2
+       |    FROM base, ctr)
+       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1)""".stripMargin
+
   /** DuckDB replay of everything downstream of IVF training: nearest-
     * centroid assignment (argmin squared L2 over the centroid literals,
     * index tie-break — the same rule as spark.ml KMeansModel.transform),
@@ -1370,18 +1391,10 @@ object SparkEntry {
     */
   private def ivfOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
+       | ${nearestCentroidCte(d)},
        | probes AS (SELECT cid FROM ctr, qv
        |   ORDER BY ${cosSqlAB("c", "q")} DESC, cid ASC LIMIT 2),
        | scored AS (SELECT a.vec_id, a.cid AS centroid_id, ${cosSqlAB("a.e", "q")} AS score
@@ -1401,18 +1414,10 @@ object SparkEntry {
     */
   private def retrievalQualityOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 8),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
+       | ${nearestCentroidCte(d)},
        | probes AS (SELECT query_id, cid FROM (
        |    SELECT s.query_id, cid,
        |      row_number() OVER (PARTITION BY s.query_id
@@ -1735,22 +1740,14 @@ object SparkEntry {
                                 books: Array[Array[Array[Double]]]): String = {
     val d = centers(0).length
     val sub = books(0)(0).length
-    val crows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     val brows = for {
       (book, j) <- books.zipWithIndex
       (ctr, c) <- book.zipWithIndex
     } yield s"($j, $c, [${ctr.mkString(", ")}]::DOUBLE[])"
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-       | ctr(cid, c) AS (VALUES ${crows.mkString(",\n   ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
+       | ${nearestCentroidCte(d)},
        | res AS (SELECT a.vec_id, a.cid, a.e,
        |    [a.e[i+1] - t.c[i+1] for i in range(0, $d)] AS r
        |  FROM assign a JOIN ctr t ON t.cid = a.cid),
@@ -1813,21 +1810,13 @@ object SparkEntry {
   private def ivfSq8OracleSql(centers: Array[Array[Double]],
                               m: Ann.Sq8Model, qc: Array[Long]): String = {
     val d = centers(0).length
-    val crows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-       | ctr(cid, c) AS (VALUES ${crows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | mdl(l, s) AS (VALUES ([${m.lo.mkString(", ")}]::DOUBLE[],
        |   [${m.span.mkString(", ")}]::DOUBLE[])),
        | qc(cq) AS (VALUES ([${qc.mkString(", ")}]::BIGINT[])),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ${nearestCentroidCte(d)},
        | probes AS (SELECT cid FROM ctr, qv
        |   ORDER BY ${cosSqlAB("c", "q")} DESC, cid ASC LIMIT 2),
        | enc AS (SELECT a.vec_id, a.cid, a.e,
@@ -2859,21 +2848,13 @@ object SparkEntry {
   private def marginFrontierOracleSql(centers: Array[Array[Double]],
                                       probeRows: Seq[(Long, Int, Int)]): String = {
     val d = centers(0).length
-    val crows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     val prows = probeRows.map { case (q, m, c) => s"($q, $m, $c)" }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q
        |   FROM embeddings WHERE vec_id < 4),
-       | ctr(cid, c) AS (VALUES ${crows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | probes(query_id, margin_pm, cid) AS (VALUES ${prows.mkString(", ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ${nearestCentroidCte(d)},
        | ranked AS (SELECT query_id, margin_pm, vec_id FROM (
        |    SELECT p.query_id, p.margin_pm, a.vec_id,
        |      row_number() OVER (PARTITION BY p.query_id, p.margin_pm
@@ -2928,9 +2909,6 @@ object SparkEntry {
   private def plaidOracleSql(centers: Array[Array[Double]],
                              queryVecs: Seq[Seq[Double]]): String = {
     val d = centers(0).length
-    val crows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     val ctabs = Search.centroidCosTables(centers, queryVecs)
     val tabDefs = ctabs.zipWithIndex.map { case (tab, i) =>
       s"t$i(a$i) AS (VALUES ([${tab.mkString(", ")}]::DOUBLE[]))"
@@ -2941,7 +2919,7 @@ object SparkEntry {
     val idx = queryVecs.indices
     s"""WITH base AS (SELECT vec_id, vec_id // 8 AS doc_id,
        |    embedding::DOUBLE[] AS e FROM embeddings),
-       | ctr(cid, c) AS (VALUES ${crows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | $tabDefs,
        | $qDefs,
        | assign AS (SELECT vec_id, doc_id, e, cid FROM (
@@ -2994,13 +2972,10 @@ object SparkEntry {
     */
   private def adaptiveOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q
        |   FROM embeddings WHERE vec_id < 4),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | cs AS (SELECT query_id, cid, round(${cosSqlAB("c", "q")}, 6) AS cscore,
        |    row_number() OVER (PARTITION BY query_id
        |      ORDER BY ${cosSqlAB("c", "q")} DESC, cid ASC) AS prank
@@ -3010,12 +2985,7 @@ object SparkEntry {
        |     USING (query_id)
        |  WHERE prank <= 8 AND cscore >= bscore - 0.2),
        | np AS (SELECT query_id, count(*) AS n_probes FROM probes GROUP BY 1),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ${nearestCentroidCte(d)},
        | scored AS (SELECT p.query_id, a.vec_id, a.cid AS centroid_id,
        |    ${cosSqlAB("a.e", "q.q")} AS score
        |   FROM assign a JOIN probes p ON p.cid = a.cid
@@ -3137,22 +3107,14 @@ object SparkEntry {
                              books: Array[Array[Array[Double]]]): String = {
     val d = centers(0).length
     val sub = books(0)(0).length
-    val crows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     val brows = for {
       (book, j) <- books.zipWithIndex
       (ctr, c) <- book.zipWithIndex
     } yield s"($j, $c, [${ctr.mkString(", ")}]::DOUBLE[])"
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-       | ctr(cid, c) AS (VALUES ${crows.mkString(",\n   ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
+       | ${nearestCentroidCte(d)},
        | probes AS (SELECT cid FROM ctr, qv
        |   ORDER BY ${cosSqlAB("c", "q")} DESC, cid ASC LIMIT 2),
        | books(j, bc, bctr) AS (VALUES ${brows.mkString(",\n   ")}),
@@ -3827,18 +3789,10 @@ object SparkEntry {
     */
   private def semDedupOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
        |   WHERE vec_id < 2000),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
+       | ${nearestCentroidCte(d)},
        | drops AS (SELECT DISTINCT a.vec_id
        |   FROM assign a JOIN assign b ON a.cid = b.cid AND b.vec_id < a.vec_id
        |   WHERE round(${cosSqlAB("a.e", "b.e")}, 6) >= 0.92)
@@ -4932,12 +4886,9 @@ object SparkEntry {
     */
   private def clusterQualityOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
        |   WHERE vec_id < 2000),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | assign AS (SELECT vec_id, cid, d2 FROM (
        |    SELECT vec_id, cid,
        |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
@@ -5991,22 +5942,14 @@ object SparkEntry {
 
   private def nprobeOracleSql(centers: Array[Array[Double]]): String = {
     val d = centers(0).length
-    val rows = centers.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.mkString(", ")}]::DOUBLE[])"
-    }
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
        | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
        | nn AS (SELECT count(*)::DOUBLE AS n FROM base),
-       | ctr(cid, c) AS (VALUES ${rows.mkString(",\n   ")}),
+       | ctr(cid, c) AS (VALUES ${centroidValues(centers)}),
        | pr AS (SELECT cid, row_number() OVER (
        |     ORDER BY ${cosSqlAB("c", "q")} DESC, cid ASC) AS prank
        |   FROM ctr, qv),
-       | assign AS (SELECT vec_id, e, cid FROM (
-       |    SELECT vec_id, e, cid,
-       |      list_sum([(e[i+1] - c[i+1]) * (e[i+1] - c[i+1])
-       |                for i in range(0, $d)]) AS d2
-       |    FROM base, ctr)
-       |   QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) = 1),
+       | ${nearestCentroidCte(d)},
        | scored AS (SELECT a.vec_id, round(${cosSqlAB("a.e", "q")}, 6) AS score,
        |    pr.prank FROM assign a JOIN pr ON a.cid = pr.cid, qv),
        | exact5 AS (SELECT vec_id FROM scored
@@ -6207,259 +6150,11 @@ object SparkEntry {
 
   // ===========================================================================
 
-  /** One per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_cosine_topk" -> (qCosineTopK _),
-    "q02_cosine_topk_batch" -> (qCosineTopKBatch _),
-    "q03_stats_by_source" -> (qStatsBySource _),
-    "q04_corpus_stats" -> (qCorpusStats _),
-    "q05_last_wins_avg" -> (qLastWinsAvg _),
-    "q06_tpch_q1" -> (qTpchQ1 _),
-    "q07_top_customers" -> (qTopCustomers _),
-    "q08_window_rank" -> (qWindowRank _),
-    "q09_events_tumbling" -> (qEventsTumbling _),
-    "q10_dedup_exact" -> (qDedupExact _),
-    "q11_token_stats" -> (qTokenStats _),
-    "q12_chunk_stats" -> (qChunkStats _),
-    "q13_minhash_bands" -> (qMinhashBands _),
-    "q14_minhash_pairs" -> (qMinhashPairs _),
-    "q15_simhash" -> (qSimhash _),
-    "q16_langid" -> (qLangId _),
-    "q17_quality_score" -> (qQualityScore _),
-    "q18_bpe_tokens" -> (qBpeTokens _),
-    "q19_fingerprints" -> (qFingerprints _),
-    "q20_embed_neardup" -> (qEmbedNearDup _),
-    "q21_ivf_topk" -> (qIvfTopK _),
-    "q22_bucket_stats" -> (qBucketStats _),
-    "q23_media_features" -> (qMediaFeatures _),
-    "q24_frame_sample" -> (qFrameSample _),
-    "q25_decode_stats" -> (qDecodeStats _),
-    "q26_lang_histogram" -> (qExtHistogram _),
-    "q27_display_results" -> (qDisplayResults _),
-    "q28_ivf_kmeans" -> (qIvfKmeans _),
-    "q29_events_sliding" -> (qEventsSliding _),
-    "q30_events_session" -> (qEventsSession _),
-    "q31_label_centroids" -> (qLabelCentroids _),
-    "q32_e2e_pipeline" -> (qE2ePipeline _),
-    "q33_customers_no_orders" -> (qCustomersNoOrders _),
-    "q34_asof_click_view" -> (qAsofClickView _),
-    "q35_approx_stats" -> (qApproxStats _),
-    "q36_range_join" -> (qRangeJoinPairs _),
-    "q37_rollup_counts" -> (qRollupCounts _),
-    "q38_pivot_langs" -> (qPivotLangs _),
-    "q39_regional_revenue" -> (qRegionalRevenue _),
-    "q40_dup_clusters" -> (qDupClusters _),
-    "q41_set_ops" -> (qSetOps _),
-    "q42_hash_split" -> (qHashSplit _),
-    "q43_top_tokens" -> (qTopTokens _),
-    "q44_l2_topk" -> (qL2TopK _),
-    "q45_tfidf_top_terms" -> (qTfidfTopTerms _),
-    "q46_grouped_topk" -> (qGroupedTopK _),
-    "q47_p95_outliers" -> (qP95Outliers _),
-    "q48_corr_stats" -> (qCorrStats _),
-    "q49_sketch_project" -> (qSketchProject _),
-    "q50_stratified_sample" -> (qStratifiedSample _),
-    "q51_repetition" -> (qRepetition _),
-    "q52_contamination" -> (qContamination _),
-    "q53_pack_sequences" -> (qPackSequences _),
-    "q54_cleaning_funnel" -> (qCleaningFunnel _),
-    "q55_simhash_pairs" -> (qSimhashPairs _),
-    "q56_quantize" -> (qQuantize _),
-    "q57_countmin" -> (qCountMin _),
-    "q58_semi_join" -> (qSemiJoin _),
-    "q59_window_suite" -> (qWindowSuite _),
-    "q60_gap_fill" -> (qGapFill _),
-    "q61_lang_coverage" -> (qLangCoverage _),
-    "q62_sql_surface" -> (qSqlSurface _),
-    "q63_bm25_topk" -> (qBm25TopK _),
-    "q64_hybrid_rrf" -> (qHybridRrf _),
-    "q65_pq_topk" -> (qPqTopK _),
-    "q66_pii_redact" -> (qPiiRedact _),
-    "q67_cube_counts" -> (qCubeCounts _),
-    "q68_bloom_join" -> (qBloomJoin _),
-    "q69_bigrams" -> (qBigrams _),
-    "q70_crossmodal" -> (qCrossModal _),
-    "q71_hamming_topk" -> (qHammingTopK _),
-    "q72_edit_pairs" -> (qEditPairs _),
-    "q73_segment_dedup" -> (qSegmentDedup _),
-    "q74_mixture_weights" -> (qMixtureWeights _),
-    "q75_containment" -> (qContainmentPairs _),
-    "q76_above_avg_orders" -> (qAboveAvgOrders _),
-    "q77_rag_context" -> (qRagContext _),
-    "q78_zipf" -> (qZipf _),
-    "q79_funnel" -> (qFunnel _),
-    "q80_mmr_topk" -> (qMmrTopK _),
-    "q81_hamming_rerank" -> (qHammingRerank _),
-    "q82_url_normalize" -> (qUrlNormalize _),
-    "q83_bigram_novelty" -> (qBigramNovelty _),
-    "q84_nucleus_vocab" -> (qNucleusVocab _),
-    "q85_boilerplate_removal" -> (qBoilerplateRemoval _),
-    "q86_keep_best" -> (qKeepBest _),
-    "q87_token_budget" -> (qTokenBudget _),
-    "q88_incremental_dedup" -> (qIncrementalDedup _),
-    "q89_matryoshka_topk" -> (qMatryoshka _),
-    "q90_shard_balance" -> (qShardBalance _),
-    "q91_hard_negatives" -> (qHardNegatives _),
-    "q92_epoch_shuffle" -> (qEpochShuffle _),
-    "q93_pseudo_label" -> (qPseudoLabel _),
-    "q94_dedup_funnel" -> (qDedupFunnel _),
-    "q95_host_cap" -> (qHostCap _),
-    "q96_scrub_benchmark" -> (qScrubBenchmark _),
-    "q97_containment_exact" -> (qContainmentExact _),
-    "q98_ingest_pipeline" -> (qIngestPipeline _),
-    "q99_bigram_surprisal" -> (qBigramSurprisal _),
-    "q100_semdedup" -> (qSemDedup _),
-    "q101_weighted_sample" -> (qWeightedSample _),
-    "q102_margin_mining" -> (qMarginMining _),
-    "q103_group_budget" -> (qGroupBudget _),
-    "q104_length_batches" -> (qLengthBatches _),
-    "q105_ann_recall" -> (qAnnRecall _),
-    "q106_drift_psi" -> (qDriftPsi _),
-    "q107_pagerank" -> (qPageRank _),
-    "q108_substring_dup" -> (qSubstringDup _),
-    "q109_dsir" -> (qDsir _),
-    "q110_leak_split" -> (qLeakSplit _),
-    "q111_gopher_rules" -> (qGopherRules _),
-    "q112_nb_lang" -> (qNbLang _),
-    "q113_multiprobe_lsh" -> (qMultiprobe _),
-    "q114_sq8_ann" -> (qSq8Ann _),
-    "q115_ppl_buckets" -> (qPplBuckets _),
-    "q116_source_overlap" -> (qSourceOverlap _),
-    "q117_exact_quantiles" -> (qExactQuantiles _),
-    "q118_hubness" -> (qHubness _),
-    "q119_dedup_curve" -> (qDedupCurve _),
-    "q120_fertility" -> (qFertility _),
-    "q121_intradoc_repeats" -> (qIntradocRepeats _),
-    "q122_blocklist" -> (qBlocklist _),
-    "q123_source_similarity" -> (qSourceSimilarity _),
-    "q124_embed_covariance" -> (qEmbedCovariance _),
-    "q125_mixed_lang" -> (qMixedLang _),
-    "q126_whitened_topk" -> (qWhitenedTopK _),
-    "q127_bpe_merge" -> (qBpeMerge _),
-    "q128_snapshot_diff" -> (qSnapshotDiff _),
-    "q129_balanced_sample" -> (qBalancedSample _),
-    "q130_hll_vocab" -> (qHllVocab _),
-    "q131_kmv_overlap" -> (qKmvOverlap _),
-    "q132_unimax" -> (qUnimax _),
-    "q133_intradoc_scrub" -> (qIntradocScrub _),
-    "q134_quantile_sketch" -> (qQuantileSketch _),
-    "q135_temperature_sample" -> (qTemperatureSample _),
-    "q136_doremi_mixture" -> (qDoremiMixture _),
-    "q137_quality_classifier" -> (qQualityClassifier _),
-    "q138_media_neardup" -> (qMediaNearDup _),
-    "q139_vocab_coverage" -> (qVocabCoverage _),
-    "q140_heavy_hitters" -> (qHeavyHitters _),
-    "q141_quality_ensemble" -> (qQualityEnsemble _),
-    "q142_label_cohesion" -> (qLabelCohesion _),
-    "q143_collocations" -> (qCollocations _),
-    "q144_cluster_quality" -> (qClusterQuality _),
-    "q145_heaps_law" -> (qHeapsLaw _),
-    "q146_winsorized_stats" -> (qWinsorizedStats _),
-    "q147_dup_degree" -> (qDupDegree _),
-    "q148_event_transitions" -> (qEventTransitions _),
-    "q149_kn_counts" -> (qKnCounts _),
-    "q150_embedding_outliers" -> (qEmbeddingOutliers _),
-    "q151_embed_decontamination" -> (qEmbedDecontamination _),
-    "q152_chunk_boundaries" -> (qChunkBoundaries _),
-    "q153_fim_spans" -> (qFimSpans _),
-    "q154_source_kl" -> (qSourceKl _),
-    "q155_quality_calibration" -> (qQualityCalibration _),
-    "q156_bigram_coverage" -> (qBigramCoverage _),
-    "q157_dedup_recall" -> (qDedupRecall _),
-    "q158_retention_cohorts" -> (qRetentionCohorts _),
-    "q159_kanonymity" -> (qKAnonymity _),
-    "q160_kn_score" -> (qKnScore _),
-    "q161_ks_drift" -> (qKsDrift _),
-    "q162_lpa_communities" -> (qLpaCommunities _),
-    "q163_label_confusion" -> (qLabelConfusion _),
-    "q164_burstiness" -> (qBurstiness _),
-    "q165_gini_length" -> (qGiniLength _),
-    "q166_gap_calibration" -> (qGapCalibration _),
-    "q167_lang_mismatch" -> (qLangMismatch _),
-    "q168_sniff_audit" -> (qSniffAudit _),
-    "q169_source_lang_mi" -> (qSourceLangMi _),
-    "q170_volume_trend" -> (qVolumeTrend _),
-    "q171_disorder_audit" -> (qDisorderAudit _),
-    "q172_curriculum_shards" -> (qCurriculumShards _),
-    "q173_template_dups" -> (qTemplateDups _),
-    "q174_ivfpq" -> (qIvfPq _),
-    "q175_cdc_dedup" -> (qCdcDedup _),
-    "q176_dim_audit" -> (qDimAudit _),
-    "q177_scene_cuts" -> (qSceneCuts _),
-    "q178_seasonality" -> (qSeasonality _),
-    "q179_volume_anomaly" -> (qVolumeAnomaly _),
-    "q180_rocchio_prf" -> (qRocchioPrf _),
-    "q181_packing_curve" -> (qPackingCurve _),
-    "q182_stale_embeddings" -> (qStaleEmbeddings _),
-    "q183_knn_label_noise" -> (qKnnLabelNoise _),
-    "q184_signal_agreement" -> (qSignalAgreement _),
-    "q185_dedup_scaling" -> (qDedupScaling _),
-    "q186_nprobe_curve" -> (qNprobeCurve _),
-    "q187_dup_powerlaw" -> (qDupPowerlaw _),
-    "q188_effective_rank" -> (qEffectiveRank _),
-    "q189_token_funnel" -> (qTokenFunnel _),
-    "q190_retrieval_margin" -> (qRetrievalMargin _),
-    "q191_dup_exposure" -> (qDupExposure _),
-    "q192_centroid_drift" -> (qCentroidDrift _),
-    "q193_ivf_probe_topk" -> (qIvfProbeTopK _),
-    "q194_lsh_planner" -> (qLshPlanner _),
-    "q195_doc_informativeness" -> (qDocInformativeness _),
-    "q196_char_entropy" -> (qCharEntropy _),
-    "q197_token_position_bias" -> (qTokenPositionBias _),
-    "q198_dup_by_length" -> (qDupByLength _),
-    "q199_token_dispersion" -> (qTokenDispersion _),
-    "q200_minhash_accuracy" -> (qMinhashAccuracy _),
-    "q201_label_affinity" -> (qLabelAffinity _),
-    "q202_context_budget" -> (qContextBudget _),
-    "q203_pq_distortion" -> (qPqDistortion _),
-    "q204_transition_entropy" -> (qTransitionEntropy _),
-    "q205_ivf_batch_probe" -> (qIvfBatchProbe _),
-    "q206_split_leakage" -> (qSplitLeakage _),
-    "q207_quality_dup_joint" -> (qQualityDupJoint _),
-    "q208_budget_curve" -> (qBudgetCurve _),
-    "q209_norm_audit" -> (qNormAudit _),
-    "q210_text_serving" -> (qTextServing _),
-    "q211_ivfpq_residual" -> (qIvfPqResidual _),
-    "q212_filtered_ann" -> (qFilteredAnn _),
-    "q213_retrieval_quality" -> (qRetrievalQuality _),
-    "q214_ivf_delete" -> (qIvfDelete _),
-    "q215_ivf_upsert" -> (qIvfUpsert _),
-    "q216_filtered_batch" -> (qFilteredBatch _),
-    "q217_sq8_affine" -> (qSq8Search _),
-    "q218_zorder_audit" -> (qZorderAudit _),
-    "q219_salted_join" -> (qSaltedJoin _),
-    "q220_maxsim" -> (qMaxSim _),
-    "q221_adaptive_probe" -> (qAdaptiveProbe _),
-    "q222_ivf_sq8" -> (qIvfSq8 _),
-    "q223_maxsim_plaid" -> (qMaxSimPlaid _),
-    "q224_margin_frontier" -> (qMarginFrontier _),
-    "q225_matryoshka_curve" -> (qMatryoshkaCurve _),
-    "q226_versioned_reads" -> (qVersionedReads _),
-    "q227_stats_pruned_read" -> (qStatsPrunedRead _),
-    "q228_versioned_merge" -> (qVersionedMerge _),
-    "q229_versioned_changes" -> (qVersionedChanges _),
-    "q230_versioned_compact" -> (qVersionedCompact _),
-    "q231_versioned_delete" -> (qVersionedDelete _),
-    "q232_cdc_typed" -> (qCdcTyped _),
-    "q233_ivf_generations" -> (qIvfGenerations _),
-    "q234_schema_evolution" -> (qSchemaEvolution _),
-    "q235_value_pruned_read" -> (qValuePrunedRead _),
-    "q236_type_widening" -> (qTypeWidening _),
-    "q237_zorder_compact" -> (qZorderCompact _),
-    "q238_index_sync" -> (qIndexSync _),
-    "q239_column_drop" -> (qColumnDrop _),
-    "q240_versioned_restore" -> (qVersionedRestore _),
-    "q241_metadata_count" -> (qMetadataCount _),
-    "q242_bloom_point_lookup" -> (qBloomPointLookup _),
-    "q243_versioned_update" -> (qVersionedUpdate _),
-    "q244_shallow_clone" -> (qShallowClone _),
-    "q245_timestamp_travel" -> (qTimestampTravel _),
-    "q246_cdc_follow" -> (qCdcFollow _),
-    "q247_version_expiry" -> (qVersionExpiry _),
-    "q248_overwrite_where" -> (qOverwriteWhere _),
-    "q249_check_constraints" -> (qCheckConstraints _),
-    "q250_table_history" -> (qTableHistory _),
-  )
+  /** The frame builder of every registered query, by name: a view of
+    * [[registry]].
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.frame).toMap
 
   /** Fail a main that is handed a name [[queries]] does not hold, before
     * it builds a session: a misspelled name would otherwise run nothing
@@ -6715,68 +6410,47 @@ object SparkEntry {
   }
 
   /** The DuckDB oracle of query `name` on data dir `dir`: equivalent
-    * ANSI SQL runnable on the same parquet tables, or None for a
-    * rows-only query. Most entries are static text. The entries of
-    * queries that train or derive state (centroids, codebooks, SQ8 and
+    * ANSI SQL runnable on the same parquet tables, or None for a name
+    * that is not registered. Most oracles are static text. The oracles
+    * of queries that train or derive state (centroids, codebooks, SQ8 and
     * whitening models, driver-planned probe sets) embed that state as
     * literals, read from the same build-once cache or derivation the
     * query itself uses — so the oracle is a function of the data dir
     * alone, whether or not the query has run.
     */
   def oracleSql(s: SparkSession, dir: String, name: String): Option[String] =
-    oracleSqlStatic.get(name).orElse(trainedOracleSql(s, dir, name))
+    registry.find(_.name == name).map(_.oracle(s, dir))
 
-  private def trainedOracleSql(s: SparkSession, dir: String,
-                               name: String): Option[String] = name match {
-    case "q28_ivf_kmeans" => Some(ivfOracleSql(ivfIndexFor(s, dir).centers))
-    case "q65_pq_topk" => Some(pqOracleSql(pqIndexFor(s, dir).codebooks))
-    case "q100_semdedup" =>
-      Some(semDedupOracleSql(workingSetClustersFor(s, dir).centers))
-    case "q107_pagerank" => Some(pageRankOracleSql(linkGraphNodes(s, dir)._2))
-    case "q126_whitened_topk" =>
-      val (w, mean) = whitenModelFor(s, dir, 16)
-      Some(whitenedOracleSql(w, mean))
-    case "q144_cluster_quality" =>
-      Some(clusterQualityOracleSql(workingSetClustersFor(s, dir).centers))
-    case "q174_ivfpq" =>
-      val index = ivfPqIndexFor(s, dir)
-      Some(ivfPqOracleSql(index.centers, index.codebooks))
-    case "q186_nprobe_curve" => Some(nprobeOracleSql(ivfIndexFor(s, dir).centers))
-    case "q203_pq_distortion" =>
-      Some(pqDistortionOracleSql(pqIndexFor(s, dir).codebooks))
-    case "q211_ivfpq_residual" =>
-      val index = ivfPqResIndexFor(s, dir)
-      Some(ivfPqResOracleSql(index.centers, index.codebooks))
-    case "q213_retrieval_quality" =>
-      Some(retrievalQualityOracleSql(ivfIndexFor(s, dir).centers))
-    case "q217_sq8_affine" => Some(sq8OracleSql(sq8ModelFor(s, dir)))
-    case "q221_adaptive_probe" =>
-      Some(adaptiveOracleSql(ivfIndexFor(s, dir).centers))
-    case "q222_ivf_sq8" =>
-      val path = ivfSq8IndexFor(s, dir)
-      val model = Ann.readSq8Model(s, path)
-      Some(ivfSq8OracleSql(Ann.readIvf(s, path).centers, model,
-        model.encode(queryVec(rd(s, dir, "embeddings")))))
-    case "q223_maxsim_plaid" =>
-      Some(plaidOracleSql(ivfIndexFor(s, dir).centers, plaidQueries(s, dir)))
-    case "q224_margin_frontier" =>
-      Some(marginFrontierOracleSql(ivfIndexFor(s, dir).centers,
-        marginProbePlan(s, dir)._2))
-    case "q225_matryoshka_curve" =>
-      Some(matryoshkaCurveOracleSql(
-        queryVec(rd(s, dir, "embeddings")).length))
-    case _ => None
+  /** One registered query: its frame builder, and the DuckDB oracle its
+    * result is hash-compared against (`Verify` + `tools/check_oracle.py`).
+    */
+  final case class Query(name: String,
+                         frame: (SparkSession, String) => DataFrame,
+                         oracle: (SparkSession, String) => String)
+
+  /** The oracle of a query whose DuckDB SQL is fixed text. */
+  private def sql(text: String): (SparkSession, String) => String = (_, _) => text
+
+  private def distinctNames(all: Seq[Query]): Seq[Query] = {
+    val names = all.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    require(dups.isEmpty, s"duplicate query names: ${dups.sorted.mkString(", ")}")
+    all
   }
 
-  private lazy val oracleSqlStatic: Map[String, String] = Map(
-    "q01_cosine_topk" ->
+  /** Every registered query, in number order: the one place a query's
+    * name, builder and oracle are written. [[queries]] and [[oracleSql]]
+    * are views of it.
+    */
+  private[graft] lazy val registry: Seq[Query] = distinctNames(Seq(
+    Query("q01_cosine_topk", qCosineTopK, sql(
       s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
          | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
          | scored AS (SELECT vec_id, label, $CosSql AS score FROM base, qv),
          | topk AS (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)
-         |SELECT vec_id, label, round(score, 6) AS score FROM topk WHERE score >= 0.1""".stripMargin,
+         |SELECT vec_id, label, round(score, 6) AS score FROM topk WHERE score >= 0.1""".stripMargin)),
 
-    "q02_cosine_topk_batch" ->
+    Query("q02_cosine_topk_batch", qCosineTopKBatch, sql(
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 4),
          | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
@@ -6784,30 +6458,30 @@ object SparkEntry {
          |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
          |  FROM scored)
          |SELECT query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 5 AND score >= 0.0 AND query_id <> vec_id""".stripMargin,
+         |FROM ranked WHERE rank <= 5 AND score >= 0.0 AND query_id <> vec_id""".stripMargin)),
 
-    "q03_stats_by_source" ->
+    Query("q03_stats_by_source", qStatsBySource, sql(
       """SELECT source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
         | round(avg(n_chars), 4) AS avg_chars
-        |FROM documents GROUP BY source""".stripMargin,
+        |FROM documents GROUP BY source""".stripMargin)),
 
-    "q04_corpus_stats" ->
+    Query("q04_corpus_stats", qCorpusStats, sql(
       """SELECT count(*) AS total_documents,
         | count(DISTINCT source) AS unique_sources,
         | count(DISTINCT lang) AS n_langs,
         | sum(n_chars)::BIGINT AS total_chars,
         | round(sum(n_chars) / 1024.0, 4) AS total_kb
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin)),
 
-    "q05_last_wins_avg" ->
+    Query("q05_last_wins_avg", qLastWinsAvg, sql(
       """WITH last_orders AS (
         |  SELECT o_custkey, o_totalprice AS last_price,
         |   row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
         |  FROM orders)
         |SELECT round(avg(last_price), 4) AS avg_last_price, count(*) AS n_customers
-        |FROM last_orders WHERE rn = 1""".stripMargin,
+        |FROM last_orders WHERE rn = 1""".stripMargin)),
 
-    "q06_tpch_q1" ->
+    Query("q06_tpch_q1", qTpchQ1, sql(
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity), 2) AS sum_qty,
         | round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -6816,9 +6490,9 @@ object SparkEntry {
         | round(avg(l_discount), 6) AS avg_disc,
         | count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "q07_top_customers" ->
+    Query("q07_top_customers", qTopCustomers, sql(
       """SELECT c_custkey, c_name,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
         | count(*) AS n_items
@@ -6826,29 +6500,29 @@ object SparkEntry {
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_custkey, c_name
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
+        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin)),
 
-    "q08_window_rank" ->
+    Query("q08_window_rank", qWindowRank, sql(
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |   row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
+        |  FROM orders) WHERE rn <= 3""".stripMargin)),
 
-    "q09_events_tumbling" ->
+    Query("q09_events_tumbling", qEventsTumbling, sql(
       """SELECT floor(epoch(ts) / 600)::BIGINT * 600 AS bucket_start, event_type,
         | count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
+        |FROM events GROUP BY 1, 2""".stripMargin)),
 
-    "q10_dedup_exact" ->
+    Query("q10_dedup_exact", qDedupExact, sql(
       """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text)""".stripMargin,
+        |FROM documents GROUP BY md5(text)""".stripMargin)),
 
-    "q11_token_stats" ->
+    Query("q11_token_stats", qTokenStats, sql(
       """SELECT source, count(*) AS n_docs,
         | sum(len(regexp_split_to_array(trim(text), '\s+')))::BIGINT AS total_tokens,
         | max(len(regexp_split_to_array(trim(text), '\s+'))) AS max_tokens,
         | min(len(regexp_split_to_array(trim(text), '\s+'))) AS min_tokens
-        |FROM documents GROUP BY source""".stripMargin,
+        |FROM documents GROUP BY source""".stripMargin)),
 
     // q12: the chunker's cursor loop (SURVEY §2.3/§2.9.3-4) replayed as a
     // DuckDB recursive CTE. chunkEndSql(s) mirrors Chunker.chunkSpans for
@@ -6857,7 +6531,7 @@ object SparkEntry {
     // break char kept) is s+200-strpos(reverse(win), nl), else the last
     // ' ' in the back half, else a hard cut; the cursor advances by
     // end-50 only when that moves (degenerate-overlap guard).
-    "q12_chunk_stats" -> {
+    Query("q12_chunk_stats", qChunkStats, sql {
       s"""WITH RECURSIVE docs0 AS (
          |  SELECT doc_id, source, text AS t, length(text) AS len
          |  FROM documents WHERE length(text) > 0),
@@ -6878,40 +6552,13 @@ object SparkEntry {
          | count(DISTINCT doc_id) AS n_docs,
          | max(n)::INT AS max_chunks_per_doc
          |FROM per_doc GROUP BY source""".stripMargin
-    },
+    }),
 
-    // the ingest fixture's fate arithmetic (doc_id % 13: 0 hidden,
-    // 1 bad extension, 2 empty file; doc 3 padded past the 10 MB F3
-    // cap) + the q12 chunk-span recursion, with chunk text extracted —
-    // replays scan→filter→decode→chunk
-    "q98_ingest_pipeline" ->
-      s"""WITH RECURSIVE docs0 AS (
-         |  SELECT doc_id,
-         |    'sub' || (doc_id % 3)::VARCHAR || '/doc_' || doc_id::VARCHAR || '.md' AS path,
-         |    text AS t, length(text) AS len
-         |  FROM documents
-         |  WHERE doc_id < 60 AND doc_id % 13 NOT IN (0, 1, 2)
-         |    AND doc_id <> 3 -- F3: the on-disk file is > 10 MB, scan drops it
-         |    AND trim(text) <> ''),
-         | spans(doc_id, path, t, len, s, e, idx) AS (
-         |  SELECT doc_id, path, t, len, 0, ${chunkEndSql("0")}, 0 FROM docs0
-         |  UNION ALL
-         |  SELECT doc_id, path, t, len, ns, ${chunkEndSql("ns")}, idx + 1 FROM (
-         |    SELECT doc_id, path, t, len, idx,
-         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
-         |    FROM spans
-         |    WHERE len > 200)
-         |  WHERE ns < len),
-         | tot AS (SELECT doc_id, count(*)::INT AS total_chunks FROM spans GROUP BY doc_id)
-         |SELECT s.doc_id, s.path, s.idx AS chunk_index, t.total_chunks,
-         |  substr(s.t, s.s + 1, s.e - s.s) AS chunk_text
-         |FROM spans s JOIN tot t USING (doc_id)""".stripMargin,
-
-    "q13_minhash_bands" ->
+    Query("q13_minhash_bands", qMinhashBands, sql(
       s"""WITH $MinhashCtes
-         |SELECT doc_id, band, band_hash FROM bands""".stripMargin,
+         |SELECT doc_id, band, band_hash FROM bands""".stripMargin)),
 
-    "q14_minhash_pairs" ->
+    Query("q14_minhash_pairs", qMinhashPairs, sql(
       s"""WITH $MinhashCtes,
          | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |   FROM bands x JOIN bands y
@@ -6919,11 +6566,11 @@ object SparkEntry {
          |SELECT doc_a, doc_b,
          | round(len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
          |   / len(list_distinct(sa.shingles || sb.shingles))::DOUBLE, 6) AS jaccard
-         |FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b""".stripMargin,
+         |FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b""".stripMargin)),
 
-    "q15_simhash" -> s"SELECT doc_id, $SimhashSql FROM ($TokenHashesSql)",
+    Query("q15_simhash", qSimhash, sql(s"SELECT doc_id, $SimhashSql FROM ($TokenHashesSql)")),
 
-    "q16_langid" ->
+    Query("q16_langid", qLangId, sql(
       s"""WITH words AS (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
          | s AS (SELECT
          |  len(list_filter(w, x -> list_contains($EnStopSql, x))) AS s_en,
@@ -6935,9 +6582,9 @@ object SparkEntry {
          | m AS (SELECT *, greatest(s_en, s_fr, s_de, s_es, s_zh) AS mx FROM s)
          |SELECT CASE WHEN mx = 0 THEN 'unknown' WHEN s_en = mx THEN 'en' WHEN s_fr = mx THEN 'fr'
          |  WHEN s_de = mx THEN 'de' WHEN s_es = mx THEN 'es' ELSE 'zh' END AS pred_lang,
-         | count(*) AS n_docs FROM m GROUP BY 1""".stripMargin,
+         | count(*) AS n_docs FROM m GROUP BY 1""".stripMargin)),
 
-    "q17_quality_score" ->
+    Query("q17_quality_score", qQualityScore, sql(
       s"""WITH q AS (SELECT source, round((
          |   least(len(w) / 100.0, 1.0)
          | + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
@@ -6945,45 +6592,45 @@ object SparkEntry {
          | + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q
          | FROM (SELECT source, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents))
          |SELECT source, count(*) AS n_docs, round(avg(q), 4) AS avg_quality
-         |FROM q GROUP BY source""".stripMargin,
+         |FROM q GROUP BY source""".stripMargin)),
 
-    "q18_bpe_tokens" ->
+    Query("q18_bpe_tokens", qBpeTokens, sql(
       """SELECT source, count(*) AS n_docs,
         | sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')))::BIGINT AS total_bpe_tokens
-        |FROM documents GROUP BY source""".stripMargin,
+        |FROM documents GROUP BY source""".stripMargin)),
 
-    "q19_fingerprints" ->
+    Query("q19_fingerprints", qFingerprints, sql(
       s"""SELECT doc_id, unnest(list_distinct([h for h in
          |  [${h32Sql("substr(t, i, 16)")} for i in range(1, greatest(len(t) - 15, 1) + 1)]
          |  if h % 16 = 0])) AS fp
-         |FROM (SELECT doc_id, lower(trim(text)) AS t FROM documents)""".stripMargin,
+         |FROM (SELECT doc_id, lower(trim(text)) AS t FROM documents)""".stripMargin)),
 
-    "q20_embed_neardup" ->
+    Query("q20_embed_neardup", qEmbedNearDup, sql(
       s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |  ${bucketSql("embedding")} AS bucket FROM embeddings)
          |SELECT x.vec_id AS id_a, y.vec_id AS id_b, round(${cosSqlAB("x.v", "y.v")}, 6) AS score
          |FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
-         |WHERE ${cosSqlAB("x.v", "y.v")} >= 0.3""".stripMargin,
+         |WHERE ${cosSqlAB("x.v", "y.v")} >= 0.3""".stripMargin)),
 
-    "q21_ivf_topk" ->
+    Query("q21_ivf_topk", qIvfTopK, sql(
       s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |  ${bucketSql("embedding")} AS bucket FROM embeddings),
          | q AS (SELECT v AS qv, bucket AS q_bucket FROM b WHERE vec_id = 0)
          |SELECT vec_id, round(score, 6) AS score FROM (
          | SELECT x.vec_id, ${cosSqlAB("x.v", "qv")} AS score
          | FROM b x, q WHERE x.bucket = q.q_bucket
-         | ORDER BY score DESC, vec_id ASC LIMIT 5)""".stripMargin,
+         | ORDER BY score DESC, vec_id ASC LIMIT 5)""".stripMargin)),
 
-    "q22_bucket_stats" ->
+    Query("q22_bucket_stats", qBucketStats, sql(
       s"""SELECT ${bucketSql("embedding")} AS bucket, count(*) AS n_vectors
-         |FROM embeddings GROUP BY 1""".stripMargin,
+         |FROM embeddings GROUP BY 1""".stripMargin)),
 
     // Byte-level replay for the multimodal stub payloads (payload = UTF-8
     // bytes of text): hex(encode(text)) → 2-char pairs → per-byte rows.
     // Entropy = -Σ (c/n)·ln(c/n)/ln(2) over the byte histogram, identical
     // fold as Multimodal.payloadFeatures up to summation order (absorbed
     // by round 6).
-    "q23_media_features" ->
+    Query("q23_media_features", qMediaFeatures, sql(
       """WITH b AS (SELECT doc_id AS media_id,
         |   octet_length(encode(text)) AS n_bytes, hex(encode(text)) AS hx
         |  FROM documents),
@@ -7000,18 +6647,19 @@ object SparkEntry {
         | round(coalesce(entropy, 0.0), 6) AS entropy,
         | round(coalesce(bsum::DOUBLE / nullif(b.n_bytes, 0), 0.0), 6) AS mean_byte,
         | coalesce(n_distinct_bytes, 0)::INT AS n_distinct_bytes
-        |FROM b LEFT JOIN feat ON b.media_id = feat.media_id""".stripMargin,
-    "q24_frame_sample" ->
+        |FROM b LEFT JOIN feat ON b.media_id = feat.media_id""".stripMargin)),
+
+    Query("q24_frame_sample", qFrameSample, sql(
       """SELECT doc_id AS media_id,
         | ((strlen(text) // 32 + 1) // 2)::BIGINT AS n_frames_sampled,
         | (32 * ((strlen(text) // 32 + 1) // 2))::BIGINT AS sampled_bytes
-        |FROM documents WHERE strlen(text) >= 32""".stripMargin,
+        |FROM documents WHERE strlen(text) >= 32""".stripMargin)),
 
     // Decode-stub replay: sample_i = byte_i / 256, so each per-payload
     // sample sum is EXACTLY Σbytes/256 (every partial sum is a multiple
     // of 2^-8 — float/double associativity cannot diverge), and the
     // per-row mean is the identical double division on both engines.
-    "q25_decode_stats" ->
+    Query("q25_decode_stats", qDecodeStats, sql(
       """WITH b AS (SELECT doc_id,
         |   octet_length(encode(text)) AS n, hex(encode(text)) AS hx
         |  FROM documents),
@@ -7022,25 +6670,106 @@ object SparkEntry {
         |SELECT 'image' AS kind, count(*) AS n_media,
         | sum(n)::BIGINT AS total_samples,
         | round(avg((bsum::DOUBLE / 256.0) / n), 6) AS mean_sample
-        |FROM per""".stripMargin,
+        |FROM per""".stripMargin)),
 
-    "q26_lang_histogram" ->
+    Query("q26_lang_histogram", qExtHistogram, sql(
       """SELECT coalesce(nullif(trim(lang), ''), 'unknown') AS lang_key,
         | count(*) AS n_docs
-        |FROM documents GROUP BY 1""".stripMargin,
+        |FROM documents GROUP BY 1""".stripMargin)),
 
-    "q27_display_results" ->
+    Query("q27_display_results", qDisplayResults, sql(
       """SELECT doc_id,
         | CASE WHEN length(text) > 120 THEN substr(text, 1, 120) || '...'
         |      ELSE text END AS display_text,
         | n_chars
-        |FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 10""".stripMargin,
+        |FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 10""".stripMargin)),
 
-    "q33_customers_no_orders" ->
+    Query("q28_ivf_kmeans", qIvfKmeans, (s, dir) => ivfOracleSql(ivfIndexFor(s, dir).centers)),
+
+    Query("q29_events_sliding", qEventsSliding, sql(
+      """SELECT (floor(epoch(ts) / 300)::BIGINT - off) * 300 AS bucket_start,
+        | event_type, count(*) AS n_events, round(sum(value), 4) AS sum_value
+        |FROM events, (SELECT unnest([0, 1]) AS off)
+        |GROUP BY 1, 2""".stripMargin)),
+
+    Query("q30_events_session", qEventsSession, sql(
+      """WITH marked AS (
+        |  SELECT user_id, ts, value,
+        |   CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) >= 300 OR lag(ts) OVER w IS NULL
+        |        THEN 1 ELSE 0 END AS new_session
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        | sessions AS (
+        |  SELECT user_id, ts, value,
+        |   sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
+        |     ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM marked)
+        |SELECT floor(epoch(min(ts)))::BIGINT AS session_start, user_id,
+        | count(*) AS n_events, round(sum(value), 4) AS sum_value
+        |FROM sessions GROUP BY user_id, session_id""".stripMargin)),
+
+    Query("q31_label_centroids", qLabelCentroids, sql(
+      """WITH ex AS (
+        |  SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
+        |   unnest(embedding::DOUBLE[]) AS v
+        |  FROM embeddings)
+        |SELECT label, dim, round(sum(v) / count(*), 6) AS m,
+        | count(*) AS n_vectors
+        |FROM ex GROUP BY label, dim""".stripMargin)),
+
+    // The ENTIRE reference pipeline replayed independently: chunker
+    // recursive CTE (as q12) → md5-token hash-projection embedding as
+    // sparse (chunk, bucket) sums → cosine vs the identically-embedded
+    // query literal → top-5 → threshold 0.1 AFTER the limit (§2.9.1).
+    // Chunks with zero tokens / no shared buckets score 0 on both sides.
+    Query("q32_e2e_pipeline", qE2ePipeline, sql(
+      s"""WITH RECURSIVE docs0 AS (
+         |  SELECT doc_id, text AS t, length(text) AS len
+         |  FROM documents WHERE length(text) > 0),
+         | spans(doc_id, t, len, s, e) AS (
+         |  SELECT doc_id, t, len, 0, ${chunkEndSql("0")} FROM docs0
+         |  UNION ALL
+         |  SELECT doc_id, t, len, ns, ${chunkEndSql("ns")} FROM (
+         |    SELECT doc_id, t, len,
+         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
+         |    FROM spans WHERE len > 200)
+         |  WHERE ns < len),
+         | chunks AS (
+         |  SELECT doc_id,
+         |   row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS chunk_index,
+         |   substr(t, s+1, e-s) AS c
+         |  FROM spans),
+         | tok AS (SELECT doc_id, chunk_index,
+         |   unnest(list_filter(regexp_split_to_array(lower(c), '\\s+'), x -> x <> '')) AS w
+         |  FROM chunks),
+         | contrib AS (SELECT doc_id, chunk_index, $TokContribSql
+         |  FROM (SELECT doc_id, chunk_index, ${h32Sql("w")} AS h FROM tok)),
+         | vecs AS (SELECT doc_id, chunk_index, idx, sum(v) AS s
+         |  FROM contrib GROUP BY 1, 2, 3),
+         | norms AS (SELECT doc_id, chunk_index, sqrt(sum(s * s)) AS n
+         |  FROM vecs GROUP BY 1, 2),
+         | qtok AS (SELECT unnest(['alpha', 'beta', 'gamma']) AS w),
+         | qcontrib AS (SELECT $TokContribSql
+         |  FROM (SELECT ${h32Sql("w")} AS h FROM qtok)),
+         | qvec AS (SELECT idx, sum(v) AS qs FROM qcontrib GROUP BY 1),
+         | qnorm AS (SELECT sqrt(sum(qs * qs)) AS qn FROM qvec),
+         | dots AS (SELECT v.doc_id, v.chunk_index, sum(v.s * q.qs) AS dot
+         |  FROM vecs v JOIN qvec q USING (idx) GROUP BY 1, 2),
+         | scored AS (SELECT ch.doc_id, ch.chunk_index,
+         |   CASE WHEN n.n IS NULL OR n.n = 0 OR qn = 0 OR dot IS NULL THEN 0.0
+         |        ELSE dot / (n.n * qn) END AS score
+         |  FROM chunks ch CROSS JOIN qnorm
+         |  LEFT JOIN norms n USING (doc_id, chunk_index)
+         |  LEFT JOIN dots USING (doc_id, chunk_index))
+         |SELECT doc_id, chunk_index, round(score, 6) AS score FROM (
+         |  SELECT * FROM scored
+         |  ORDER BY score DESC, doc_id ASC, chunk_index ASC LIMIT 5)
+         |WHERE score >= 0.1""".stripMargin)),
+
+    Query("q33_customers_no_orders", qCustomersNoOrders, sql(
       """SELECT c_custkey, c_name, c_nationkey FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin,
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)""".stripMargin)),
 
-    "q34_asof_click_view" ->
+    Query("q34_asof_click_view", qAsofClickView, sql(
       """WITH clicks AS (
         |  SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'),
         | views AS (
@@ -7049,14 +6778,14 @@ object SparkEntry {
         |SELECT c.event_id, c.user_id,
         | round(v.view_value, 4) AS last_view_value
         |FROM clicks c ASOF LEFT JOIN views v
-        | ON c.user_id = v.user_id AND c.ts >= v.ts""".stripMargin,
+        | ON c.user_id = v.user_id AND c.ts >= v.ts""".stripMargin)),
 
     // The deterministic half of the sketch query: exact distincts and
     // interpolated exact percentiles (DuckDB quantile_cont uses the same
     // p·(n−1) linear interpolation as Spark's percentile), plus literal
     // TRUE for the in-query sketch error-bound booleans — a Spark-side
     // sketch outside its documented bound fails the hash compare.
-    "q35_approx_stats" ->
+    Query("q35_approx_stats", qApproxStats, sql(
       """SELECT source,
         | count(DISTINCT lang) AS n_langs,
         | count(DISTINCT text) AS n_distinct_texts,
@@ -7064,31 +6793,81 @@ object SparkEntry {
         | round(quantile_cont(n_chars, 0.95), 6) AS p95_chars,
         | TRUE AS hll_langs_ok, TRUE AS hll_texts_ok,
         | TRUE AS p50_ok, TRUE AS p95_ok
-        |FROM documents GROUP BY source""".stripMargin,
+        |FROM documents GROUP BY source""".stripMargin)),
 
-    "q36_range_join" ->
+    Query("q36_range_join", qRangeJoinPairs, sql(
       """SELECT c.user_id, c.event_id AS click_id, v.event_id AS view_id
         |FROM events c JOIN events v
         | ON c.user_id = v.user_id
         | AND c.event_type = 'click' AND v.event_type = 'view'
-        | AND abs(floor(epoch(c.ts)) - floor(epoch(v.ts))) <= 120""".stripMargin,
+        | AND abs(floor(epoch(c.ts)) - floor(epoch(v.ts))) <= 120""".stripMargin)),
 
-    "q37_rollup_counts" ->
+    Query("q37_rollup_counts", qRollupCounts, sql(
       """SELECT source, lang, count(*) AS n_docs,
         | sum(n_chars)::BIGINT AS total_chars,
         | GROUPING(source, lang) AS grp
-        |FROM documents GROUP BY ROLLUP (source, lang)""".stripMargin,
+        |FROM documents GROUP BY ROLLUP (source, lang)""".stripMargin)),
 
-    "q38_pivot_langs" ->
+    Query("q38_pivot_langs", qPivotLangs, sql(
       """SELECT source,
         | count(*) FILTER (WHERE lang = 'en') AS n_en,
         | count(*) FILTER (WHERE lang = 'fr') AS n_fr,
         | count(*) FILTER (WHERE lang = 'de') AS n_de,
         | count(*) FILTER (WHERE lang = 'es') AS n_es,
         | count(*) FILTER (WHERE lang = 'zh') AS n_zh
-        |FROM documents GROUP BY source""".stripMargin,
+        |FROM documents GROUP BY source""".stripMargin)),
 
-    "q45_tfidf_top_terms" ->
+    Query("q39_regional_revenue", qRegionalRevenue, sql(
+      """SELECT n_name,
+        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+        | count(*) AS n_items
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name""".stripMargin)),
+
+    Query("q40_dup_clusters", qDupClusters, sql(
+      s"""WITH RECURSIVE $DupClusterCtes
+         |SELECT doc_id, cluster_id FROM clus""".stripMargin)),
+
+    Query("q41_set_ops", qSetOps, sql(
+      """SELECT lang, 'except' AS op FROM (
+        |  SELECT lang FROM documents WHERE source = 'src0'
+        |  EXCEPT SELECT lang FROM documents WHERE source = 'src1')
+        |UNION ALL
+        |SELECT lang, 'intersect' AS op FROM (
+        |  SELECT lang FROM documents WHERE source = 'src0'
+        |  INTERSECT SELECT lang FROM documents WHERE source = 'src1')""".stripMargin)),
+
+    Query("q42_hash_split", qHashSplit, sql(
+      s"""SELECT CASE WHEN ${h32Sql("text")} % 10 <= 7 THEN 'train'
+         |  WHEN ${h32Sql("text")} % 10 = 8 THEN 'val' ELSE 'test' END AS split,
+         | lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
+         |FROM documents GROUP BY 1, 2""".stripMargin)),
+
+    Query("q43_top_tokens", qTopTokens, sql(
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+        |  FROM documents)
+        |SELECT token, count(*) AS term_freq, count(DISTINCT doc_id) AS doc_freq
+        |FROM toks WHERE token <> ''
+        |GROUP BY token ORDER BY term_freq DESC, token ASC LIMIT 20""".stripMargin)),
+
+    Query("q44_l2_topk", qL2TopK, sql(
+      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+        | qv AS (SELECT e AS q FROM base WHERE vec_id = 1)
+        |SELECT vec_id, round(
+        |  list_dot_product(e, e) - 2.0 * list_dot_product(e, q) + list_dot_product(q, q),
+        |  6) AS dist2
+        |FROM base, qv ORDER BY
+        | list_dot_product(e, e) - 2.0 * list_dot_product(e, q) + list_dot_product(q, q) ASC,
+        | vec_id ASC LIMIT 10""".stripMargin)),
+
+    Query("q45_tfidf_top_terms", qTfidfTopTerms, sql(
       """WITH toks AS (
         |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
@@ -7102,23 +6881,23 @@ object SparkEntry {
         |     ORDER BY tf.tf::DOUBLE * n.n / df.df::DOUBLE DESC, tf.token ASC) AS rank
         |  FROM tf JOIN df USING (token), n)
         |SELECT doc_id, rank, token, round(weight, 6) AS weight
-        |FROM ranked WHERE rank <= 3 AND doc_id < 10""".stripMargin,
+        |FROM ranked WHERE rank <= 3 AND doc_id < 10""".stripMargin)),
 
-    "q46_grouped_topk" ->
+    Query("q46_grouped_topk", qGroupedTopK, sql(
       """SELECT source, rk::INT AS rk, doc_id, n_chars FROM (
         | SELECT source, doc_id, n_chars,
         |  row_number() OVER (PARTITION BY source
         |    ORDER BY n_chars DESC, doc_id ASC) AS rk
-        | FROM documents) WHERE rk <= 3""".stripMargin,
+        | FROM documents) WHERE rk <= 3""".stripMargin)),
 
-    "q47_p95_outliers" ->
+    Query("q47_p95_outliers", qP95Outliers, sql(
       """WITH th AS (SELECT lang, quantile_cont(n_chars, 0.95) AS p95
         |  FROM documents GROUP BY lang)
         |SELECT lang, round(any_value(p95), 4) AS p95, count(*) AS n_above
         |FROM documents JOIN th USING (lang)
-        |WHERE n_chars > p95 GROUP BY lang""".stripMargin,
+        |WHERE n_chars > p95 GROUP BY lang""".stripMargin)),
 
-    "q48_corr_stats" ->
+    Query("q48_corr_stats", qCorrStats, sql(
       """WITH d AS (SELECT source, n_chars::DOUBLE AS n_chars,
         |  len(regexp_split_to_array(lower(trim(text)), '\s+'))::DOUBLE AS toks
         | FROM documents)
@@ -7126,9 +6905,9 @@ object SparkEntry {
         | round(covar_samp(n_chars, toks), 4) AS covar_len_toks,
         | round(stddev_samp(n_chars), 4) AS stddev_chars,
         | count(*) AS n_docs
-        |FROM d GROUP BY source""".stripMargin,
+        |FROM d GROUP BY source""".stripMargin)),
 
-    "q49_sketch_project" ->
+    Query("q49_sketch_project", qSketchProject, sql(
       """WITH signs AS (SELECT i,
         |  CASE WHEN ('0x' || substr(md5('cs_' || i), 1, 8))::BIGINT % 2 = 0
         |       THEN 1.0 ELSE -1.0 END AS sg
@@ -7137,16 +6916,30 @@ object SparkEntry {
         |  unnest(embedding::DOUBLE[]) AS v
         | FROM embeddings)
         |SELECT vec_id, (i % 16)::INT AS dim, round(sum(v * sg), 6) AS v
-        |FROM ex JOIN signs USING (i) GROUP BY 1, 2""".stripMargin,
+        |FROM ex JOIN signs USING (i) GROUP BY 1, 2""".stripMargin)),
 
-    "q50_stratified_sample" ->
+    Query("q50_stratified_sample", qStratifiedSample, sql(
       s"""SELECT source, count(*) AS n_kept FROM documents
          |WHERE ${h32Sql("doc_id::VARCHAR")} % 1000 <
          |  CASE WHEN source = 'src0' THEN 500
          |       WHEN source = 'src1' THEN 500 ELSE 100 END
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
-    "q52_contamination" ->
+    Query("q51_repetition", qRepetition, sql(
+      """WITH g AS (SELECT source,
+        |  regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
+        | r AS (SELECT source,
+        |  CASE WHEN len(w) < 5 THEN 0.0
+        |       ELSE 1.0 - len(list_distinct(grams))::DOUBLE / len(grams)::DOUBLE
+        |  END AS rep
+        | FROM (SELECT source, w,
+        |   [array_to_string(w[i+1:i+5], ' ') for i in range(0, len(w)-4)] AS grams
+        |  FROM g))
+        |SELECT source, round(avg(rep), 6) AS avg_rep,
+        | round(max(rep), 6) AS max_rep, count(*) AS n_docs
+        |FROM r GROUP BY 1""".stripMargin)),
+
+    Query("q52_contamination", qContamination, sql(
       """WITH g AS (SELECT doc_id, list_distinct(CASE WHEN len(w) >= 3
         |   THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w)-2)]
         |   ELSE [array_to_string(w, ' ')] END) AS sh
@@ -7155,9 +6948,9 @@ object SparkEntry {
         |SELECT a.doc_id AS corpus_id, b.doc_id AS benchmark_id,
         | len(list_intersect(a.sh, b.sh))::BIGINT AS n_shared
         |FROM g a JOIN g b ON b.doc_id < 10 AND a.doc_id <> b.doc_id
-        |WHERE len(list_intersect(a.sh, b.sh)) >= 2""".stripMargin,
+        |WHERE len(list_intersect(a.sh, b.sh)) >= 2""".stripMargin)),
 
-    "q53_pack_sequences" ->
+    Query("q53_pack_sequences", qPackSequences, sql(
       """WITH d AS (SELECT source, doc_id,
         |  len(regexp_split_to_array(lower(trim(text)), '\s+'))::BIGINT AS toks
         | FROM documents),
@@ -7167,9 +6960,9 @@ object SparkEntry {
         | FROM d)
         |SELECT source, bin::BIGINT AS bin, count(*) AS n_docs,
         | sum(toks)::BIGINT AS total_toks
-        |FROM p GROUP BY 1, 2""".stripMargin,
+        |FROM p GROUP BY 1, 2""".stripMargin)),
 
-    "q54_cleaning_funnel" ->
+    Query("q54_cleaning_funnel", qCleaningFunnel, sql(
       s"""WITH words AS (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w
          |  FROM documents),
          | s AS (SELECT len(w) AS n, len(list_distinct(w)) AS nd,
@@ -7186,21 +6979,21 @@ object SparkEntry {
          |       ELSE 'kept' END AS reason
          | FROM s)
          |SELECT reason, count(*) AS n_docs, round(avg(n), 4) AS avg_toks
-         |FROM r GROUP BY 1""".stripMargin,
+         |FROM r GROUP BY 1""".stripMargin)),
 
     // Oracle brute-forces ALL pairs; the engine's banded join must agree
     // exactly because maxHamming(3) < nBands(4) makes banding lossless.
-    "q55_simhash_pairs" ->
+    Query("q55_simhash_pairs", qSimhashPairs, sql(
       s"""WITH s AS (SELECT doc_id, $SimhashSql FROM ($TokenHashesSql))
          |SELECT id_a, id_b, hamming::INT AS hamming FROM (
          | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  bit_count(xor(a.simhash, b.simhash)) AS hamming
          | FROM s a JOIN s b ON a.doc_id < b.doc_id)
-         |WHERE hamming <= 3""".stripMargin,
+         |WHERE hamming <= 3""".stripMargin)),
 
     // floor(127·v/scale + 0.5) — identical double ops on both engines
     // (no engine-specific rounding mode in the contract)
-    "q56_quantize" ->
+    Query("q56_quantize", qQuantize, sql(
       """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         | s AS (SELECT vec_id, v,
         |   list_max([abs(x) for x in v]) AS scale FROM e)
@@ -7208,12 +7001,12 @@ object SparkEntry {
         | generate_subscripts(v, 1) - 1 AS dim,
         | unnest([CASE WHEN scale = 0 THEN 0
         |   ELSE floor(127.0 * x / scale + 0.5)::INT END for x in v]) AS q
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin)),
 
     // Cell-for-cell count-min rebuild: same md5 universal family
     // (a_j = 2j+1, b_j = 1000000007(j+1) mod p, p = 4294967311), same
     // depth 4 × width 64 grid, same min-over-rows estimate.
-    "q57_countmin" ->
+    Query("q57_countmin", qCountMin, sql(
       """WITH toks AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
         |  FROM documents),
         | t AS (SELECT token FROM toks WHERE token <> ''),
@@ -7231,18 +7024,25 @@ object SparkEntry {
         |  FROM pe LEFT JOIN sketch USING (j, bucket) GROUP BY token),
         | exact AS (SELECT token, count(*) AS exact FROM t GROUP BY token)
         |SELECT token, est::BIGINT AS est, coalesce(exact, 0)::BIGINT AS exact
-        |FROM est LEFT JOIN exact USING (token)""".stripMargin,
+        |FROM est LEFT JOIN exact USING (token)""".stripMargin)),
 
-    "q59_window_suite" ->
+    Query("q58_semi_join", qSemiJoin, sql(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey
+        |    AND o.o_orderpriority = '1-URGENT'
+        |    AND o.o_totalprice > 450000.0)""".stripMargin)),
+
+    Query("q59_window_suite", qWindowSuite, sql(
       """SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS price,
         | round(lag(o_totalprice, 1) OVER w, 2) AS prev_price,
         | round(lead(o_totalprice, 1) OVER w, 2) AS next_price,
         | ntile(4) OVER w AS quartile,
         | round(cume_dist() OVER w, 6) AS cd
         |FROM orders WHERE o_custkey < 50
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin)),
 
-    "q60_gap_fill" ->
+    Query("q60_gap_fill", qGapFill, sql(
       """WITH ev AS (SELECT user_id, floor(epoch(ts) / 300)::BIGINT AS bucket
         |  FROM events WHERE user_id < 20),
         | counts AS (SELECT user_id, bucket, count(*) AS n
@@ -7251,11 +7051,20 @@ object SparkEntry {
         |   unnest(range(min(bucket), max(bucket) + 1)) AS bucket
         |  FROM ev GROUP BY user_id)
         |SELECT user_id, bucket, coalesce(n, 0)::BIGINT AS n
-        |FROM spans LEFT JOIN counts USING (user_id, bucket)""".stripMargin,
+        |FROM spans LEFT JOIN counts USING (user_id, bucket)""".stripMargin)),
+
+    Query("q61_lang_coverage", qLangCoverage, sql(
+      """WITH observed AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
+        | expected AS (SELECT unnest(['en','fr','de','es','zh','ja','ko']) AS lang,
+        |   true AS expected)
+        |SELECT coalesce(o.lang, e.lang) AS lang,
+        | coalesce(n, 0)::BIGINT AS n_docs,
+        | coalesce(expected, false) AS expected
+        |FROM observed o FULL OUTER JOIN expected e ON o.lang = e.lang""".stripMargin)),
 
     // Chunker recursive CTE (as q12/q32) → per-chunk md5 token hashes →
     // SimHash → per-source counts: the SQL-surface query replayed.
-    "q62_sql_surface" ->
+    Query("q62_sql_surface", qSqlSurface, sql(
       s"""WITH RECURSIVE docs0 AS (
          |  SELECT doc_id, source, text AS t, length(text) AS len
          |  FROM documents WHERE length(text) > 0),
@@ -7273,14 +7082,14 @@ object SparkEntry {
          | sims AS (SELECT source, $SimhashSql FROM withhs)
          |SELECT source, count(*) AS n_chunks,
          | count(DISTINCT simhash) AS n_distinct_sims
-         |FROM sims GROUP BY source""".stripMargin,
+         |FROM sims GROUP BY source""".stripMargin)),
 
-    "q63_bm25_topk" ->
+    Query("q63_bm25_topk", qBm25TopK, sql(
       s"""$Bm25Ctes
          |SELECT doc_id, round(score, 6) AS score FROM bm25
-         |ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 10""".stripMargin)),
 
-    "q64_hybrid_rrf" ->
+    Query("q64_hybrid_rrf", qHybridRrf, sql(
       s"""$Bm25Ctes,
          | ttop AS (SELECT doc_id, round(score, 6) AS score FROM bm25
          |   ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 20),
@@ -7303,9 +7112,11 @@ object SparkEntry {
          |  FROM tr FULL OUTER JOIN vr ON tr.doc_id = vr.vec_id)
          |SELECT doc_id, text_rank::INT AS text_rank, vec_rank::INT AS vec_rank,
          | round(rrf, 6) AS rrf
-         |FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT 10""".stripMargin,
+         |FROM fused ORDER BY rrf DESC, doc_id ASC LIMIT 10""".stripMargin)),
 
-    "q66_pii_redact" -> {
+    Query("q65_pq_topk", qPqTopK, (s, dir) => pqOracleSql(pqIndexFor(s, dir).codebooks)),
+
+    Query("q66_pii_redact", qPiiRedact, sql {
       val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val phone = "[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}"
       val num = "[0-9]{12,19}"
@@ -7328,15 +7139,15 @@ object SparkEntry {
          | len(regexp_extract_all(contact, '$phone'))::BIGINT AS phones,
          | len(regexp_extract_all(contact, '$num'))::BIGINT AS long_nums
          |FROM c""".stripMargin
-    },
+    }),
 
-    "q67_cube_counts" ->
+    Query("q67_cube_counts", qCubeCounts, sql(
       """SELECT source, lang, count(*) AS n_docs,
         | sum(n_chars)::BIGINT AS total_chars,
         | GROUPING(source, lang) AS grp
-        |FROM documents GROUP BY CUBE (source, lang)""".stripMargin,
+        |FROM documents GROUP BY CUBE (source, lang)""".stripMargin)),
 
-    "q68_bloom_join" -> {
+    Query("q68_bloom_join", qBloomJoin, sql {
       // replay graft.ops.Bloom bit-for-bit: 64 words × 32 used bits
       // (DuckDB << raises on bit 63), Kirsch–Mitzenmacher double hashing
       // from ONE md5 per key: p_i = (h1 + i·h2) mod nbits
@@ -7366,9 +7177,9 @@ object SparkEntry {
          |   THEN floor(l_extendedprice * 100 + 0.5)::BIGINT ELSE 0 END)::BIGINT
          |   AS matched_revenue_cents
          |FROM cand LEFT JOIN keys k ON cand.l_orderkey = k.o_orderkey""".stripMargin
-    },
+    }),
 
-    "q69_bigrams" ->
+    Query("q69_bigrams", qBigrams, sql(
       """WITH toks AS (SELECT doc_id,
         |  list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
         |    t -> t <> '') AS w
@@ -7379,9 +7190,9 @@ object SparkEntry {
         |SELECT bigram, count(*) AS term_freq,
         | count(DISTINCT doc_id) AS doc_freq
         |FROM grams GROUP BY bigram
-        |ORDER BY term_freq DESC, bigram ASC LIMIT 20""".stripMargin,
+        |ORDER BY term_freq DESC, bigram ASC LIMIT 20""".stripMargin)),
 
-    "q70_crossmodal" ->
+    Query("q70_crossmodal", qCrossModal, sql(
       s"""WITH b AS (SELECT doc_id AS media_id,
          |   octet_length(encode(text)) AS n_bytes, hex(encode(text)) AS hx
          |  FROM documents),
@@ -7397,23 +7208,134 @@ object SparkEntry {
          | scored AS (SELECT media_id, $CosSql AS score FROM emb, qv),
          | topk AS (SELECT * FROM scored ORDER BY score DESC, media_id ASC LIMIT 10)
          |SELECT media_id, round(score, 6) AS score FROM topk
-         |WHERE score >= 0.1""".stripMargin,
+         |WHERE score >= 0.1""".stripMargin)),
 
     // Unpacked semantics of Ann.hammingTopK's packed-word scan: the
     // Hamming distance between sign codes IS the count of components
     // whose sign (> 0) differs from the query's.
-    "q71_hamming_topk" ->
+    Query("q71_hamming_topk", qHammingTopK, sql(
       """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
         | qv AS (SELECT e AS q FROM base WHERE vec_id = 0)
         |SELECT vec_id,
         | len(list_filter(range(1, len(e) + 1), i -> (e[i] > 0) <> (q[i] > 0)))::BIGINT
         |   AS hamming
         |FROM base, qv
-        |ORDER BY hamming ASC, vec_id ASC LIMIT 10""".stripMargin,
+        |ORDER BY hamming ASC, vec_id ASC LIMIT 10""".stripMargin)),
+
+    Query("q72_edit_pairs", qEditPairs, sql(
+      """WITH t AS (SELECT doc_id, lang,
+        |   array_to_string((regexp_split_to_array(lower(trim(text)), '\s+'))[1:5], ' ') AS title
+        |  FROM documents),
+        | b AS (SELECT *, split_part(title, ' ', 1) AS blk FROM t),
+        | p AS (SELECT x.lang, levenshtein(x.title, y.title) AS dist
+        |  FROM b x JOIN b y ON x.lang = y.lang AND x.blk = y.blk AND x.doc_id < y.doc_id
+        |  WHERE levenshtein(x.title, y.title) <= 8)
+        |SELECT lang, dist, count(*) AS n_pairs FROM p GROUP BY lang, dist""".stripMargin)),
+
+    Query("q73_segment_dedup", qSegmentDedup, sql(
+      s"""WITH words AS (SELECT doc_id,
+         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
+         | segs AS (SELECT doc_id,
+         |   unnest([array_to_string(w[j*8+1 : j*8+8], ' ') for j in range(0, len(w)//8)]) AS seg
+         |  FROM words)
+         |SELECT ${h32Sql("seg")} AS seg_hash,
+         | count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
+         |FROM segs GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""".stripMargin)),
+
+    Query("q74_mixture_weights", qMixtureWeights, sql(
+      """WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source)
+        |SELECT source, n_docs,
+        | round(sqrt(n_docs) / sum(sqrt(n_docs)) OVER (), 6) AS weight
+        |FROM c""".stripMargin)),
+
+    Query("q75_containment", qContainmentPairs, sql(
+      s"""WITH $MinhashCtes,
+         | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         |   FROM bands x JOIN bands y
+         |   ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id)
+         |SELECT doc_a, doc_b, round(containment, 6) AS containment FROM (
+         | SELECT doc_a, doc_b,
+         |  len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
+         |    / least(len(sa.shingles), len(sb.shingles))::DOUBLE AS containment
+         | FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b)
+         |WHERE containment >= 0.5""".stripMargin)),
+
+    Query("q76_above_avg_orders", qAboveAvgOrders, sql(
+      """WITH a AS (SELECT o_custkey, o_totalprice,
+        |   avg(o_totalprice) OVER (PARTITION BY o_custkey) AS cust_avg
+        |  FROM orders)
+        |SELECT o_custkey, count(*) AS n_above, round(max(cust_avg), 4) AS cust_avg
+        |FROM a WHERE o_totalprice > 1.5 * cust_avg
+        |GROUP BY o_custkey
+        |ORDER BY n_above DESC, o_custkey ASC LIMIT 20""".stripMargin)),
+
+    Query("q77_rag_context", qRagContext, sql(
+      s"""$Bm25Ctes,
+         | topk AS (SELECT doc_id, round(score, 6) AS score,
+         |   row_number() OVER (ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
+         |  FROM bm25 ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 10)
+         |SELECT rank, t.doc_id, d.n_chars,
+         | (sum(d.n_chars) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING))::BIGINT AS cum_chars,
+         | (sum(d.n_chars) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING))::BIGINT <= 800 AS included
+         |FROM topk t JOIN documents d ON t.doc_id = d.doc_id""".stripMargin)),
+
+    Query("q78_zipf", qZipf, sql(
+      """WITH toks AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+        |  FROM documents),
+        | f AS (SELECT token, count(*) AS freq FROM toks WHERE token <> '' GROUP BY token),
+        | r AS (SELECT token, freq,
+        |   row_number() OVER (ORDER BY freq DESC, token ASC) AS rank,
+        |   sum(freq) OVER (ORDER BY freq DESC, token ASC ROWS UNBOUNDED PRECEDING) AS cum_freq,
+        |   sum(freq) OVER () AS total FROM f)
+        |SELECT rank, token, freq, round(cum_freq::DOUBLE / total::DOUBLE, 6) AS cum_frac
+        |FROM r WHERE rank <= 30""".stripMargin)),
+
+    Query("q79_funnel", qFunnel, sql(
+      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
+        |   WHERE event_type = 'view' GROUP BY user_id),
+        | c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
+        |   JOIN v ON e.user_id = v.user_id
+        |   WHERE e.event_type = 'click' AND e.ts > v.t_view GROUP BY e.user_id),
+        | p AS (SELECT e.user_id, min(e.ts) AS t_purchase FROM events e
+        |   JOIN c ON e.user_id = c.user_id
+        |   WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY e.user_id)
+        |SELECT '1_view' AS stage, count(*) AS n_users FROM v
+        |UNION ALL SELECT '2_click_after_view' AS stage, count(*) AS n_users FROM c
+        |UNION ALL SELECT '3_purchase_after_click' AS stage, count(*) AS n_users FROM p""".stripMargin)),
+
+    // MMR greedy re-rank replayed as a DuckDB recursive CTE: the pool is
+    // the same top-50-by-relevance slice; each recursion step selects the
+    // argmax of λ·rel − (1−λ)·max_{s∈chosen} cos(d, s) over the not-yet-
+    // chosen pool (pairwise pool cosines precomputed in `pcos` — 50×50
+    // rows). `(1.0 - 0.7)` is spelled as the SUBTRACTION, not `0.3`,
+    // because Search.mmrTopK computes `1.0 - lambda` at runtime and the
+    // nearest-double results differ in the last bit.
+    Query("q80_mmr_topk", qMmrTopK, sql(
+      s"""WITH RECURSIVE
+         | base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
+         | pool AS (SELECT vec_id, rel, e FROM (
+         |    SELECT vec_id, $CosSql AS rel, e FROM base, qv)
+         |   WHERE NOT isnan(rel)
+         |   ORDER BY rel DESC, vec_id ASC LIMIT 50),
+         | pcos AS (SELECT a.vec_id AS ai, b.vec_id AS bi, ${cosSqlAB("a.e", "b.e")} AS c
+         |   FROM pool a, pool b),
+         | sel(rank, vec_id, rel, mmr, chosen) AS (
+         |   (SELECT 1, vec_id, rel, 0.7 * rel, [vec_id]
+         |    FROM pool ORDER BY 0.7 * rel DESC, vec_id ASC LIMIT 1)
+         |   UNION ALL
+         |   (SELECT s.rank + 1, p.vec_id, p.rel,
+         |      0.7 * p.rel - (1.0 - 0.7) * (SELECT max(c) FROM pcos
+         |        WHERE pcos.ai = p.vec_id AND list_contains(s.chosen, pcos.bi)) AS mmr,
+         |      s.chosen || [p.vec_id]
+         |    FROM sel s JOIN pool p ON NOT list_contains(s.chosen, p.vec_id)
+         |    WHERE s.rank < 5
+         |    ORDER BY mmr DESC, p.vec_id ASC LIMIT 1))
+         |SELECT rank, vec_id, round(rel, 6) AS rel, round(mmr, 6) AS mmr FROM sel""".stripMargin)),
 
     // Stage 1 (Hamming candidates) replayed unpacked; stage 2 is the
     // exact-cosine re-rank over only those candidates.
-    "q81_hamming_rerank" ->
+    Query("q81_hamming_rerank", qHammingRerank, sql(
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          | qv AS (SELECT e AS q FROM base WHERE vec_id = 0),
          | ham AS (SELECT vec_id,
@@ -7423,11 +7345,157 @@ object SparkEntry {
          | scored AS (SELECT vec_id, $CosSql AS score
          |  FROM base JOIN cand USING (vec_id), qv)
          |SELECT vec_id, round(score, 6) AS score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
+         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin)),
+
+    Query("q82_url_normalize", qUrlNormalize, sql(
+      """WITH u AS (SELECT doc_id,
+        |   (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://' ELSE 'https://' END) ||
+        |   (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END) ||
+        |   source || '.example.' || lang ||
+        |   (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END) ||
+        |   '/docs/' || doc_id ||
+        |   (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END) AS url
+        |  FROM documents),
+        | n AS (SELECT doc_id, regexp_replace(regexp_replace(
+        |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/?]+)', 1)),
+        |    '^www\.', ''), ':443$', '') AS host
+        |  FROM u)
+        |SELECT host, count(*) AS n_docs, count(DISTINCT doc_id) AS n_urls
+        |FROM n GROUP BY host""".stripMargin)),
+
+    // df over the 60-bit md5 bigram hash (mirrors TokenBigramHashes)
+    Query("q83_bigram_novelty", qBigramNovelty, sql(
+      """WITH w AS (SELECT doc_id, source,
+        |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
+        | bgs AS (SELECT doc_id, source, unnest(list_distinct(
+        |   CASE WHEN len(w) >= 2
+        |    THEN [('0x' || substr(md5(w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
+        |          for i in range(0, len(w) - 1)]
+        |    ELSE []::BIGINT[] END)) AS h FROM w),
+        | dfreq AS (SELECT h, count(*) AS df FROM bgs GROUP BY h),
+        | nov AS (SELECT doc_id, source,
+        |   sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE AS novelty
+        |  FROM bgs JOIN dfreq USING (h) GROUP BY doc_id, source)
+        |SELECT source, count(*) AS n_docs, round(avg(novelty), 6) AS avg_novelty
+        |FROM nov GROUP BY source""".stripMargin)),
+
+    Query("q84_nucleus_vocab", qNucleusVocab, sql(
+      """WITH toks AS (SELECT lang,
+        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
+        |  FROM documents),
+        | f AS (SELECT lang, token, count(*) AS freq FROM toks
+        |  WHERE token <> '' GROUP BY lang, token),
+        | r AS (SELECT lang, freq,
+        |   sum(freq) OVER (PARTITION BY lang ORDER BY freq DESC, token ASC
+        |     ROWS UNBOUNDED PRECEDING) AS cum,
+        |   sum(freq) OVER (PARTITION BY lang) AS total FROM f)
+        |SELECT lang, count(*) AS nucleus_size, max(total)::BIGINT AS total_tokens
+        |FROM r WHERE (cum - freq) * 10 < total * 8 GROUP BY lang""".stripMargin)),
+
+    // Full replay of segment-boilerplate removal: same segmentation as
+    // q73, hash NOT IN the >= 2-doc set, tail (idx = nseg) always kept,
+    // string_agg ordered by segment index rebuilds the token stream.
+    Query("q85_boilerplate_removal", qBoilerplateRemoval, sql(
+      s"""WITH words AS (SELECT doc_id,
+         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
+         | base AS (SELECT doc_id, w, len(w)//8 AS nseg FROM words),
+         | segs AS (SELECT doc_id, nseg, j AS idx,
+         |   array_to_string(w[j*8+1 : j*8+8], ' ') AS seg
+         |  FROM base, unnest(range(0, nseg)) AS t(j)),
+         | tails AS (SELECT doc_id, nseg, nseg AS idx,
+         |   array_to_string(w[nseg*8+1 : len(w)], ' ') AS seg FROM base),
+         | bp AS (SELECT ${h32Sql("seg")} AS h FROM segs
+         |  GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
+         | kept AS (SELECT doc_id, nseg, idx, seg FROM segs
+         |   WHERE ${h32Sql("seg")} NOT IN (SELECT h FROM bp)
+         |  UNION ALL SELECT doc_id, nseg, idx, seg FROM tails)
+         |SELECT doc_id,
+         | coalesce(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE seg <> ''), '') AS text_clean,
+         | max(nseg) - count(*) FILTER (WHERE idx < nseg) AS n_removed
+         |FROM kept GROUP BY doc_id""".stripMargin)),
+
+    // q40's closure + q17's per-doc quality → best-scored member per
+    // cluster (ties → smaller doc_id), mirroring DupClusters.keepBest
+    Query("q86_keep_best", qKeepBest, sql(
+      s"""WITH RECURSIVE $DupClusterCtes,
+         | docq AS (SELECT doc_id, round((least(len(w) / 100.0, 1.0)
+         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
+         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
+         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q
+         |  FROM (SELECT doc_id, text,
+         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
+         | r AS (SELECT cluster_id, c.doc_id, q,
+         |    row_number() OVER (PARTITION BY cluster_id ORDER BY q DESC, c.doc_id ASC) AS rk,
+         |    count(*) OVER (PARTITION BY cluster_id) AS n_members
+         |  FROM clus c JOIN docq USING (doc_id))
+         |SELECT cluster_id, doc_id AS keep_doc_id, n_members, q AS best_quality
+         |FROM r WHERE rk = 1""".stripMargin)),
+
+    // global-window phrasing of ops.TokenBudget's bucketed selection —
+    // same (quality DESC, md5(doc_id) ASC, doc_id ASC) prefix under the
+    // 12k budget (hash tie-break: see TokenBudget's scaladoc)
+    Query("q87_token_budget", qTokenBudget, sql(
+      s"""WITH d AS (SELECT doc_id, lang,
+         |   len(w)::BIGINT AS n_tokens,
+         |   round((least(len(w) / 100.0, 1.0)
+         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
+         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
+         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS quality
+         |  FROM (SELECT doc_id, lang, text,
+         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
+         | c AS (SELECT *, (sum(n_tokens) OVER (
+         |    ORDER BY quality DESC, md5(doc_id::VARCHAR) ASC, doc_id ASC
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS cum_tokens FROM d)
+         |SELECT doc_id, lang, n_tokens, quality, cum_tokens
+         |FROM c WHERE cum_tokens <= 12000""".stripMargin)),
+
+    // batch = doc_id % 10 = 0, corpus = rest; a batch doc survives iff no
+    // exact md5-text copy and no ≥0.5-Jaccard band-bucket near-dup exists
+    // in the corpus (near-dup set computed over the full batch — docs
+    // dropped by the exact filter are dropped either way)
+    Query("q88_incremental_dedup", qIncrementalDedup, sql(
+      s"""WITH $MinhashCtes,
+         | newb AS (SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 10 = 0),
+         | exact AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0
+         |   AND md5(text) IN (SELECT md5(text) FROM documents WHERE doc_id % 10 <> 0)),
+         | cand AS (SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
+         |   FROM bands x JOIN bands y
+         |   ON x.band = y.band AND x.band_hash = y.band_hash
+         |   WHERE x.doc_id % 10 = 0 AND y.doc_id % 10 <> 0),
+         | near AS (SELECT DISTINCT new_id FROM cand
+         |   JOIN sh sa ON sa.doc_id = new_id JOIN sh sb ON sb.doc_id = old_id
+         |   WHERE len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
+         |     / len(list_distinct(sa.shingles || sb.shingles))::DOUBLE >= 0.5)
+         |SELECT doc_id, lang, n_chars FROM newb
+         |WHERE doc_id NOT IN (SELECT doc_id FROM exact)
+         |  AND doc_id NOT IN (SELECT new_id FROM near)""".stripMargin)),
+
+    // prefix-16 cosine prescan pool (50) → full-dim rerank top-10
+    Query("q89_matryoshka_topk", qMatryoshka, sql(
+      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         | qv AS (SELECT e AS q FROM base WHERE vec_id = 0),
+         | pre AS (SELECT vec_id, ${cosSqlAB("e[1:16]", "q[1:16]")} AS p
+         |  FROM base, qv),
+         | cand AS (SELECT vec_id FROM pre ORDER BY p DESC, vec_id ASC LIMIT 50),
+         | scored AS (SELECT vec_id, $CosSql AS score
+         |  FROM base JOIN cand USING (vec_id), qv)
+         |SELECT vec_id, round(score, 6) AS score FROM scored
+         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin)),
+
+    // md5-mod-16 shard assignment + per-shard doc/token totals
+    Query("q90_shard_balance", qShardBalance, sql(
+      s"""SELECT ${h32Sql("doc_id::VARCHAR")} % 16 AS shard,
+         | count(*) AS n_docs,
+         | sum(n_tokens)::BIGINT AS total_tokens,
+         | max(n_tokens)::BIGINT AS max_doc_tokens
+         |FROM (SELECT doc_id,
+         |  len(regexp_split_to_array(lower(trim(text)), '\\s+'))::BIGINT AS n_tokens
+         | FROM documents)
+         |GROUP BY 1""".stripMargin)),
 
     // anchors = vec_id < 4; per anchor the top-5 different-label
     // neighbors by cosine, id tie-break
-    "q91_hard_negatives" ->
+    Query("q91_hard_negatives", qHardNegatives, sql(
       s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
          | anch AS (SELECT vec_id AS anchor_id, label AS anchor_label, e AS q
          |   FROM base WHERE vec_id < 4),
@@ -7437,30 +7505,37 @@ object SparkEntry {
          |  FROM (SELECT anchor_id, vec_id, label, $CosSql AS cos
          |    FROM base, anch WHERE label <> anchor_label))
          |SELECT anchor_id, vec_id, label, round(score, 6) AS score, rank
-         |FROM scored WHERE rank <= 5""".stripMargin,
+         |FROM scored WHERE rank <= 5""".stripMargin)),
 
-    // benchmark = doc_id % 7 = 0; corpus docs rewritten without any
-    // 8-token segment that appears verbatim in a benchmark doc
-    "q96_scrub_benchmark" ->
-      s"""WITH words AS (SELECT doc_id,
-         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
-         | base AS (SELECT doc_id, w, len(w)//8 AS nseg FROM words),
-         | segs AS (SELECT doc_id, nseg, j AS idx,
-         |   array_to_string(w[j*8+1 : j*8+8], ' ') AS seg
-         |  FROM base, unnest(range(0, nseg)) AS t(j)),
-         | tails AS (SELECT doc_id, nseg, nseg AS idx,
-         |   array_to_string(w[nseg*8+1 : len(w)], ' ') AS seg FROM base),
-         | bp AS (SELECT DISTINCT ${h32Sql("seg")} AS h FROM segs WHERE doc_id % 7 = 0),
-         | kept AS (SELECT doc_id, nseg, idx, seg FROM segs
-         |   WHERE doc_id % 7 <> 0 AND ${h32Sql("seg")} NOT IN (SELECT h FROM bp)
-         |  UNION ALL SELECT doc_id, nseg, idx, seg FROM tails WHERE doc_id % 7 <> 0)
-         |SELECT doc_id,
-         | coalesce(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE seg <> ''), '') AS text_clean,
-         | max(nseg) - count(*) FILTER (WHERE idx < nseg) AS n_removed
-         |FROM kept GROUP BY doc_id""".stripMargin,
+    // epoch-1 order: per-shard rank by md5("1:"+doc_id), id tie-break
+    Query("q92_epoch_shuffle", qEpochShuffle, sql(
+      s"""SELECT shard,
+         | row_number() OVER (PARTITION BY shard
+         |   ORDER BY ${h60Sql("'1:' || doc_id::VARCHAR")} ASC, doc_id ASC) AS pos,
+         | doc_id
+         |FROM (SELECT ${h32Sql("doc_id::VARCHAR")} % 16 AS shard, doc_id
+         | FROM documents)""".stripMargin)),
+
+    // labeled (vec_id % 5 <> 0) → per-label per-dim centroids rounded 6;
+    // unlabeled rows take the cosine-argmax label, label tie-break asc
+    Query("q93_pseudo_label", qPseudoLabel, sql(
+      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
+         | ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
+         |   unnest(embedding::DOUBLE[]) AS v
+         |  FROM embeddings WHERE vec_id % 5 <> 0),
+         | cdim AS (SELECT label AS c_label, dim, round(sum(v) / count(*), 6) AS m
+         |  FROM ex GROUP BY label, dim),
+         | cent AS (SELECT c_label, list(m ORDER BY dim) AS c FROM cdim GROUP BY c_label),
+         | scored AS (SELECT vec_id, label AS true_label, c_label,
+         |   ${cosSqlAB("e", "c")} AS score
+         |  FROM (SELECT vec_id, label, e FROM base WHERE vec_id % 5 = 0), cent),
+         | ranked AS (SELECT *, row_number() OVER (PARTITION BY vec_id
+         |   ORDER BY score DESC, c_label ASC) AS rk FROM scored)
+         |SELECT vec_id, true_label, c_label AS pred_label, round(score, 6) AS score
+         |FROM ranked WHERE rk = 1""".stripMargin)),
 
     // q88's split with every batch doc labeled by fate and counted
-    "q94_dedup_funnel" ->
+    Query("q94_dedup_funnel", qDedupFunnel, sql(
       s"""WITH $MinhashCtes,
          | exact AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0
          |   AND md5(text) IN (SELECT md5(text) FROM documents WHERE doc_id % 10 <> 0)),
@@ -7477,10 +7552,10 @@ object SparkEntry {
          |   ELSE 'kept' END AS fate,
          | count(*) AS n_docs
          |FROM documents WHERE doc_id % 10 = 0
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
     // top-2 quality docs per source.example.lang host, id tie-break
-    "q95_host_cap" ->
+    Query("q95_host_cap", qHostCap, sql(
       s"""WITH d AS (SELECT doc_id,
          |   source || '.example.' || lang AS host,
          |   round((least(len(w) / 100.0, 1.0)
@@ -7491,94 +7566,91 @@ object SparkEntry {
          |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
          | r AS (SELECT host, doc_id, q, row_number() OVER (PARTITION BY host
          |   ORDER BY q DESC, doc_id ASC) AS rank FROM d)
-         |SELECT host, rank, doc_id, q FROM r WHERE rank <= 2""".stripMargin,
+         |SELECT host, rank, doc_id, q FROM r WHERE rank <= 2""".stripMargin)),
 
-    // labeled (vec_id % 5 <> 0) → per-label per-dim centroids rounded 6;
-    // unlabeled rows take the cosine-argmax label, label tie-break asc
-    "q93_pseudo_label" ->
-      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-         | ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-         |   unnest(embedding::DOUBLE[]) AS v
-         |  FROM embeddings WHERE vec_id % 5 <> 0),
-         | cdim AS (SELECT label AS c_label, dim, round(sum(v) / count(*), 6) AS m
-         |  FROM ex GROUP BY label, dim),
-         | cent AS (SELECT c_label, list(m ORDER BY dim) AS c FROM cdim GROUP BY c_label),
-         | scored AS (SELECT vec_id, label AS true_label, c_label,
-         |   ${cosSqlAB("e", "c")} AS score
-         |  FROM (SELECT vec_id, label, e FROM base WHERE vec_id % 5 = 0), cent),
-         | ranked AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |   ORDER BY score DESC, c_label ASC) AS rk FROM scored)
-         |SELECT vec_id, true_label, c_label AS pred_label, round(score, 6) AS score
-         |FROM ranked WHERE rk = 1""".stripMargin,
+    // benchmark = doc_id % 7 = 0; corpus docs rewritten without any
+    // 8-token segment that appears verbatim in a benchmark doc
+    Query("q96_scrub_benchmark", qScrubBenchmark, sql(
+      s"""WITH words AS (SELECT doc_id,
+         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
+         | base AS (SELECT doc_id, w, len(w)//8 AS nseg FROM words),
+         | segs AS (SELECT doc_id, nseg, j AS idx,
+         |   array_to_string(w[j*8+1 : j*8+8], ' ') AS seg
+         |  FROM base, unnest(range(0, nseg)) AS t(j)),
+         | tails AS (SELECT doc_id, nseg, nseg AS idx,
+         |   array_to_string(w[nseg*8+1 : len(w)], ' ') AS seg FROM base),
+         | bp AS (SELECT DISTINCT ${h32Sql("seg")} AS h FROM segs WHERE doc_id % 7 = 0),
+         | kept AS (SELECT doc_id, nseg, idx, seg FROM segs
+         |   WHERE doc_id % 7 <> 0 AND ${h32Sql("seg")} NOT IN (SELECT h FROM bp)
+         |  UNION ALL SELECT doc_id, nseg, idx, seg FROM tails WHERE doc_id % 7 <> 0)
+         |SELECT doc_id,
+         | coalesce(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE seg <> ''), '') AS text_clean,
+         | max(nseg) - count(*) FILTER (WHERE idx < nseg) AS n_removed
+         |FROM kept GROUP BY doc_id""".stripMargin)),
 
-    // epoch-1 order: per-shard rank by md5("1:"+doc_id), id tie-break
-    "q92_epoch_shuffle" ->
-      s"""SELECT shard,
-         | row_number() OVER (PARTITION BY shard
-         |   ORDER BY ${h60Sql("'1:' || doc_id::VARCHAR")} ASC, doc_id ASC) AS pos,
-         | doc_id
-         |FROM (SELECT ${h32Sql("doc_id::VARCHAR")} % 16 AS shard, doc_id
-         | FROM documents)""".stripMargin,
+    // prefix-filtered exact containment: probe = each doc's
+    // (sz - ceil(t*sz) + 1) rarest shingles in (doc-freq, shingle-hash)
+    // order, index = all shingles, smaller side probes; shingles are
+    // 60-bit md5 hashes on both engines (8-byte join/sort keys)
+    // clone guard mirrors Dedup.exactDupGroups: min(doc_id) per md5(text)
+    Query("q97_containment_exact", qContainmentExact, sql(
+      """WITH reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+        | docs AS (SELECT d.doc_id, d.text FROM documents d JOIN reps USING (doc_id)),
+        | words AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM docs),
+        | shs AS (SELECT doc_id, list_distinct(CASE WHEN len(w) >= 3
+        |   THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w)-2)]
+        |   ELSE [array_to_string(w, ' ')] END) AS raw FROM words),
+        | sh AS (SELECT doc_id, list_distinct(
+        |   [('0x' || substr(md5(s), 1, 15))::BIGINT for s in raw]) AS shingles FROM shs),
+        | ex AS (SELECT doc_id, len(shingles)::BIGINT AS sz, unnest(shingles) AS s FROM sh),
+        | dfreq AS (SELECT s, count(*)::BIGINT AS df FROM ex GROUP BY s),
+        | ranked AS (SELECT ex.doc_id, ex.sz, ex.s,
+        |   row_number() OVER (PARTITION BY ex.doc_id ORDER BY df ASC, ex.s ASC) AS rn
+        |   FROM ex JOIN dfreq USING (s)),
+        | probe AS (SELECT s, doc_id AS id_p, sz AS sz_p, rn AS rn_p FROM ranked
+        |   WHERE rn <= sz - ceil(0.5 * sz)::BIGINT + 1),
+        | cand AS (SELECT DISTINCT least(id_p, r.doc_id) AS doc_a, greatest(id_p, r.doc_id) AS doc_b
+        |   FROM probe JOIN ranked r ON probe.s = r.s
+        |   WHERE (sz_p < r.sz OR (sz_p = r.sz AND id_p <> r.doc_id))
+        |     AND least(sz_p - rn_p, r.sz - r.rn) + 1 >= ceil(0.5 * sz_p)::BIGINT)
+        |SELECT doc_a, doc_b, round(containment, 6) AS containment FROM (
+        | SELECT doc_a, doc_b,
+        |  len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
+        |    / least(len(sa.shingles), len(sb.shingles))::DOUBLE AS containment
+        | FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b)
+        |WHERE containment >= 0.5""".stripMargin)),
 
-    // md5-mod-16 shard assignment + per-shard doc/token totals
-    "q90_shard_balance" ->
-      s"""SELECT ${h32Sql("doc_id::VARCHAR")} % 16 AS shard,
-         | count(*) AS n_docs,
-         | sum(n_tokens)::BIGINT AS total_tokens,
-         | max(n_tokens)::BIGINT AS max_doc_tokens
-         |FROM (SELECT doc_id,
-         |  len(regexp_split_to_array(lower(trim(text)), '\\s+'))::BIGINT AS n_tokens
-         | FROM documents)
-         |GROUP BY 1""".stripMargin,
-
-    // prefix-16 cosine prescan pool (50) → full-dim rerank top-10
-    "q89_matryoshka_topk" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         | qv AS (SELECT e AS q FROM base WHERE vec_id = 0),
-         | pre AS (SELECT vec_id, ${cosSqlAB("e[1:16]", "q[1:16]")} AS p
-         |  FROM base, qv),
-         | cand AS (SELECT vec_id FROM pre ORDER BY p DESC, vec_id ASC LIMIT 50),
-         | scored AS (SELECT vec_id, $CosSql AS score
-         |  FROM base JOIN cand USING (vec_id), qv)
-         |SELECT vec_id, round(score, 6) AS score FROM scored
-         |ORDER BY score DESC, vec_id ASC LIMIT 10""".stripMargin,
-
-    "q82_url_normalize" ->
-      """WITH u AS (SELECT doc_id,
-        |   (CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://' ELSE 'https://' END) ||
-        |   (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END) ||
-        |   source || '.example.' || lang ||
-        |   (CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END) ||
-        |   '/docs/' || doc_id ||
-        |   (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed' ELSE '' END) AS url
-        |  FROM documents),
-        | n AS (SELECT doc_id, regexp_replace(regexp_replace(
-        |    lower(regexp_extract(url, '^[a-zA-Z]+://([^/?]+)', 1)),
-        |    '^www\.', ''), ':443$', '') AS host
-        |  FROM u)
-        |SELECT host, count(*) AS n_docs, count(DISTINCT doc_id) AS n_urls
-        |FROM n GROUP BY host""".stripMargin,
-
-    // df over the 60-bit md5 bigram hash (mirrors TokenBigramHashes)
-    "q83_bigram_novelty" ->
-      """WITH w AS (SELECT doc_id, source,
-        |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
-        | bgs AS (SELECT doc_id, source, unnest(list_distinct(
-        |   CASE WHEN len(w) >= 2
-        |    THEN [('0x' || substr(md5(w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
-        |          for i in range(0, len(w) - 1)]
-        |    ELSE []::BIGINT[] END)) AS h FROM w),
-        | dfreq AS (SELECT h, count(*) AS df FROM bgs GROUP BY h),
-        | nov AS (SELECT doc_id, source,
-        |   sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE AS novelty
-        |  FROM bgs JOIN dfreq USING (h) GROUP BY doc_id, source)
-        |SELECT source, count(*) AS n_docs, round(avg(novelty), 6) AS avg_novelty
-        |FROM nov GROUP BY source""".stripMargin,
+    // the ingest fixture's fate arithmetic (doc_id % 13: 0 hidden,
+    // 1 bad extension, 2 empty file; doc 3 padded past the 10 MB F3
+    // cap) + the q12 chunk-span recursion, with chunk text extracted —
+    // replays scan→filter→decode→chunk
+    Query("q98_ingest_pipeline", qIngestPipeline, sql(
+      s"""WITH RECURSIVE docs0 AS (
+         |  SELECT doc_id,
+         |    'sub' || (doc_id % 3)::VARCHAR || '/doc_' || doc_id::VARCHAR || '.md' AS path,
+         |    text AS t, length(text) AS len
+         |  FROM documents
+         |  WHERE doc_id < 60 AND doc_id % 13 NOT IN (0, 1, 2)
+         |    AND doc_id <> 3 -- F3: the on-disk file is > 10 MB, scan drops it
+         |    AND trim(text) <> ''),
+         | spans(doc_id, path, t, len, s, e, idx) AS (
+         |  SELECT doc_id, path, t, len, 0, ${chunkEndSql("0")}, 0 FROM docs0
+         |  UNION ALL
+         |  SELECT doc_id, path, t, len, ns, ${chunkEndSql("ns")}, idx + 1 FROM (
+         |    SELECT doc_id, path, t, len, idx,
+         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
+         |    FROM spans
+         |    WHERE len > 200)
+         |  WHERE ns < len),
+         | tot AS (SELECT doc_id, count(*)::INT AS total_chunks FROM spans GROUP BY doc_id)
+         |SELECT s.doc_id, s.path, s.idx AS chunk_index, t.total_chunks,
+         |  substr(s.t, s.s + 1, s.e - s.s) AS chunk_text
+         |FROM spans s JOIN tot t USING (doc_id)""".stripMargin)),
 
     // corpus-trained add-1 bigram LM: c2 bigram counts, c1 left-context
     // counts, V distinct continuations; doc NLL = avg ln((c1+V)/(c2+1));
     // zipped unnest of w[1:n-1] / w[2:n] = the bigram stream
-    "q99_bigram_surprisal" ->
+    Query("q99_bigram_surprisal", qBigramSurprisal, sql(
       """WITH w AS (SELECT doc_id, source,
         |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
         | bgs AS (SELECT doc_id, source,
@@ -7593,12 +7665,15 @@ object SparkEntry {
         |  FROM bgs JOIN c2 USING (w1, w2) JOIN c1 USING (w1), v
         |  GROUP BY doc_id, source)
         |SELECT source, count(*) AS n_docs, round(avg(doc_nll), 6) AS avg_nll
-        |FROM scored GROUP BY source""".stripMargin,
+        |FROM scored GROUP BY source""".stripMargin)),
+
+    Query("q100_semdedup", qSemDedup,
+      (s, dir) => semDedupOracleSql(workingSetClustersFor(s, dir).centers)),
 
     // A-ES weighted sample: key = ln(md5-uniform)/weight, top-20 by
     // (key DESC, id); the EMITTED column is the selection rank, not the
     // transcendental key (engine-stable) — 2^60 = 1152921504606846976
-    "q101_weighted_sample" ->
+    Query("q101_weighted_sample", qWeightedSample, sql(
       """SELECT doc_id, source, n_chars,
         |  row_number() OVER (ORDER BY key DESC, doc_id ASC) AS rank
         |FROM (
@@ -7606,12 +7681,143 @@ object SparkEntry {
         |  ln((('0x' || substr(md5('ws:' || doc_id::VARCHAR), 1, 15))::BIGINT + 1)::DOUBLE
         |        / 1152921504606846976.0) / (n_chars + 1)::DOUBLE AS key
         | FROM documents)
-        |ORDER BY key DESC, doc_id ASC LIMIT 20""".stripMargin,
+        |ORDER BY key DESC, doc_id ASC LIMIT 20""".stripMargin)),
+
+    // margin = cos / ((knn4(src) + knn4(tgt)) / 2); forward top-1 per
+    // source at margin >= 1.05; even/odd vec_id = source/target split
+    // candidates = same 4-bit sign bucket (occupancy-derived at N=500)
+    Query("q102_margin_mining", qMarginMining, sql(
+      s"""WITH a AS (SELECT vec_id AS src_id, embedding::DOUBLE[] AS va,
+         |   ${bucketSql("embedding", 4)} AS bucket
+         |   FROM embeddings WHERE vec_id % 2 = 0),
+         | b AS (SELECT vec_id AS tgt_id, embedding::DOUBLE[] AS vb,
+         |   ${bucketSql("embedding", 4)} AS bucket
+         |   FROM embeddings WHERE vec_id % 2 = 1),
+         | pairs AS (SELECT src_id, tgt_id,
+         |   round(${cosSqlAB("va", "vb")}, 6) AS cos
+         |   FROM a JOIN b USING (bucket)),
+         | knna AS (SELECT src_id, avg(cos) AS na FROM (
+         |   SELECT src_id, cos, row_number() OVER (PARTITION BY src_id
+         |     ORDER BY cos DESC, tgt_id ASC) AS r FROM pairs) WHERE r <= 4
+         |  GROUP BY src_id),
+         | knnb AS (SELECT tgt_id, avg(cos) AS nb FROM (
+         |   SELECT tgt_id, cos, row_number() OVER (PARTITION BY tgt_id
+         |     ORDER BY cos DESC, src_id ASC) AS r FROM pairs) WHERE r <= 4
+         |  GROUP BY tgt_id),
+         | scored AS (SELECT p.src_id, p.tgt_id, p.cos,
+         |   round(p.cos / ((na + nb) / 2), 6) AS margin
+         |  FROM pairs p JOIN knna USING (src_id) JOIN knnb USING (tgt_id)),
+         | ranked AS (SELECT *, row_number() OVER (PARTITION BY src_id
+         |   ORDER BY margin DESC, tgt_id ASC) AS rank FROM scored)
+         |SELECT src_id, tgt_id, cos, margin FROM ranked
+         |WHERE rank = 1 AND margin >= 1.05""".stripMargin)),
+
+    // per-source budget = 15 tokens/doc; per-source quality-first prefix
+    // with the same (quality DESC, md5(id), id) order as q87
+    Query("q103_group_budget", qGroupBudget, sql(
+      s"""WITH d AS (SELECT doc_id, source,
+         |   len(w)::BIGINT AS n_tokens,
+         |   round((least(len(w) / 100.0, 1.0)
+         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
+         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
+         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS quality
+         |  FROM (SELECT doc_id, source, text,
+         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
+         | b AS (SELECT source, count(*) * 15 AS budget FROM d GROUP BY source),
+         | c AS (SELECT d.doc_id, d.source, d.n_tokens, d.quality, b.budget,
+         |   (sum(d.n_tokens) OVER (PARTITION BY d.source
+         |    ORDER BY d.quality DESC, md5(d.doc_id::VARCHAR) ASC, d.doc_id ASC
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS cum_tokens
+         |  FROM d JOIN b ON d.source = b.source)
+         |SELECT doc_id, source, n_tokens, quality, cum_tokens
+         |FROM c WHERE cum_tokens <= budget""".stripMargin)),
+
+    // shard = md5 mod 4; 8 ntile length buckets per shard; batches of 16
+    // in md5("b:"+id) order; report per-batch count + token spread
+    Query("q104_length_batches", qLengthBatches, sql(
+      s"""WITH d AS (SELECT doc_id,
+         |   len(regexp_split_to_array(lower(trim(text)), '\\s+'))::BIGINT AS n_tokens,
+         |   ${h32Sql("doc_id::VARCHAR")} % 4 AS shard
+         |  FROM documents),
+         | lb AS (SELECT doc_id, n_tokens, shard,
+         |   ntile(8) OVER (PARTITION BY shard ORDER BY n_tokens ASC, doc_id ASC) AS len_bucket
+         |  FROM d),
+         | bt AS (SELECT shard, len_bucket, n_tokens,
+         |   ((row_number() OVER (PARTITION BY shard, len_bucket
+         |     ORDER BY ${h60Sql("'b:' || doc_id::VARCHAR")} ASC, doc_id ASC) - 1) // 16)::BIGINT AS batch_id
+         |  FROM lb)
+         |SELECT shard, len_bucket, batch_id, count(*) AS n_docs,
+         | min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens
+         |FROM bt GROUP BY shard, len_bucket, batch_id""".stripMargin)),
+
+    // recall@10 vs the exact cosine top-10, averaged over the
+    // vec_id % 100 = 0 query panel; hamming = sign-disagreement count,
+    // matryoshka = prefix-16 top-50 then exact rerank
+    Query("q105_ann_recall", qAnnRecall, sql(
+      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         | qs AS (SELECT vec_id AS qid, e AS q FROM base WHERE vec_id % 100 = 0 AND vec_id < 3200),
+         | m AS (SELECT qid, vec_id,
+         |   round(${cosSqlAB("e", "q")}, 6) AS score,
+         |   len(list_filter(range(1, len(e) + 1), i -> (e[i] > 0) <> (q[i] > 0)))::BIGINT AS h,
+         |   round(${cosSqlAB("e[1:16]", "q[1:16]")}, 6) AS p
+         |  FROM base, qs),
+         | r AS (SELECT qid, vec_id, score,
+         |   row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS exact_r,
+         |   row_number() OVER (PARTITION BY qid ORDER BY h ASC, vec_id ASC) AS ham_r,
+         |   row_number() OVER (PARTITION BY qid ORDER BY p DESC, vec_id ASC) AS pre_r
+         |  FROM m),
+         | mat AS (SELECT qid, vec_id,
+         |   row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS mat_r
+         |  FROM r WHERE pre_r <= 50),
+         | f AS (SELECT r.qid, r.exact_r, r.ham_r, mat.mat_r
+         |  FROM r LEFT JOIN mat ON r.qid = mat.qid AND r.vec_id = mat.vec_id),
+         | pq AS (SELECT qid,
+         |   sum(CASE WHEN ham_r <= 10 AND exact_r <= 10 THEN 1 ELSE 0 END)::BIGINT AS ham_hits,
+         |   sum(CASE WHEN mat_r <= 10 AND exact_r <= 10 THEN 1 ELSE 0 END)::BIGINT AS mat_hits
+         |  FROM f GROUP BY qid)
+         |SELECT 'hamming' AS method, round(avg(ham_hits / 10.0), 6) AS avg_recall FROM pq
+         |UNION ALL
+         |SELECT 'matryoshka_16_50' AS method, round(avg(mat_hits / 10.0), 6) AS avg_recall FROM pq""".stripMargin)),
+
+    // PSI between doc_id-parity snapshots over fixed quality/length
+    // buckets with add-one smoothing (constants 11 and 10 = each
+    // feature's full bucket-range cardinality)
+    Query("q106_drift_psi", qDriftPsi, sql(
+      s"""WITH d AS (SELECT doc_id,
+         |   round((least(len(w) / 100.0, 1.0)
+         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
+         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
+         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q,
+         |   len(w)::BIGINT AS n_tokens,
+         |   doc_id % 2 = 0 AS is_ref
+         |  FROM (SELECT doc_id, text,
+         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
+         | qb AS (SELECT floor(q * 10)::BIGINT AS bucket,
+         |   sum(CASE WHEN is_ref THEN 1 ELSE 0 END)::BIGINT AS n_ref,
+         |   sum(CASE WHEN is_ref THEN 0 ELSE 1 END)::BIGINT AS n_cur
+         |  FROM d GROUP BY 1),
+         | qp AS (SELECT count(*) AS n_buckets,
+         |   round(sum(((n_cur + 1)::DOUBLE / (tc + 11) - (n_ref + 1)::DOUBLE / (tr + 11))
+         |     * ln(((n_cur + 1)::DOUBLE / (tc + 11)) / ((n_ref + 1)::DOUBLE / (tr + 11)))), 6) AS psi
+         |  FROM qb, (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM qb)),
+         | lb AS (SELECT least(n_tokens // 20, 9) AS bucket,
+         |   sum(CASE WHEN is_ref THEN 1 ELSE 0 END)::BIGINT AS n_ref,
+         |   sum(CASE WHEN is_ref THEN 0 ELSE 1 END)::BIGINT AS n_cur
+         |  FROM d GROUP BY 1),
+         | lp AS (SELECT count(*) AS n_buckets,
+         |   round(sum(((n_cur + 1)::DOUBLE / (tc + 10) - (n_ref + 1)::DOUBLE / (tr + 10))
+         |     * ln(((n_cur + 1)::DOUBLE / (tc + 10)) / ((n_ref + 1)::DOUBLE / (tr + 10)))), 6) AS psi
+         |  FROM lb, (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM lb))
+         |SELECT 'quality' AS feature, n_buckets, psi FROM qp
+         |UNION ALL
+         |SELECT 'length' AS feature, n_buckets, psi FROM lp""".stripMargin)),
+
+    Query("q107_pagerank", qPageRank, (s, dir) => pageRankOracleSql(linkGraphNodes(s, dir)._2)),
 
     // ExactSubstr spans: 32-char grams hashed to 60 bits; grams seen >1×
     // corpus-wide mark their positions; stride-1 same-length windows
     // merge via the lag-gap island rule (gap > 32 starts a new span)
-    "q108_substring_dup" ->
+    Query("q108_substring_dup", qSubstringDup, sql(
       """WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents),
         | hg AS (SELECT doc_id, unnest(range(1, greatest(len(t) - 30, 1))) AS pos, t FROM d),
         | grams AS (SELECT doc_id, pos,
@@ -7626,13 +7832,13 @@ object SparkEntry {
         | spans AS (SELECT doc_id, island, min(pos) AS s, max(pos) + 32 AS e
         |   FROM isl GROUP BY doc_id, island)
         |SELECT doc_id, count(*)::BIGINT AS n_dup_spans, sum(e - s)::BIGINT AS dup_chars
-        |FROM spans GROUP BY doc_id""".stripMargin,
+        |FROM spans GROUP BY doc_id""".stripMargin)),
 
     // DSIR: hashed-bigram (1024 buckets) add-one log-likelihood ratio of
     // the lang='en' target vs the raw corpus, quantized per bucket to
     // integer micro-nats BEFORE the per-doc sum — weight is an exact
     // integer in both engines
-    "q109_dsir" ->
+    Query("q109_dsir", qDsir, sql(
       """WITH w AS (SELECT doc_id, lang,
         |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
         | bgs AS (SELECT doc_id, lang, unnest(CASE WHEN len(w) >= 2
@@ -7651,12 +7857,12 @@ object SparkEntry {
         |   FROM bgs JOIN lr USING (b) GROUP BY doc_id)
         |SELECT doc_id, weight,
         |  row_number() OVER (ORDER BY weight DESC, doc_id ASC) AS rank
-        |FROM score ORDER BY weight DESC, doc_id ASC LIMIT 20""".stripMargin,
+        |FROM score ORDER BY weight DESC, doc_id ASC LIMIT 20""".stripMargin)),
 
     // leak-free folds: q40's pair graph + closure, fold = md560("fold:" ||
     // group_key) % 5 where group_key = cluster_id (clustered docs) or
     // doc_id (singletons); cross_fold_dup_pairs asserts the invariant
-    "q110_leak_split" ->
+    Query("q110_leak_split", qLeakSplit, sql(
       s"""WITH RECURSIVE $DupClusterCtes,
          | folded AS (SELECT d.doc_id,
          |    coalesce(c.cluster_id, d.doc_id) AS group_key,
@@ -7671,11 +7877,11 @@ object SparkEntry {
          | count(DISTINCT group_key)::BIGINT AS n_groups,
          | sum(CASE WHEN in_cluster THEN 1 ELSE 0 END)::BIGINT AS n_dup_docs,
          | cross_fold_dup_pairs
-         |FROM folded, leak GROUP BY fold, cross_fold_dup_pairs""".stripMargin,
+         |FROM folded, leak GROUP BY fold, cross_fold_dup_pairs""".stripMargin)),
 
     // Gopher rule battery: five integer cross-multiplied predicates,
     // per-source fail counts + survivors
-    "q111_gopher_rules" ->
+    Query("q111_gopher_rules", qGopherRules, sql(
       """WITH d AS (SELECT source, lower(trim(text)) AS t,
         |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
         | f AS (SELECT source,
@@ -7701,12 +7907,12 @@ object SparkEntry {
         | sum(CASE WHEN r4 THEN 0 ELSE 1 END)::BIGINT AS n_fail_alpha_words,
         | sum(CASE WHEN r5 THEN 0 ELSE 1 END)::BIGINT AS n_fail_stopwords,
         | sum(CASE WHEN r1 AND r2 AND r3 AND r4 AND r5 THEN 1 ELSE 0 END)::BIGINT AS n_kept
-        |FROM r GROUP BY source""".stripMargin,
+        |FROM r GROUP BY source""".stripMargin)),
 
-    "q112_nb_lang" -> nbLangOracleSql,
+    Query("q112_nb_lang", qNbLang, sql(nbLangOracleSql)),
 
     // multiprobe: query bucket ∪ {bucket ⊕ 2^i} — 9 probes at 8 bits
-    "q113_multiprobe_lsh" ->
+    Query("q113_multiprobe_lsh", qMultiprobe, sql(
       s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |  ${bucketSql("embedding")} AS bucket FROM embeddings),
          | q AS (SELECT v AS qv, bucket AS qb FROM b WHERE vec_id = 0),
@@ -7718,12 +7924,12 @@ object SparkEntry {
          |   ORDER BY score DESC, vec_id ASC LIMIT 10)
          |SELECT vec_id, round(score, 6) AS score,
          | row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
-         |FROM topk""".stripMargin,
+         |FROM topk""".stripMargin)),
 
     // SQ8: codes = floor(127*x/s + 0.5) (deterministic shifted floor,
     // VectorFunctions.quantizeInt8); stage 1 orders by s·(int dot),
     // stage 2 exact cosine over the 50-survivor pool
-    "q114_sq8_ann" ->
+    Query("q114_sq8_ann", qSq8Ann, sql(
       s"""WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          | cd AS (SELECT vec_id, v, s,
          |   [CASE WHEN s = 0 THEN 0::BIGINT
@@ -7737,11 +7943,11 @@ object SparkEntry {
          |   FROM pool p, q ORDER BY score DESC, p.vec_id ASC LIMIT 10)
          |SELECT vec_id, round(score, 6) AS score,
          | row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
-         |FROM topk""".stripMargin,
+         |FROM topk""".stripMargin)),
 
     // CCNet triage: hashed-bigram LM on the en subset, per-doc integer
     // micro-nat NLL, thirds per lang by mean NLL (rank cut, integer //)
-    "q115_ppl_buckets" ->
+    Query("q115_ppl_buckets", qPplBuckets, sql(
       """WITH w AS (SELECT doc_id, lang,
         |   regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
         | bgs AS (SELECT doc_id, lang, lang = 'en' AS tgt, unnest(CASE WHEN len(w) >= 2
@@ -7760,11 +7966,11 @@ object SparkEntry {
         |   FROM scored)
         |SELECT lang, ((r - 1) * 3 // nl)::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
         | sum(nll)::BIGINT AS sum_nll, sum(nb)::BIGINT AS sum_bigrams
-        |FROM ranked GROUP BY 1, 2""".stripMargin,
+        |FROM ranked GROUP BY 1, 2""".stripMargin)),
 
     // cross-source overlap: distinct (source, MOSS fingerprint) pairs
     // (q19's fingerprint vocabulary), self-join on the fingerprint
-    "q116_source_overlap" ->
+    Query("q116_source_overlap", qSourceOverlap, sql(
       s"""WITH fp AS (SELECT DISTINCT source, h AS fp FROM (
          |   SELECT source, unnest(list_distinct([h for h in
          |     [${h32Sql("substr(t, i, 16)")} for i in range(1, greatest(len(t) - 15, 1) + 1)]
@@ -7777,10 +7983,10 @@ object SparkEntry {
          |   GROUP BY 1, 2)
          |SELECT source_a, source_b, n_shared, ta.n AS n_a, tb.n AS n_b
          |FROM sh JOIN tot ta ON ta.source = source_a
-         | JOIN tot tb ON tb.source = source_b""".stripMargin,
+         | JOIN tot tb ON tb.source = source_b""".stripMargin)),
 
     // exact quantiles: smallest value with cum·den >= n·num per source
-    "q117_exact_quantiles" ->
+    Query("q117_exact_quantiles", qExactQuantiles, sql(
       """WITH h AS (SELECT source, n_chars AS value, count(*)::BIGINT AS c
         |   FROM documents GROUP BY 1, 2),
         | cm AS (SELECT source, value,
@@ -7791,11 +7997,11 @@ object SparkEntry {
         |SELECT source, quantile, min(value)::BIGINT AS value,
         | max(n)::BIGINT AS n_rows
         |FROM cm, q WHERE cum * den >= n * num
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin)),
 
     // hubness: within-bucket 3-NN lists, k-occurrence histogram;
     // singleton-bucket points count at occurrence 0 via the left join
-    "q118_hubness" ->
+    Query("q118_hubness", qHubness, sql(
       s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |  ${bucketSql("embedding")} AS bucket FROM embeddings),
          | p AS (SELECT x.vec_id AS src, y.vec_id AS dst,
@@ -7806,11 +8012,11 @@ object SparkEntry {
          | occ AS (SELECT dst, count(*)::BIGINT AS ko FROM r WHERE r <= 3 GROUP BY dst)
          |SELECT coalesce(ko, 0)::BIGINT AS k_occurrence, count(*)::BIGINT AS n_points
          |FROM (SELECT vec_id AS dst FROM b) a LEFT JOIN occ USING (dst)
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
     // threshold curve: q14's candidates + integer cross-multiplied
     // Jaccard thresholds; one pair pass serves every threshold
-    "q119_dedup_curve" ->
+    Query("q119_dedup_curve", qDedupCurve, sql(
       s"""WITH $MinhashCtes,
          | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |   FROM bands x JOIN bands y
@@ -7825,23 +8031,23 @@ object SparkEntry {
          | np AS (SELECT threshold_pct, count(*)::BIGINT AS n_pairs FROM at GROUP BY 1),
          | nd AS (SELECT threshold_pct, count(DISTINCT d)::BIGINT AS n_docs FROM
          |   (SELECT threshold_pct, unnest([doc_a, doc_b]) AS d FROM at) GROUP BY 1)
-         |SELECT threshold_pct, n_pairs, n_docs FROM np JOIN nd USING (threshold_pct)""".stripMargin,
+         |SELECT threshold_pct, n_pairs, n_docs FROM np JOIN nd USING (threshold_pct)""".stripMargin)),
 
     // fertility: q18's BPE regex vocabulary + whitespace words + chars
     // + UTF-8 bytes, all integer sums per language
-    "q120_fertility" ->
+    Query("q120_fertility", qFertility, sql(
       """SELECT lang, count(*)::BIGINT AS n_docs,
         | sum(len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '')))::BIGINT AS total_words,
         | sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')))::BIGINT AS total_bpe_tokens,
         | sum(len(text))::BIGINT AS total_chars,
         | sum(octet_length(encode(text)))::BIGINT AS total_bytes
-        |FROM documents GROUP BY lang""".stripMargin,
+        |FROM documents GROUP BY lang""".stripMargin)),
 
     // within-doc repeated 5-grams: token windows via list slice, counted
     // per (doc, ngram); repeated_positions = sum(cnt-1)
     // 60-bit hash domain (r13): ng = md5Int60 of the 5-token window —
     // the TokenNgramHashes kernel contract; output carries no strings
-    "q121_intradoc_repeats" ->
+    Query("q121_intradoc_repeats", qIntradocRepeats, sql(
       s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
         | g AS (SELECT doc_id, unnest([${h60Sql("array_to_string(w[i:i+4], ' ')")}
         |   for i in range(1, greatest(len(w) - 4, 0) + 1)]) AS ng FROM toks),
@@ -7851,21 +8057,21 @@ object SparkEntry {
         |   sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END)::BIGINT AS distinct_repeated
         |   FROM c GROUP BY 1)
         |SELECT doc_id, n_ngrams, repeated_positions, distinct_repeated FROM d
-        |ORDER BY repeated_positions DESC, doc_id LIMIT 20""".stripMargin,
+        |ORDER BY repeated_positions DESC, doc_id LIMIT 20""".stripMargin)),
 
     // literal-substring counts via the replace length-delta identity;
     // phrase list must stay in sync with BlocklistPhrases
-    "q122_blocklist" ->
+    Query("q122_blocklist", qBlocklist, sql(
       """WITH p AS (SELECT unnest(['slow', 'vector', 'fast table', 'merge batch']) AS phrase),
         | h AS (SELECT source, phrase,
         |   CAST((length(text) - length(replace(text, phrase, ''))) / length(phrase) AS BIGINT) AS hits
         |   FROM documents, p)
         |SELECT source, phrase, sum(hits)::BIGINT AS total_hits,
         | sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::BIGINT AS docs_hit
-        |FROM h GROUP BY 1, 2""".stripMargin,
+        |FROM h GROUP BY 1, 2""".stripMargin)),
 
     // integer dot products of per-source token-count vectors + squared norms
-    "q123_source_similarity" ->
+    Query("q123_source_similarity", qSourceSimilarity, sql(
       """WITH tk AS (SELECT source, unnest(list_filter(
         |     regexp_split_to_array(lower(trim(text)), '\s+'), x -> x <> '')) AS tok FROM documents),
         | c AS (SELECT source, tok, count(*) AS cnt FROM tk GROUP BY 1, 2),
@@ -7874,19 +8080,57 @@ object SparkEntry {
         |   FROM c a JOIN c b ON a.tok = b.tok AND a.source < b.source GROUP BY 1, 2)
         |SELECT src_a, src_b, dot, na.norm_sq AS norm_a, nb.norm_sq AS norm_b
         |FROM d JOIN n na ON na.source = src_a JOIN n nb ON nb.source = src_b
-        |ORDER BY dot DESC, src_a, src_b LIMIT 30""".stripMargin,
+        |ORDER BY dot DESC, src_a, src_b LIMIT 30""".stripMargin)),
 
     // fixed-point (1e6-scaled long) second moments of the 16-dim prefix:
     // floor(x*1e6) products summed as exact integers
-    "q124_embed_covariance" ->
+    Query("q124_embed_covariance", qEmbedCovariance, sql(
       """WITH e AS (SELECT [floor(x::DOUBLE * 1000000)::BIGINT for x in embedding[1:16]] AS q FROM embeddings)
         |SELECT i AS dim_i, j AS dim_j, sum(q[i] * q[j])::BIGINT AS sum_xy, count(*)::BIGINT AS n
         |FROM e, range(1, 17) t1(i), range(1, 17) t2(j)
-        |WHERE i <= j GROUP BY 1, 2""".stripMargin,
+        |WHERE i <= j GROUP BY 1, 2""".stripMargin)),
+
+    // 200-char segments, q16's stopword langid per segment, disagreement
+    // stats per doc
+    Query("q125_mixed_lang", qMixedLang, sql(
+      s"""WITH segs AS (SELECT doc_id, unnest([substr(text, k * 200 + 1, 200)
+         |   for k in range(0, greatest(CAST(ceil(length(text) / 200.0) AS INT), 1))]) AS seg FROM documents),
+         | sw AS (SELECT doc_id, regexp_split_to_array(lower(trim(seg)), '\\s+') AS w FROM segs),
+         | s AS (SELECT doc_id,
+         |  len(list_filter(w, x -> list_contains($EnStopSql, x))) AS s_en,
+         |  len(list_filter(w, x -> list_contains(['le','la','de','et','les','des','un','est'], x))) AS s_fr,
+         |  len(list_filter(w, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS s_de,
+         |  len(list_filter(w, x -> list_contains(['el','la','de','y','los','en','un','es'], x))) AS s_es,
+         |  len(list_filter(w, x -> list_contains(['的','是','了','在','我','有','和','不'], x))) AS s_zh
+         | FROM sw),
+         | m AS (SELECT doc_id, CASE WHEN mx = 0 THEN 'unknown' WHEN s_en = mx THEN 'en'
+         |   WHEN s_fr = mx THEN 'fr' WHEN s_de = mx THEN 'de' WHEN s_es = mx THEN 'es'
+         |   ELSE 'zh' END AS seg_lang
+         |   FROM (SELECT *, greatest(s_en, s_fr, s_de, s_es, s_zh) AS mx FROM s)),
+         | c AS (SELECT doc_id, seg_lang, count(*) AS cnt FROM m GROUP BY 1, 2)
+         |SELECT doc_id, sum(cnt)::BIGINT AS n_segments, count(*)::BIGINT AS n_langs,
+         | max(cnt)::BIGINT AS majority_cnt
+         |FROM c GROUP BY 1 ORDER BY n_langs DESC, doc_id LIMIT 20""".stripMargin)),
+
+    Query("q126_whitened_topk", qWhitenedTopK,
+      (s, dir) => {
+        val (w, mean) = whitenModelFor(s, dir, 16)
+        whitenedOracleSql(w, mean)
+      }),
+
+    // adjacent char pairs within case-folded whitespace words, ranked by
+    // corpus frequency (first BPE merge round)
+    Query("q127_bpe_merge", qBpeMerge, sql(
+      """WITH w AS (SELECT unnest(list_filter(
+        |     regexp_split_to_array(lower(trim(text)), '\s+'), x -> x <> '')) AS w FROM documents),
+        | p AS (SELECT unnest([substr(w, i, 2)
+        |   for i in range(1, greatest(len(w) - 1, 0) + 1)]) AS pair FROM w)
+        |SELECT pair, count(*)::BIGINT AS cnt FROM p GROUP BY 1
+        |ORDER BY cnt DESC, pair LIMIT 20""".stripMargin)),
 
     // derived snapshot B (md5(doc_id) bucket: 0 dropped, 1 cloned under
     // +1e6 id, 2 text||' v2'), diffed against A by content hash
-    "q128_snapshot_diff" ->
+    Query("q128_snapshot_diff", qSnapshotDiff, sql(
       s"""WITH a AS (SELECT doc_id, ${h32Sql("text")} AS h_a FROM documents),
          | src AS (SELECT doc_id, text, ${h32Sql("doc_id::VARCHAR")} % 10 AS bk FROM documents),
          | b AS (SELECT doc_id,
@@ -7898,22 +8142,22 @@ object SparkEntry {
          |  WHEN h_a <> h_b THEN 'changed' ELSE 'unchanged' END AS status,
          | count(*)::BIGINT AS n_docs
          |FROM a FULL OUTER JOIN b USING (doc_id)
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
     // hash-rate undersampling toward the minority language: keep iff
     // md5(doc_id) % 1000 < (1000 * n_min) div n_orig (integer division)
-    "q129_balanced_sample" ->
+    Query("q129_balanced_sample", qBalancedSample, sql(
       s"""WITH c AS (SELECT lang, count(*)::BIGINT AS n_orig FROM documents GROUP BY 1),
          | m AS (SELECT min(n_orig) AS n_min FROM c),
          | k AS (SELECT d.lang FROM documents d JOIN c USING (lang) CROSS JOIN m
          |   WHERE ${h32Sql("d.doc_id::VARCHAR")} % 1000 < (1000 * n_min) // n_orig)
          |SELECT k.lang, max(c.n_orig)::BIGINT AS n_orig, count(*)::BIGINT AS n_kept
-         |FROM k JOIN c ON k.lang = c.lang GROUP BY 1""".stripMargin,
+         |FROM k JOIN c ON k.lang = c.lang GROUP BY 1""".stripMargin)),
 
     // HLL per-source vocabulary estimate: 60-bit md5 hash → low 6 bits
     // register, ρ = 55 − bitlength(remaining 54 bits); register sum in
     // exact integer arithmetic, one final double division (α₆₄ = 0.709)
-    "q130_hll_vocab" ->
+    Query("q130_hll_vocab", qHllVocab, sql(
       s"""WITH words AS (SELECT source, regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
          | tt AS (SELECT source, unnest(list_distinct(CASE WHEN len(w) >= 3
          |   THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w)-2)]
@@ -7931,12 +8175,12 @@ object SparkEntry {
          | ex AS (SELECT source, count(DISTINCT tok)::BIGINT AS exact_distinct FROM tt GROUP BY 1)
          |SELECT source, exact_distinct, n_zero_registers, hll_distinct,
          |  round((hll_distinct - exact_distinct) / exact_distinct::DOUBLE, 6) AS rel_err
-         |FROM est JOIN ex USING (source)""".stripMargin,
+         |FROM est JOIN ex USING (source)""".stripMargin)),
 
     // KMV pairwise set-op estimates: 256 smallest distinct token hashes
     // per source; merged k-min + membership flags give union / Jaccard /
     // intersection estimates ((k−1)·2^60/U; overlap/n; their product)
-    "q131_kmv_overlap" ->
+    Query("q131_kmv_overlap", qKmvOverlap, sql(
       s"""WITH words AS (SELECT source, regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
          | t AS (SELECT source, unnest(list_distinct(CASE WHEN len(w) >= 3
          |   THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w)-2)]
@@ -7967,12 +8211,54 @@ object SparkEntry {
          |  round((overlap_k::DOUBLE / n_merged::DOUBLE)
          |    * (CASE WHEN n_merged < 256 THEN n_merged::DOUBLE
          |       ELSE 255.0 * 1152921504606846976.0 / u_k::DOUBLE END), 4) AS est_intersection
-         |FROM agg""".stripMargin,
+         |FROM agg""".stripMargin)),
+
+    // UniMax closed form: capacities ascending; capped languages are the
+    // prefix where capacity_i*(L-i+1) + cum_before <= B; the rest split
+    // the remainder uniformly (integer div)
+    Query("q132_unimax", qUnimax, sql(
+      """WITH c AS (SELECT lang,
+        |   sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')))::BIGINT AS n_tokens
+        |  FROM documents GROUP BY lang),
+        | r AS (SELECT lang, n_tokens, n_tokens * 3 AS capacity,
+        |   row_number() OVER (ORDER BY n_tokens * 3 ASC, lang ASC) AS i,
+        |   coalesce(sum(n_tokens * 3) OVER (ORDER BY n_tokens * 3 ASC, lang ASC
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum_before,
+        |   count(*) OVER ()::BIGINT AS L,
+        |   ((sum(n_tokens) OVER () * 1) // 2)::BIGINT AS B
+        |  FROM c),
+        | f AS (SELECT r.*, capacity * (L - i + 1) + cum_before <= B AS capped FROM r),
+        | k AS (SELECT max(CASE WHEN capped THEN i ELSE 0 END)::BIGINT AS k,
+        |   max(CASE WHEN capped THEN cum_before + capacity ELSE 0 END)::BIGINT AS cum_k
+        |  FROM f)
+        |SELECT lang, n_tokens, capacity,
+        | (CASE WHEN i <= k THEN capacity ELSE (B - cum_k) // (L - k) END)::BIGINT AS alloc_tokens,
+        | i <= k AS is_capped,
+        | ((CASE WHEN i <= k THEN capacity ELSE (B - cum_k) // (L - k) END * 1000000) // n_tokens)::BIGINT AS micro_epochs
+        |FROM f, k""".stripMargin)),
+
+    // keep-first over non-overlapping 2-token windows; cleaned text
+    // reassembled in segment order and verified by 32-bit hash
+    Query("q133_intradoc_scrub", qIntradocScrub, sql(
+      s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk FROM documents),
+         | segl AS (SELECT doc_id, [array_to_string(tk[i*2+1:i*2+2], ' ')
+         |   for i in range(0, (len(tk) + 1) // 2)] AS segs FROM toks),
+         | seg AS (SELECT doc_id, generate_subscripts(segs, 1) - 1 AS idx, unnest(segs) AS s FROM segl),
+         | kept AS (SELECT doc_id, idx, s,
+         |   row_number() OVER (PARTITION BY doc_id, s ORDER BY idx ASC) AS rn FROM seg),
+         | agg AS (SELECT doc_id, count(*)::BIGINT AS n_segments,
+         |   sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
+         |   coalesce(string_agg(CASE WHEN rn = 1 THEN s END, ' ' ORDER BY idx ASC), '') AS cleaned
+         |  FROM kept GROUP BY doc_id)
+         |SELECT doc_id, n_segments, n_dropped,
+         | length(cleaned)::BIGINT AS cleaned_n_chars,
+         | ${h32Sql("cleaned")} AS cleaned_hash
+         |FROM agg ORDER BY n_dropped DESC, doc_id ASC LIMIT 20""".stripMargin)),
 
     // log2-linear quantile sketch (32 sub-buckets/octave): bucket and
     // lower bound in pure integer arithmetic; lower-quantile rank rule
     // target = ceil(p*n/100) on both the sketch and the exact side
-    "q134_quantile_sketch" ->
+    Query("q134_quantile_sketch", qQuantileSketch, sql(
       """WITH v AS (SELECT source, n_chars::BIGINT AS v FROM documents WHERE n_chars IS NOT NULL),
         | b AS (SELECT source,
         |   CASE WHEN v = 0 THEN -1 ELSE (length(bin(v)) - 1) * 32 +
@@ -8003,14 +8289,173 @@ object SparkEntry {
         |   WHERE c >= (n * p + 99) // 100 GROUP BY 1, 2)
         |SELECT ex.source, ex.p, exact_value, est_value,
         |  round((est_value - exact_value) / exact_value::DOUBLE, 6) AS rel_err
-        |FROM ex JOIN est ON ex.source = est.source AND ex.p = est.p""".stripMargin,
+        |FROM ex JOIN est ON ex.source = est.source AND ex.p = est.p""".stripMargin)),
+
+    Query("q135_temperature_sample", qTemperatureSample, sql(
+      """WITH c AS (SELECT source, count(*)::BIGINT AS n_orig FROM documents GROUP BY 1),
+        | w AS (SELECT source, n_orig,
+        |   floor(sqrt(n_orig::DOUBLE * 1000000.0))::BIGINT AS w_milli FROM c),
+        | t AS (SELECT sum(n_orig)::BIGINT AS n_total, sum(w_milli)::BIGINT AS w_total FROM w),
+        | r AS (SELECT source, n_orig,
+        |   least(1000000, floor((1000000.0 * ((n_total * 1) // 2)::DOUBLE * w_milli::DOUBLE)
+        |     / (w_total::DOUBLE * n_orig::DOUBLE))::BIGINT) AS rate_micro
+        |  FROM w, t),
+        | k AS (SELECT d.source, r.n_orig, r.rate_micro
+        |  FROM documents d JOIN r USING (source)
+        |  WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 1000000 < r.rate_micro)
+        |SELECT source, max(n_orig) AS n_orig, max(rate_micro) AS rate_micro,
+        |  count(*)::BIGINT AS n_kept
+        |FROM k GROUP BY source""".stripMargin)),
+
+    // DoReMi-lite: 4 unrolled multiplicative-weights iterations over the
+    // per-source integer difficulty (mean clipped inverse token frequency,
+    // milli-units); CASE keeps every // non-negative (Spark div truncates,
+    // DuckDB // floors — equal only there)
+    Query("q136_doremi_mixture", qDoremiMixture, sql(
+      s"""WITH toks AS (SELECT source, unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), t -> t <> '')) AS tok FROM documents),
+         | stc AS (SELECT source, tok, count(*)::BIGINT AS cnt FROM toks GROUP BY 1, 2),
+         | tokc AS (SELECT tok, sum(cnt)::BIGINT AS c FROM stc GROUP BY tok),
+         | tot AS (SELECT sum(c)::BIGINT AS t FROM tokc),
+         | sr AS (SELECT s.source, sum(s.cnt)::BIGINT AS n_tokens,
+         |   sum(s.cnt * least((tot.t * 1000) // tk.c, 1000000000))::BIGINT AS sum_rarity
+         |  FROM stc s JOIN tokc tk USING (tok), tot GROUP BY s.source),
+         | w0 AS (SELECT source, n_tokens, (sum_rarity // n_tokens)::BIGINT AS loss,
+         |   1000000::BIGINT AS w FROM sr),
+         | ${doremiIterSql("w0", "w1")},
+         | ${doremiIterSql("w1", "w2")},
+         | ${doremiIterSql("w2", "w3")},
+         | ${doremiIterSql("w3", "w4")}
+         |SELECT source, n_tokens, loss, (n_tokens * 1000000 // tot.t)::BIGINT AS base_ppm,
+         | (w * 1000000 // (sum(w) OVER ())::BIGINT)::BIGINT AS weight_ppm
+         |FROM w4, tot""".stripMargin)),
+
+    // fastText-shape inference: bigram -> bucket = md5_32 % 4096 ->
+    // weight = md5_32('w'+bucket) % 2001, mean-pooled then centered
+    Query("q137_quality_classifier", qQualityClassifier, sql(
+      """WITH toks AS (SELECT doc_id, source,
+        |   list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '') AS w FROM documents),
+        | grams AS (SELECT doc_id, source, CASE WHEN len(w) >= 2
+        |   THEN [w[i+1] || ' ' || w[i+2] for i in range(0, len(w) - 1)] ELSE [] END AS g FROM toks),
+        | scored AS (SELECT doc_id, source, len(g)::BIGINT AS n_bigrams,
+        |   list_sum([('0x' || substr(md5('w' || ((('0x' || substr(md5(x), 1, 8))::BIGINT % 4096)::VARCHAR)), 1, 8))::BIGINT % 2001
+        |     for x in g])::BIGINT AS wsum
+        |  FROM grams)
+        |SELECT doc_id, source, n_bigrams, (wsum // n_bigrams - 1000)::BIGINT AS score_milli,
+        | (wsum // n_bigrams - 1000) >= 0 AS keep
+        |FROM scored WHERE n_bigrams > 0
+        |ORDER BY score_milli DESC, doc_id ASC LIMIT 20""".stripMargin)),
+
+    // byte-histogram sign signature (32 buckets, bit i iff 32*hist[i] > n),
+    // exact copies collapse by signature, 4x8-bit band join between
+    // signature groups, Hamming <= 3 (pigeonhole-exact recall)
+    Query("q138_media_neardup", qMediaNearDup, sql(
+      """WITH b AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS n,
+        |   hex(encode(text)) AS hx FROM documents),
+        | bl AS (SELECT media_id, n,
+        |   [('0x' || substr(hx, 2*i+1, 2))::BIGINT % 32 for i in range(0, n)] AS bs FROM b),
+        | emb AS (SELECT media_id, n,
+        |   [len(list_filter(bs, x -> x = bkt))::BIGINT for bkt in range(0, 32)] AS e FROM bl),
+        | sg AS (SELECT media_id, list_sum([CASE WHEN 32 * e[i+1] > n
+        |   THEN (1::BIGINT << i) ELSE 0::BIGINT END for i in range(0, 32)])::BIGINT AS sig FROM emb),
+        | grp AS (SELECT sig, min(media_id)::BIGINT AS rep, count(*)::BIGINT AS n_media
+        |  FROM sg GROUP BY sig),
+        | bands AS (SELECT sig, rep, n_media,
+        |   unnest([{'b': b, 'v': (sig >> (8*b)) & 255} for b in range(0, 4)]) AS bv FROM grp),
+        | cand AS (SELECT DISTINCT x.sig AS sig_a, x.rep AS rep_a, x.n_media AS n_a,
+        |   y.sig AS sig_b, y.rep AS rep_b, y.n_media AS n_b
+        |  FROM bands x JOIN bands y
+        |  ON x.bv.b = y.bv.b AND x.bv.v = y.bv.v AND x.sig < y.sig)
+        |SELECT rep_a, rep_b, n_a, n_b, bit_count(xor(sig_a, sig_b))::BIGINT AS hamming
+        |FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 3""".stripMargin)),
+
+    // top-256 corpus bigram vocab (count desc, bigram asc), per-source
+    // OOV occurrence mass in ppm
+    // 60-bit hash domain (r13): g = md5Int60 of "w1 SP w2" (the
+    // TokenBigramHashes contract — NO empty-token filter, matching the
+    // kernel); the vocab cut ties break on the hash, replayed here
+    Query("q139_vocab_coverage", qVocabCoverage, sql(
+      s"""WITH toks AS (SELECT source,
+        |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
+        | grams AS (SELECT source, unnest(CASE WHEN len(w) >= 2
+        |   THEN [${h60Sql("w[i+1] || ' ' || w[i+2]")} for i in range(0, len(w) - 1)] ELSE [] END) AS g FROM toks),
+        | stc AS (SELECT source, g, count(*)::BIGINT AS cnt FROM grams GROUP BY 1, 2),
+        | vocab AS (SELECT g FROM (SELECT g, sum(cnt)::BIGINT AS c FROM stc GROUP BY g
+        |   ORDER BY c DESC, g ASC LIMIT 256)),
+        | tot AS (SELECT source, sum(cnt)::BIGINT AS n_grams FROM stc GROUP BY source),
+        | oov AS (SELECT s.source, sum(s.cnt)::BIGINT AS n_oov FROM stc s
+        |  LEFT JOIN vocab v ON s.g = v.g WHERE v.g IS NULL GROUP BY s.source)
+        |SELECT t.source, t.n_grams, coalesce(o.n_oov, 0)::BIGINT AS n_oov,
+        | (coalesce(o.n_oov, 0) * 1000000 // t.n_grams)::BIGINT AS oov_ppm
+        |FROM tot t LEFT JOIN oov o USING (source)""".stripMargin)),
+
+    // count-min cells rebuilt as in q57, tau = ceil(total * 20000 ppm),
+    // candidates = est >= tau (superset), exact counts + threshold
+    Query("q140_heavy_hitters", qHeavyHitters, sql(
+      """WITH toks AS (SELECT unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '')) AS token FROM documents),
+        | cells AS (SELECT j,
+        |   ((h * (2*j+1) + (1000000007*(j+1)) % 4294967311) % 4294967311) % 64 AS bucket,
+        |   count(*)::BIGINT AS cnt
+        |  FROM (SELECT ('0x' || substr(md5(token), 1, 8))::BIGINT AS h FROM toks),
+        |       (SELECT unnest(range(0, 4)) AS j) GROUP BY 1, 2),
+        | tot AS (SELECT sum(cnt)::BIGINT AS n FROM cells WHERE j = 0),
+        | thr AS (SELECT greatest((n // 1000000) * 20000
+        |   + ((n % 1000000) * 20000 + 999999) // 1000000, 1)::BIGINT AS tau FROM tot),
+        | exact AS (SELECT token, count(*)::BIGINT AS cnt FROM toks GROUP BY token),
+        | pe AS (SELECT token, j,
+        |   ((h * (2*j+1) + (1000000007*(j+1)) % 4294967311) % 4294967311) % 64 AS bucket
+        |  FROM (SELECT token, ('0x' || substr(md5(token), 1, 8))::BIGINT AS h
+        |        FROM (SELECT DISTINCT token FROM toks)),
+        |       (SELECT unnest(range(0, 4)) AS j)),
+        | est AS (SELECT token, min(coalesce(c.cnt, 0))::BIGINT AS est
+        |  FROM pe LEFT JOIN cells c USING (j, bucket) GROUP BY token)
+        |SELECT token, cnt, est FROM exact JOIN est USING (token), thr
+        |WHERE cnt >= tau ORDER BY cnt DESC, token ASC LIMIT 20""".stripMargin)),
+
+    // three integer signals -> strictly-below percentile ppm via value
+    // histograms (no global sort on either engine), integer mean, top-20
+    Query("q141_quality_ensemble", qQualityEnsemble, sql(
+      s"""WITH base AS (SELECT doc_id, n_chars,
+         |   len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT AS n_tok,
+         |   (len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
+         |      x -> list_contains($EnStopSql, x)))::BIGINT * 1000)
+         |     // greatest(len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
+         |      x -> x <> ''))::BIGINT, 1) AS stop_milli
+         |  FROM documents),
+         | h1 AS (SELECT n_chars AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
+         | p1 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h1),
+         | h2 AS (SELECT n_tok AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
+         | p2 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h2),
+         | h3 AS (SELECT stop_milli AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
+         | p3 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h3)
+         |SELECT doc_id, n_chars, n_tok, stop_milli,
+         | ((p1.p + p2.p + p3.p) // 3)::BIGINT AS ensemble_ppm
+         |FROM base JOIN p1 ON base.n_chars = p1.v
+         |  JOIN p2 ON base.n_tok = p2.v
+         |  JOIN p3 ON base.stop_milli = p3.v
+         |ORDER BY ensemble_ppm DESC, doc_id ASC LIMIT 20""".stripMargin)),
+
+    // q93's centroid replay + cosine to own-label centroid, per-label
+    // cohesion rollup with an exact outlier count at cos < 0.5
+    Query("q142_label_cohesion", qLabelCohesion, sql(
+      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
+         | ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
+         |   unnest(embedding::DOUBLE[]) AS v FROM embeddings),
+         | cdim AS (SELECT label, dim, round(sum(v) / count(*), 6) AS m
+         |  FROM ex GROUP BY 1, 2),
+         | cent AS (SELECT label, list(m ORDER BY dim) AS c FROM cdim GROUP BY label),
+         | scored AS (SELECT b.label, round(${cosSqlAB("e", "c")}, 6) AS cos
+         |  FROM base b JOIN cent USING (label))
+         |SELECT label, count(*)::BIGINT AS n_vectors,
+         | round(avg(cos), 6) AS avg_cos, min(cos) AS min_cos,
+         | sum(CASE WHEN cos < 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_low
+         |FROM scored GROUP BY label""".stripMargin)),
 
     // temperature sampling at alpha=1/2: integer milli-weights
     // floor(sqrt(n*1e6)) summed order-free, one fixed-association double
     // rate expression floored to micro-units, md5 rate-rule selection
     // lift = c_ab*T^2/(P*c_a*c_b) as pure IEEE arithmetic (same
     // left-assoc multiply chain both engines), floored to ppm; no ln
-    "q143_collocations" ->
+    Query("q143_collocations", qCollocations, sql(
       """WITH toks AS (SELECT list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '') AS w FROM documents),
         | uc AS (SELECT tok, count(*)::BIGINT AS c FROM
         |   (SELECT unnest(w) AS tok FROM toks) GROUP BY tok),
@@ -8025,13 +8470,16 @@ object SparkEntry {
         |SELECT w1, w2, c_ab,
         | CAST(floor(((c_ab::DOUBLE * t * t) / (p::DOUBLE * c_a * c_b)) * 1000000.0) AS BIGINT) AS lift_ppm
         |FROM j, tt, pt
-        |ORDER BY lift_ppm DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin,
+        |ORDER BY lift_ppm DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin)),
+
+    Query("q144_cluster_quality", qClusterQuality,
+      (s, dir) => clusterQualityOracleSql(workingSetClustersFor(s, dir).centers)),
 
     // per-doc (ln tokens, ln types) quantized to integer micro-nats,
     // exact integer regression sums, slope/intercept in double FROM the
     // exact sums with every sum cast to double BEFORE any product (the
     // Spark side computes double*double, never int128-then-cast)
-    "q145_heaps_law" ->
+    Query("q145_heaps_law", qHeapsLaw, sql(
       """WITH t AS (SELECT
         |   round(ln(len(w)) * 1e6)::BIGINT AS x,
         |   round(ln(len(list_distinct(w))) * 1e6)::BIGINT AS y
@@ -8047,12 +8495,12 @@ object SparkEntry {
         |   ((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE) /
         |    nullif(n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE, 0.0)) * sx::DOUBLE) /
         |   n::DOUBLE) / 1e6, 6) AS ln_k
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin)),
 
     // q117's histogram-quantile CTE at p05/p95, clip, exact integer
     // clipped sums, mean/std in double from the exact sums (population
     // std: sqrt((Scc - Sc^2/n)/n), identical association both engines)
-    "q146_winsorized_stats" ->
+    Query("q146_winsorized_stats", qWinsorizedStats, sql(
       """WITH h AS (SELECT source, n_chars AS value, count(*)::BIGINT AS c
         |   FROM documents GROUP BY 1, 2),
         | cm AS (SELECT source, value,
@@ -8076,11 +8524,11 @@ object SparkEntry {
         | round(sum(cv)::DOUBLE / count(*)::DOUBLE, 4) AS win_mean,
         | round(sqrt(greatest(0.0, (sum(cv*cv)::DOUBLE - sum(cv)::DOUBLE * sum(cv)::DOUBLE
         |   / count(*)::DOUBLE) / count(*)::DOUBLE)), 4) AS win_std
-        |FROM cl GROUP BY source""".stripMargin,
+        |FROM cl GROUP BY source""".stripMargin)),
 
     // q110's verified 0.5-Jaccard pair list -> endpoint degrees ->
     // histogram including degree-0 docs via the corpus left join
-    "q147_dup_degree" ->
+    Query("q147_dup_degree", qDupDegree, sql(
       s"""WITH $MinhashCtes,
          | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |   FROM bands x JOIN bands y
@@ -8095,12 +8543,27 @@ object SparkEntry {
          |SELECT coalesce(degree, 0)::BIGINT AS degree,
          | count(*)::BIGINT AS n_docs
          |FROM documents d LEFT JOIN deg USING (doc_id)
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
+
+    // per-user lag over (ts, event_id) -> transition matrix with
+    // integer-ppm row-conditional probabilities (div/// agree: operands
+    // non-negative)
+    Query("q148_event_transitions", qEventTransitions, sql(
+      """WITH t AS (SELECT user_id, event_type,
+        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |     AS prev
+        |  FROM events),
+        | c AS (SELECT prev AS from_type, event_type AS to_type,
+        |   count(*)::BIGINT AS n
+        |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_type, to_type, n,
+        | ((n * 1000000) // sum(n) OVER (PARTITION BY from_type))::BIGINT AS p_ppm
+        |FROM c""".stripMargin)),
 
     // bigram counts once (pair table already distinct on (w1,w2), so
     // the re-agg counts ARE the continuation counts), vocab-keyed joins,
     // count-desc/lexical top-20
-    "q149_kn_counts" ->
+    Query("q149_kn_counts", qKnCounts, sql(
       """WITH toks AS (SELECT regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
         | pc AS (SELECT p.w1 AS w1, p.w2 AS w2, count(*)::BIGINT AS c_ab FROM
         |   (SELECT unnest([{'w1': w[i+1], 'w2': w[i+2]} for i in range(0, len(w) - 1)]) AS p
@@ -8109,14 +8572,164 @@ object SparkEntry {
         | l AS (SELECT w2, count(*)::BIGINT AS l_cont FROM pc GROUP BY 1)
         |SELECT pc.w1, pc.w2, c_ab, r_cont, l_cont
         |FROM pc JOIN r USING (w1) JOIN l USING (w2)
-        |ORDER BY c_ab DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin,
+        |ORDER BY c_ab DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin)),
+
+    // occupancy-4-bit sign buckets (pinned at the N=500 verify scale,
+    // q118 convention), within-bucket micro-quantized L2, k-th smallest
+    // as the rn >= k min (== the cumulative-mass rule at multiplicity 1)
+    Query("q150_embedding_outliers", qEmbeddingOutliers, sql(
+      s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
+         |   ${bucketSql("embedding", 4)} AS bucket FROM embeddings),
+         | bm AS (SELECT bucket, count(*)::BIGINT AS bm FROM b GROUP BY 1),
+         | p AS (SELECT x.vec_id AS u, y.vec_id AS w,
+         |    round(sqrt(list_sum([(x.v[i+1] - y.v[i+1]) * (x.v[i+1] - y.v[i+1])
+         |      for i in range(0, len(x.v))])) * 1e6)::BIGINT AS dmu
+         |   FROM b x JOIN b y USING (bucket) WHERE x.vec_id <> y.vec_id),
+         | r AS (SELECT u, dmu,
+         |    row_number() OVER (PARTITION BY u ORDER BY dmu ASC, w ASC) AS rn
+         |   FROM p),
+         | kth AS (SELECT u, min(dmu)::BIGINT AS knn_micro FROM r
+         |   WHERE rn >= 3 GROUP BY u)
+         |SELECT b.vec_id, (bm.bm - 1)::BIGINT AS n_cands, kth.knn_micro
+         |FROM b JOIN bm USING (bucket) JOIN kth ON kth.u = b.vec_id
+         |WHERE bm.bm - 1 >= 3
+         |ORDER BY knn_micro DESC, vec_id ASC LIMIT 20""".stripMargin)),
+
+    // benchmark vectors (vec_id < 10) vs the rest: per-corpus-vector max
+    // rounded cosine + count of >= 0.9 hits, cosine via the shared CosSql
+    Query("q151_embed_decontamination", qEmbedDecontamination, sql(
+      s"""WITH bench AS (SELECT vec_id AS bid, embedding::DOUBLE[] AS q
+         |   FROM embeddings WHERE vec_id < 10),
+         | corpus AS (SELECT vec_id, embedding::DOUBLE[] AS e
+         |   FROM embeddings WHERE vec_id >= 10),
+         | scored AS (SELECT vec_id, round($CosSql, 6) AS c
+         |   FROM corpus, bench),
+         | agg AS (SELECT vec_id, max(c) AS max_cos,
+         |    sum(CASE WHEN c >= 0.9 THEN 1 ELSE 0 END)::BIGINT AS n_hits
+         |   FROM scored GROUP BY 1)
+         |SELECT vec_id, max_cos, n_hits, (max_cos >= 0.9) AS flagged
+         |FROM agg ORDER BY max_cos DESC, vec_id ASC LIMIT 20""".stripMargin)),
+
+    Query("q152_chunk_boundaries", qChunkBoundaries, sql(
+      s"""WITH RECURSIVE docs0 AS (
+         |  SELECT doc_id, source, text AS t, length(text) AS len
+         |  FROM documents WHERE length(text) > 0),
+         | spans(doc_id, source, t, len, s, e) AS (
+         |  SELECT doc_id, source, t, len, 0, ${chunkEndSql("0")} FROM docs0
+         |  UNION ALL
+         |  SELECT doc_id, source, t, len, ns, ${chunkEndSql("ns")} FROM (
+         |    SELECT doc_id, source, t, len,
+         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
+         |    FROM spans
+         |    WHERE len > 200)
+         |  WHERE ns < len)
+         |SELECT source,
+         | CASE WHEN e = len THEN 'final'
+         |      WHEN substr(t, e, 1) = chr(10) THEN 'newline'
+         |      WHEN substr(t, e, 1) = ' ' THEN 'space'
+         |      ELSE 'hard' END AS boundary,
+         | count(*)::BIGINT AS n_chunks
+         |FROM spans GROUP BY 1, 2""".stripMargin)),
+
+    // md5-keyed FIM gate + cut points replayed verbatim: h = first 8 hex
+    // chars of md5("salt:"+doc_id); c1 = h1 % (n+1), c2 = c1 + h2 % (n-c1+1)
+    Query("q153_fim_spans", qFimSpans, sql(
+      """WITH d AS (SELECT doc_id, source, length(text) AS n
+        |   FROM documents WHERE length(text) > 0),
+        | g AS (SELECT doc_id, source, n,
+        |   ('0x' || substr(md5('fim:' || doc_id), 1, 8))::BIGINT % 1000 < 900 AS applied,
+        |   ('0x' || substr(md5('fimc1:' || doc_id), 1, 8))::BIGINT % (n + 1) AS c1r,
+        |   ('0x' || substr(md5('fimc2:' || doc_id), 1, 8))::BIGINT AS h2 FROM d),
+        | s AS (SELECT source, n, applied,
+        |   CASE WHEN applied THEN c1r ELSE 0 END AS c1,
+        |   CASE WHEN applied THEN c1r + h2 % (n - c1r + 1) ELSE 0 END AS c2 FROM g)
+        |SELECT source, count(*)::BIGINT AS n_docs,
+        | sum(CASE WHEN applied THEN 1 ELSE 0 END)::BIGINT AS n_fim,
+        | round(avg(CASE WHEN applied THEN c1::DOUBLE / n END), 6) AS avg_prefix_frac,
+        | round(avg(CASE WHEN applied THEN (c2 - c1)::DOUBLE / n END), 6) AS avg_middle_frac,
+        | round(avg(CASE WHEN applied THEN (n - c2)::DOUBLE / n END), 6) AS avg_suffix_frac,
+        | sum(CASE WHEN applied THEN c2 - c1 ELSE 0 END)::BIGINT AS middle_chars
+        |FROM s GROUP BY source""".stripMargin)),
+
+    // smoothed unigram KL per source vs corpus; absent-word mass in closed
+    // form: KL = Σ_present ps·ln(ps/q) + p0·[(V−Vs)·ln p0 − (L − Ls)]
+    Query("q154_source_kl", qSourceKl, sql(
+      """WITH toks AS (SELECT source,
+        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+        |  FROM documents),
+        | sc AS (SELECT source, tok, count(*)::BIGINT AS cs
+        |  FROM toks WHERE tok <> '' GROUP BY 1, 2),
+        | cc AS (SELECT tok, sum(cs)::BIGINT AS c FROM sc GROUP BY 1),
+        | corpus AS (SELECT sum(c)::BIGINT AS t_corpus, count(*)::BIGINT AS v_corpus,
+        |   sum(ln(c::DOUBLE)) AS slc FROM cc),
+        | st AS (SELECT source, sum(cs)::BIGINT AS ts, count(*)::BIGINT AS vs
+        |  FROM sc GROUP BY 1),
+        | pres AS (SELECT sc.source,
+        |   sum(((sc.cs + 1)::DOUBLE / (st.ts + corpus.v_corpus)::DOUBLE) *
+        |       (ln((sc.cs + 1)::DOUBLE / (st.ts + corpus.v_corpus)::DOUBLE) -
+        |        (ln(cc.c::DOUBLE) - ln(corpus.t_corpus::DOUBLE)))) AS kl_present,
+        |   sum(ln(cc.c::DOUBLE) - ln(corpus.t_corpus::DOUBLE)) AS ls
+        |  FROM sc JOIN cc USING (tok) JOIN st ON sc.source = st.source
+        |  CROSS JOIN corpus GROUP BY 1)
+        |SELECT st.source, st.ts AS n_tokens, st.vs AS vocab_used,
+        | round(pres.kl_present +
+        |   (1.0 / (st.ts + c.v_corpus)::DOUBLE) *
+        |   ((c.v_corpus - st.vs)::DOUBLE * ln(1.0 / (st.ts + c.v_corpus)::DOUBLE) -
+        |    ((c.slc - c.v_corpus::DOUBLE * ln(c.t_corpus::DOUBLE)) - pres.ls)), 6) AS kl
+        |FROM st JOIN pres ON st.source = pres.source CROSS JOIN corpus c""".stripMargin)),
+
+    // exact-decile calibration: boundaries via the cum-mass rule
+    // (cum*10 >= n*k) over the per-mille TTR histogram; bucket = 1 +
+    // |{b_k strictly below score}|; outcome = Gopher top-token >= 11% rule
+    Query("q155_quality_calibration", qQualityCalibration, sql(
+      """WITH t AS (SELECT doc_id,
+        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
+        |  FROM documents),
+        | pc AS (SELECT doc_id, tok, count(*)::BIGINT AS c
+        |  FROM t WHERE tok <> '' GROUP BY 1, 2),
+        | dd AS (SELECT (1000 * count(*)) // sum(c) AS score_pm,
+        |   CASE WHEN (1000 * max(c)) // sum(c) >= 110 THEN 1 ELSE 0 END AS is_rep
+        |  FROM pc GROUP BY doc_id),
+        | hist AS (SELECT score_pm, count(*)::BIGINT AS c FROM dd GROUP BY 1),
+        | cm AS (SELECT score_pm, sum(c) OVER (ORDER BY score_pm)::BIGINT AS cum,
+        |   sum(c) OVER ()::BIGINT AS n FROM hist),
+        | b AS (SELECT k, min(score_pm) AS bk
+        |  FROM cm CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS k) ks
+        |  WHERE cum * 10 >= n * k GROUP BY k),
+        | bucket AS (SELECT score_pm, is_rep,
+        |   (SELECT count(*) FROM b WHERE b.bk < dd.score_pm) + 1 AS decile FROM dd)
+        |SELECT decile::BIGINT AS decile, count(*)::BIGINT AS n_docs,
+        | min(score_pm)::BIGINT AS score_lo, max(score_pm)::BIGINT AS score_hi,
+        | round(avg(is_rep::DOUBLE), 6) AS outcome_rate
+        |FROM bucket GROUP BY 1""".stripMargin)),
+
+    // top-k bigram mass concentration; 60-bit hash domain (r13): gram =
+    // md5Int60 of "w1 SP w2" (TokenBigramHashes contract), rank/cum in
+    // the (freq desc, HASH asc) total order — tied freqs contribute the
+    // same mass, so coverage at every k is unchanged by the reorder
+    Query("q156_bigram_coverage", qBigramCoverage, sql(
+      s"""WITH toks AS (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
+        | f AS (SELECT gram, count(*)::BIGINT AS freq FROM
+        |   (SELECT unnest([${h60Sql("w[i+1] || ' ' || w[i+2]")} for i in range(0, len(w) - 1)]) AS gram
+        |    FROM toks WHERE len(w) >= 2) GROUP BY 1),
+        | tot AS (SELECT sum(freq)::BIGINT AS total_grams FROM f),
+        | r AS (SELECT freq,
+        |   row_number() OVER (ORDER BY freq DESC, gram ASC) AS rank,
+        |   sum(freq) OVER (ORDER BY freq DESC, gram ASC ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM f QUALIFY rank <= 1000)
+        |SELECT k, max(rank)::BIGINT AS n_grams, max(cum)::BIGINT AS covered,
+        | max(total_grams)::BIGINT AS total_grams,
+        | round(max(cum)::DOUBLE / max(total_grams)::DOUBLE, 6) AS coverage
+        |FROM r CROSS JOIN tot
+        | CROSS JOIN (SELECT unnest([10, 100, 1000]::BIGINT[]) AS k) ks
+        |WHERE rank <= k GROUP BY k""".stripMargin)),
 
     // the q12 span recursion + boundary classification by the kept
     // break char at position e (1-based substr == charAt(e-1))
     // measured LSH S-curve: plant md5-gated dropout clones, replay the
     // FULL q14 minhash/band machinery over the union, recall per exact
     // integer true-Jaccard decile ((10*|A∩B|) div |A∪B|)
-    "q157_dedup_recall" ->
+    Query("q157_dedup_recall", qDedupRecall, sql(
       s"""WITH wb AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS w
          |  FROM documents),
          | pl AS (SELECT doc_id AS orig_id,
@@ -8140,11 +8753,11 @@ object SparkEntry {
          | round(count(c.doc_a)::DOUBLE / count(*)::DOUBLE, 6) AS recall
          |FROM truth t LEFT JOIN cand c
          |  ON c.doc_a = t.orig_id AND c.doc_b = t.clone_id
-         |GROUP BY 1""".stripMargin,
+         |GROUP BY 1""".stripMargin)),
 
     // weekly cohort retention: cohort = date_trunc week (ISO Monday, same
     // rule both engines) of first activity; offset in whole weeks
-    "q158_retention_cohorts" ->
+    Query("q158_retention_cohorts", qRetentionCohorts, sql(
       """WITH grid AS (SELECT DISTINCT user_id, date_trunc('week', ts)::DATE AS week
         |   FROM events),
         | first AS (SELECT user_id, min(week) AS cohort_week FROM grid GROUP BY 1),
@@ -8157,11 +8770,11 @@ object SparkEntry {
         |SELECT a.cohort_week::VARCHAR AS cohort_week, a.week_offset,
         | a.active_users, s.cohort_users,
         | round(a.active_users::DOUBLE / s.cohort_users::DOUBLE, 6) AS retention
-        |FROM act a JOIN sizes s USING (cohort_week)""".stripMargin,
+        |FROM act a JOIN sizes s USING (cohort_week)""".stripMargin)),
 
     // k-anonymity: equivalence classes of (lang, source, n_chars//100);
     // per k, classes below k and the document mass they expose
-    "q159_kanonymity" ->
+    Query("q159_kanonymity", qKAnonymity, sql(
       """WITH cls AS (SELECT lang, source, n_chars // 100 AS len_bucket,
         |   count(*)::BIGINT AS cls FROM documents GROUP BY 1, 2, 3)
         |SELECT k, count(*)::BIGINT AS total_classes, sum(cls)::BIGINT AS total_docs,
@@ -8170,14 +8783,67 @@ object SparkEntry {
         | round(coalesce(sum(CASE WHEN cls < k THEN cls END), 0)::DOUBLE /
         |   sum(cls)::DOUBLE, 6) AS risk_frac
         |FROM cls CROSS JOIN (SELECT unnest([2, 5, 10, 20]::BIGINT[]) AS k) ks
-        |GROUP BY k""".stripMargin,
+        |GROUP BY k""".stripMargin)),
+
+    // interpolated Kneser–Ney bigram LM (d = 0.75), scored per source:
+    // P = max(c_ab−d,0)/c_a + d·r_cont/c_a · l_cont/b_types; bits =
+    // −Σ n·ln P / ln 2 / Σ n, counts folded per (source, w1, w2) first
+    // joins keyed on the per-token 60-bit md5 prefix (the
+    // TokenPairHashes kernel contract: ('0x'||substr(md5(t),1,15))::BIGINT),
+    // mirroring the Spark hash-domain plan exactly — the KN statistics
+    // are count-shaped, so values match the string-keyed form unless two
+    // tokens collide in 60 bits, and a collision moves both engines
+    // identically
+    Query("q160_kn_score", qKnScore, sql(
+      """WITH toks AS (SELECT source,
+        |   [('0x' || substr(md5(t), 1, 15))::BIGINT
+        |     for t in regexp_split_to_array(lower(trim(text)), '\s+')] AS w
+        |   FROM documents),
+        | pairs AS (SELECT source, p.w1 AS w1, p.w2 AS w2, count(*)::BIGINT AS n FROM
+        |   (SELECT source, unnest([{'w1': w[i+1], 'w2': w[i+2]} for i in range(0, len(w) - 1)]) AS p
+        |    FROM toks WHERE len(w) >= 2) GROUP BY 1, 2, 3),
+        | cab AS (SELECT w1, w2, sum(n)::BIGINT AS c_ab FROM pairs GROUP BY 1, 2),
+        | ctx AS (SELECT w1, sum(c_ab)::BIGINT AS c_a, count(*)::BIGINT AS r_cont
+        |   FROM cab GROUP BY 1),
+        | l AS (SELECT w2, count(*)::BIGINT AS l_cont FROM cab GROUP BY 1),
+        | ty AS (SELECT count(*)::BIGINT AS b_types FROM cab),
+        | sc AS (SELECT p.source, p.n,
+        |   greatest(cab.c_ab::DOUBLE - 0.75, 0.0) / ctx.c_a::DOUBLE
+        |     + 0.75 * ctx.r_cont::DOUBLE / ctx.c_a::DOUBLE
+        |       * (l.l_cont::DOUBLE / ty.b_types::DOUBLE) AS pkn
+        |  FROM pairs p JOIN cab USING (w1, w2) JOIN ctx USING (w1)
+        |   JOIN l USING (w2) CROSS JOIN ty)
+        |SELECT source, sum(n)::BIGINT AS n_bigrams,
+        | round(sum(-n::DOUBLE * ln(pkn)) / ln(2.0) / sum(n)::DOUBLE, 6)
+        |   AS kn_bits_per_bigram
+        |FROM sc GROUP BY source""".stripMargin)),
+
+    // exact two-sample KS per source vs rest-of-corpus on n_chars: cum
+    // counts per source over the corpus value grid, D = max |cdf diff|
+    Query("q161_ks_drift", qKsDrift, sql(
+      """WITH counts AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
+        |   FROM documents GROUP BY 1, 2),
+        | vals AS (SELECT v, sum(c)::BIGINT AS call FROM counts GROUP BY 1),
+        | grp AS (SELECT source, sum(c)::BIGINT AS ns FROM counts GROUP BY 1),
+        | tot AS (SELECT sum(ns)::BIGINT AS n FROM grp),
+        | grid AS (SELECT g.source, va.v, va.call, g.ns, coalesce(c.c, 0) AS c
+        |   FROM vals va CROSS JOIN grp g
+        |   LEFT JOIN counts c ON c.source = g.source AND c.v = va.v),
+        | cums AS (SELECT source, ns,
+        |    sum(c) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS cs,
+        |    sum(call) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca
+        |  FROM grid)
+        |SELECT source, max(ns)::BIGINT AS n_rows,
+        | round(max(abs(cs::DOUBLE / ns::DOUBLE -
+        |   (ca - cs)::DOUBLE / (n - ns)::DOUBLE)), 6) AS ks_d
+        |FROM cums CROSS JOIN tot WHERE ns < n GROUP BY source""".stripMargin)),
 
     // synchronous LPA, 3 unrolled rounds over the CLONE-COLLAPSED pair
     // graph (exact md5 groups -> min-id reps, LSH pairs among reps only);
     // closed-neighborhood vote (neighbors UNION ALL self), winner =
     // (count desc, label asc); clone members re-enter as group counts;
     // top-20 communities by total members, (size desc, label) order
-    "q162_lpa_communities" -> {
+    Query("q162_lpa_communities", qLpaCommunities, sql {
       def lpaRound(prev: String, curr: String): String =
         s"""$curr AS (SELECT id, label FROM (
            |   SELECT id, label,
@@ -8207,837 +8873,78 @@ object SparkEntry {
          | sum(g.n_copies)::BIGINT AS n_members
          |FROM g LEFT JOIN l3 ON l3.id = g.keep_id
          |GROUP BY 1 ORDER BY n_members DESC, label ASC LIMIT 20""".stripMargin
-    },
+    }),
 
-    // exact two-sample KS per source vs rest-of-corpus on n_chars: cum
-    // counts per source over the corpus value grid, D = max |cdf diff|
-    "q161_ks_drift" ->
-      """WITH counts AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
-        |   FROM documents GROUP BY 1, 2),
-        | vals AS (SELECT v, sum(c)::BIGINT AS call FROM counts GROUP BY 1),
-        | grp AS (SELECT source, sum(c)::BIGINT AS ns FROM counts GROUP BY 1),
-        | tot AS (SELECT sum(ns)::BIGINT AS n FROM grp),
-        | grid AS (SELECT g.source, va.v, va.call, g.ns, coalesce(c.c, 0) AS c
-        |   FROM vals va CROSS JOIN grp g
-        |   LEFT JOIN counts c ON c.source = g.source AND c.v = va.v),
-        | cums AS (SELECT source, ns,
-        |    sum(c) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS cs,
-        |    sum(call) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS ca
-        |  FROM grid)
-        |SELECT source, max(ns)::BIGINT AS n_rows,
-        | round(max(abs(cs::DOUBLE / ns::DOUBLE -
-        |   (ca - cs)::DOUBLE / (n - ns)::DOUBLE)), 6) AS ks_d
-        |FROM cums CROSS JOIN tot WHERE ns < n GROUP BY source""".stripMargin,
-
-    // interpolated Kneser–Ney bigram LM (d = 0.75), scored per source:
-    // P = max(c_ab−d,0)/c_a + d·r_cont/c_a · l_cont/b_types; bits =
-    // −Σ n·ln P / ln 2 / Σ n, counts folded per (source, w1, w2) first
-    // joins keyed on the per-token 60-bit md5 prefix (the
-    // TokenPairHashes kernel contract: ('0x'||substr(md5(t),1,15))::BIGINT),
-    // mirroring the Spark hash-domain plan exactly — the KN statistics
-    // are count-shaped, so values match the string-keyed form unless two
-    // tokens collide in 60 bits, and a collision moves both engines
-    // identically
-    "q160_kn_score" ->
-      """WITH toks AS (SELECT source,
-        |   [('0x' || substr(md5(t), 1, 15))::BIGINT
-        |     for t in regexp_split_to_array(lower(trim(text)), '\s+')] AS w
-        |   FROM documents),
-        | pairs AS (SELECT source, p.w1 AS w1, p.w2 AS w2, count(*)::BIGINT AS n FROM
-        |   (SELECT source, unnest([{'w1': w[i+1], 'w2': w[i+2]} for i in range(0, len(w) - 1)]) AS p
-        |    FROM toks WHERE len(w) >= 2) GROUP BY 1, 2, 3),
-        | cab AS (SELECT w1, w2, sum(n)::BIGINT AS c_ab FROM pairs GROUP BY 1, 2),
-        | ctx AS (SELECT w1, sum(c_ab)::BIGINT AS c_a, count(*)::BIGINT AS r_cont
-        |   FROM cab GROUP BY 1),
-        | l AS (SELECT w2, count(*)::BIGINT AS l_cont FROM cab GROUP BY 1),
-        | ty AS (SELECT count(*)::BIGINT AS b_types FROM cab),
-        | sc AS (SELECT p.source, p.n,
-        |   greatest(cab.c_ab::DOUBLE - 0.75, 0.0) / ctx.c_a::DOUBLE
-        |     + 0.75 * ctx.r_cont::DOUBLE / ctx.c_a::DOUBLE
-        |       * (l.l_cont::DOUBLE / ty.b_types::DOUBLE) AS pkn
-        |  FROM pairs p JOIN cab USING (w1, w2) JOIN ctx USING (w1)
-        |   JOIN l USING (w2) CROSS JOIN ty)
-        |SELECT source, sum(n)::BIGINT AS n_bigrams,
-        | round(sum(-n::DOUBLE * ln(pkn)) / ln(2.0) / sum(n)::DOUBLE, 6)
-        |   AS kn_bits_per_bigram
-        |FROM sc GROUP BY source""".stripMargin,
-
-    // top-k bigram mass concentration; 60-bit hash domain (r13): gram =
-    // md5Int60 of "w1 SP w2" (TokenBigramHashes contract), rank/cum in
-    // the (freq desc, HASH asc) total order — tied freqs contribute the
-    // same mass, so coverage at every k is unchanged by the reorder
-    "q156_bigram_coverage" ->
-      s"""WITH toks AS (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
-        | f AS (SELECT gram, count(*)::BIGINT AS freq FROM
-        |   (SELECT unnest([${h60Sql("w[i+1] || ' ' || w[i+2]")} for i in range(0, len(w) - 1)]) AS gram
-        |    FROM toks WHERE len(w) >= 2) GROUP BY 1),
-        | tot AS (SELECT sum(freq)::BIGINT AS total_grams FROM f),
-        | r AS (SELECT freq,
-        |   row_number() OVER (ORDER BY freq DESC, gram ASC) AS rank,
-        |   sum(freq) OVER (ORDER BY freq DESC, gram ASC ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM f QUALIFY rank <= 1000)
-        |SELECT k, max(rank)::BIGINT AS n_grams, max(cum)::BIGINT AS covered,
-        | max(total_grams)::BIGINT AS total_grams,
-        | round(max(cum)::DOUBLE / max(total_grams)::DOUBLE, 6) AS coverage
-        |FROM r CROSS JOIN tot
-        | CROSS JOIN (SELECT unnest([10, 100, 1000]::BIGINT[]) AS k) ks
-        |WHERE rank <= k GROUP BY k""".stripMargin,
-
-    // exact-decile calibration: boundaries via the cum-mass rule
-    // (cum*10 >= n*k) over the per-mille TTR histogram; bucket = 1 +
-    // |{b_k strictly below score}|; outcome = Gopher top-token >= 11% rule
-    "q155_quality_calibration" ->
-      """WITH t AS (SELECT doc_id,
-        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
-        |  FROM documents),
-        | pc AS (SELECT doc_id, tok, count(*)::BIGINT AS c
-        |  FROM t WHERE tok <> '' GROUP BY 1, 2),
-        | dd AS (SELECT (1000 * count(*)) // sum(c) AS score_pm,
-        |   CASE WHEN (1000 * max(c)) // sum(c) >= 110 THEN 1 ELSE 0 END AS is_rep
-        |  FROM pc GROUP BY doc_id),
-        | hist AS (SELECT score_pm, count(*)::BIGINT AS c FROM dd GROUP BY 1),
-        | cm AS (SELECT score_pm, sum(c) OVER (ORDER BY score_pm)::BIGINT AS cum,
-        |   sum(c) OVER ()::BIGINT AS n FROM hist),
-        | b AS (SELECT k, min(score_pm) AS bk
-        |  FROM cm CROSS JOIN (SELECT unnest(generate_series(1, 9)) AS k) ks
-        |  WHERE cum * 10 >= n * k GROUP BY k),
-        | bucket AS (SELECT score_pm, is_rep,
-        |   (SELECT count(*) FROM b WHERE b.bk < dd.score_pm) + 1 AS decile FROM dd)
-        |SELECT decile::BIGINT AS decile, count(*)::BIGINT AS n_docs,
-        | min(score_pm)::BIGINT AS score_lo, max(score_pm)::BIGINT AS score_hi,
-        | round(avg(is_rep::DOUBLE), 6) AS outcome_rate
-        |FROM bucket GROUP BY 1""".stripMargin,
-
-    // smoothed unigram KL per source vs corpus; absent-word mass in closed
-    // form: KL = Σ_present ps·ln(ps/q) + p0·[(V−Vs)·ln p0 − (L − Ls)]
-    "q154_source_kl" ->
-      """WITH toks AS (SELECT source,
-        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
-        |  FROM documents),
-        | sc AS (SELECT source, tok, count(*)::BIGINT AS cs
-        |  FROM toks WHERE tok <> '' GROUP BY 1, 2),
-        | cc AS (SELECT tok, sum(cs)::BIGINT AS c FROM sc GROUP BY 1),
-        | corpus AS (SELECT sum(c)::BIGINT AS t_corpus, count(*)::BIGINT AS v_corpus,
-        |   sum(ln(c::DOUBLE)) AS slc FROM cc),
-        | st AS (SELECT source, sum(cs)::BIGINT AS ts, count(*)::BIGINT AS vs
-        |  FROM sc GROUP BY 1),
-        | pres AS (SELECT sc.source,
-        |   sum(((sc.cs + 1)::DOUBLE / (st.ts + corpus.v_corpus)::DOUBLE) *
-        |       (ln((sc.cs + 1)::DOUBLE / (st.ts + corpus.v_corpus)::DOUBLE) -
-        |        (ln(cc.c::DOUBLE) - ln(corpus.t_corpus::DOUBLE)))) AS kl_present,
-        |   sum(ln(cc.c::DOUBLE) - ln(corpus.t_corpus::DOUBLE)) AS ls
-        |  FROM sc JOIN cc USING (tok) JOIN st ON sc.source = st.source
-        |  CROSS JOIN corpus GROUP BY 1)
-        |SELECT st.source, st.ts AS n_tokens, st.vs AS vocab_used,
-        | round(pres.kl_present +
-        |   (1.0 / (st.ts + c.v_corpus)::DOUBLE) *
-        |   ((c.v_corpus - st.vs)::DOUBLE * ln(1.0 / (st.ts + c.v_corpus)::DOUBLE) -
-        |    ((c.slc - c.v_corpus::DOUBLE * ln(c.t_corpus::DOUBLE)) - pres.ls)), 6) AS kl
-        |FROM st JOIN pres ON st.source = pres.source CROSS JOIN corpus c""".stripMargin,
-
-    // md5-keyed FIM gate + cut points replayed verbatim: h = first 8 hex
-    // chars of md5("salt:"+doc_id); c1 = h1 % (n+1), c2 = c1 + h2 % (n-c1+1)
-    "q153_fim_spans" ->
-      """WITH d AS (SELECT doc_id, source, length(text) AS n
-        |   FROM documents WHERE length(text) > 0),
-        | g AS (SELECT doc_id, source, n,
-        |   ('0x' || substr(md5('fim:' || doc_id), 1, 8))::BIGINT % 1000 < 900 AS applied,
-        |   ('0x' || substr(md5('fimc1:' || doc_id), 1, 8))::BIGINT % (n + 1) AS c1r,
-        |   ('0x' || substr(md5('fimc2:' || doc_id), 1, 8))::BIGINT AS h2 FROM d),
-        | s AS (SELECT source, n, applied,
-        |   CASE WHEN applied THEN c1r ELSE 0 END AS c1,
-        |   CASE WHEN applied THEN c1r + h2 % (n - c1r + 1) ELSE 0 END AS c2 FROM g)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        | sum(CASE WHEN applied THEN 1 ELSE 0 END)::BIGINT AS n_fim,
-        | round(avg(CASE WHEN applied THEN c1::DOUBLE / n END), 6) AS avg_prefix_frac,
-        | round(avg(CASE WHEN applied THEN (c2 - c1)::DOUBLE / n END), 6) AS avg_middle_frac,
-        | round(avg(CASE WHEN applied THEN (n - c2)::DOUBLE / n END), 6) AS avg_suffix_frac,
-        | sum(CASE WHEN applied THEN c2 - c1 ELSE 0 END)::BIGINT AS middle_chars
-        |FROM s GROUP BY source""".stripMargin,
-
-    "q152_chunk_boundaries" ->
-      s"""WITH RECURSIVE docs0 AS (
-         |  SELECT doc_id, source, text AS t, length(text) AS len
-         |  FROM documents WHERE length(text) > 0),
-         | spans(doc_id, source, t, len, s, e) AS (
-         |  SELECT doc_id, source, t, len, 0, ${chunkEndSql("0")} FROM docs0
-         |  UNION ALL
-         |  SELECT doc_id, source, t, len, ns, ${chunkEndSql("ns")} FROM (
-         |    SELECT doc_id, source, t, len,
-         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
-         |    FROM spans
-         |    WHERE len > 200)
-         |  WHERE ns < len)
-         |SELECT source,
-         | CASE WHEN e = len THEN 'final'
-         |      WHEN substr(t, e, 1) = chr(10) THEN 'newline'
-         |      WHEN substr(t, e, 1) = ' ' THEN 'space'
-         |      ELSE 'hard' END AS boundary,
-         | count(*)::BIGINT AS n_chunks
-         |FROM spans GROUP BY 1, 2""".stripMargin,
-
-    // benchmark vectors (vec_id < 10) vs the rest: per-corpus-vector max
-    // rounded cosine + count of >= 0.9 hits, cosine via the shared CosSql
-    "q151_embed_decontamination" ->
-      s"""WITH bench AS (SELECT vec_id AS bid, embedding::DOUBLE[] AS q
-         |   FROM embeddings WHERE vec_id < 10),
-         | corpus AS (SELECT vec_id, embedding::DOUBLE[] AS e
-         |   FROM embeddings WHERE vec_id >= 10),
-         | scored AS (SELECT vec_id, round($CosSql, 6) AS c
-         |   FROM corpus, bench),
-         | agg AS (SELECT vec_id, max(c) AS max_cos,
-         |    sum(CASE WHEN c >= 0.9 THEN 1 ELSE 0 END)::BIGINT AS n_hits
-         |   FROM scored GROUP BY 1)
-         |SELECT vec_id, max_cos, n_hits, (max_cos >= 0.9) AS flagged
-         |FROM agg ORDER BY max_cos DESC, vec_id ASC LIMIT 20""".stripMargin,
-
-    // occupancy-4-bit sign buckets (pinned at the N=500 verify scale,
-    // q118 convention), within-bucket micro-quantized L2, k-th smallest
-    // as the rn >= k min (== the cumulative-mass rule at multiplicity 1)
-    "q150_embedding_outliers" ->
-      s"""WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v,
-         |   ${bucketSql("embedding", 4)} AS bucket FROM embeddings),
-         | bm AS (SELECT bucket, count(*)::BIGINT AS bm FROM b GROUP BY 1),
-         | p AS (SELECT x.vec_id AS u, y.vec_id AS w,
-         |    round(sqrt(list_sum([(x.v[i+1] - y.v[i+1]) * (x.v[i+1] - y.v[i+1])
-         |      for i in range(0, len(x.v))])) * 1e6)::BIGINT AS dmu
-         |   FROM b x JOIN b y USING (bucket) WHERE x.vec_id <> y.vec_id),
-         | r AS (SELECT u, dmu,
-         |    row_number() OVER (PARTITION BY u ORDER BY dmu ASC, w ASC) AS rn
-         |   FROM p),
-         | kth AS (SELECT u, min(dmu)::BIGINT AS knn_micro FROM r
-         |   WHERE rn >= 3 GROUP BY u)
-         |SELECT b.vec_id, (bm.bm - 1)::BIGINT AS n_cands, kth.knn_micro
-         |FROM b JOIN bm USING (bucket) JOIN kth ON kth.u = b.vec_id
-         |WHERE bm.bm - 1 >= 3
-         |ORDER BY knn_micro DESC, vec_id ASC LIMIT 20""".stripMargin,
-
-    // per-user lag over (ts, event_id) -> transition matrix with
-    // integer-ppm row-conditional probabilities (div/// agree: operands
-    // non-negative)
-    "q148_event_transitions" ->
-      """WITH t AS (SELECT user_id, event_type,
-        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |     AS prev
-        |  FROM events),
-        | c AS (SELECT prev AS from_type, event_type AS to_type,
-        |   count(*)::BIGINT AS n
-        |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | ((n * 1000000) // sum(n) OVER (PARTITION BY from_type))::BIGINT AS p_ppm
-        |FROM c""".stripMargin,
-
-    // q148's transition counts, then the to_type-sorted 9dp-ln fold in
-    // integer micro-units (the q187 float discipline)
-    "q204_transition_entropy" ->
-      """WITH t AS (SELECT user_id, event_type,
-        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |     AS prev
-        |  FROM events),
-        | c AS (SELECT prev AS from_type, event_type AS to_type,
-        |   count(*)::BIGINT AS n
-        |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2),
-        | g AS (SELECT from_type, sum(n)::BIGINT AS n_total,
-        |    count(*)::BIGINT AS n_next_types,
-        |    list(struct_pack(t := to_type, n := n) ORDER BY to_type) AS hh
-        |  FROM c GROUP BY 1)
-        |SELECT from_type, n_total, n_next_types,
-        | CAST(round(-list_sum([(x.n / n_total) * round(ln(x.n / n_total), 9)
-        |   for x in hh]) * 1000000, 0) AS BIGINT) AS entropy_micro
-        |FROM g""".stripMargin,
-
-    // the batched-serving gate (VERDICT r14 item 5): the Spark side runs
-    // Ann.ivfSearchBatch over the persisted q28 index at nprobe=16 (= all
-    // 16 inverted lists, recall 1.0 by construction), so the oracle is
-    // the PLAIN exact batched scan — any defect in the per-row probe
-    // ranking, per-query list restriction, probe-union pruning, or
-    // window ranking breaks the hash match
-    "q205_ivf_batch_probe" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
-         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
-         | ranked AS (SELECT query_id, vec_id, score,
-         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 10""".stripMargin,
-
-    // filtered ANN at nprobe = all: the oracle is the exact scan with
-    // the same WHERE clause — probe ranking, partition pruning, and the
-    // pushed label predicate must compose to the exact filtered answer
-    "q212_filtered_ann" ->
-      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e
-         |   FROM embeddings WHERE label = 3),
-         | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-         | scored AS (SELECT vec_id, label, $CosSql AS score FROM base, qv),
-         | topk AS (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)
-         |SELECT vec_id, label, round(score, 6) AS score FROM topk""".stripMargin,
-
-    // batched filtered serving at nprobe = all: q205's exact batched
-    // scan restricted to the label-3 corpus (queries unfiltered)
-    "q216_filtered_batch" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-         |   WHERE label = 3),
-         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
-         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
-         | ranked AS (SELECT query_id, vec_id, score,
-         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 10""".stripMargin,
-
-    // upsert at nprobe = all: the exact batched scan over the
-    // POST-upsert corpus (vec 0's embedding = reverse of vec 1's — a
-    // float copy, no arithmetic). A stale old row, a dropped new row,
-    // or a doubled id all break the hash.
-    "q215_ivf_upsert" ->
-      s"""WITH donor AS (SELECT embedding::DOUBLE[] AS de FROM embeddings WHERE vec_id = 1),
-         | base AS (SELECT vec_id,
-         |    CASE WHEN vec_id = 0 THEN (SELECT list_reverse(de) FROM donor)
-         |         ELSE embedding::DOUBLE[] END AS e
-         |   FROM embeddings),
-         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
-         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
-         | ranked AS (SELECT query_id, vec_id, score,
-         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 10""".stripMargin,
-
-    // delete-by-id at nprobe = all: q205's exact batched scan minus the
-    // tombstoned ids (vec_id 0 is both a panel query and deleted, so
-    // query 0's rank 1 must shift — a leaked tombstone breaks the hash)
-    "q214_ivf_delete" ->
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-         |   WHERE vec_id NOT IN (${DeletedVecIds.mkString(", ")})),
-         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
-         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
-         | ranked AS (SELECT query_id, vec_id, score,
-         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 10""".stripMargin,
-
-    // the composed serving loop (VERDICT r15 item 3): the oracle replays
-    // BOTH halves independently — the embed (q32's token-hash projection:
-    // md5-prefix bucket/sign/magnitude sums densified over all 64 dims,
-    // then L2-normalized exactly as Md5TokenEmbedder.embedDouble does)
-    // and the exact batched scan (q205's shape, nprobe=16 = all lists on
-    // the Spark side so recall is 1.0 by construction)
-    "q210_text_serving" ->
-      s"""WITH qp(query_id, qt) AS (VALUES
-         |   (0, 'alpha beta gamma'),
-         |   (1, 'delta epsilon zeta alpha'),
-         |   (2, 'the quick brown fox jumps'),
-         |   (3, 'gamma gamma delta omega')),
-         | qtok AS (SELECT query_id,
-         |   unnest(list_filter(regexp_split_to_array(lower(qt), '\\s+'), x -> x <> '')) AS w
-         |  FROM qp),
-         | qc AS (SELECT query_id, $TokContribSql
-         |  FROM (SELECT query_id, ${h32Sql("w")} AS h FROM qtok)),
-         | qs AS (SELECT query_id, idx, sum(v) AS sv FROM qc GROUP BY 1, 2),
-         | dims AS (SELECT unnest(range(0, 64)) AS idx),
-         | qfull AS (SELECT p.query_id, d.idx, coalesce(s.sv, 0.0) AS sv
-         |  FROM (SELECT DISTINCT query_id FROM qp) p CROSS JOIN dims d
-         |  LEFT JOIN qs s ON s.query_id = p.query_id AND s.idx = d.idx),
-         | qn AS (SELECT query_id, sqrt(sum(sv * sv)) AS n FROM qfull GROUP BY 1),
-         | qarr AS (SELECT f.query_id,
-         |   list(CASE WHEN n > 0 THEN sv / n ELSE sv END ORDER BY f.idx) AS q
-         |  FROM qfull f JOIN qn USING (query_id) GROUP BY f.query_id, n),
-         | base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qarr),
-         | ranked AS (SELECT query_id, vec_id, score,
-         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored)
-         |SELECT query_id::BIGINT AS query_id, vec_id, rank, round(score, 6) AS score
-         |FROM ranked WHERE rank <= 10""".stripMargin,
-
-    // Z-order audit replay: same integer bucketing (// = Spark's div),
-    // the same Morton interleave unrolled as shift/mask bit ops, file
-    // boundaries from the per-(layout, key) cumulative-count histogram
-    // (NO global row sort — the q117 discipline), zone-map
-    // disjointness against the 3-box sweep
-    "q218_zorder_audit" ->
-      s"""WITH base AS (SELECT o_custkey::BIGINT AS a,
-         |    datediff('day', DATE '1992-01-01', o_orderdate::DATE)::BIGINT AS b
-         |  FROM orders),
-         | st AS (SELECT min(a) AS la, max(a) AS ha, min(b) AS lb,
-         |    max(b) AS hb, count(*) AS n FROM base),
-         | bk AS (SELECT a, b,
-         |    least(255, ((a - la) * 256) // (ha - la + 1)) AS za,
-         |    least(255, ((b - lb) * 256) // (hb - lb + 1)) AS zb,
-         |    n, la, ha, lb, hb
-         |  FROM base, st),
-         | enc AS (SELECT *, ${(0 until 8).map(i =>
-             s"((((za >> $i) & 1) << ${2 * i}) | (((zb >> $i) & 1) << ${2 * i + 1}))")
-             .mkString(" | ")} AS zv FROM bk),
-         | keyed AS (SELECT layout, key, min(a) AS ka, max(a) AS kha,
-         |    min(b) AS klb, max(b) AS khb, count(*) AS cnt,
-         |    any_value(n) AS n, any_value(la) AS la, any_value(ha) AS ha,
-         |    any_value(lb) AS lb, any_value(hb) AS hb
-         |  FROM (SELECT 'zorder' AS layout, zv AS key, a, b, n, la, ha, lb, hb FROM enc
-         |        UNION ALL
-         |        SELECT 'linear' AS layout, za AS key, a, b, n, la, ha, lb, hb FROM bk)
-         |  GROUP BY 1, 2),
-         | cum AS (SELECT *, coalesce(sum(cnt) OVER (PARTITION BY layout
-         |    ORDER BY key ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cumb FROM keyed),
-         | files AS (SELECT layout, (cumb * 64) // n AS fid,
-         |    min(ka) AS fla, max(kha) AS fha, min(klb) AS flb,
-         |    max(khb) AS fhb, sum(cnt) AS rows_,
-         |    any_value(la) AS la, any_value(ha) AS ha,
-         |    any_value(lb) AS lb, any_value(hb) AS hb
-         |  FROM cum GROUP BY 1, 2),
-         | boxes(box, alo, ahi, blo, bhi) AS (VALUES
-         |   ('a_mid', 45, 55, 0, 100),
-         |   ('b_mid', 0, 100, 45, 55),
-         |   ('ab_mid', 45, 55, 45, 55)),
-         | flagged AS (SELECT layout, box, rows_,
-         |    (fha < la + ((ha - la) * alo) // 100
-         |     OR fla > la + ((ha - la) * ahi) // 100
-         |     OR fhb < lb + ((hb - lb) * blo) // 100
-         |     OR flb > lb + ((hb - lb) * bhi) // 100) AS skip
-         |  FROM files, boxes)
-         |SELECT layout, box, count(*) AS files_total,
-         |  sum(CASE WHEN skip THEN 1 ELSE 0 END)::BIGINT AS files_skipped,
-         |  sum(CASE WHEN skip THEN 0 ELSE rows_ END)::BIGINT AS rows_scanned
-         |FROM flagged GROUP BY layout, box ORDER BY layout, box""".stripMargin,
-
-    // snapshot-read replay: v1 committed the even doc_ids, v2 appended
-    // the odds — so v1 == the even filter and v2 == the whole table,
-    // REGARDLESS of when the reader runs (the time-travel contract)
-    "q226_versioned_reads" ->
-      s"""SELECT * FROM (
-         | SELECT 1::BIGINT AS version, count(*) AS n_rows,
-         |   sum(n_chars)::BIGINT AS sum_chars
-         |  FROM documents WHERE doc_id % 2 = 0
-         | UNION ALL
-         | SELECT 2::BIGINT, count(*), sum(n_chars)::BIGINT
-         |  FROM documents) ORDER BY version""".stripMargin,
-
-    // CDC replay: the v2->v3 change set IS the update batch — the
-    // rewritten file's carried-over rows cancel in the EXCEPT ALL
-    "q229_versioned_changes" ->
-      s"""SELECT count(*) AS n_changed,
-         | sum(n_chars + 1000000)::BIGINT AS sum_chars_changed,
-         | min(doc_id) AS min_id, max(doc_id) AS max_id
-         |FROM documents WHERE doc_id < 10""".stripMargin,
-
-    // COW-merge replay: updates bump n_chars by 1e6 for doc_id < 10;
-    // the after-sum applies the CASE, the before-sum is the plain
-    // table (time travel), the file counts are construction facts
-    // (low-id updates touch only the low-half file)
-    "q228_versioned_merge" ->
-      s"""SELECT 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
-         | count(*) AS n_rows,
-         | sum(CASE WHEN doc_id < 10 THEN n_chars + 1000000
-         |     ELSE n_chars END)::BIGINT AS sum_chars_after,
-         | sum(n_chars)::BIGINT AS sum_chars_before
-         |FROM documents""".stripMargin,
-
-    // stats-pruned-read replay: the split threshold is the integer
-    // mean (sum // count — exact on both engines); the low band is
-    // one file and the high band's manifest min exceeds the range by
-    // construction, so n_files_read == 1 always; the agg proves the
-    // pruned read lost no rows
-    "q227_stats_pruned_read" ->
-      s"""WITH t AS (SELECT sum(n_chars) // count(*) AS t FROM documents)
-         |SELECT 2::BIGINT AS n_files_total, 1::BIGINT AS n_files_read,
-         |  count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars
-         |FROM documents, t WHERE n_chars <= t.t""".stripMargin,
-
-    // OPTIMIZE replay: content identity before/after is the contract,
-    // so both snapshot aggs are the plain table; the file counts are
-    // construction facts (6 modulo slices -> 2 range files) and the
-    // min-doc_id point read opens exactly the low range file
-    "q230_versioned_compact" ->
-      s"""SELECT 6::BIGINT AS files_before, 2::BIGINT AS files_after,
-         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
-         | count(*) AS pre_rows, sum(n_chars)::BIGINT AS pre_chars,
-         | 1::BIGINT AS narrow_files_read,
-         | (SELECT count(*) FROM documents
-         |   WHERE doc_id = (SELECT min(doc_id) FROM documents))
-         |   AS narrow_rows
-         |FROM documents""".stripMargin,
-
-    // COW-delete replay: the post-delete snapshot is the table minus
-    // the fixed panel; the panel sits entirely in the low-half file
-    // (files 1 rewritten / 1 kept by construction); rows_deleted is
-    // the panel's actual hit count, not a hardcoded 6
-    "q231_versioned_delete" ->
-      s"""SELECT
-         | (SELECT count(*) FROM documents
-         |   WHERE doc_id IN (2, 3, 5, 7, 11, 13)) AS rows_deleted,
-         | 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
-         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars_after,
-         | (SELECT count(*) FROM documents) AS pre_rows
-         |FROM documents WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13)""".stripMargin,
-
-    // typed-CDC replay: q228's merge bumps n_chars by 1e6 for
-    // doc_id < 10 — the delete side is the pre-image panel, the
-    // insert side the post-image panel, carried-over rows cancel
-    "q232_cdc_typed" ->
-      s"""SELECT * FROM (
-         | SELECT 'delete' AS _change_type, count(*) AS n_rows,
-         |   sum(n_chars)::BIGINT AS sum_chars,
-         |   min(doc_id) AS min_id, max(doc_id) AS max_id
-         |  FROM documents WHERE doc_id < 10
-         | UNION ALL
-         | SELECT 'insert', count(*), sum(n_chars + 1000000)::BIGINT,
-         |   min(doc_id), max(doc_id)
-         |  FROM documents WHERE doc_id < 10) ORDER BY _change_type""".stripMargin,
-
-    // schema-evolution replay: v1 = the even ids without `source`
-    // (null-filled under the evolved manifest schema), v2 = the odd
-    // ids with it; v1's own schema is two columns by construction
-    "q234_schema_evolution" ->
-      s"""SELECT (SELECT count(*) FROM documents) AS n_rows,
-         | (SELECT sum(n_chars)::BIGINT FROM documents) AS sum_chars,
-         | (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
-         |   AS n_null_source,
-         | (SELECT count(DISTINCT source) FROM documents
-         |   WHERE doc_id % 2 <> 0) AS n_distinct_source,
-         | 2::BIGINT AS v1_n_cols,
-         | (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
-         |   AS v1_rows""".stripMargin,
-
-    // value-pruned-read replay: src0 sits in bucket-0's single file
-    // (suffix mod 4), so 1 of 4 files opens; the agg proves the
-    // manifest-decided skip lost no rows
-    "q235_value_pruned_read" ->
-      s"""SELECT 4::BIGINT AS n_files_total, 1::BIGINT AS n_files_read,
-         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars
-         |FROM documents WHERE source = 'src0'""".stripMargin,
-
-    // generation-audit replay: the cycle is append(+3 rows), delete
-    // (vec_id 3 masked), compact (collapse, same rows); generation and
-    // tombstone-dir counts are protocol facts, row counts replay from
-    // the corpus count
-    "q233_ivf_generations" ->
-      s"""WITH n AS (SELECT count(*) AS c FROM embeddings)
-         |SELECT * FROM (
-         | SELECT 1::BIGINT AS version, 1::BIGINT AS n_list_dirs,
-         |   0::BIGINT AS n_tombstone_dirs, c AS n_rows FROM n
-         | UNION ALL SELECT 2::BIGINT, 2::BIGINT, 0::BIGINT, c + 3 FROM n
-         | UNION ALL SELECT 3::BIGINT, 2::BIGINT, 1::BIGINT, c + 2 FROM n
-         | UNION ALL SELECT 4::BIGINT, 1::BIGINT, 0::BIGINT, c + 2 FROM n)
-         |ORDER BY version""".stripMargin,
-
-    // type-widening replay: v1 = even ids as int/float, v2 = odd ids
-    // offset past the int range as long/double; the schema-type
-    // strings pin the widening the oracle cannot observe, the sums
-    // pin that no value was lost or truncated crossing the boundary
-    // (score is integer-valued mod-97, exact in any float order)
-    "q236_type_widening" ->
-      s"""SELECT (SELECT count(*) FROM documents) AS n_rows,
-         | ((SELECT sum(doc_id % 1000000) FROM documents WHERE doc_id % 2 = 0)
-         |  + (SELECT sum(doc_id % 1000000 + 5000000000)
-         |     FROM documents WHERE doc_id % 2 <> 0))::BIGINT AS sum_id,
-         | (SELECT sum(n_chars)::BIGINT FROM documents) AS sum_chars,
-         | (SELECT sum(n_chars % 97)::BIGINT FROM documents) AS sum_score,
-         | 'int' AS v1_id_type, 'bigint' AS id_type,
-         | 'float' AS v1_score_type, 'double' AS score_type""".stripMargin,
-
-    // z-order replay: the bottom-quartile n_chars box (exact integer
-    // bounds) must return the same row/char mass through the
-    // manifest-pruned box read as the plain predicate; `pruned` pins
-    // that the Morton layout actually skipped at least half the files
-    // on the axis the linear arrangement couldn't serve
-    "q237_zorder_compact" ->
-      s"""WITH b AS (SELECT min(n_chars) AS lo,
-         |  min(n_chars) + (max(n_chars) - min(n_chars)) // 4 AS hi
-         |  FROM documents)
-         |SELECT 1::BIGINT AS pruned, count(*) AS n_rows,
-         |  sum(n_chars)::BIGINT AS sum_chars
-         |FROM documents, b WHERE n_chars BETWEEN b.lo AND b.hi""".stripMargin,
-
-    // index-sync replay: the corpus lives (merge re-embeds ids < 5 and
-    // clones ids < 3 to +1e6, delete kills 7 and 11), the sync maps
-    // corpus v3 onto index v3 (clone + upsert + tombstone commits),
-    // and BOTH the synced index's own files and the table snapshot
-    // must carry exactly the mutated corpus's row/id mass
-    "q238_index_sync" ->
-      s"""WITH base AS (SELECT count(*) AS n, sum(vec_id)::BIGINT AS s
-         |    FROM embeddings),
-         |  ins AS (SELECT count(*) AS n,
-         |    coalesce(sum(vec_id + 1000000), 0)::BIGINT AS s
-         |    FROM embeddings WHERE vec_id < 3),
-         |  upd AS (SELECT count(*) AS n FROM embeddings WHERE vec_id < 5)
-         |SELECT 3::BIGINT AS corpus_v, 3::BIGINT AS index_v,
-         |  (upd.n + ins.n)::BIGINT AS n_upserted, 2::BIGINT AS n_deleted,
-         |  (base.n - 2 + ins.n)::BIGINT AS n_rows_index,
-         |  (base.s - 18 + ins.s)::BIGINT AS sum_id_index,
-         |  (base.n - 2 + ins.n)::BIGINT AS n_rows_table,
-         |  (base.s - 18 + ins.s)::BIGINT AS sum_id_table
-         |FROM base, ins, upd""".stripMargin,
-
-    // column-drop replay: the drop is metadata-only (files_moved is
-    // the REAL v1->v2 manifest diff and must be zero), the two-column
-    // read keeps the full mass, and time travel still serves the
-    // dropped column's distinct count
-    "q239_column_drop" ->
-      s"""SELECT count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
-         | 2::BIGINT AS n_cols, 3::BIGINT AS v1_n_cols,
-         | (SELECT count(DISTINCT source) FROM documents)
-         |   AS v1_distinct_source,
-         | 0::BIGINT AS files_moved
-         |FROM documents""".stripMargin,
-
-    // restore replay: the restored head IS the raw table (DuckDB
-    // recomputes both masses; the file counts are the fixed
-    // single-file construction), v2 is the table minus the panel
-    "q240_versioned_restore" ->
-      s"""SELECT 3::BIGINT AS restored_version, 1::BIGINT AS restored_to,
-         | 1::BIGINT AS files_re_added, 1::BIGINT AS files_removed,
-         | (SELECT count(*) FROM documents) AS n_rows,
-         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars,
-         | (SELECT count(*) FROM documents
-         |    WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13)) AS v2_rows,
-         | (SELECT sum(n_chars) FROM documents
-         |    WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13))::BIGINT AS v2_chars""".stripMargin,
-
-    // metadata-count replay: DuckDB counts the slow way what the
-    // engine answered from the manifest's per-file row counts alone
-    "q241_metadata_count" ->
-      s"""SELECT 1::BIGINT AS version,
-         |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
-         |    AS n_rows_meta
-         |UNION ALL
-         |SELECT 2::BIGINT, (SELECT count(*) FROM documents)
-         |ORDER BY version""".stripMargin,
-
-    // bloom point-lookup replay: the row content is the recomputed
-    // half (DuckDB scans); the file total is the fixed 2x2 layout.
-    // File-open counts stay OUT of the gate — bloom pruning is pinned
-    // by VersionedSpec, where a false positive can't flake a hash
-    "q242_bloom_point_lookup" ->
-      s"""SELECT doc_id, lang, source, n_chars,
-         | 4::BIGINT AS n_files_total
-         |FROM documents WHERE doc_id = 42""".stripMargin,
-
-    // COW update replay: CASE applies both SET expressions to the
-    // panel; the length sum audits the string SET; time travel reads
-    // the pre-update mass
-    "q243_versioned_update" ->
-      s"""SELECT 6::BIGINT AS rows_updated, 1::BIGINT AS files_rewritten,
-         | 1::BIGINT AS files_kept,
-         | (SELECT count(*) FROM documents) AS n_rows,
-         | (SELECT sum(CASE WHEN doc_id IN (2, 3, 5, 7, 11, 13)
-         |     THEN n_chars * 2 + 7 ELSE n_chars END)
-         |   FROM documents)::BIGINT AS sum_chars_after,
-         | (SELECT sum(CASE WHEN doc_id IN (2, 3, 5, 7, 11, 13)
-         |     THEN length(source) + 1 ELSE length(source) END)
-         |   FROM documents)::BIGINT AS src_len_after,
-         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars_before""".stripMargin,
-
-    // shallow-clone replay: the source reads raw, the diverged clone
-    // reads raw + the panel bump; one source file still read in place
-    "q244_shallow_clone" ->
-      s"""SELECT (SELECT count(*) FROM documents) AS src_rows,
-         | (SELECT sum(n_chars) FROM documents)::BIGINT AS src_chars,
-         | (SELECT count(*) FROM documents) AS clone_rows,
-         | (SELECT sum(CASE WHEN doc_id < 10 THEN n_chars + 1000000
-         |     ELSE n_chars END) FROM documents)::BIGINT AS clone_chars,
-         | 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
-         | 1::BIGINT AS n_source_refs""".stripMargin,
-
-    // timestamp-travel replay: the probes are anchored to the table's
-    // OWN recorded commit instants (ts2-1 -> v1, ts2 -> v2), so the
-    // resolved versions and their masses are deterministic
-    "q245_timestamp_travel" ->
-      s"""SELECT 1::BIGINT AS probe, 1::BIGINT AS version,
-         |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
-         |    AS n_rows
-         |UNION ALL
-         |SELECT 2::BIGINT, 2::BIGINT, (SELECT count(*) FROM documents)
-         |ORDER BY probe""".stripMargin,
-
-    // follower replay: the delivery log is the initial insert stream
-    // plus the merge's delete/insert pair per updated key — every mass
-    // recomputed from the raw table, nothing construction-counted but
-    // the two log commits
-    "q246_cdc_follow" ->
-      s"""WITH p AS (SELECT * FROM documents WHERE doc_id < 10)
-         |SELECT 'delete' AS change_type,
-         |  (SELECT count(*) FROM p) AS n_rows,
-         |  (SELECT sum(n_chars) FROM p)::BIGINT AS sum_chars,
-         |  2::BIGINT AS log_versions
-         |UNION ALL
-         |SELECT 'insert',
-         |  (SELECT count(*) FROM documents) + (SELECT count(*) FROM p),
-         |  ((SELECT sum(n_chars) FROM documents) +
-         |   (SELECT sum(n_chars) FROM p) +
-         |   1000000 * (SELECT count(*) FROM p))::BIGINT,
-         |  2::BIGINT
-         |ORDER BY change_type""".stripMargin,
-
-    // expiry replay: the retained head is the FULL table (DuckDB
-    // recomputes the mass); the reclaim counts and horizon are the
-    // fixed 2-commit + compact construction
-    "q247_version_expiry" ->
-      s"""SELECT 2::BIGINT AS deltas_expired, 2::BIGINT AS files_deleted,
-         | 3::BIGINT AS earliest_version, 1::BIGINT AS n_live_files,
-         | (SELECT count(*) FROM documents) AS n_rows,
-         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars""".stripMargin,
-
-    // band-overwrite replay: the low band reads recomputed (CASE),
-    // everything else raw; the pre-overwrite version reads raw
-    "q248_overwrite_where" ->
-      s"""SELECT 10::BIGINT AS rows_replaced, 1::BIGINT AS files_rewritten,
-         | 1::BIGINT AS files_kept,
-         | (SELECT count(*) FROM documents) AS n_rows,
-         | (SELECT sum(CASE WHEN doc_id < 10 THEN n_chars * 3 + 1
-         |     ELSE n_chars END) FROM documents)::BIGINT AS sum_chars_after,
-         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars_before""".stripMargin,
-
-    // constraint replay: the violation count is the SAME predicate
-    // recomputed by DuckDB over the raw table (zero by construction of
-    // the generator — but COUNTED, not asserted)
-    "q249_check_constraints" ->
-      s"""SELECT 1::BIGINT AS n_constraints,
-         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
-         | sum(CASE WHEN NOT coalesce(n_chars >= 0 AND doc_id IS NOT NULL,
-         |   false) THEN 1 ELSE 0 END)::BIGINT AS n_violations
-         |FROM documents""".stripMargin,
-
-    // history replay: q243's construction IS the operation log; the
-    // head mass is the recomputed half
-    "q250_table_history" ->
-      s"""WITH h(version, operation, n_files_added, n_files_removed) AS
-         | (VALUES (3, 'update', 1, 1), (2, 'append', 1, 0),
-         |         (1, 'append', 1, 0))
-         |SELECT version::BIGINT AS version, operation,
-         | n_files_added::BIGINT AS n_files_added,
-         | n_files_removed::BIGINT AS n_files_removed,
-         | (SELECT count(*) FROM documents) AS head_rows
-         |FROM h ORDER BY version DESC""".stripMargin,
-
-    // plain-join replay: the salted join's contract is output identity
-    // with the unsalted phrasing, so the oracle IS the unsalted join
-    "q219_salted_join" ->
-      s"""WITH dim AS (SELECT source, count(*) AS n_docs_src,
-         |    sum(n_chars)::BIGINT AS chars_src
-         |  FROM documents GROUP BY 1),
-         | j AS (SELECT d.source, d.n_chars, m.n_docs_src, m.chars_src
-         |  FROM documents d JOIN dim m USING (source))
-         |SELECT source, count(*) AS n_docs, max(n_docs_src) AS n_docs_src,
-         |  sum(CASE WHEN n_chars * n_docs_src > chars_src THEN 1 ELSE 0
-         |    END)::BIGINT AS n_above_avg
-         |FROM j GROUP BY source ORDER BY source""".stripMargin,
-
-    // MaxSim replay: per-token maxes are order-free; the sum folds in
-    // the fixed token order on both engines ((m0 + m1) + m2)
-    "q220_maxsim" ->
-      s"""WITH base AS (SELECT vec_id, vec_id // 8 AS doc_id,
-         |    embedding::DOUBLE[] AS e FROM embeddings),
-         | t0 AS (SELECT embedding::DOUBLE[] AS q0v FROM embeddings WHERE vec_id = 0),
-         | t1 AS (SELECT embedding::DOUBLE[] AS q1v FROM embeddings WHERE vec_id = 1),
-         | t2 AS (SELECT embedding::DOUBLE[] AS q2v FROM embeddings WHERE vec_id = 2),
-         | m AS (SELECT doc_id, count(*) AS n_vecs,
-         |    max(${cosSqlAB("e", "q0v")}) AS m0,
-         |    max(${cosSqlAB("e", "q1v")}) AS m1,
-         |    max(${cosSqlAB("e", "q2v")}) AS m2
-         |  FROM base, t0, t1, t2 GROUP BY doc_id)
-         |SELECT doc_id, n_vecs, round(m0 + m1 + m2, 6) AS score
-         |FROM m ORDER BY score DESC, doc_id ASC LIMIT 5""".stripMargin,
-
-    // q42's bucket rule + q121's 13-token-window h60 phrasing; the train
-    // gram set is DISTINCT so the presence check is an IN, and sub-13-
-    // token docs drop out of g on both engines (empty range)
-    "q206_split_leakage" ->
-      s"""WITH d AS (SELECT doc_id, source, ${h32Sql("text")} % 10 AS b,
-         |    regexp_split_to_array(lower(trim(coalesce(text, ''))), '\\s+') AS w
-         |  FROM documents),
-         | g AS (SELECT doc_id, source, b,
-         |    unnest([${h60Sql("array_to_string(w[i:i+12], ' ')")}
-         |      for i in range(1, greatest(len(w) - 12, 0) + 1)]) AS g
-         |  FROM d),
-         | tr AS (SELECT DISTINCT g FROM g WHERE b <= 7),
-         | pd AS (SELECT doc_id, source, count(*)::BIGINT AS n_grams,
-         |    sum(CASE WHEN g IN (SELECT g FROM tr) THEN 1 ELSE 0 END)::BIGINT AS n_leaked
-         |   FROM g WHERE b = 9 GROUP BY 1, 2),
-         | pd2 AS (SELECT *, (1000000 * n_leaked) // n_grams AS ppm FROM pd)
-         |SELECT source, count(*)::BIGINT AS n_test_docs,
-         | sum(n_grams)::BIGINT AS n_grams, sum(n_leaked)::BIGINT AS n_leaked,
-         | sum(CASE WHEN n_leaked > 0 THEN 1 ELSE 0 END)::BIGINT AS n_docs_leaked,
-         | sum(CASE WHEN ppm >= 500000 THEN 1 ELSE 0 END)::BIGINT AS n_docs_heavy,
-         | ((1000000 * sum(n_leaked)) // sum(n_grams))::BIGINT AS corpus_leaked_ppm
-         |FROM pd2 GROUP BY 1""".stripMargin,
-
-    // q14's cand + q40's >= 0.5 verified pairs for membership, q86's
-    // quality replay micro-integered into deciles (least(qm//1e5, 9) —
-    // no float decile boundary)
-    "q207_quality_dup_joint" ->
-      s"""WITH $MinhashCtes,
-         | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |   FROM bands x JOIN bands y
-         |   ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
-         | pairs AS (SELECT doc_a, doc_b FROM cand
-         |   JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
-         |   WHERE len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-         |     / len(list_distinct(sa.shingles || sb.shingles))::DOUBLE >= 0.5),
-         | mem AS (SELECT DISTINCT doc_id FROM (
-         |   SELECT doc_a AS doc_id FROM pairs UNION ALL SELECT doc_b FROM pairs)),
-         | docq AS (SELECT doc_id, round((least(len(w) / 100.0, 1.0)
-         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
-         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
-         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q
-         |  FROM (SELECT doc_id, text,
-         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
-         | dd AS (SELECT doc_id,
-         |    least(CAST(round(q * 1000000, 0) AS BIGINT) // 100000, 9) AS q_decile
-         |   FROM docq)
-         |SELECT q_decile, count(*)::BIGINT AS n_docs,
-         | sum(CASE WHEN doc_id IN (SELECT doc_id FROM mem) THEN 1 ELSE 0 END)::BIGINT AS n_neardup,
-         | ((1000000 * sum(CASE WHEN doc_id IN (SELECT doc_id FROM mem) THEN 1 ELSE 0 END))
-         |   // count(*))::BIGINT AS neardup_ppm
-         |FROM dd GROUP BY 1""".stripMargin,
-
-    // per-row norm² = list_sum of squares (the q201-proven sequential-
-    // fold twin of the Spark aggregate), micro-integered per row
-    "q209_norm_audit" ->
-      """WITH b AS (SELECT label,
-        |   CAST(round(list_sum([x * x for x in embedding::DOUBLE[]]) * 1000000, 0) AS BIGINT) AS n2
-        |  FROM embeddings WHERE embedding IS NOT NULL)
-        |SELECT label, count(*)::BIGINT AS n_vectors,
-        | sum(CASE WHEN n2 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_zero_norm,
-        | min(n2)::BIGINT AS min_norm2_micro,
-        | (sum(n2) // count(*))::BIGINT AS mean_norm2_micro,
-        | max(n2)::BIGINT AS max_norm2_micro
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // q202's ceil-division audit fanned across budgets; all-integer
-    "q208_budget_curve" ->
-      """WITH t AS (SELECT len(regexp_split_to_array(lower(trim(coalesce(text, ''))), '\s+'))::BIGINT AS nt
-        |  FROM documents),
-        | f AS (SELECT nt, unnest([128, 256, 512, 1024, 2048])::BIGINT AS budget FROM t),
-        | p AS (SELECT budget, nt, (nt + budget - 1) // budget AS pieces FROM f)
-        |SELECT budget, count(*)::BIGINT AS n_docs,
-        | sum(CASE WHEN nt <= budget THEN 1 ELSE 0 END)::BIGINT AS n_fit,
-        | sum(nt)::BIGINT AS total_tokens, sum(pieces)::BIGINT AS total_pieces,
-        | (sum(pieces) * budget - sum(nt))::BIGINT AS pad_tokens,
-        | ((1000000 * sum(nt)) // (sum(pieces) * budget))::BIGINT AS utilization_ppm
-        |FROM p GROUP BY 1""".stripMargin,
-
-    // q93's centroid replay + cosine to own-label centroid, per-label
-    // cohesion rollup with an exact outlier count at cos < 0.5
-    "q142_label_cohesion" ->
-      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-         | ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
+    // pairwise cosine between the q142 rounded centroids, (a < b) pairs,
+    // most-confusable first; (cos desc, a, b) total order at the 10-cut
+    Query("q163_label_confusion", qLabelConfusion, sql(
+      s"""WITH ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
          |   unnest(embedding::DOUBLE[]) AS v FROM embeddings),
          | cdim AS (SELECT label, dim, round(sum(v) / count(*), 6) AS m
          |  FROM ex GROUP BY 1, 2),
          | cent AS (SELECT label, list(m ORDER BY dim) AS c FROM cdim GROUP BY label),
-         | scored AS (SELECT b.label, round(${cosSqlAB("e", "c")}, 6) AS cos
-         |  FROM base b JOIN cent USING (label))
-         |SELECT label, count(*)::BIGINT AS n_vectors,
-         | round(avg(cos), 6) AS avg_cos, min(cos) AS min_cos,
-         | sum(CASE WHEN cos < 0.5 THEN 1 ELSE 0 END)::BIGINT AS n_low
-         |FROM scored GROUP BY label""".stripMargin,
+         | cnt AS (SELECT label, count(*)::BIGINT AS n FROM embeddings GROUP BY 1),
+         | cents AS (SELECT cent.label, c, n FROM cent JOIN cnt USING (label))
+         |SELECT a.label AS label_a, b.label AS label_b, a.n AS n_a, b.n AS n_b,
+         | round(${cosSqlAB("a.c", "b.c")}, 6) AS cos
+         |FROM cents a JOIN cents b ON a.label < b.label
+         |ORDER BY cos DESC, label_a ASC, label_b ASC LIMIT 10""".stripMargin)),
+
+    // Fano factor per type from integer sums: n = |distinct corpus
+    // hours|, S1/S2 per type; F = S2/S1 - S1/n (zero hours change only n)
+    Query("q164_burstiness", qBurstiness, sql(
+      """WITH ph AS (SELECT event_type, date_trunc('hour', ts) AS h,
+        |   count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
+        | hrs AS (SELECT count(DISTINCT h)::BIGINT AS n FROM ph)
+        |SELECT event_type, n AS n_hours, count(*)::BIGINT AS active_hours,
+        | sum(c)::BIGINT AS n_events,
+        | round(sum(c*c)::DOUBLE / sum(c)::DOUBLE -
+        |   sum(c)::DOUBLE / n::DOUBLE, 6) AS fano
+        |FROM ph CROSS JOIN hrs GROUP BY 1, 2""".stripMargin)),
+
+    // grouped exact Gini from the per-source length histogram: ordered
+    // window-sum of c*(2*cumv - v*c), G read off the last bucket's row
+    Query("q165_gini_length", qGiniLength, sql(
+      """WITH hist AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
+        |   FROM documents GROUP BY 1, 2),
+        | acc AS (SELECT source, c,
+        |   v::DOUBLE * c::DOUBLE AS vc,
+        |   sum(c) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS cumc,
+        |   sum(v::DOUBLE * c::DOUBLE) OVER (PARTITION BY source ORDER BY v
+        |     ROWS UNBOUNDED PRECEDING) AS cumv
+        |  FROM hist),
+        | terms AS (SELECT source, cumc,
+        |   sum(c::DOUBLE * (2.0 * cumv - vc)) OVER (PARTITION BY source ORDER BY cumc
+        |     ROWS UNBOUNDED PRECEDING) AS g,
+        |   max(cumc) OVER (PARTITION BY source) AS n,
+        |   max(cumv) OVER (PARTITION BY source) AS t
+        |  FROM acc)
+        |SELECT source, n::BIGINT AS n_rows, round(t, 1) AS total_value,
+        | round(1.0 - g / (n::DOUBLE * t), 6) AS gini
+        |FROM terms WHERE cumc = n""".stripMargin)),
+
+    // per-user consecutive gaps ((ts, event_id) order), seconds, typed by
+    // the following event; q117 cum-mass quantile rule on the gap histogram
+    Query("q166_gap_calibration", qGapCalibration, sql(
+      """WITH g AS (SELECT event_type,
+        |   date_diff('second',
+        |     lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap_s
+        |  FROM events),
+        | hist AS (SELECT event_type, gap_s, count(*)::BIGINT AS c
+        |  FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2),
+        | cum AS (SELECT event_type, gap_s,
+        |    sum(c) OVER (PARTITION BY event_type ORDER BY gap_s) AS cum,
+        |    sum(c) OVER (PARTITION BY event_type) AS n FROM hist)
+        |SELECT event_type, q.name AS quantile, min(gap_s)::BIGINT AS value,
+        | max(n)::BIGINT AS n_rows
+        |FROM cum CROSS JOIN (VALUES ('p50', 1, 2), ('p90', 9, 10),
+        |  ('p99', 99, 100)) q(name, num, den)
+        |WHERE cum * q.den >= n * q.num
+        |GROUP BY 1, 2""".stripMargin)),
 
     // q16's stopword langid per WHOLE doc vs the declared lang column;
     // mismatch rate over non-abstaining predictions, per (source, lang)
-    "q167_lang_mismatch" ->
+    Query("q167_lang_mismatch", qLangMismatch, sql(
       s"""WITH p AS (SELECT source, lang,
          |  CASE WHEN mx = 0 THEN 'unknown' WHEN s_en = mx THEN 'en'
          |   WHEN s_fr = mx THEN 'fr' WHEN s_de = mx THEN 'de'
@@ -9063,12 +8970,12 @@ object SparkEntry {
          |   / (sum(CASE WHEN pred = lang THEN 1 ELSE 0 END)
          |      + sum(CASE WHEN pred <> lang AND pred <> 'unknown' THEN 1 ELSE 0 END))::DOUBLE, 6)
          |  ELSE NULL END AS mismatch_rate
-         |FROM p GROUP BY 1, 2""".stripMargin,
+         |FROM p GROUP BY 1, 2""".stripMargin)),
 
     // replay the planting (class magic hex + every-13th NUL corruption)
     // and the sniff rules over the hex prefix — both engines emit
     // uppercase hex, so the 24-char prefix comparison is byte-exact
-    "q168_sniff_audit" ->
+    Query("q168_sniff_audit", qSniffAudit, sql(
       """WITH m AS (SELECT
         |   CASE (doc_id % 8) WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
         |    WHEN 2 THEN 'gif' WHEN 3 THEN 'zip' WHEN 4 THEN 'gzip'
@@ -9100,11 +9007,11 @@ object SparkEntry {
         |  FROM hh)
         |SELECT declared, sniffed, count(*)::BIGINT AS n_media,
         | declared = sniffed AS is_match
-        |FROM sn GROUP BY 1, 2""".stripMargin,
+        |FROM sn GROUP BY 1, 2""".stripMargin)),
 
     // MI/NMI from the (source, lang) cell histogram; the entropy scalars
     // use the partition identity sum_cells p_cell*ln(p_a) = sum_a p_a*ln(p_a)
-    "q169_source_lang_mi" ->
+    Query("q169_source_lang_mi", qSourceLangMi, sql(
       """WITH cells AS (SELECT source, lang, count(*)::BIGINT AS n_cell
         |   FROM documents GROUP BY 1, 2),
         | na AS (SELECT source, sum(n_cell)::BIGINT AS n_a FROM cells GROUP BY 1),
@@ -9121,11 +9028,11 @@ object SparkEntry {
         | round(mi, 6) AS mi_nats,
         | CASE WHEN h_a * h_b > 0 THEN round(mi / sqrt(h_a * h_b), 6)
         |  ELSE NULL END AS nmi
-        |FROM j CROSS JOIN s""".stripMargin,
+        |FROM j CROSS JOIN s""".stripMargin)),
 
     // completed day grid per type (absent days contribute y = 0), then
     // closed-form OLS mirroring Stats.volumeTrend's arithmetic order
-    "q170_volume_trend" ->
+    Query("q170_volume_trend", qVolumeTrend, sql(
       """WITH pd AS (SELECT event_type, date_trunc('day', ts)::DATE AS d,
         |   count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
         | days AS (SELECT DISTINCT d FROM pd),
@@ -9151,12 +9058,12 @@ object SparkEntry {
         |   ELSE NULL END AS intercept,
         | CASE WHEN varx * vary > 0 THEN round(covn * covn / (varx * vary), 6)
         |   ELSE NULL END AS r2
-        |FROM t""".stripMargin,
+        |FROM t""".stripMargin)),
 
     // lateness = running-max(ts over event_id order) - ts; the oracle can
     // afford the single full-order window the Spark side deliberately
     // avoids; q117 cum-mass rule for the per-type quantiles
-    "q171_disorder_audit" ->
+    Query("q171_disorder_audit", qDisorderAudit, sql(
       """WITH ev AS (SELECT event_type,
         |   date_diff('second', ts,
         |     max(ts) OVER (ORDER BY event_id ROWS UNBOUNDED PRECEDING))
@@ -9175,11 +9082,11 @@ object SparkEntry {
         | min(CASE WHEN cum * 20 >= n * 19 THEN lateness_s END)::BIGINT AS p95_s,
         | min(CASE WHEN cum * 100 >= n * 99 THEN lateness_s END)::BIGINT AS p99_s,
         | max(lateness_s)::BIGINT AS max_s
-        |FROM cum GROUP BY 1""".stripMargin,
+        |FROM cum GROUP BY 1""".stripMargin)),
 
     // q155's per-doc TTR score + decile rule, then md5(doc_id) mod 8
     // striping and the per-cell uniformity audit (integer numerator)
-    "q172_curriculum_shards" ->
+    Query("q172_curriculum_shards", qCurriculumShards, sql(
       s"""WITH t AS (SELECT doc_id,
         |   unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS tok
         |  FROM documents),
@@ -9206,11 +9113,11 @@ object SparkEntry {
         | coalesce(n_docs, 0)::BIGINT AS n_docs,
         | round(nd::DOUBLE / 8.0, 6) AS expected,
         | round((coalesce(n_docs, 0) * 8 - nd)::DOUBLE / nd::DOUBLE, 6) AS rel_dev
-        |FROM grid g LEFT JOIN cells USING (shard, decile)""".stripMargin,
+        |FROM grid g LEFT JOIN cells USING (shard, decile)""".stripMargin)),
 
     // md5 over the digit/case/whitespace-normalized text; families with
     // >= 2 raw variants (byte-identical families are q10's finding)
-    "q173_template_dups" ->
+    Query("q173_template_dups", qTemplateDups, sql(
       """WITH d0 AS (SELECT doc_id, text FROM documents),
         | planted AS (
         |   SELECT doc_id + 10000000 AS doc_id, upper(text) AS text
@@ -9229,11 +9136,17 @@ object SparkEntry {
         |   min(doc_id) AS rep FROM h GROUP BY 1, 2)
         |SELECT template_md5, sum(c)::BIGINT AS n_docs,
         | count(*)::BIGINT AS n_variants, min(rep)::BIGINT AS rep_doc
-        |FROM v GROUP BY 1 HAVING count(*) >= 2""".stripMargin,
+        |FROM v GROUP BY 1 HAVING count(*) >= 2""".stripMargin)),
+
+    Query("q174_ivfpq", qIvfPq,
+      (s, dir) => {
+        val index = ivfPqIndexFor(s, dir)
+        ivfPqOracleSql(index.centers, index.codebooks)
+      }),
 
     // CDC boundaries (trailing-4-gram md5 % 64 = 0, interior positions
     // only), chunk md5s, shared mass = chunks in >= 2 distinct docs
-    "q175_cdc_dedup" ->
+    Query("q175_cdc_dedup", qCdcDedup, sql(
       s"""WITH d AS (SELECT doc_id, source, text FROM documents
          |  WHERE length(text) > 0),
         | cu AS (SELECT doc_id, source, text,
@@ -9258,11 +9171,11 @@ object SparkEntry {
         |   AS shared_chars,
         | round(coalesce(sum(CASE WHEN dup.h IS NOT NULL THEN len END), 0)::DOUBLE
         |   / sum(len)::DOUBLE, 6) AS shared_frac
-        |FROM ch LEFT JOIN dup ON ch.h = dup.h GROUP BY 1""".stripMargin,
+        |FROM ch LEFT JOIN dup ON ch.h = dup.h GROUP BY 1""".stripMargin)),
 
     // unnest-and-group phrasing of the per-dim moments (value-identical
     // to the UDAF; mean/variance arithmetic order mirrored exactly)
-    "q176_dim_audit" ->
+    Query("q176_dim_audit", qDimAudit, sql(
       """WITH e AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
         |  WHERE embedding IS NOT NULL AND len(embedding) > 0),
         | d AS (SELECT len(v) AS dim FROM e LIMIT 1),
@@ -9274,11 +9187,11 @@ object SparkEntry {
         |SELECT dim, round(sx / n, 6) AS mean,
         | round(sxx / n - (sx / n) * (sx / n), 6) AS variance,
         | (sxx / n - (sx / n) * (sx / n)) < 0.01 AS is_collapsed
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin)),
 
     // frame pairs over the UTF-8 byte stream (hex-decoded per position);
     // diff is an exact multiple of 1/32, so the compare is float-exact
-    "q177_scene_cuts" ->
+    Query("q177_scene_cuts", qSceneCuts, sql(
       """WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
         |   octet_length(encode(text)) // 32 AS nf FROM documents),
         | fr AS (SELECT media_id, hx, unnest(range(1, nf)) AS f FROM m),
@@ -9290,11 +9203,11 @@ object SparkEntry {
         |SELECT media_id, count(*)::BIGINT AS n_pairs,
         | sum(CASE WHEN diff > 24.0 THEN 1 ELSE 0 END)::BIGINT AS n_cuts,
         | round(avg(diff), 6) AS mean_diff, round(max(diff), 6) AS max_diff
-        |FROM pairs GROUP BY 1""".stripMargin,
+        |FROM pairs GROUP BY 1""".stripMargin)),
 
     // completed hour grid per type; centered lag products over the grid
     // windows mirror Stats.seasonality's arithmetic order
-    "q178_seasonality" ->
+    Query("q178_seasonality", qSeasonality, sql(
       """WITH ph AS (SELECT event_type,
         |   floor(epoch(ts))::BIGINT // 3600 AS h, count(*)::BIGINT AS c
         |  FROM events GROUP BY 1, 2),
@@ -9318,12 +9231,12 @@ object SparkEntry {
         |SELECT event_type, n_hours, round(mu, 6) AS mean_per_hour,
         | CASE WHEN den > 0 THEN round(num1 / den, 6) END AS r_lag1,
         | CASE WHEN den > 0 THEN round(num24 / den, 6) END AS r_lag24
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin)),
 
     // completed day grid; lower medians via the q117 cum-mass rule
     // (value at position ceil(n/2) — tie order inside rn cannot change
     // the selected VALUE); worst day = max deviation, latest-day tie
-    "q179_volume_anomaly" ->
+    Query("q179_volume_anomaly", qVolumeAnomaly, sql(
       """WITH pd AS (SELECT event_type, date_trunc('day', ts)::DATE AS d,
         |   count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
         | days AS (SELECT DISTINCT d FROM pd),
@@ -9358,12 +9271,12 @@ object SparkEntry {
         |  FROM fl GROUP BY 1)
         |SELECT event_type, n_days, median_cnt, mad, n_anomalous,
         | worst_day, worst_cnt
-        |FROM agg JOIN worst USING (event_type)""".stripMargin,
+        |FROM agg JOIN worst USING (event_type)""".stripMargin)),
 
     // round 1 top-10 by cosine, feedback centroid rounded HALF_UP to 6
     // per component, q' = q + 0.75*c, round 2 top-10 — the pre-compare
     // rounding makes the second-pass scores engine-identical
-    "q180_rocchio_prf" ->
+    Query("q180_rocchio_prf", qRocchioPrf, sql(
       s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
          | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
          | dd AS (SELECT len(q) AS dim FROM qv),
@@ -9381,11 +9294,11 @@ object SparkEntry {
          | scored AS (SELECT vec_id, label, $CosSql AS score
          |  FROM base, (SELECT q FROM q2) qv)
          |SELECT vec_id, label, round(score, 6) AS score FROM
-         | (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)""".stripMargin,
+         | (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)""".stripMargin)),
 
     // q18's BPE counter; doc-isolated blocks = integer-ceil(t/L) per doc,
     // concat lower bound = integer-ceil(total/L)
-    "q181_packing_curve" ->
+    Query("q181_packing_curve", qPackingCurve, sql(
       """WITH t AS (SELECT len(regexp_extract_all(lower(text),
         |    '[a-z]+|[0-9]+|[^a-z0-9\s]'))::BIGINT AS tok FROM documents),
         | x AS (SELECT tok, unnest([128, 256, 512, 1024])::BIGINT AS context_len
@@ -9399,12 +9312,12 @@ object SparkEntry {
         | (doc_blocks * context_len - total_tokens)::BIGINT AS pad_tokens,
         | round((doc_blocks * context_len - total_tokens)::DOUBLE /
         |   (doc_blocks * context_len)::DOUBLE, 6) AS waste_frac
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin)),
 
     // Md5TokenEmbedder bucket sums for current vs planted-past text
     // (every 13th doc carries a legacy suffix); cosine is normalization-
     // invariant so raw sums suffice; zero-norm -> 0 (the q01 convention)
-    "q182_stale_embeddings" ->
+    Query("q182_stale_embeddings", qStaleEmbeddings, sql(
       s"""WITH d0 AS (SELECT doc_id, source, text FROM documents
          |   WHERE trim(text) <> ''),
          | du AS (SELECT doc_id, source, text,
@@ -9439,7 +9352,7 @@ object SparkEntry {
          |SELECT source, count(*)::BIGINT AS n_docs,
          | sum(CASE WHEN cos < 0.9999 THEN 1 ELSE 0 END)::BIGINT AS n_stale,
          | min(cos) AS min_cos, max(worst_doc)::BIGINT AS worst_doc
-         |FROM cosd JOIN worst USING (source) GROUP BY 1""".stripMargin,
+         |FROM cosd JOIN worst USING (source) GROUP BY 1""".stripMargin)),
 
     // q118's bucket machinery at occupancy 8 (bits = ceil(log2(512/8)) = 6
     // at the verify scale with planting, where the oracle pins it);
@@ -9452,7 +9365,7 @@ object SparkEntry {
     // mirroring the collapsed plan's reinterpreted cap, so a clone-heavy
     // bucket with >4096 points but <=4096 distinct vectors stays audited
     // by BOTH engines at scale.
-    "q183_knn_label_noise" ->
+    Query("q183_knn_label_noise", qKnnLabelNoise, sql(
       s"""WITH emb AS (SELECT vec_id, label, embedding FROM embeddings
          |   UNION ALL SELECT vec_id + 10000000, label, embedding
          |     FROM embeddings WHERE vec_id % 97 = 0
@@ -9477,11 +9390,11 @@ object SparkEntry {
          | sum(nb)::BIGINT AS n_neighbors, sum(diff)::BIGINT AS n_disagree,
          | sum(CASE WHEN diff * 2 > nb THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
          | round(sum(diff)::DOUBLE / sum(nb)::DOUBLE, 6) AS noise_rate
-         |FROM pp GROUP BY 1""".stripMargin,
+         |FROM pp GROUP BY 1""".stripMargin)),
 
     // q137's per-doc score + q172's ttr_pm, exact integer moments per
     // source, float only in the final 6-scalar closed form (q170 rule)
-    "q184_signal_agreement" ->
+    Query("q184_signal_agreement", qSignalAgreement, sql(
       """WITH toks AS (SELECT doc_id, source,
         |   list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '') AS w FROM documents),
         | grams AS (SELECT doc_id, source, CASE WHEN len(w) >= 2
@@ -9510,11 +9423,11 @@ object SparkEntry {
         |    sqrt((n_docs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
         |       * (n_docs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)), 6)
         |  END AS r
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin)),
 
     // planted clones (every 9th doc, +3e7 id), nested md5(id) mod 10
     // subsets, per-hash conditional counts -> dup rate per curve point
-    "q185_dedup_scaling" ->
+    Query("q185_dedup_scaling", qDedupScaling, sql(
       s"""WITH d0 AS (SELECT doc_id, text FROM documents
          |  UNION ALL
          |  SELECT doc_id + 30000000, text FROM documents WHERE doc_id % 9 = 0),
@@ -9539,14 +9452,17 @@ object SparkEntry {
          |SELECT k::BIGINT AS fraction_tenths, n AS n_docs, d AS n_distinct,
          | (n - d)::BIGINT AS n_dups,
          | CASE WHEN n > 0 THEN round((n - d)::DOUBLE / n::DOUBLE, 6) END AS dup_rate
-         |FROM pts""".stripMargin,
+         |FROM pts""".stripMargin)),
+
+    Query("q186_nprobe_curve", qNprobeCurve,
+      (s, dir) => nprobeOracleSql(ivfIndexFor(s, dir).centers)),
 
     // exact-dup group sizes over the planted-multiplicity corpus
     // (sizes 2/3/4 from the %9/%27/%81 copies); α = Clauset 2009 eq.
     // 3.7 at xmin=1, folded over the SIZE-ORDERED histogram with each
     // ln term rounded to 9dp first (ADVICE r13) so the 6dp output can't
     // ride on reduce order or libm-vs-JVM ln ULPs
-    "q187_dup_powerlaw" ->
+    Query("q187_dup_powerlaw", qDupPowerlaw, sql(
       """WITH base AS (SELECT doc_id, text FROM documents),
         | planted AS (SELECT text FROM base
         |   UNION ALL SELECT text FROM base WHERE doc_id % 9 = 0
@@ -9562,12 +9478,12 @@ object SparkEntry {
         |SELECT sz::BIGINT AS group_size, n_groups,
         | (sz * n_groups)::BIGINT AS n_docs,
         | round(1.0 + n / lnsum, 6) AS alpha_mle, n AS n_groups_total
-        |FROM hist CROSS JOIN a""".stripMargin,
+        |FROM hist CROSS JOIN a""".stripMargin)),
 
     // q176's per-dim moments, variances rounded to 6dp BEFORE the
     // spectrum statistics (identical fold inputs on both engines; the
     // dim-ordered list makes the fold order explicit)
-    "q188_effective_rank" ->
+    Query("q188_effective_rank", qEffectiveRank, sql(
       """WITH e AS (SELECT embedding::DOUBLE[] AS v FROM embeddings
         |  WHERE embedding IS NOT NULL AND len(embedding) > 0),
         | d AS (SELECT len(v) AS dim FROM e LIMIT 1),
@@ -9590,12 +9506,12 @@ object SparkEntry {
         |   AS participation_ratio,
         | CASE WHEN tot > 0 THEN round(list_max(v) / tot, 6) END
         |   AS top_dim_share
-        |FROM en""".stripMargin,
+        |FROM en""".stripMargin)),
 
     // cumulative token-mass funnel over the %9-clone-planted corpus;
     // rule tests are q111's integer cross-multiplications; dedup-keep
     // ranks among stage-2 SURVIVORS (prior-survivor window = 0)
-    "q189_token_funnel" ->
+    Query("q189_token_funnel", qTokenFunnel, sql(
       """WITH base AS (SELECT doc_id, text, lang FROM documents),
         | planted AS (SELECT * FROM base UNION ALL
         |   SELECT doc_id + 80000000, text, lang FROM base WHERE doc_id % 9 = 0),
@@ -9644,11 +9560,11 @@ object SparkEntry {
         | t AS n_tokens,
         | CASE WHEN raw > 0 THEN round(t::DOUBLE / raw::DOUBLE, 6) END
         |   AS token_frac_of_raw
-        |FROM pts""".stripMargin,
+        |FROM pts""".stripMargin)),
 
     // per-query top-2 exact neighbors (self excluded); margin and the
     // confident flag derive from the ROUNDED 6dp scores on both engines
-    "q190_retrieval_margin" ->
+    Query("q190_retrieval_margin", qRetrievalMargin, sql(
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          | q AS (SELECT vec_id AS query_id, e AS qv FROM base
          |   WHERE vec_id % 100 = 0 AND vec_id < 2000),
@@ -9665,11 +9581,11 @@ object SparkEntry {
          |SELECT query_id, top1_id, top1_score, top2_id, top2_score,
          | round(top1_score - top2_score, 6) AS margin,
          | round(top1_score - top2_score, 6) >= 0.05 AS confident
-         |FROM t""".stripMargin,
+         |FROM t""".stripMargin)),
 
     // dup-weighted token mass per source over the %9-clone-planted
     // corpus; multiplicity via the hash-partitioned window, all integers
-    "q191_dup_exposure" ->
+    Query("q191_dup_exposure", qDupExposure, sql(
       """WITH base AS (SELECT doc_id, source, text FROM documents),
         | planted AS (SELECT * FROM base UNION ALL
         |   SELECT doc_id + 90000000, source, text FROM base WHERE doc_id % 9 = 0),
@@ -9684,12 +9600,12 @@ object SparkEntry {
         | CASE WHEN sum(nt) > 0 THEN round(
         |   coalesce(sum(CASE WHEN mult > 1 THEN nt END), 0)::DOUBLE
         |     / sum(nt)::DOUBLE, 6) END AS dup_exposure
-        |FROM m GROUP BY source""".stripMargin,
+        |FROM m GROUP BY source""".stripMargin)),
 
     // halves by vec_id parity; B half planted with the deterministic
     // per-dim shift x + j/(50·dim) (j 1-based = Spark's i+1); centroid
     // dims rounded to 6dp BEFORE the folds (q93/q188 discipline)
-    "q192_centroid_drift" ->
+    Query("q192_centroid_drift", qCentroidDrift, sql(
       s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
          | sh AS (SELECT vec_id, CASE WHEN vec_id % 2 = 1
          |    THEN [e[j] + j / (50.0 * len(e)) for j in range(1, len(e) + 1)]
@@ -9708,19 +9624,30 @@ object SparkEntry {
          |   AS max_dim_drift,
          | round(sqrt(list_sum([(ca[j] - cb[j]) * (ca[j] - cb[j])
          |   for j in range(1, len(ca) + 1)])), 6) AS l2_drift
-         |FROM a CROSS JOIN b""".stripMargin,
+         |FROM a CROSS JOIN b""".stripMargin)),
+
+    // the completeness gate on the partitioned lists layout: the Spark
+    // side scores every row of the persisted q28 index's inverted lists,
+    // so the oracle is the PLAIN exact scan — a lost or doubled row
+    // breaks the hash match
+    Query("q193_ivf_probe_topk", qIvfProbeTopK, sql(
+      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
+         | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
+         | scored AS (SELECT vec_id, label, $CosSql AS score FROM base, qv),
+         | topk AS (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)
+         |SELECT vec_id, label, round(score, 6) AS score FROM topk""".stripMargin)),
 
     // full q14 minhash/sig machinery, then per (bands, rows) config the
     // exact bucket-count candidate mass; the S-curve values are
     // driver-computed constants (explicit multiplication chains + 6dp
     // rounding in Dedup.plannerCurve) embedded as literals in BOTH
     // engines, so no runtime float path exists to drift
-    "q194_lsh_planner" -> lshPlannerOracleSql,
+    Query("q194_lsh_planner", qLshPlanner, sql(lshPlannerOracleSql)),
 
     // rational ppm idf over per-doc DISTINCT 60-bit token hashes
     // (DISTINCT applied to the HASH on both engines, so a collision
     // merges identically); all-integer `div`/`//` arithmetic end-to-end
-    "q195_doc_informativeness" ->
+    Query("q195_doc_informativeness", qDocInformativeness, sql(
       """WITH tk AS (SELECT DISTINCT doc_id, source,
         |   ('0x' || substr(md5(t), 1, 15))::BIGINT AS h
         |  FROM (SELECT doc_id, source,
@@ -9736,15 +9663,15 @@ object SparkEntry {
         | (sum(doc_idf_ppm) // count(*))::BIGINT AS mean_doc_idf_ppm,
         | min(doc_idf_ppm)::BIGINT AS min_doc_idf_ppm,
         | max(doc_idf_ppm)::BIGINT AS max_doc_idf_ppm
-        |FROM doc GROUP BY 1""".stripMargin,
+        |FROM doc GROUP BY 1""".stripMargin)),
 
     // generated from EntropyClasses — fixed-order 28-term ln chain,
     // 9dp per term, integer micro-units before the source rollup
-    "q196_char_entropy" -> charEntropyOracleSql,
+    Query("q196_char_entropy", qCharEntropy, sql(charEntropyOracleSql)),
 
     // occurrence position as (1e6·(i−1)) // (len−1); single-token docs
     // excluded on both engines (no positional information)
-    "q197_token_position_bias" ->
+    Query("q197_token_position_bias", qTokenPositionBias, sql(
       """WITH toks AS (SELECT regexp_split_to_array(lower(trim(coalesce(text, ''))), '\s+') AS w FROM documents),
         | g AS (SELECT unnest([{'token': w[i], 'ppm': (1000000 * (i - 1)) // (len(w) - 1)}
         |    for i in range(1, len(w) + 1)]) AS s FROM toks WHERE len(w) >= 2),
@@ -9752,34 +9679,34 @@ object SparkEntry {
         |    (sum(s.ppm) // count(*))::BIGINT AS mean_pos_ppm FROM g GROUP BY 1)
         |SELECT token, n_occ, mean_pos_ppm,
         | abs(mean_pos_ppm - 500000)::BIGINT AS bias_ppm
-        |FROM a ORDER BY bias_ppm DESC, token ASC LIMIT 20""".stripMargin,
+        |FROM a ORDER BY bias_ppm DESC, token ASC LIMIT 20""".stripMargin)),
 
     // exact-clone stats per fixed-width length bucket; md5 equality ==
     // text equality here (the q10 grouping convention)
-    "q198_dup_by_length" ->
+    Query("q198_dup_by_length", qDupByLength, sql(
       """WITH g AS (SELECT md5(coalesce(text, '')) AS h,
         |   length(coalesce(text, '')) // 50 AS len_bucket, count(*)::BIGINT AS m
         |  FROM documents GROUP BY 1, 2)
         |SELECT len_bucket, count(*)::BIGINT AS n_groups, sum(m)::BIGINT AS n_docs,
         | sum(CASE WHEN m >= 2 THEN m ELSE 0 END)::BIGINT AS n_dup_docs,
         | sum(m * (m - 1) // 2)::BIGINT AS n_dup_pairs
-        |FROM g GROUP BY 1""".stripMargin,
+        |FROM g GROUP BY 1""".stripMargin)),
 
     // df/cf dispersion, most-bursty first; (dispersion, token) is a
     // total order so the LIMIT cut replays exactly
-    "q199_token_dispersion" ->
+    Query("q199_token_dispersion", qTokenDispersion, sql(
       """WITH t AS (SELECT doc_id,
         |   unnest(regexp_split_to_array(lower(trim(coalesce(text, ''))), '\s+')) AS token
         |  FROM documents),
         | c AS (SELECT doc_id, token, count(*)::BIGINT AS c FROM t GROUP BY 1, 2),
         | a AS (SELECT token, count(*)::BIGINT AS df, sum(c)::BIGINT AS cf FROM c GROUP BY 1)
         |SELECT token, df, cf, ((1000000 * df) // cf)::BIGINT AS dispersion_ppm
-        |FROM a ORDER BY dispersion_ppm ASC, token ASC LIMIT 20""".stripMargin,
+        |FROM a ORDER BY dispersion_ppm ASC, token ASC LIMIT 20""".stripMargin)),
 
     // the full sig/band replay over text-collapsed reps (the Spark
     // side's exactDupGroups collapse), then all-integer common-denom
     // error: |1e6·(agree·uni − 16·inter)| // (16·uni)
-    "q200_minhash_accuracy" ->
+    Query("q200_minhash_accuracy", qMinhashAccuracy, sql(
       s"""WITH reps AS (SELECT min(doc_id) AS doc_id, text FROM documents GROUP BY text),
          | ${minhashCtesOver("reps")},
          | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -9797,11 +9724,11 @@ object SparkEntry {
          |SELECT jaccard_decile, count(*)::BIGINT AS n_pairs,
          | (sum(err_ppm) // count(*))::BIGINT AS mean_err_ppm,
          | max(err_ppm)::BIGINT AS max_err_ppm
-         |FROM e GROUP BY 1""".stripMargin,
+         |FROM e GROUP BY 1""".stripMargin)),
 
     // q31's per-dim centroid CTE, dims rounded to 6dp BEFORE the cosine
     // (the q192 recipe: both engines dot identical doubles)
-    "q201_label_affinity" ->
+    Query("q201_label_affinity", qLabelAffinity, sql(
       s"""WITH ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
          |   unnest(embedding::DOUBLE[]) AS v FROM embeddings),
          | cdim AS (SELECT label, dim, round(sum(v) / count(*), 6) AS mn,
@@ -9811,11 +9738,11 @@ object SparkEntry {
          |SELECT x.label AS label_a, y.label AS label_b,
          | x.n AS n_a, y.n AS n_b,
          | round(${cosSqlAB("x.c", "y.c")}, 6) AS centroid_cos
-         |FROM cent x JOIN cent y ON x.label < y.label""".stripMargin,
+         |FROM cent x JOIN cent y ON x.label < y.label""".stripMargin)),
 
     // no-packing context-budget baseline at B=512; ceil via
     // (nt + 511) // 512, all-integer
-    "q202_context_budget" ->
+    Query("q202_context_budget", qContextBudget, sql(
       """WITH t AS (SELECT source,
         |   len(regexp_split_to_array(lower(trim(coalesce(text, ''))), '\s+'))::BIGINT AS nt
         |  FROM documents),
@@ -9825,825 +9752,633 @@ object SparkEntry {
         | sum(nt)::BIGINT AS total_tokens, sum(pieces)::BIGINT AS total_pieces,
         | (sum(pieces) * 512 - sum(nt))::BIGINT AS pad_tokens,
         | ((1000000 * sum(nt)) // (sum(pieces) * 512))::BIGINT AS utilization_ppm
-        |FROM p GROUP BY 1""".stripMargin,
+        |FROM p GROUP BY 1""".stripMargin)),
 
-    // the completeness gate on the partitioned lists layout: the Spark
-    // side scores every row of the persisted q28 index's inverted lists,
-    // so the oracle is the PLAIN exact scan — a lost or doubled row
-    // breaks the hash match
-    "q193_ivf_probe_topk" ->
-      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-         | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-         | scored AS (SELECT vec_id, label, $CosSql AS score FROM base, qv),
-         | topk AS (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)
-         |SELECT vec_id, label, round(score, 6) AS score FROM topk""".stripMargin,
+    Query("q203_pq_distortion", qPqDistortion,
+      (s, dir) => pqDistortionOracleSql(pqIndexFor(s, dir).codebooks)),
 
-    // per-user consecutive gaps ((ts, event_id) order), seconds, typed by
-    // the following event; q117 cum-mass quantile rule on the gap histogram
-    "q166_gap_calibration" ->
-      """WITH g AS (SELECT event_type,
-        |   date_diff('second',
-        |     lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) AS gap_s
+    // q148's transition counts, then the to_type-sorted 9dp-ln fold in
+    // integer micro-units (the q187 float discipline)
+    Query("q204_transition_entropy", qTransitionEntropy, sql(
+      """WITH t AS (SELECT user_id, event_type,
+        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |     AS prev
         |  FROM events),
-        | hist AS (SELECT event_type, gap_s, count(*)::BIGINT AS c
-        |  FROM g WHERE gap_s IS NOT NULL GROUP BY 1, 2),
-        | cum AS (SELECT event_type, gap_s,
-        |    sum(c) OVER (PARTITION BY event_type ORDER BY gap_s) AS cum,
-        |    sum(c) OVER (PARTITION BY event_type) AS n FROM hist)
-        |SELECT event_type, q.name AS quantile, min(gap_s)::BIGINT AS value,
-        | max(n)::BIGINT AS n_rows
-        |FROM cum CROSS JOIN (VALUES ('p50', 1, 2), ('p90', 9, 10),
-        |  ('p99', 99, 100)) q(name, num, den)
-        |WHERE cum * q.den >= n * q.num
-        |GROUP BY 1, 2""".stripMargin,
+        | c AS (SELECT prev AS from_type, event_type AS to_type,
+        |   count(*)::BIGINT AS n
+        |  FROM t WHERE prev IS NOT NULL GROUP BY 1, 2),
+        | g AS (SELECT from_type, sum(n)::BIGINT AS n_total,
+        |    count(*)::BIGINT AS n_next_types,
+        |    list(struct_pack(t := to_type, n := n) ORDER BY to_type) AS hh
+        |  FROM c GROUP BY 1)
+        |SELECT from_type, n_total, n_next_types,
+        | CAST(round(-list_sum([(x.n / n_total) * round(ln(x.n / n_total), 9)
+        |   for x in hh]) * 1000000, 0) AS BIGINT) AS entropy_micro
+        |FROM g""".stripMargin)),
 
-    // Fano factor per type from integer sums: n = |distinct corpus
-    // hours|, S1/S2 per type; F = S2/S1 - S1/n (zero hours change only n)
-    "q164_burstiness" ->
-      """WITH ph AS (SELECT event_type, date_trunc('hour', ts) AS h,
-        |   count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-        | hrs AS (SELECT count(DISTINCT h)::BIGINT AS n FROM ph)
-        |SELECT event_type, n AS n_hours, count(*)::BIGINT AS active_hours,
-        | sum(c)::BIGINT AS n_events,
-        | round(sum(c*c)::DOUBLE / sum(c)::DOUBLE -
-        |   sum(c)::DOUBLE / n::DOUBLE, 6) AS fano
-        |FROM ph CROSS JOIN hrs GROUP BY 1, 2""".stripMargin,
-
-    // grouped exact Gini from the per-source length histogram: ordered
-    // window-sum of c*(2*cumv - v*c), G read off the last bucket's row
-    "q165_gini_length" ->
-      """WITH hist AS (SELECT source, n_chars AS v, count(*)::BIGINT AS c
-        |   FROM documents GROUP BY 1, 2),
-        | acc AS (SELECT source, c,
-        |   v::DOUBLE * c::DOUBLE AS vc,
-        |   sum(c) OVER (PARTITION BY source ORDER BY v ROWS UNBOUNDED PRECEDING) AS cumc,
-        |   sum(v::DOUBLE * c::DOUBLE) OVER (PARTITION BY source ORDER BY v
-        |     ROWS UNBOUNDED PRECEDING) AS cumv
-        |  FROM hist),
-        | terms AS (SELECT source, cumc,
-        |   sum(c::DOUBLE * (2.0 * cumv - vc)) OVER (PARTITION BY source ORDER BY cumc
-        |     ROWS UNBOUNDED PRECEDING) AS g,
-        |   max(cumc) OVER (PARTITION BY source) AS n,
-        |   max(cumv) OVER (PARTITION BY source) AS t
-        |  FROM acc)
-        |SELECT source, n::BIGINT AS n_rows, round(t, 1) AS total_value,
-        | round(1.0 - g / (n::DOUBLE * t), 6) AS gini
-        |FROM terms WHERE cumc = n""".stripMargin,
-
-    // pairwise cosine between the q142 rounded centroids, (a < b) pairs,
-    // most-confusable first; (cos desc, a, b) total order at the 10-cut
-    "q163_label_confusion" ->
-      s"""WITH ex AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-         |   unnest(embedding::DOUBLE[]) AS v FROM embeddings),
-         | cdim AS (SELECT label, dim, round(sum(v) / count(*), 6) AS m
-         |  FROM ex GROUP BY 1, 2),
-         | cent AS (SELECT label, list(m ORDER BY dim) AS c FROM cdim GROUP BY label),
-         | cnt AS (SELECT label, count(*)::BIGINT AS n FROM embeddings GROUP BY 1),
-         | cents AS (SELECT cent.label, c, n FROM cent JOIN cnt USING (label))
-         |SELECT a.label AS label_a, b.label AS label_b, a.n AS n_a, b.n AS n_b,
-         | round(${cosSqlAB("a.c", "b.c")}, 6) AS cos
-         |FROM cents a JOIN cents b ON a.label < b.label
-         |ORDER BY cos DESC, label_a ASC, label_b ASC LIMIT 10""".stripMargin,
-
-    // count-min cells rebuilt as in q57, tau = ceil(total * 20000 ppm),
-    // candidates = est >= tau (superset), exact counts + threshold
-    "q140_heavy_hitters" ->
-      """WITH toks AS (SELECT unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '')) AS token FROM documents),
-        | cells AS (SELECT j,
-        |   ((h * (2*j+1) + (1000000007*(j+1)) % 4294967311) % 4294967311) % 64 AS bucket,
-        |   count(*)::BIGINT AS cnt
-        |  FROM (SELECT ('0x' || substr(md5(token), 1, 8))::BIGINT AS h FROM toks),
-        |       (SELECT unnest(range(0, 4)) AS j) GROUP BY 1, 2),
-        | tot AS (SELECT sum(cnt)::BIGINT AS n FROM cells WHERE j = 0),
-        | thr AS (SELECT greatest((n // 1000000) * 20000
-        |   + ((n % 1000000) * 20000 + 999999) // 1000000, 1)::BIGINT AS tau FROM tot),
-        | exact AS (SELECT token, count(*)::BIGINT AS cnt FROM toks GROUP BY token),
-        | pe AS (SELECT token, j,
-        |   ((h * (2*j+1) + (1000000007*(j+1)) % 4294967311) % 4294967311) % 64 AS bucket
-        |  FROM (SELECT token, ('0x' || substr(md5(token), 1, 8))::BIGINT AS h
-        |        FROM (SELECT DISTINCT token FROM toks)),
-        |       (SELECT unnest(range(0, 4)) AS j)),
-        | est AS (SELECT token, min(coalesce(c.cnt, 0))::BIGINT AS est
-        |  FROM pe LEFT JOIN cells c USING (j, bucket) GROUP BY token)
-        |SELECT token, cnt, est FROM exact JOIN est USING (token), thr
-        |WHERE cnt >= tau ORDER BY cnt DESC, token ASC LIMIT 20""".stripMargin,
-
-    // three integer signals -> strictly-below percentile ppm via value
-    // histograms (no global sort on either engine), integer mean, top-20
-    "q141_quality_ensemble" ->
-      s"""WITH base AS (SELECT doc_id, n_chars,
-         |   len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT AS n_tok,
-         |   (len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-         |      x -> list_contains($EnStopSql, x)))::BIGINT * 1000)
-         |     // greatest(len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-         |      x -> x <> ''))::BIGINT, 1) AS stop_milli
-         |  FROM documents),
-         | h1 AS (SELECT n_chars AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
-         | p1 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h1),
-         | h2 AS (SELECT n_tok AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
-         | p2 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h2),
-         | h3 AS (SELECT stop_milli AS v, count(*)::BIGINT AS n FROM base GROUP BY 1),
-         | p3 AS (SELECT v, ((coalesce(sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))::BIGINT * 1000000 // (sum(n) OVER ())::BIGINT)::BIGINT AS p FROM h3)
-         |SELECT doc_id, n_chars, n_tok, stop_milli,
-         | ((p1.p + p2.p + p3.p) // 3)::BIGINT AS ensemble_ppm
-         |FROM base JOIN p1 ON base.n_chars = p1.v
-         |  JOIN p2 ON base.n_tok = p2.v
-         |  JOIN p3 ON base.stop_milli = p3.v
-         |ORDER BY ensemble_ppm DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    // DoReMi-lite: 4 unrolled multiplicative-weights iterations over the
-    // per-source integer difficulty (mean clipped inverse token frequency,
-    // milli-units); CASE keeps every // non-negative (Spark div truncates,
-    // DuckDB // floors — equal only there)
-    "q136_doremi_mixture" ->
-      s"""WITH toks AS (SELECT source, unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), t -> t <> '')) AS tok FROM documents),
-         | stc AS (SELECT source, tok, count(*)::BIGINT AS cnt FROM toks GROUP BY 1, 2),
-         | tokc AS (SELECT tok, sum(cnt)::BIGINT AS c FROM stc GROUP BY tok),
-         | tot AS (SELECT sum(c)::BIGINT AS t FROM tokc),
-         | sr AS (SELECT s.source, sum(s.cnt)::BIGINT AS n_tokens,
-         |   sum(s.cnt * least((tot.t * 1000) // tk.c, 1000000000))::BIGINT AS sum_rarity
-         |  FROM stc s JOIN tokc tk USING (tok), tot GROUP BY s.source),
-         | w0 AS (SELECT source, n_tokens, (sum_rarity // n_tokens)::BIGINT AS loss,
-         |   1000000::BIGINT AS w FROM sr),
-         | ${doremiIterSql("w0", "w1")},
-         | ${doremiIterSql("w1", "w2")},
-         | ${doremiIterSql("w2", "w3")},
-         | ${doremiIterSql("w3", "w4")}
-         |SELECT source, n_tokens, loss, (n_tokens * 1000000 // tot.t)::BIGINT AS base_ppm,
-         | (w * 1000000 // (sum(w) OVER ())::BIGINT)::BIGINT AS weight_ppm
-         |FROM w4, tot""".stripMargin,
-
-    // fastText-shape inference: bigram -> bucket = md5_32 % 4096 ->
-    // weight = md5_32('w'+bucket) % 2001, mean-pooled then centered
-    "q137_quality_classifier" ->
-      """WITH toks AS (SELECT doc_id, source,
-        |   list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), t -> t <> '') AS w FROM documents),
-        | grams AS (SELECT doc_id, source, CASE WHEN len(w) >= 2
-        |   THEN [w[i+1] || ' ' || w[i+2] for i in range(0, len(w) - 1)] ELSE [] END AS g FROM toks),
-        | scored AS (SELECT doc_id, source, len(g)::BIGINT AS n_bigrams,
-        |   list_sum([('0x' || substr(md5('w' || ((('0x' || substr(md5(x), 1, 8))::BIGINT % 4096)::VARCHAR)), 1, 8))::BIGINT % 2001
-        |     for x in g])::BIGINT AS wsum
-        |  FROM grams)
-        |SELECT doc_id, source, n_bigrams, (wsum // n_bigrams - 1000)::BIGINT AS score_milli,
-        | (wsum // n_bigrams - 1000) >= 0 AS keep
-        |FROM scored WHERE n_bigrams > 0
-        |ORDER BY score_milli DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    // byte-histogram sign signature (32 buckets, bit i iff 32*hist[i] > n),
-    // exact copies collapse by signature, 4x8-bit band join between
-    // signature groups, Hamming <= 3 (pigeonhole-exact recall)
-    "q138_media_neardup" ->
-      """WITH b AS (SELECT doc_id AS media_id, octet_length(encode(text)) AS n,
-        |   hex(encode(text)) AS hx FROM documents),
-        | bl AS (SELECT media_id, n,
-        |   [('0x' || substr(hx, 2*i+1, 2))::BIGINT % 32 for i in range(0, n)] AS bs FROM b),
-        | emb AS (SELECT media_id, n,
-        |   [len(list_filter(bs, x -> x = bkt))::BIGINT for bkt in range(0, 32)] AS e FROM bl),
-        | sg AS (SELECT media_id, list_sum([CASE WHEN 32 * e[i+1] > n
-        |   THEN (1::BIGINT << i) ELSE 0::BIGINT END for i in range(0, 32)])::BIGINT AS sig FROM emb),
-        | grp AS (SELECT sig, min(media_id)::BIGINT AS rep, count(*)::BIGINT AS n_media
-        |  FROM sg GROUP BY sig),
-        | bands AS (SELECT sig, rep, n_media,
-        |   unnest([{'b': b, 'v': (sig >> (8*b)) & 255} for b in range(0, 4)]) AS bv FROM grp),
-        | cand AS (SELECT DISTINCT x.sig AS sig_a, x.rep AS rep_a, x.n_media AS n_a,
-        |   y.sig AS sig_b, y.rep AS rep_b, y.n_media AS n_b
-        |  FROM bands x JOIN bands y
-        |  ON x.bv.b = y.bv.b AND x.bv.v = y.bv.v AND x.sig < y.sig)
-        |SELECT rep_a, rep_b, n_a, n_b, bit_count(xor(sig_a, sig_b))::BIGINT AS hamming
-        |FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= 3""".stripMargin,
-
-    // top-256 corpus bigram vocab (count desc, bigram asc), per-source
-    // OOV occurrence mass in ppm
-    // 60-bit hash domain (r13): g = md5Int60 of "w1 SP w2" (the
-    // TokenBigramHashes contract — NO empty-token filter, matching the
-    // kernel); the vocab cut ties break on the hash, replayed here
-    "q139_vocab_coverage" ->
-      s"""WITH toks AS (SELECT source,
-        |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
-        | grams AS (SELECT source, unnest(CASE WHEN len(w) >= 2
-        |   THEN [${h60Sql("w[i+1] || ' ' || w[i+2]")} for i in range(0, len(w) - 1)] ELSE [] END) AS g FROM toks),
-        | stc AS (SELECT source, g, count(*)::BIGINT AS cnt FROM grams GROUP BY 1, 2),
-        | vocab AS (SELECT g FROM (SELECT g, sum(cnt)::BIGINT AS c FROM stc GROUP BY g
-        |   ORDER BY c DESC, g ASC LIMIT 256)),
-        | tot AS (SELECT source, sum(cnt)::BIGINT AS n_grams FROM stc GROUP BY source),
-        | oov AS (SELECT s.source, sum(s.cnt)::BIGINT AS n_oov FROM stc s
-        |  LEFT JOIN vocab v ON s.g = v.g WHERE v.g IS NULL GROUP BY s.source)
-        |SELECT t.source, t.n_grams, coalesce(o.n_oov, 0)::BIGINT AS n_oov,
-        | (coalesce(o.n_oov, 0) * 1000000 // t.n_grams)::BIGINT AS oov_ppm
-        |FROM tot t LEFT JOIN oov o USING (source)""".stripMargin,
-
-    "q135_temperature_sample" ->
-      """WITH c AS (SELECT source, count(*)::BIGINT AS n_orig FROM documents GROUP BY 1),
-        | w AS (SELECT source, n_orig,
-        |   floor(sqrt(n_orig::DOUBLE * 1000000.0))::BIGINT AS w_milli FROM c),
-        | t AS (SELECT sum(n_orig)::BIGINT AS n_total, sum(w_milli)::BIGINT AS w_total FROM w),
-        | r AS (SELECT source, n_orig,
-        |   least(1000000, floor((1000000.0 * ((n_total * 1) // 2)::DOUBLE * w_milli::DOUBLE)
-        |     / (w_total::DOUBLE * n_orig::DOUBLE))::BIGINT) AS rate_micro
-        |  FROM w, t),
-        | k AS (SELECT d.source, r.n_orig, r.rate_micro
-        |  FROM documents d JOIN r USING (source)
-        |  WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT % 1000000 < r.rate_micro)
-        |SELECT source, max(n_orig) AS n_orig, max(rate_micro) AS rate_micro,
-        |  count(*)::BIGINT AS n_kept
-        |FROM k GROUP BY source""".stripMargin,
-
-    // keep-first over non-overlapping 2-token windows; cleaned text
-    // reassembled in segment order and verified by 32-bit hash
-    "q133_intradoc_scrub" ->
-      s"""WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS tk FROM documents),
-         | segl AS (SELECT doc_id, [array_to_string(tk[i*2+1:i*2+2], ' ')
-         |   for i in range(0, (len(tk) + 1) // 2)] AS segs FROM toks),
-         | seg AS (SELECT doc_id, generate_subscripts(segs, 1) - 1 AS idx, unnest(segs) AS s FROM segl),
-         | kept AS (SELECT doc_id, idx, s,
-         |   row_number() OVER (PARTITION BY doc_id, s ORDER BY idx ASC) AS rn FROM seg),
-         | agg AS (SELECT doc_id, count(*)::BIGINT AS n_segments,
-         |   sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-         |   coalesce(string_agg(CASE WHEN rn = 1 THEN s END, ' ' ORDER BY idx ASC), '') AS cleaned
-         |  FROM kept GROUP BY doc_id)
-         |SELECT doc_id, n_segments, n_dropped,
-         | length(cleaned)::BIGINT AS cleaned_n_chars,
-         | ${h32Sql("cleaned")} AS cleaned_hash
-         |FROM agg ORDER BY n_dropped DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    // UniMax closed form: capacities ascending; capped languages are the
-    // prefix where capacity_i*(L-i+1) + cum_before <= B; the rest split
-    // the remainder uniformly (integer div)
-    "q132_unimax" ->
-      """WITH c AS (SELECT lang,
-        |   sum(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')))::BIGINT AS n_tokens
-        |  FROM documents GROUP BY lang),
-        | r AS (SELECT lang, n_tokens, n_tokens * 3 AS capacity,
-        |   row_number() OVER (ORDER BY n_tokens * 3 ASC, lang ASC) AS i,
-        |   coalesce(sum(n_tokens * 3) OVER (ORDER BY n_tokens * 3 ASC, lang ASC
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS cum_before,
-        |   count(*) OVER ()::BIGINT AS L,
-        |   ((sum(n_tokens) OVER () * 1) // 2)::BIGINT AS B
-        |  FROM c),
-        | f AS (SELECT r.*, capacity * (L - i + 1) + cum_before <= B AS capped FROM r),
-        | k AS (SELECT max(CASE WHEN capped THEN i ELSE 0 END)::BIGINT AS k,
-        |   max(CASE WHEN capped THEN cum_before + capacity ELSE 0 END)::BIGINT AS cum_k
-        |  FROM f)
-        |SELECT lang, n_tokens, capacity,
-        | (CASE WHEN i <= k THEN capacity ELSE (B - cum_k) // (L - k) END)::BIGINT AS alloc_tokens,
-        | i <= k AS is_capped,
-        | ((CASE WHEN i <= k THEN capacity ELSE (B - cum_k) // (L - k) END * 1000000) // n_tokens)::BIGINT AS micro_epochs
-        |FROM f, k""".stripMargin,
-
-    // adjacent char pairs within case-folded whitespace words, ranked by
-    // corpus frequency (first BPE merge round)
-    "q127_bpe_merge" ->
-      """WITH w AS (SELECT unnest(list_filter(
-        |     regexp_split_to_array(lower(trim(text)), '\s+'), x -> x <> '')) AS w FROM documents),
-        | p AS (SELECT unnest([substr(w, i, 2)
-        |   for i in range(1, greatest(len(w) - 1, 0) + 1)]) AS pair FROM w)
-        |SELECT pair, count(*)::BIGINT AS cnt FROM p GROUP BY 1
-        |ORDER BY cnt DESC, pair LIMIT 20""".stripMargin,
-
-    // 200-char segments, q16's stopword langid per segment, disagreement
-    // stats per doc
-    "q125_mixed_lang" ->
-      s"""WITH segs AS (SELECT doc_id, unnest([substr(text, k * 200 + 1, 200)
-         |   for k in range(0, greatest(CAST(ceil(length(text) / 200.0) AS INT), 1))]) AS seg FROM documents),
-         | sw AS (SELECT doc_id, regexp_split_to_array(lower(trim(seg)), '\\s+') AS w FROM segs),
-         | s AS (SELECT doc_id,
-         |  len(list_filter(w, x -> list_contains($EnStopSql, x))) AS s_en,
-         |  len(list_filter(w, x -> list_contains(['le','la','de','et','les','des','un','est'], x))) AS s_fr,
-         |  len(list_filter(w, x -> list_contains(['der','die','das','und','ist','ein','zu','den'], x))) AS s_de,
-         |  len(list_filter(w, x -> list_contains(['el','la','de','y','los','en','un','es'], x))) AS s_es,
-         |  len(list_filter(w, x -> list_contains(['的','是','了','在','我','有','和','不'], x))) AS s_zh
-         | FROM sw),
-         | m AS (SELECT doc_id, CASE WHEN mx = 0 THEN 'unknown' WHEN s_en = mx THEN 'en'
-         |   WHEN s_fr = mx THEN 'fr' WHEN s_de = mx THEN 'de' WHEN s_es = mx THEN 'es'
-         |   ELSE 'zh' END AS seg_lang
-         |   FROM (SELECT *, greatest(s_en, s_fr, s_de, s_es, s_zh) AS mx FROM s)),
-         | c AS (SELECT doc_id, seg_lang, count(*) AS cnt FROM m GROUP BY 1, 2)
-         |SELECT doc_id, sum(cnt)::BIGINT AS n_segments, count(*)::BIGINT AS n_langs,
-         | max(cnt)::BIGINT AS majority_cnt
-         |FROM c GROUP BY 1 ORDER BY n_langs DESC, doc_id LIMIT 20""".stripMargin,
-
-    // margin = cos / ((knn4(src) + knn4(tgt)) / 2); forward top-1 per
-    // source at margin >= 1.05; even/odd vec_id = source/target split
-    // candidates = same 4-bit sign bucket (occupancy-derived at N=500)
-    "q102_margin_mining" ->
-      s"""WITH a AS (SELECT vec_id AS src_id, embedding::DOUBLE[] AS va,
-         |   ${bucketSql("embedding", 4)} AS bucket
-         |   FROM embeddings WHERE vec_id % 2 = 0),
-         | b AS (SELECT vec_id AS tgt_id, embedding::DOUBLE[] AS vb,
-         |   ${bucketSql("embedding", 4)} AS bucket
-         |   FROM embeddings WHERE vec_id % 2 = 1),
-         | pairs AS (SELECT src_id, tgt_id,
-         |   round(${cosSqlAB("va", "vb")}, 6) AS cos
-         |   FROM a JOIN b USING (bucket)),
-         | knna AS (SELECT src_id, avg(cos) AS na FROM (
-         |   SELECT src_id, cos, row_number() OVER (PARTITION BY src_id
-         |     ORDER BY cos DESC, tgt_id ASC) AS r FROM pairs) WHERE r <= 4
-         |  GROUP BY src_id),
-         | knnb AS (SELECT tgt_id, avg(cos) AS nb FROM (
-         |   SELECT tgt_id, cos, row_number() OVER (PARTITION BY tgt_id
-         |     ORDER BY cos DESC, src_id ASC) AS r FROM pairs) WHERE r <= 4
-         |  GROUP BY tgt_id),
-         | scored AS (SELECT p.src_id, p.tgt_id, p.cos,
-         |   round(p.cos / ((na + nb) / 2), 6) AS margin
-         |  FROM pairs p JOIN knna USING (src_id) JOIN knnb USING (tgt_id)),
-         | ranked AS (SELECT *, row_number() OVER (PARTITION BY src_id
-         |   ORDER BY margin DESC, tgt_id ASC) AS rank FROM scored)
-         |SELECT src_id, tgt_id, cos, margin FROM ranked
-         |WHERE rank = 1 AND margin >= 1.05""".stripMargin,
-
-    "q84_nucleus_vocab" ->
-      """WITH toks AS (SELECT lang,
-        |   unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-        |  FROM documents),
-        | f AS (SELECT lang, token, count(*) AS freq FROM toks
-        |  WHERE token <> '' GROUP BY lang, token),
-        | r AS (SELECT lang, freq,
-        |   sum(freq) OVER (PARTITION BY lang ORDER BY freq DESC, token ASC
-        |     ROWS UNBOUNDED PRECEDING) AS cum,
-        |   sum(freq) OVER (PARTITION BY lang) AS total FROM f)
-        |SELECT lang, count(*) AS nucleus_size, max(total)::BIGINT AS total_tokens
-        |FROM r WHERE (cum - freq) * 10 < total * 8 GROUP BY lang""".stripMargin,
-
-    "q72_edit_pairs" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |   array_to_string((regexp_split_to_array(lower(trim(text)), '\s+'))[1:5], ' ') AS title
-        |  FROM documents),
-        | b AS (SELECT *, split_part(title, ' ', 1) AS blk FROM t),
-        | p AS (SELECT x.lang, levenshtein(x.title, y.title) AS dist
-        |  FROM b x JOIN b y ON x.lang = y.lang AND x.blk = y.blk AND x.doc_id < y.doc_id
-        |  WHERE levenshtein(x.title, y.title) <= 8)
-        |SELECT lang, dist, count(*) AS n_pairs FROM p GROUP BY lang, dist""".stripMargin,
-
-    "q73_segment_dedup" ->
-      s"""WITH words AS (SELECT doc_id,
-         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
-         | segs AS (SELECT doc_id,
-         |   unnest([array_to_string(w[j*8+1 : j*8+8], ' ') for j in range(0, len(w)//8)]) AS seg
-         |  FROM words)
-         |SELECT ${h32Sql("seg")} AS seg_hash,
-         | count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
-         |FROM segs GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-
-    // Full replay of segment-boilerplate removal: same segmentation as
-    // q73, hash NOT IN the >= 2-doc set, tail (idx = nseg) always kept,
-    // string_agg ordered by segment index rebuilds the token stream.
-    "q85_boilerplate_removal" ->
-      s"""WITH words AS (SELECT doc_id,
-         |   regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents),
-         | base AS (SELECT doc_id, w, len(w)//8 AS nseg FROM words),
-         | segs AS (SELECT doc_id, nseg, j AS idx,
-         |   array_to_string(w[j*8+1 : j*8+8], ' ') AS seg
-         |  FROM base, unnest(range(0, nseg)) AS t(j)),
-         | tails AS (SELECT doc_id, nseg, nseg AS idx,
-         |   array_to_string(w[nseg*8+1 : len(w)], ' ') AS seg FROM base),
-         | bp AS (SELECT ${h32Sql("seg")} AS h FROM segs
-         |  GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2),
-         | kept AS (SELECT doc_id, nseg, idx, seg FROM segs
-         |   WHERE ${h32Sql("seg")} NOT IN (SELECT h FROM bp)
-         |  UNION ALL SELECT doc_id, nseg, idx, seg FROM tails)
-         |SELECT doc_id,
-         | coalesce(string_agg(seg, ' ' ORDER BY idx) FILTER (WHERE seg <> ''), '') AS text_clean,
-         | max(nseg) - count(*) FILTER (WHERE idx < nseg) AS n_removed
-         |FROM kept GROUP BY doc_id""".stripMargin,
-
-    // batch = doc_id % 10 = 0, corpus = rest; a batch doc survives iff no
-    // exact md5-text copy and no ≥0.5-Jaccard band-bucket near-dup exists
-    // in the corpus (near-dup set computed over the full batch — docs
-    // dropped by the exact filter are dropped either way)
-    "q88_incremental_dedup" ->
-      s"""WITH $MinhashCtes,
-         | newb AS (SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 10 = 0),
-         | exact AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0
-         |   AND md5(text) IN (SELECT md5(text) FROM documents WHERE doc_id % 10 <> 0)),
-         | cand AS (SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS old_id
-         |   FROM bands x JOIN bands y
-         |   ON x.band = y.band AND x.band_hash = y.band_hash
-         |   WHERE x.doc_id % 10 = 0 AND y.doc_id % 10 <> 0),
-         | near AS (SELECT DISTINCT new_id FROM cand
-         |   JOIN sh sa ON sa.doc_id = new_id JOIN sh sb ON sb.doc_id = old_id
-         |   WHERE len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-         |     / len(list_distinct(sa.shingles || sb.shingles))::DOUBLE >= 0.5)
-         |SELECT doc_id, lang, n_chars FROM newb
-         |WHERE doc_id NOT IN (SELECT doc_id FROM exact)
-         |  AND doc_id NOT IN (SELECT new_id FROM near)""".stripMargin,
-
-    // global-window phrasing of ops.TokenBudget's bucketed selection —
-    // same (quality DESC, md5(doc_id) ASC, doc_id ASC) prefix under the
-    // 12k budget (hash tie-break: see TokenBudget's scaladoc)
-    "q87_token_budget" ->
-      s"""WITH d AS (SELECT doc_id, lang,
-         |   len(w)::BIGINT AS n_tokens,
-         |   round((least(len(w) / 100.0, 1.0)
-         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
-         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
-         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS quality
-         |  FROM (SELECT doc_id, lang, text,
-         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
-         | c AS (SELECT *, (sum(n_tokens) OVER (
-         |    ORDER BY quality DESC, md5(doc_id::VARCHAR) ASC, doc_id ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS cum_tokens FROM d)
-         |SELECT doc_id, lang, n_tokens, quality, cum_tokens
-         |FROM c WHERE cum_tokens <= 12000""".stripMargin,
-
-    // PSI between doc_id-parity snapshots over fixed quality/length
-    // buckets with add-one smoothing (constants 11 and 10 = each
-    // feature's full bucket-range cardinality)
-    "q106_drift_psi" ->
-      s"""WITH d AS (SELECT doc_id,
-         |   round((least(len(w) / 100.0, 1.0)
-         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
-         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
-         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q,
-         |   len(w)::BIGINT AS n_tokens,
-         |   doc_id % 2 = 0 AS is_ref
-         |  FROM (SELECT doc_id, text,
-         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
-         | qb AS (SELECT floor(q * 10)::BIGINT AS bucket,
-         |   sum(CASE WHEN is_ref THEN 1 ELSE 0 END)::BIGINT AS n_ref,
-         |   sum(CASE WHEN is_ref THEN 0 ELSE 1 END)::BIGINT AS n_cur
-         |  FROM d GROUP BY 1),
-         | qp AS (SELECT count(*) AS n_buckets,
-         |   round(sum(((n_cur + 1)::DOUBLE / (tc + 11) - (n_ref + 1)::DOUBLE / (tr + 11))
-         |     * ln(((n_cur + 1)::DOUBLE / (tc + 11)) / ((n_ref + 1)::DOUBLE / (tr + 11)))), 6) AS psi
-         |  FROM qb, (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM qb)),
-         | lb AS (SELECT least(n_tokens // 20, 9) AS bucket,
-         |   sum(CASE WHEN is_ref THEN 1 ELSE 0 END)::BIGINT AS n_ref,
-         |   sum(CASE WHEN is_ref THEN 0 ELSE 1 END)::BIGINT AS n_cur
-         |  FROM d GROUP BY 1),
-         | lp AS (SELECT count(*) AS n_buckets,
-         |   round(sum(((n_cur + 1)::DOUBLE / (tc + 10) - (n_ref + 1)::DOUBLE / (tr + 10))
-         |     * ln(((n_cur + 1)::DOUBLE / (tc + 10)) / ((n_ref + 1)::DOUBLE / (tr + 10)))), 6) AS psi
-         |  FROM lb, (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM lb))
-         |SELECT 'quality' AS feature, n_buckets, psi FROM qp
-         |UNION ALL
-         |SELECT 'length' AS feature, n_buckets, psi FROM lp""".stripMargin,
-
-    // recall@10 vs the exact cosine top-10, averaged over the
-    // vec_id % 100 = 0 query panel; hamming = sign-disagreement count,
-    // matryoshka = prefix-16 top-50 then exact rerank
-    "q105_ann_recall" ->
+    // the batched-serving gate (VERDICT r14 item 5): the Spark side runs
+    // Ann.ivfSearchBatch over the persisted q28 index at nprobe=16 (= all
+    // 16 inverted lists, recall 1.0 by construction), so the oracle is
+    // the PLAIN exact batched scan — any defect in the per-row probe
+    // ranking, per-query list restriction, probe-union pruning, or
+    // window ranking breaks the hash match
+    Query("q205_ivf_batch_probe", qIvfBatchProbe, sql(
       s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         | qs AS (SELECT vec_id AS qid, e AS q FROM base WHERE vec_id % 100 = 0 AND vec_id < 3200),
-         | m AS (SELECT qid, vec_id,
-         |   round(${cosSqlAB("e", "q")}, 6) AS score,
-         |   len(list_filter(range(1, len(e) + 1), i -> (e[i] > 0) <> (q[i] > 0)))::BIGINT AS h,
-         |   round(${cosSqlAB("e[1:16]", "q[1:16]")}, 6) AS p
-         |  FROM base, qs),
-         | r AS (SELECT qid, vec_id, score,
-         |   row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS exact_r,
-         |   row_number() OVER (PARTITION BY qid ORDER BY h ASC, vec_id ASC) AS ham_r,
-         |   row_number() OVER (PARTITION BY qid ORDER BY p DESC, vec_id ASC) AS pre_r
-         |  FROM m),
-         | mat AS (SELECT qid, vec_id,
-         |   row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id ASC) AS mat_r
-         |  FROM r WHERE pre_r <= 50),
-         | f AS (SELECT r.qid, r.exact_r, r.ham_r, mat.mat_r
-         |  FROM r LEFT JOIN mat ON r.qid = mat.qid AND r.vec_id = mat.vec_id),
-         | pq AS (SELECT qid,
-         |   sum(CASE WHEN ham_r <= 10 AND exact_r <= 10 THEN 1 ELSE 0 END)::BIGINT AS ham_hits,
-         |   sum(CASE WHEN mat_r <= 10 AND exact_r <= 10 THEN 1 ELSE 0 END)::BIGINT AS mat_hits
-         |  FROM f GROUP BY qid)
-         |SELECT 'hamming' AS method, round(avg(ham_hits / 10.0), 6) AS avg_recall FROM pq
-         |UNION ALL
-         |SELECT 'matryoshka_16_50' AS method, round(avg(mat_hits / 10.0), 6) AS avg_recall FROM pq""".stripMargin,
+         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
+         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
+         | ranked AS (SELECT query_id, vec_id, score,
+         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored)
+         |SELECT query_id, vec_id, rank, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 10""".stripMargin)),
 
-    // shard = md5 mod 4; 8 ntile length buckets per shard; batches of 16
-    // in md5("b:"+id) order; report per-batch count + token spread
-    "q104_length_batches" ->
-      s"""WITH d AS (SELECT doc_id,
-         |   len(regexp_split_to_array(lower(trim(text)), '\\s+'))::BIGINT AS n_tokens,
-         |   ${h32Sql("doc_id::VARCHAR")} % 4 AS shard
+    // q42's bucket rule + q121's 13-token-window h60 phrasing; the train
+    // gram set is DISTINCT so the presence check is an IN, and sub-13-
+    // token docs drop out of g on both engines (empty range)
+    Query("q206_split_leakage", qSplitLeakage, sql(
+      s"""WITH d AS (SELECT doc_id, source, ${h32Sql("text")} % 10 AS b,
+         |    regexp_split_to_array(lower(trim(coalesce(text, ''))), '\\s+') AS w
          |  FROM documents),
-         | lb AS (SELECT doc_id, n_tokens, shard,
-         |   ntile(8) OVER (PARTITION BY shard ORDER BY n_tokens ASC, doc_id ASC) AS len_bucket
+         | g AS (SELECT doc_id, source, b,
+         |    unnest([${h60Sql("array_to_string(w[i:i+12], ' ')")}
+         |      for i in range(1, greatest(len(w) - 12, 0) + 1)]) AS g
          |  FROM d),
-         | bt AS (SELECT shard, len_bucket, n_tokens,
-         |   ((row_number() OVER (PARTITION BY shard, len_bucket
-         |     ORDER BY ${h60Sql("'b:' || doc_id::VARCHAR")} ASC, doc_id ASC) - 1) // 16)::BIGINT AS batch_id
-         |  FROM lb)
-         |SELECT shard, len_bucket, batch_id, count(*) AS n_docs,
-         | min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens
-         |FROM bt GROUP BY shard, len_bucket, batch_id""".stripMargin,
+         | tr AS (SELECT DISTINCT g FROM g WHERE b <= 7),
+         | pd AS (SELECT doc_id, source, count(*)::BIGINT AS n_grams,
+         |    sum(CASE WHEN g IN (SELECT g FROM tr) THEN 1 ELSE 0 END)::BIGINT AS n_leaked
+         |   FROM g WHERE b = 9 GROUP BY 1, 2),
+         | pd2 AS (SELECT *, (1000000 * n_leaked) // n_grams AS ppm FROM pd)
+         |SELECT source, count(*)::BIGINT AS n_test_docs,
+         | sum(n_grams)::BIGINT AS n_grams, sum(n_leaked)::BIGINT AS n_leaked,
+         | sum(CASE WHEN n_leaked > 0 THEN 1 ELSE 0 END)::BIGINT AS n_docs_leaked,
+         | sum(CASE WHEN ppm >= 500000 THEN 1 ELSE 0 END)::BIGINT AS n_docs_heavy,
+         | ((1000000 * sum(n_leaked)) // sum(n_grams))::BIGINT AS corpus_leaked_ppm
+         |FROM pd2 GROUP BY 1""".stripMargin)),
 
-    // per-source budget = 15 tokens/doc; per-source quality-first prefix
-    // with the same (quality DESC, md5(id), id) order as q87
-    "q103_group_budget" ->
-      s"""WITH d AS (SELECT doc_id, source,
-         |   len(w)::BIGINT AS n_tokens,
-         |   round((least(len(w) / 100.0, 1.0)
-         |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
-         |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
-         |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS quality
-         |  FROM (SELECT doc_id, source, text,
-         |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
-         | b AS (SELECT source, count(*) * 15 AS budget FROM d GROUP BY source),
-         | c AS (SELECT d.doc_id, d.source, d.n_tokens, d.quality, b.budget,
-         |   (sum(d.n_tokens) OVER (PARTITION BY d.source
-         |    ORDER BY d.quality DESC, md5(d.doc_id::VARCHAR) ASC, d.doc_id ASC
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT AS cum_tokens
-         |  FROM d JOIN b ON d.source = b.source)
-         |SELECT doc_id, source, n_tokens, quality, cum_tokens
-         |FROM c WHERE cum_tokens <= budget""".stripMargin,
-
-    "q74_mixture_weights" ->
-      """WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source)
-        |SELECT source, n_docs,
-        | round(sqrt(n_docs) / sum(sqrt(n_docs)) OVER (), 6) AS weight
-        |FROM c""".stripMargin,
-
-    "q75_containment" ->
+    // q14's cand + q40's >= 0.5 verified pairs for membership, q86's
+    // quality replay micro-integered into deciles (least(qm//1e5, 9) —
+    // no float decile boundary)
+    Query("q207_quality_dup_joint", qQualityDupJoint, sql(
       s"""WITH $MinhashCtes,
          | cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
          |   FROM bands x JOIN bands y
-         |   ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id)
-         |SELECT doc_a, doc_b, round(containment, 6) AS containment FROM (
-         | SELECT doc_a, doc_b,
-         |  len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-         |    / least(len(sa.shingles), len(sb.shingles))::DOUBLE AS containment
-         | FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b)
-         |WHERE containment >= 0.5""".stripMargin,
-
-    // prefix-filtered exact containment: probe = each doc's
-    // (sz - ceil(t*sz) + 1) rarest shingles in (doc-freq, shingle-hash)
-    // order, index = all shingles, smaller side probes; shingles are
-    // 60-bit md5 hashes on both engines (8-byte join/sort keys)
-    // clone guard mirrors Dedup.exactDupGroups: min(doc_id) per md5(text)
-    "q97_containment_exact" ->
-      """WITH reps AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-        | docs AS (SELECT d.doc_id, d.text FROM documents d JOIN reps USING (doc_id)),
-        | words AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM docs),
-        | shs AS (SELECT doc_id, list_distinct(CASE WHEN len(w) >= 3
-        |   THEN [array_to_string(w[i+1:i+3], ' ') for i in range(0, len(w)-2)]
-        |   ELSE [array_to_string(w, ' ')] END) AS raw FROM words),
-        | sh AS (SELECT doc_id, list_distinct(
-        |   [('0x' || substr(md5(s), 1, 15))::BIGINT for s in raw]) AS shingles FROM shs),
-        | ex AS (SELECT doc_id, len(shingles)::BIGINT AS sz, unnest(shingles) AS s FROM sh),
-        | dfreq AS (SELECT s, count(*)::BIGINT AS df FROM ex GROUP BY s),
-        | ranked AS (SELECT ex.doc_id, ex.sz, ex.s,
-        |   row_number() OVER (PARTITION BY ex.doc_id ORDER BY df ASC, ex.s ASC) AS rn
-        |   FROM ex JOIN dfreq USING (s)),
-        | probe AS (SELECT s, doc_id AS id_p, sz AS sz_p, rn AS rn_p FROM ranked
-        |   WHERE rn <= sz - ceil(0.5 * sz)::BIGINT + 1),
-        | cand AS (SELECT DISTINCT least(id_p, r.doc_id) AS doc_a, greatest(id_p, r.doc_id) AS doc_b
-        |   FROM probe JOIN ranked r ON probe.s = r.s
-        |   WHERE (sz_p < r.sz OR (sz_p = r.sz AND id_p <> r.doc_id))
-        |     AND least(sz_p - rn_p, r.sz - r.rn) + 1 >= ceil(0.5 * sz_p)::BIGINT)
-        |SELECT doc_a, doc_b, round(containment, 6) AS containment FROM (
-        | SELECT doc_a, doc_b,
-        |  len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-        |    / least(len(sa.shingles), len(sb.shingles))::DOUBLE AS containment
-        | FROM cand JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b)
-        |WHERE containment >= 0.5""".stripMargin,
-
-    "q76_above_avg_orders" ->
-      """WITH a AS (SELECT o_custkey, o_totalprice,
-        |   avg(o_totalprice) OVER (PARTITION BY o_custkey) AS cust_avg
-        |  FROM orders)
-        |SELECT o_custkey, count(*) AS n_above, round(max(cust_avg), 4) AS cust_avg
-        |FROM a WHERE o_totalprice > 1.5 * cust_avg
-        |GROUP BY o_custkey
-        |ORDER BY n_above DESC, o_custkey ASC LIMIT 20""".stripMargin,
-
-    "q77_rag_context" ->
-      s"""$Bm25Ctes,
-         | topk AS (SELECT doc_id, round(score, 6) AS score,
-         |   row_number() OVER (ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-         |  FROM bm25 ORDER BY round(score, 6) DESC, doc_id ASC LIMIT 10)
-         |SELECT rank, t.doc_id, d.n_chars,
-         | (sum(d.n_chars) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING))::BIGINT AS cum_chars,
-         | (sum(d.n_chars) OVER (ORDER BY rank ROWS UNBOUNDED PRECEDING))::BIGINT <= 800 AS included
-         |FROM topk t JOIN documents d ON t.doc_id = d.doc_id""".stripMargin,
-
-    "q78_zipf" ->
-      """WITH toks AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-        |  FROM documents),
-        | f AS (SELECT token, count(*) AS freq FROM toks WHERE token <> '' GROUP BY token),
-        | r AS (SELECT token, freq,
-        |   row_number() OVER (ORDER BY freq DESC, token ASC) AS rank,
-        |   sum(freq) OVER (ORDER BY freq DESC, token ASC ROWS UNBOUNDED PRECEDING) AS cum_freq,
-        |   sum(freq) OVER () AS total FROM f)
-        |SELECT rank, token, freq, round(cum_freq::DOUBLE / total::DOUBLE, 6) AS cum_frac
-        |FROM r WHERE rank <= 30""".stripMargin,
-
-    "q79_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-        |   WHERE event_type = 'view' GROUP BY user_id),
-        | c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
-        |   JOIN v ON e.user_id = v.user_id
-        |   WHERE e.event_type = 'click' AND e.ts > v.t_view GROUP BY e.user_id),
-        | p AS (SELECT e.user_id, min(e.ts) AS t_purchase FROM events e
-        |   JOIN c ON e.user_id = c.user_id
-        |   WHERE e.event_type = 'purchase' AND e.ts > c.t_click GROUP BY e.user_id)
-        |SELECT '1_view' AS stage, count(*) AS n_users FROM v
-        |UNION ALL SELECT '2_click_after_view' AS stage, count(*) AS n_users FROM c
-        |UNION ALL SELECT '3_purchase_after_click' AS stage, count(*) AS n_users FROM p""".stripMargin,
-
-    "q61_lang_coverage" ->
-      """WITH observed AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-        | expected AS (SELECT unnest(['en','fr','de','es','zh','ja','ko']) AS lang,
-        |   true AS expected)
-        |SELECT coalesce(o.lang, e.lang) AS lang,
-        | coalesce(n, 0)::BIGINT AS n_docs,
-        | coalesce(expected, false) AS expected
-        |FROM observed o FULL OUTER JOIN expected e ON o.lang = e.lang""".stripMargin,
-
-    "q58_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |    AND o.o_orderpriority = '1-URGENT'
-        |    AND o.o_totalprice > 450000.0)""".stripMargin,
-
-    "q51_repetition" ->
-      """WITH g AS (SELECT source,
-        |  regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
-        | r AS (SELECT source,
-        |  CASE WHEN len(w) < 5 THEN 0.0
-        |       ELSE 1.0 - len(list_distinct(grams))::DOUBLE / len(grams)::DOUBLE
-        |  END AS rep
-        | FROM (SELECT source, w,
-        |   [array_to_string(w[i+1:i+5], ' ') for i in range(0, len(w)-4)] AS grams
-        |  FROM g))
-        |SELECT source, round(avg(rep), 6) AS avg_rep,
-        | round(max(rep), 6) AS max_rep, count(*) AS n_docs
-        |FROM r GROUP BY 1""".stripMargin,
-
-    "q44_l2_topk" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-        | qv AS (SELECT e AS q FROM base WHERE vec_id = 1)
-        |SELECT vec_id, round(
-        |  list_dot_product(e, e) - 2.0 * list_dot_product(e, q) + list_dot_product(q, q),
-        |  6) AS dist2
-        |FROM base, qv ORDER BY
-        | list_dot_product(e, e) - 2.0 * list_dot_product(e, q) + list_dot_product(q, q) ASC,
-        | vec_id ASC LIMIT 10""".stripMargin,
-
-    "q42_hash_split" ->
-      s"""SELECT CASE WHEN ${h32Sql("text")} % 10 <= 7 THEN 'train'
-         |  WHEN ${h32Sql("text")} % 10 = 8 THEN 'val' ELSE 'test' END AS split,
-         | lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
-         |FROM documents GROUP BY 1, 2""".stripMargin,
-
-    "q43_top_tokens" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS token
-        |  FROM documents)
-        |SELECT token, count(*) AS term_freq, count(DISTINCT doc_id) AS doc_freq
-        |FROM toks WHERE token <> ''
-        |GROUP BY token ORDER BY term_freq DESC, token ASC LIMIT 20""".stripMargin,
-
-    "q41_set_ops" ->
-      """SELECT lang, 'except' AS op FROM (
-        |  SELECT lang FROM documents WHERE source = 'src0'
-        |  EXCEPT SELECT lang FROM documents WHERE source = 'src1')
-        |UNION ALL
-        |SELECT lang, 'intersect' AS op FROM (
-        |  SELECT lang FROM documents WHERE source = 'src0'
-        |  INTERSECT SELECT lang FROM documents WHERE source = 'src1')""".stripMargin,
-
-    "q40_dup_clusters" ->
-      s"""WITH RECURSIVE $DupClusterCtes
-         |SELECT doc_id, cluster_id FROM clus""".stripMargin,
-
-    // q40's closure + q17's per-doc quality → best-scored member per
-    // cluster (ties → smaller doc_id), mirroring DupClusters.keepBest
-    "q86_keep_best" ->
-      s"""WITH RECURSIVE $DupClusterCtes,
+         |   ON x.band = y.band AND x.band_hash = y.band_hash AND x.doc_id < y.doc_id),
+         | pairs AS (SELECT doc_a, doc_b FROM cand
+         |   JOIN sh sa ON sa.doc_id = doc_a JOIN sh sb ON sb.doc_id = doc_b
+         |   WHERE len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
+         |     / len(list_distinct(sa.shingles || sb.shingles))::DOUBLE >= 0.5),
+         | mem AS (SELECT DISTINCT doc_id FROM (
+         |   SELECT doc_a AS doc_id FROM pairs UNION ALL SELECT doc_b FROM pairs)),
          | docq AS (SELECT doc_id, round((least(len(w) / 100.0, 1.0)
          |     + greatest(0.0, 1.0 - abs(length(text)::DOUBLE / len(w) - 5.0) / 10.0)
          |     + least(len(list_filter(w, x -> list_contains($EnStopSql, x)))::DOUBLE / len(w) * 5.0, 1.0)
          |     + len(list_distinct(w))::DOUBLE / len(w)) / 4.0, 6) AS q
          |  FROM (SELECT doc_id, text,
          |    regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)),
-         | r AS (SELECT cluster_id, c.doc_id, q,
-         |    row_number() OVER (PARTITION BY cluster_id ORDER BY q DESC, c.doc_id ASC) AS rk,
-         |    count(*) OVER (PARTITION BY cluster_id) AS n_members
-         |  FROM clus c JOIN docq USING (doc_id))
-         |SELECT cluster_id, doc_id AS keep_doc_id, n_members, q AS best_quality
-         |FROM r WHERE rk = 1""".stripMargin,
+         | dd AS (SELECT doc_id,
+         |    least(CAST(round(q * 1000000, 0) AS BIGINT) // 100000, 9) AS q_decile
+         |   FROM docq)
+         |SELECT q_decile, count(*)::BIGINT AS n_docs,
+         | sum(CASE WHEN doc_id IN (SELECT doc_id FROM mem) THEN 1 ELSE 0 END)::BIGINT AS n_neardup,
+         | ((1000000 * sum(CASE WHEN doc_id IN (SELECT doc_id FROM mem) THEN 1 ELSE 0 END))
+         |   // count(*))::BIGINT AS neardup_ppm
+         |FROM dd GROUP BY 1""".stripMargin)),
 
-    "q39_regional_revenue" ->
-      """SELECT n_name,
-        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name""".stripMargin,
+    // q202's ceil-division audit fanned across budgets; all-integer
+    Query("q208_budget_curve", qBudgetCurve, sql(
+      """WITH t AS (SELECT len(regexp_split_to_array(lower(trim(coalesce(text, ''))), '\s+'))::BIGINT AS nt
+        |  FROM documents),
+        | f AS (SELECT nt, unnest([128, 256, 512, 1024, 2048])::BIGINT AS budget FROM t),
+        | p AS (SELECT budget, nt, (nt + budget - 1) // budget AS pieces FROM f)
+        |SELECT budget, count(*)::BIGINT AS n_docs,
+        | sum(CASE WHEN nt <= budget THEN 1 ELSE 0 END)::BIGINT AS n_fit,
+        | sum(nt)::BIGINT AS total_tokens, sum(pieces)::BIGINT AS total_pieces,
+        | (sum(pieces) * budget - sum(nt))::BIGINT AS pad_tokens,
+        | ((1000000 * sum(nt)) // (sum(pieces) * budget))::BIGINT AS utilization_ppm
+        |FROM p GROUP BY 1""".stripMargin)),
 
-    // MMR greedy re-rank replayed as a DuckDB recursive CTE: the pool is
-    // the same top-50-by-relevance slice; each recursion step selects the
-    // argmax of λ·rel − (1−λ)·max_{s∈chosen} cos(d, s) over the not-yet-
-    // chosen pool (pairwise pool cosines precomputed in `pcos` — 50×50
-    // rows). `(1.0 - 0.7)` is spelled as the SUBTRACTION, not `0.3`,
-    // because Search.mmrTopK computes `1.0 - lambda` at runtime and the
-    // nearest-double results differ in the last bit.
-    "q80_mmr_topk" ->
-      s"""WITH RECURSIVE
+    // per-row norm² = list_sum of squares (the q201-proven sequential-
+    // fold twin of the Spark aggregate), micro-integered per row
+    Query("q209_norm_audit", qNormAudit, sql(
+      """WITH b AS (SELECT label,
+        |   CAST(round(list_sum([x * x for x in embedding::DOUBLE[]]) * 1000000, 0) AS BIGINT) AS n2
+        |  FROM embeddings WHERE embedding IS NOT NULL)
+        |SELECT label, count(*)::BIGINT AS n_vectors,
+        | sum(CASE WHEN n2 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_zero_norm,
+        | min(n2)::BIGINT AS min_norm2_micro,
+        | (sum(n2) // count(*))::BIGINT AS mean_norm2_micro,
+        | max(n2)::BIGINT AS max_norm2_micro
+        |FROM b GROUP BY 1""".stripMargin)),
+
+    // the composed serving loop (VERDICT r15 item 3): the oracle replays
+    // BOTH halves independently — the embed (q32's token-hash projection:
+    // md5-prefix bucket/sign/magnitude sums densified over all 64 dims,
+    // then L2-normalized exactly as Md5TokenEmbedder.embedDouble does)
+    // and the exact batched scan (q205's shape, nprobe=16 = all lists on
+    // the Spark side so recall is 1.0 by construction)
+    Query("q210_text_serving", qTextServing, sql(
+      s"""WITH qp(query_id, qt) AS (VALUES
+         |   (0, 'alpha beta gamma'),
+         |   (1, 'delta epsilon zeta alpha'),
+         |   (2, 'the quick brown fox jumps'),
+         |   (3, 'gamma gamma delta omega')),
+         | qtok AS (SELECT query_id,
+         |   unnest(list_filter(regexp_split_to_array(lower(qt), '\\s+'), x -> x <> '')) AS w
+         |  FROM qp),
+         | qc AS (SELECT query_id, $TokContribSql
+         |  FROM (SELECT query_id, ${h32Sql("w")} AS h FROM qtok)),
+         | qs AS (SELECT query_id, idx, sum(v) AS sv FROM qc GROUP BY 1, 2),
+         | dims AS (SELECT unnest(range(0, 64)) AS idx),
+         | qfull AS (SELECT p.query_id, d.idx, coalesce(s.sv, 0.0) AS sv
+         |  FROM (SELECT DISTINCT query_id FROM qp) p CROSS JOIN dims d
+         |  LEFT JOIN qs s ON s.query_id = p.query_id AND s.idx = d.idx),
+         | qn AS (SELECT query_id, sqrt(sum(sv * sv)) AS n FROM qfull GROUP BY 1),
+         | qarr AS (SELECT f.query_id,
+         |   list(CASE WHEN n > 0 THEN sv / n ELSE sv END ORDER BY f.idx) AS q
+         |  FROM qfull f JOIN qn USING (query_id) GROUP BY f.query_id, n),
          | base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qarr),
+         | ranked AS (SELECT query_id, vec_id, score,
+         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored)
+         |SELECT query_id::BIGINT AS query_id, vec_id, rank, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 10""".stripMargin)),
+
+    Query("q211_ivfpq_residual", qIvfPqResidual,
+      (s, dir) => {
+        val index = ivfPqResIndexFor(s, dir)
+        ivfPqResOracleSql(index.centers, index.codebooks)
+      }),
+
+    // filtered ANN at nprobe = all: the oracle is the exact scan with
+    // the same WHERE clause — probe ranking, partition pruning, and the
+    // pushed label predicate must compose to the exact filtered answer
+    Query("q212_filtered_ann", qFilteredAnn, sql(
+      s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS e
+         |   FROM embeddings WHERE label = 3),
          | qv AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0),
-         | pool AS (SELECT vec_id, rel, e FROM (
-         |    SELECT vec_id, $CosSql AS rel, e FROM base, qv)
-         |   WHERE NOT isnan(rel)
-         |   ORDER BY rel DESC, vec_id ASC LIMIT 50),
-         | pcos AS (SELECT a.vec_id AS ai, b.vec_id AS bi, ${cosSqlAB("a.e", "b.e")} AS c
-         |   FROM pool a, pool b),
-         | sel(rank, vec_id, rel, mmr, chosen) AS (
-         |   (SELECT 1, vec_id, rel, 0.7 * rel, [vec_id]
-         |    FROM pool ORDER BY 0.7 * rel DESC, vec_id ASC LIMIT 1)
-         |   UNION ALL
-         |   (SELECT s.rank + 1, p.vec_id, p.rel,
-         |      0.7 * p.rel - (1.0 - 0.7) * (SELECT max(c) FROM pcos
-         |        WHERE pcos.ai = p.vec_id AND list_contains(s.chosen, pcos.bi)) AS mmr,
-         |      s.chosen || [p.vec_id]
-         |    FROM sel s JOIN pool p ON NOT list_contains(s.chosen, p.vec_id)
-         |    WHERE s.rank < 5
-         |    ORDER BY mmr DESC, p.vec_id ASC LIMIT 1))
-         |SELECT rank, vec_id, round(rel, 6) AS rel, round(mmr, 6) AS mmr FROM sel""".stripMargin,
+         | scored AS (SELECT vec_id, label, $CosSql AS score FROM base, qv),
+         | topk AS (SELECT * FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10)
+         |SELECT vec_id, label, round(score, 6) AS score FROM topk""".stripMargin)),
 
-    // q28's oracle embeds the trained centroids as literals — see
-    // trainedOracleSql
+    Query("q213_retrieval_quality", qRetrievalQuality,
+      (s, dir) => retrievalQualityOracleSql(ivfIndexFor(s, dir).centers)),
 
-    // The ENTIRE reference pipeline replayed independently: chunker
-    // recursive CTE (as q12) → md5-token hash-projection embedding as
-    // sparse (chunk, bucket) sums → cosine vs the identically-embedded
-    // query literal → top-5 → threshold 0.1 AFTER the limit (§2.9.1).
-    // Chunks with zero tokens / no shared buckets score 0 on both sides.
-    "q32_e2e_pipeline" ->
-      s"""WITH RECURSIVE docs0 AS (
-         |  SELECT doc_id, text AS t, length(text) AS len
-         |  FROM documents WHERE length(text) > 0),
-         | spans(doc_id, t, len, s, e) AS (
-         |  SELECT doc_id, t, len, 0, ${chunkEndSql("0")} FROM docs0
-         |  UNION ALL
-         |  SELECT doc_id, t, len, ns, ${chunkEndSql("ns")} FROM (
-         |    SELECT doc_id, t, len,
-         |      CASE WHEN e - 50 > s THEN e - 50 ELSE e END AS ns
-         |    FROM spans WHERE len > 200)
-         |  WHERE ns < len),
-         | chunks AS (
-         |  SELECT doc_id,
-         |   row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS chunk_index,
-         |   substr(t, s+1, e-s) AS c
-         |  FROM spans),
-         | tok AS (SELECT doc_id, chunk_index,
-         |   unnest(list_filter(regexp_split_to_array(lower(c), '\\s+'), x -> x <> '')) AS w
-         |  FROM chunks),
-         | contrib AS (SELECT doc_id, chunk_index, $TokContribSql
-         |  FROM (SELECT doc_id, chunk_index, ${h32Sql("w")} AS h FROM tok)),
-         | vecs AS (SELECT doc_id, chunk_index, idx, sum(v) AS s
-         |  FROM contrib GROUP BY 1, 2, 3),
-         | norms AS (SELECT doc_id, chunk_index, sqrt(sum(s * s)) AS n
-         |  FROM vecs GROUP BY 1, 2),
-         | qtok AS (SELECT unnest(['alpha', 'beta', 'gamma']) AS w),
-         | qcontrib AS (SELECT $TokContribSql
-         |  FROM (SELECT ${h32Sql("w")} AS h FROM qtok)),
-         | qvec AS (SELECT idx, sum(v) AS qs FROM qcontrib GROUP BY 1),
-         | qnorm AS (SELECT sqrt(sum(qs * qs)) AS qn FROM qvec),
-         | dots AS (SELECT v.doc_id, v.chunk_index, sum(v.s * q.qs) AS dot
-         |  FROM vecs v JOIN qvec q USING (idx) GROUP BY 1, 2),
-         | scored AS (SELECT ch.doc_id, ch.chunk_index,
-         |   CASE WHEN n.n IS NULL OR n.n = 0 OR qn = 0 OR dot IS NULL THEN 0.0
-         |        ELSE dot / (n.n * qn) END AS score
-         |  FROM chunks ch CROSS JOIN qnorm
-         |  LEFT JOIN norms n USING (doc_id, chunk_index)
-         |  LEFT JOIN dots USING (doc_id, chunk_index))
-         |SELECT doc_id, chunk_index, round(score, 6) AS score FROM (
-         |  SELECT * FROM scored
-         |  ORDER BY score DESC, doc_id ASC, chunk_index ASC LIMIT 5)
-         |WHERE score >= 0.1""".stripMargin,
-    "q29_events_sliding" ->
-      """SELECT (floor(epoch(ts) / 300)::BIGINT - off) * 300 AS bucket_start,
-        | event_type, count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |FROM events, (SELECT unnest([0, 1]) AS off)
-        |GROUP BY 1, 2""".stripMargin,
+    // delete-by-id at nprobe = all: q205's exact batched scan minus the
+    // tombstoned ids (vec_id 0 is both a panel query and deleted, so
+    // query 0's rank 1 must shift — a leaked tombstone breaks the hash)
+    Query("q214_ivf_delete", qIvfDelete, sql(
+      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
+         |   WHERE vec_id NOT IN (${DeletedVecIds.mkString(", ")})),
+         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
+         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
+         | ranked AS (SELECT query_id, vec_id, score,
+         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored)
+         |SELECT query_id, vec_id, rank, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 10""".stripMargin)),
 
-    "q31_label_centroids" ->
-      """WITH ex AS (
-        |  SELECT label, generate_subscripts(embedding, 1) - 1 AS dim,
-        |   unnest(embedding::DOUBLE[]) AS v
-        |  FROM embeddings)
-        |SELECT label, dim, round(sum(v) / count(*), 6) AS m,
-        | count(*) AS n_vectors
-        |FROM ex GROUP BY label, dim""".stripMargin,
+    // upsert at nprobe = all: the exact batched scan over the
+    // POST-upsert corpus (vec 0's embedding = reverse of vec 1's — a
+    // float copy, no arithmetic). A stale old row, a dropped new row,
+    // or a doubled id all break the hash.
+    Query("q215_ivf_upsert", qIvfUpsert, sql(
+      s"""WITH donor AS (SELECT embedding::DOUBLE[] AS de FROM embeddings WHERE vec_id = 1),
+         | base AS (SELECT vec_id,
+         |    CASE WHEN vec_id = 0 THEN (SELECT list_reverse(de) FROM donor)
+         |         ELSE embedding::DOUBLE[] END AS e
+         |   FROM embeddings),
+         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
+         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
+         | ranked AS (SELECT query_id, vec_id, score,
+         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored)
+         |SELECT query_id, vec_id, rank, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 10""".stripMargin)),
 
-    "q30_events_session" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts, value,
-        |   CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) >= 300 OR lag(ts) OVER w IS NULL
-        |        THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        | sessions AS (
-        |  SELECT user_id, ts, value,
-        |   sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |     ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM marked)
-        |SELECT floor(epoch(min(ts)))::BIGINT AS session_start, user_id,
-        | count(*) AS n_events, round(sum(value), 4) AS sum_value
-        |FROM sessions GROUP BY user_id, session_id""".stripMargin,
-  )
+    // batched filtered serving at nprobe = all: q205's exact batched
+    // scan restricted to the label-3 corpus (queries unfiltered)
+    Query("q216_filtered_batch", qFilteredBatch, sql(
+      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
+         |   WHERE label = 3),
+         | qs AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id < 3),
+         | scored AS (SELECT query_id, vec_id, $CosSql AS score FROM base, qs),
+         | ranked AS (SELECT query_id, vec_id, score,
+         |   row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored)
+         |SELECT query_id, vec_id, rank, round(score, 6) AS score
+         |FROM ranked WHERE rank <= 10""".stripMargin)),
+
+    Query("q217_sq8_affine", qSq8Search, (s, dir) => sq8OracleSql(sq8ModelFor(s, dir))),
+
+    // Z-order audit replay: same integer bucketing (// = Spark's div),
+    // the same Morton interleave unrolled as shift/mask bit ops, file
+    // boundaries from the per-(layout, key) cumulative-count histogram
+    // (NO global row sort — the q117 discipline), zone-map
+    // disjointness against the 3-box sweep
+    Query("q218_zorder_audit", qZorderAudit, sql(
+      s"""WITH base AS (SELECT o_custkey::BIGINT AS a,
+         |    datediff('day', DATE '1992-01-01', o_orderdate::DATE)::BIGINT AS b
+         |  FROM orders),
+         | st AS (SELECT min(a) AS la, max(a) AS ha, min(b) AS lb,
+         |    max(b) AS hb, count(*) AS n FROM base),
+         | bk AS (SELECT a, b,
+         |    least(255, ((a - la) * 256) // (ha - la + 1)) AS za,
+         |    least(255, ((b - lb) * 256) // (hb - lb + 1)) AS zb,
+         |    n, la, ha, lb, hb
+         |  FROM base, st),
+         | enc AS (SELECT *, ${(0 until 8).map(i =>
+             s"((((za >> $i) & 1) << ${2 * i}) | (((zb >> $i) & 1) << ${2 * i + 1}))")
+             .mkString(" | ")} AS zv FROM bk),
+         | keyed AS (SELECT layout, key, min(a) AS ka, max(a) AS kha,
+         |    min(b) AS klb, max(b) AS khb, count(*) AS cnt,
+         |    any_value(n) AS n, any_value(la) AS la, any_value(ha) AS ha,
+         |    any_value(lb) AS lb, any_value(hb) AS hb
+         |  FROM (SELECT 'zorder' AS layout, zv AS key, a, b, n, la, ha, lb, hb FROM enc
+         |        UNION ALL
+         |        SELECT 'linear' AS layout, za AS key, a, b, n, la, ha, lb, hb FROM bk)
+         |  GROUP BY 1, 2),
+         | cum AS (SELECT *, coalesce(sum(cnt) OVER (PARTITION BY layout
+         |    ORDER BY key ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+         |    0) AS cumb FROM keyed),
+         | files AS (SELECT layout, (cumb * 64) // n AS fid,
+         |    min(ka) AS fla, max(kha) AS fha, min(klb) AS flb,
+         |    max(khb) AS fhb, sum(cnt) AS rows_,
+         |    any_value(la) AS la, any_value(ha) AS ha,
+         |    any_value(lb) AS lb, any_value(hb) AS hb
+         |  FROM cum GROUP BY 1, 2),
+         | boxes(box, alo, ahi, blo, bhi) AS (VALUES
+         |   ('a_mid', 45, 55, 0, 100),
+         |   ('b_mid', 0, 100, 45, 55),
+         |   ('ab_mid', 45, 55, 45, 55)),
+         | flagged AS (SELECT layout, box, rows_,
+         |    (fha < la + ((ha - la) * alo) // 100
+         |     OR fla > la + ((ha - la) * ahi) // 100
+         |     OR fhb < lb + ((hb - lb) * blo) // 100
+         |     OR flb > lb + ((hb - lb) * bhi) // 100) AS skip
+         |  FROM files, boxes)
+         |SELECT layout, box, count(*) AS files_total,
+         |  sum(CASE WHEN skip THEN 1 ELSE 0 END)::BIGINT AS files_skipped,
+         |  sum(CASE WHEN skip THEN 0 ELSE rows_ END)::BIGINT AS rows_scanned
+         |FROM flagged GROUP BY layout, box ORDER BY layout, box""".stripMargin)),
+
+    // plain-join replay: the salted join's contract is output identity
+    // with the unsalted phrasing, so the oracle IS the unsalted join
+    Query("q219_salted_join", qSaltedJoin, sql(
+      s"""WITH dim AS (SELECT source, count(*) AS n_docs_src,
+         |    sum(n_chars)::BIGINT AS chars_src
+         |  FROM documents GROUP BY 1),
+         | j AS (SELECT d.source, d.n_chars, m.n_docs_src, m.chars_src
+         |  FROM documents d JOIN dim m USING (source))
+         |SELECT source, count(*) AS n_docs, max(n_docs_src) AS n_docs_src,
+         |  sum(CASE WHEN n_chars * n_docs_src > chars_src THEN 1 ELSE 0
+         |    END)::BIGINT AS n_above_avg
+         |FROM j GROUP BY source ORDER BY source""".stripMargin)),
+
+    // MaxSim replay: per-token maxes are order-free; the sum folds in
+    // the fixed token order on both engines ((m0 + m1) + m2)
+    Query("q220_maxsim", qMaxSim, sql(
+      s"""WITH base AS (SELECT vec_id, vec_id // 8 AS doc_id,
+         |    embedding::DOUBLE[] AS e FROM embeddings),
+         | t0 AS (SELECT embedding::DOUBLE[] AS q0v FROM embeddings WHERE vec_id = 0),
+         | t1 AS (SELECT embedding::DOUBLE[] AS q1v FROM embeddings WHERE vec_id = 1),
+         | t2 AS (SELECT embedding::DOUBLE[] AS q2v FROM embeddings WHERE vec_id = 2),
+         | m AS (SELECT doc_id, count(*) AS n_vecs,
+         |    max(${cosSqlAB("e", "q0v")}) AS m0,
+         |    max(${cosSqlAB("e", "q1v")}) AS m1,
+         |    max(${cosSqlAB("e", "q2v")}) AS m2
+         |  FROM base, t0, t1, t2 GROUP BY doc_id)
+         |SELECT doc_id, n_vecs, round(m0 + m1 + m2, 6) AS score
+         |FROM m ORDER BY score DESC, doc_id ASC LIMIT 5""".stripMargin)),
+
+    Query("q221_adaptive_probe", qAdaptiveProbe,
+      (s, dir) => adaptiveOracleSql(ivfIndexFor(s, dir).centers)),
+
+    Query("q222_ivf_sq8", qIvfSq8,
+      (s, dir) => {
+        val path = ivfSq8IndexFor(s, dir)
+        val model = Ann.readSq8Model(s, path)
+        ivfSq8OracleSql(Ann.readIvf(s, path).centers, model,
+          model.encode(queryVec(rd(s, dir, "embeddings"))))
+      }),
+
+    Query("q223_maxsim_plaid", qMaxSimPlaid,
+      (s, dir) => plaidOracleSql(ivfIndexFor(s, dir).centers, plaidQueries(s, dir))),
+
+    Query("q224_margin_frontier", qMarginFrontier,
+      (s, dir) =>
+        marginFrontierOracleSql(ivfIndexFor(s, dir).centers, marginProbePlan(s, dir)._2)),
+
+    Query("q225_matryoshka_curve", qMatryoshkaCurve,
+      (s, dir) => matryoshkaCurveOracleSql(queryVec(rd(s, dir, "embeddings")).length)),
+
+    // snapshot-read replay: v1 committed the even doc_ids, v2 appended
+    // the odds — so v1 == the even filter and v2 == the whole table,
+    // REGARDLESS of when the reader runs (the time-travel contract)
+    Query("q226_versioned_reads", qVersionedReads, sql(
+      s"""SELECT * FROM (
+         | SELECT 1::BIGINT AS version, count(*) AS n_rows,
+         |   sum(n_chars)::BIGINT AS sum_chars
+         |  FROM documents WHERE doc_id % 2 = 0
+         | UNION ALL
+         | SELECT 2::BIGINT, count(*), sum(n_chars)::BIGINT
+         |  FROM documents) ORDER BY version""".stripMargin)),
+
+    // stats-pruned-read replay: the split threshold is the integer
+    // mean (sum // count — exact on both engines); the low band is
+    // one file and the high band's manifest min exceeds the range by
+    // construction, so n_files_read == 1 always; the agg proves the
+    // pruned read lost no rows
+    Query("q227_stats_pruned_read", qStatsPrunedRead, sql(
+      s"""WITH t AS (SELECT sum(n_chars) // count(*) AS t FROM documents)
+         |SELECT 2::BIGINT AS n_files_total, 1::BIGINT AS n_files_read,
+         |  count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars
+         |FROM documents, t WHERE n_chars <= t.t""".stripMargin)),
+
+    // COW-merge replay: updates bump n_chars by 1e6 for doc_id < 10;
+    // the after-sum applies the CASE, the before-sum is the plain
+    // table (time travel), the file counts are construction facts
+    // (low-id updates touch only the low-half file)
+    Query("q228_versioned_merge", qVersionedMerge, sql(
+      s"""SELECT 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
+         | count(*) AS n_rows,
+         | sum(CASE WHEN doc_id < 10 THEN n_chars + 1000000
+         |     ELSE n_chars END)::BIGINT AS sum_chars_after,
+         | sum(n_chars)::BIGINT AS sum_chars_before
+         |FROM documents""".stripMargin)),
+
+    // CDC replay: the v2->v3 change set IS the update batch — the
+    // rewritten file's carried-over rows cancel in the EXCEPT ALL
+    Query("q229_versioned_changes", qVersionedChanges, sql(
+      s"""SELECT count(*) AS n_changed,
+         | sum(n_chars + 1000000)::BIGINT AS sum_chars_changed,
+         | min(doc_id) AS min_id, max(doc_id) AS max_id
+         |FROM documents WHERE doc_id < 10""".stripMargin)),
+
+    // OPTIMIZE replay: content identity before/after is the contract,
+    // so both snapshot aggs are the plain table; the file counts are
+    // construction facts (6 modulo slices -> 2 range files) and the
+    // min-doc_id point read opens exactly the low range file
+    Query("q230_versioned_compact", qVersionedCompact, sql(
+      s"""SELECT 6::BIGINT AS files_before, 2::BIGINT AS files_after,
+         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
+         | count(*) AS pre_rows, sum(n_chars)::BIGINT AS pre_chars,
+         | 1::BIGINT AS narrow_files_read,
+         | (SELECT count(*) FROM documents
+         |   WHERE doc_id = (SELECT min(doc_id) FROM documents))
+         |   AS narrow_rows
+         |FROM documents""".stripMargin)),
+
+    // COW-delete replay: the post-delete snapshot is the table minus
+    // the fixed panel; the panel sits entirely in the low-half file
+    // (files 1 rewritten / 1 kept by construction); rows_deleted is
+    // the panel's actual hit count, not a hardcoded 6
+    Query("q231_versioned_delete", qVersionedDelete, sql(
+      s"""SELECT
+         | (SELECT count(*) FROM documents
+         |   WHERE doc_id IN (2, 3, 5, 7, 11, 13)) AS rows_deleted,
+         | 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
+         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars_after,
+         | (SELECT count(*) FROM documents) AS pre_rows
+         |FROM documents WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13)""".stripMargin)),
+
+    // typed-CDC replay: q228's merge bumps n_chars by 1e6 for
+    // doc_id < 10 — the delete side is the pre-image panel, the
+    // insert side the post-image panel, carried-over rows cancel
+    Query("q232_cdc_typed", qCdcTyped, sql(
+      s"""SELECT * FROM (
+         | SELECT 'delete' AS _change_type, count(*) AS n_rows,
+         |   sum(n_chars)::BIGINT AS sum_chars,
+         |   min(doc_id) AS min_id, max(doc_id) AS max_id
+         |  FROM documents WHERE doc_id < 10
+         | UNION ALL
+         | SELECT 'insert', count(*), sum(n_chars + 1000000)::BIGINT,
+         |   min(doc_id), max(doc_id)
+         |  FROM documents WHERE doc_id < 10) ORDER BY _change_type""".stripMargin)),
+
+    // generation-audit replay: the cycle is append(+3 rows), delete
+    // (vec_id 3 masked), compact (collapse, same rows); generation and
+    // tombstone-dir counts are protocol facts, row counts replay from
+    // the corpus count
+    Query("q233_ivf_generations", qIvfGenerations, sql(
+      s"""WITH n AS (SELECT count(*) AS c FROM embeddings)
+         |SELECT * FROM (
+         | SELECT 1::BIGINT AS version, 1::BIGINT AS n_list_dirs,
+         |   0::BIGINT AS n_tombstone_dirs, c AS n_rows FROM n
+         | UNION ALL SELECT 2::BIGINT, 2::BIGINT, 0::BIGINT, c + 3 FROM n
+         | UNION ALL SELECT 3::BIGINT, 2::BIGINT, 1::BIGINT, c + 2 FROM n
+         | UNION ALL SELECT 4::BIGINT, 1::BIGINT, 0::BIGINT, c + 2 FROM n)
+         |ORDER BY version""".stripMargin)),
+
+    // schema-evolution replay: v1 = the even ids without `source`
+    // (null-filled under the evolved manifest schema), v2 = the odd
+    // ids with it; v1's own schema is two columns by construction
+    Query("q234_schema_evolution", qSchemaEvolution, sql(
+      s"""SELECT (SELECT count(*) FROM documents) AS n_rows,
+         | (SELECT sum(n_chars)::BIGINT FROM documents) AS sum_chars,
+         | (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
+         |   AS n_null_source,
+         | (SELECT count(DISTINCT source) FROM documents
+         |   WHERE doc_id % 2 <> 0) AS n_distinct_source,
+         | 2::BIGINT AS v1_n_cols,
+         | (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
+         |   AS v1_rows""".stripMargin)),
+
+    // value-pruned-read replay: src0 sits in bucket-0's single file
+    // (suffix mod 4), so 1 of 4 files opens; the agg proves the
+    // manifest-decided skip lost no rows
+    Query("q235_value_pruned_read", qValuePrunedRead, sql(
+      s"""SELECT 4::BIGINT AS n_files_total, 1::BIGINT AS n_files_read,
+         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars
+         |FROM documents WHERE source = 'src0'""".stripMargin)),
+
+    // type-widening replay: v1 = even ids as int/float, v2 = odd ids
+    // offset past the int range as long/double; the schema-type
+    // strings pin the widening the oracle cannot observe, the sums
+    // pin that no value was lost or truncated crossing the boundary
+    // (score is integer-valued mod-97, exact in any float order)
+    Query("q236_type_widening", qTypeWidening, sql(
+      s"""SELECT (SELECT count(*) FROM documents) AS n_rows,
+         | ((SELECT sum(doc_id % 1000000) FROM documents WHERE doc_id % 2 = 0)
+         |  + (SELECT sum(doc_id % 1000000 + 5000000000)
+         |     FROM documents WHERE doc_id % 2 <> 0))::BIGINT AS sum_id,
+         | (SELECT sum(n_chars)::BIGINT FROM documents) AS sum_chars,
+         | (SELECT sum(n_chars % 97)::BIGINT FROM documents) AS sum_score,
+         | 'int' AS v1_id_type, 'bigint' AS id_type,
+         | 'float' AS v1_score_type, 'double' AS score_type""".stripMargin)),
+
+    // z-order replay: the bottom-quartile n_chars box (exact integer
+    // bounds) must return the same row/char mass through the
+    // manifest-pruned box read as the plain predicate; `pruned` pins
+    // that the Morton layout actually skipped at least half the files
+    // on the axis the linear arrangement couldn't serve
+    Query("q237_zorder_compact", qZorderCompact, sql(
+      s"""WITH b AS (SELECT min(n_chars) AS lo,
+         |  min(n_chars) + (max(n_chars) - min(n_chars)) // 4 AS hi
+         |  FROM documents)
+         |SELECT 1::BIGINT AS pruned, count(*) AS n_rows,
+         |  sum(n_chars)::BIGINT AS sum_chars
+         |FROM documents, b WHERE n_chars BETWEEN b.lo AND b.hi""".stripMargin)),
+
+    // index-sync replay: the corpus lives (merge re-embeds ids < 5 and
+    // clones ids < 3 to +1e6, delete kills 7 and 11), the sync maps
+    // corpus v3 onto index v3 (clone + upsert + tombstone commits),
+    // and BOTH the synced index's own files and the table snapshot
+    // must carry exactly the mutated corpus's row/id mass
+    Query("q238_index_sync", qIndexSync, sql(
+      s"""WITH base AS (SELECT count(*) AS n, sum(vec_id)::BIGINT AS s
+         |    FROM embeddings),
+         |  ins AS (SELECT count(*) AS n,
+         |    coalesce(sum(vec_id + 1000000), 0)::BIGINT AS s
+         |    FROM embeddings WHERE vec_id < 3),
+         |  upd AS (SELECT count(*) AS n FROM embeddings WHERE vec_id < 5)
+         |SELECT 3::BIGINT AS corpus_v, 3::BIGINT AS index_v,
+         |  (upd.n + ins.n)::BIGINT AS n_upserted, 2::BIGINT AS n_deleted,
+         |  (base.n - 2 + ins.n)::BIGINT AS n_rows_index,
+         |  (base.s - 18 + ins.s)::BIGINT AS sum_id_index,
+         |  (base.n - 2 + ins.n)::BIGINT AS n_rows_table,
+         |  (base.s - 18 + ins.s)::BIGINT AS sum_id_table
+         |FROM base, ins, upd""".stripMargin)),
+
+    // column-drop replay: the drop is metadata-only (files_moved is
+    // the REAL v1->v2 manifest diff and must be zero), the two-column
+    // read keeps the full mass, and time travel still serves the
+    // dropped column's distinct count
+    Query("q239_column_drop", qColumnDrop, sql(
+      s"""SELECT count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
+         | 2::BIGINT AS n_cols, 3::BIGINT AS v1_n_cols,
+         | (SELECT count(DISTINCT source) FROM documents)
+         |   AS v1_distinct_source,
+         | 0::BIGINT AS files_moved
+         |FROM documents""".stripMargin)),
+
+    // restore replay: the restored head IS the raw table (DuckDB
+    // recomputes both masses; the file counts are the fixed
+    // single-file construction), v2 is the table minus the panel
+    Query("q240_versioned_restore", qVersionedRestore, sql(
+      s"""SELECT 3::BIGINT AS restored_version, 1::BIGINT AS restored_to,
+         | 1::BIGINT AS files_re_added, 1::BIGINT AS files_removed,
+         | (SELECT count(*) FROM documents) AS n_rows,
+         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars,
+         | (SELECT count(*) FROM documents
+         |    WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13)) AS v2_rows,
+         | (SELECT sum(n_chars) FROM documents
+         |    WHERE doc_id NOT IN (2, 3, 5, 7, 11, 13))::BIGINT AS v2_chars""".stripMargin)),
+
+    // metadata-count replay: DuckDB counts the slow way what the
+    // engine answered from the manifest's per-file row counts alone
+    Query("q241_metadata_count", qMetadataCount, sql(
+      s"""SELECT 1::BIGINT AS version,
+         |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
+         |    AS n_rows_meta
+         |UNION ALL
+         |SELECT 2::BIGINT, (SELECT count(*) FROM documents)
+         |ORDER BY version""".stripMargin)),
+
+    // bloom point-lookup replay: the row content is the recomputed
+    // half (DuckDB scans); the file total is the fixed 2x2 layout.
+    // File-open counts stay OUT of the gate — bloom pruning is pinned
+    // by VersionedSpec, where a false positive can't flake a hash
+    Query("q242_bloom_point_lookup", qBloomPointLookup, sql(
+      s"""SELECT doc_id, lang, source, n_chars,
+         | 4::BIGINT AS n_files_total
+         |FROM documents WHERE doc_id = 42""".stripMargin)),
+
+    // COW update replay: CASE applies both SET expressions to the
+    // panel; the length sum audits the string SET; time travel reads
+    // the pre-update mass
+    Query("q243_versioned_update", qVersionedUpdate, sql(
+      s"""SELECT 6::BIGINT AS rows_updated, 1::BIGINT AS files_rewritten,
+         | 1::BIGINT AS files_kept,
+         | (SELECT count(*) FROM documents) AS n_rows,
+         | (SELECT sum(CASE WHEN doc_id IN (2, 3, 5, 7, 11, 13)
+         |     THEN n_chars * 2 + 7 ELSE n_chars END)
+         |   FROM documents)::BIGINT AS sum_chars_after,
+         | (SELECT sum(CASE WHEN doc_id IN (2, 3, 5, 7, 11, 13)
+         |     THEN length(source) + 1 ELSE length(source) END)
+         |   FROM documents)::BIGINT AS src_len_after,
+         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars_before""".stripMargin)),
+
+    // shallow-clone replay: the source reads raw, the diverged clone
+    // reads raw + the panel bump; one source file still read in place
+    Query("q244_shallow_clone", qShallowClone, sql(
+      s"""SELECT (SELECT count(*) FROM documents) AS src_rows,
+         | (SELECT sum(n_chars) FROM documents)::BIGINT AS src_chars,
+         | (SELECT count(*) FROM documents) AS clone_rows,
+         | (SELECT sum(CASE WHEN doc_id < 10 THEN n_chars + 1000000
+         |     ELSE n_chars END) FROM documents)::BIGINT AS clone_chars,
+         | 1::BIGINT AS files_rewritten, 1::BIGINT AS files_kept,
+         | 1::BIGINT AS n_source_refs""".stripMargin)),
+
+    // timestamp-travel replay: the probes are anchored to the table's
+    // OWN recorded commit instants (ts2-1 -> v1, ts2 -> v2), so the
+    // resolved versions and their masses are deterministic
+    Query("q245_timestamp_travel", qTimestampTravel, sql(
+      s"""SELECT 1::BIGINT AS probe, 1::BIGINT AS version,
+         |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
+         |    AS n_rows
+         |UNION ALL
+         |SELECT 2::BIGINT, 2::BIGINT, (SELECT count(*) FROM documents)
+         |ORDER BY probe""".stripMargin)),
+
+    // follower replay: the delivery log is the initial insert stream
+    // plus the merge's delete/insert pair per updated key — every mass
+    // recomputed from the raw table, nothing construction-counted but
+    // the two log commits
+    Query("q246_cdc_follow", qCdcFollow, sql(
+      s"""WITH p AS (SELECT * FROM documents WHERE doc_id < 10)
+         |SELECT 'delete' AS change_type,
+         |  (SELECT count(*) FROM p) AS n_rows,
+         |  (SELECT sum(n_chars) FROM p)::BIGINT AS sum_chars,
+         |  2::BIGINT AS log_versions
+         |UNION ALL
+         |SELECT 'insert',
+         |  (SELECT count(*) FROM documents) + (SELECT count(*) FROM p),
+         |  ((SELECT sum(n_chars) FROM documents) +
+         |   (SELECT sum(n_chars) FROM p) +
+         |   1000000 * (SELECT count(*) FROM p))::BIGINT,
+         |  2::BIGINT
+         |ORDER BY change_type""".stripMargin)),
+
+    // expiry replay: the retained head is the FULL table (DuckDB
+    // recomputes the mass); the reclaim counts and horizon are the
+    // fixed 2-commit + compact construction
+    Query("q247_version_expiry", qVersionExpiry, sql(
+      s"""SELECT 2::BIGINT AS deltas_expired, 2::BIGINT AS files_deleted,
+         | 3::BIGINT AS earliest_version, 1::BIGINT AS n_live_files,
+         | (SELECT count(*) FROM documents) AS n_rows,
+         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars""".stripMargin)),
+
+    // band-overwrite replay: the low band reads recomputed (CASE),
+    // everything else raw; the pre-overwrite version reads raw
+    Query("q248_overwrite_where", qOverwriteWhere, sql(
+      s"""SELECT 10::BIGINT AS rows_replaced, 1::BIGINT AS files_rewritten,
+         | 1::BIGINT AS files_kept,
+         | (SELECT count(*) FROM documents) AS n_rows,
+         | (SELECT sum(CASE WHEN doc_id < 10 THEN n_chars * 3 + 1
+         |     ELSE n_chars END) FROM documents)::BIGINT AS sum_chars_after,
+         | (SELECT sum(n_chars) FROM documents)::BIGINT AS sum_chars_before""".stripMargin)),
+
+    // constraint replay: the violation count is the SAME predicate
+    // recomputed by DuckDB over the raw table (zero by construction of
+    // the generator — but COUNTED, not asserted)
+    Query("q249_check_constraints", qCheckConstraints, sql(
+      s"""SELECT 1::BIGINT AS n_constraints,
+         | count(*) AS n_rows, sum(n_chars)::BIGINT AS sum_chars,
+         | sum(CASE WHEN NOT coalesce(n_chars >= 0 AND doc_id IS NOT NULL,
+         |   false) THEN 1 ELSE 0 END)::BIGINT AS n_violations
+         |FROM documents""".stripMargin)),
+
+    // history replay: q243's construction IS the operation log; the
+    // head mass is the recomputed half
+    Query("q250_table_history", qTableHistory, sql(
+      s"""WITH h(version, operation, n_files_added, n_files_removed) AS
+         | (VALUES (3, 'update', 1, 1), (2, 'append', 1, 0),
+         |         (1, 'append', 1, 0))
+         |SELECT version::BIGINT AS version, operation,
+         | n_files_added::BIGINT AS n_files_added,
+         | n_files_removed::BIGINT AS n_files_removed,
+         | (SELECT count(*) FROM documents) AS head_rows
+         |FROM h ORDER BY version DESC""".stripMargin)),
+  ))
 }

@@ -160,84 +160,6 @@ final class VectorDb(spark: SparkSession, path: String,
     } finally s.close()
   }
 
-  /** Store maintenance: rewrite the append-accumulated store into
-    * `targetFiles` parquet files. Every [[addDocuments]] batch appends
-    * its own files, so a long-lived store degrades into thousands of
-    * tiny parquet files — at 100 TB that is the classic small-files
-    * failure (footer-read storms, per-file task overhead, starved
-    * scans). Compaction range-partitions by `orderCol` and sorts
-    * within partitions, so the rewritten files are both bounded in
-    * count and clustered (min/max footer stats prune `orderCol`
-    * predicates after compaction).
-    *
-    * The rewrite goes to a temp directory first and is row-count
-    * verified BEFORE the old store is swapped out (move old → `.old`,
-    * move temp → store, delete `.old`). Directory moves are not
-    * jointly atomic: a crash in the window between the two moves
-    * leaves no live dir at `path` with the data intact in `.old`.
-    * [[recoverCompact]] (run automatically at the start of every
-    * compact) heals every crash state: live store missing + `.old`
-    * present → restore `.old`; both present → the live store won the
-    * swap, drop the stale `.old`; stale `.compact-tmp` → drop (it is
-    * always re-derivable from the live store). So the worst outcome of
-    * any crash is one recovery pass, never data loss.
-    *
-    * Returns (rows, filesBefore, filesAfter).
-    */
-  def compact(targetFiles: Int = 8,
-              orderCol: String = "path"): (Long, Long, Long) = {
-    require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    recoverCompact()
-    require(exists, s"nothing to compact at $path")
-    def parquetFiles(p: Path): Long = {
-      val s = Files.walk(p)
-      try s.filter(f => f.toString.endsWith(".parquet") && Files.isRegularFile(f))
-        .count()
-      finally s.close()
-    }
-    val before = parquetFiles(storeDir)
-    val df = corpus()
-    require(df.columns.contains(orderCol),
-      s"compact orderCol `$orderCol` not in store schema ${df.columns.mkString(",")}")
-    val n = df.count()
-    val tmp = Paths.get(path + ".compact-tmp")
-    val old = Paths.get(path + ".old")
-    df.repartitionByRange(targetFiles, org.apache.spark.sql.functions.col(orderCol))
-      .sortWithinPartitions(org.apache.spark.sql.functions.col(orderCol))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val m = spark.read.parquet(tmp.toString).count()
-    require(m == n, s"compaction row mismatch: store $n, rewrite $m — aborting swap")
-    Files.move(storeDir, old)
-    Files.move(tmp, storeDir)
-    walkTree(old).reverse.foreach(Files.deleteIfExists)
-    Files.deleteIfExists(old)
-    (n, before, parquetFiles(storeDir))
-  }
-
-  /** Heal any state a crashed [[compact]] can leave behind. Idempotent;
-    * called automatically by compact, and safe to call at open time.
-    * Returns a short description of what (if anything) was repaired.
-    */
-  def recoverCompact(): Option[String] = {
-    val tmp = Paths.get(path + ".compact-tmp")
-    val old = Paths.get(path + ".old")
-    def drop(p: Path): Unit =
-      if (Files.exists(p)) { walkTree(p).reverse.foreach(Files.deleteIfExists); Files.deleteIfExists(p) }
-    val repaired =
-      if (Files.exists(old) && !Files.exists(storeDir)) {
-        // crash between the two moves: the verified data lives in .old
-        Files.move(old, storeDir)
-        Some(s"restored store from $old")
-      } else if (Files.exists(old)) {
-        // crash after the swap, before cleanup: live store is the rewrite
-        drop(old)
-        Some(s"dropped stale $old")
-      } else None
-    // a stale rewrite is always re-derivable from the live store
-    if (Files.exists(tmp)) { drop(tmp); return Some(repaired.fold("")(_ + "; ") + s"dropped stale $tmp") }
-    repaired
-  }
-
   /** S8: timestamped backup copy, then truncate. Returns the backup
     * location (None when there was nothing to back up). The backup is a
     * file-level copy — the parquet analog of the reference's

@@ -351,22 +351,12 @@ object Ann {
     math.min(maxBits, math.max(minBits, raw))
   }
 
-  /** [[hubness]] with `bits` derived from the corpus size via
-    * [[occupancyBits]] — the scale-safe entry point: the one extra
-    * count() pass is trivia next to the pair join it right-sizes.
-    */
-  def hubnessAuto(corpus: DataFrame, k: Int = 3,
-                  targetOccupancy: Double = 2.0,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  maxBucketSize: Int = Int.MaxValue): DataFrame =
-    hubness(corpus, k, occupancyBits(corpus.count(), targetOccupancy),
-      idCol, vecCol, maxBucketSize)
-
   /** Clone-collapsed hubness: identical output to [[hubness]] (same k,
     * same occupancy-derived bits over the DISTINCT vector set) but with
     * the pair expansion run between DISTINCT vectors only, and each
     * point's k-occurrence reconstructed exactly from clone multiplicities
-    * in closed form. This closes the clone hole in [[hubnessAuto]]: no
+    * in closed form. This closes the clone hole of an occupancy-sized
+    * [[hubness]] ([[occupancyBits]] over the corpus count): no
     * bit-width separates EXACT duplicate vectors (they share every LSH
     * bucket by construction), so on clone-heavy corpora — the realistic
     * web shape, and the 100× stress replica, where fixed-content
@@ -1305,130 +1295,6 @@ object Ann {
           coalesce(size(col(vecCol)).cast("string"), lit("null")),
           lit(")"))).cast("int"))
       .otherwise(array_min(array(d2s: _*)).getField("cid")))
-  }
-
-  /** IVF list maintenance: split every inverted list larger than
-    * `maxListSize` into two — one bisecting-k-means-style step
-    * (Steinbach et al. 2000), deterministic and closed-form instead of
-    * iterative: each over-full list splits on its maximum-variance
-    * dimension at that dimension's list mean, and the two children's
-    * centroids are the member means of each side. Appends
-    * ([[appendToIvf]]) concentrate drift into a few hot lists; probe
-    * cost is proportional to probed-list size, so a hot list slowly
-    * turns nprobe scans back into partial full scans — this is the
-    * compaction step that restores the index invariant. Children may
-    * still exceed the cap (skewed data); run to a fixed point with
-    * `rebalanceIvfUntil`.
-    *
-    * Degenerate lists (zero variance in every dimension — all members
-    * identical) split by member-id hash parity: centroids tie, probe
-    * ordering is unaffected, and the size invariant still improves.
-    *
-    * Scale shape: list sizes are an nCentroids-row aggregate; the
-    * stats and child-mean passes scan ONLY over-full lists' members
-    * (map-side, keyed aggregates over ≤ lists×dim rows); the rewrite
-    * is a map-side centroid_id remap of those members. Driver memory
-    * is bounded by nCentroids × dim. Split ids are stable: child 0
-    * keeps the parent's slot, child 1 appends after the existing
-    * centroids in parent-id order.
-    */
-  def rebalanceIvf(index: IvfIndex, maxListSize: Long,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): IvfIndex = {
-    require(maxListSize >= 2, s"maxListSize must be >= 2, got $maxListSize")
-    val nOld = index.centers.length
-    require(nOld > 0, "rebalanceIvf: index has no centroids")
-    val dim = index.centers(0).length
-    val over = index.assigned.groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > maxListSize)
-      .select(col("centroid_id")).collect().map(_.getInt(0)).sorted
-    if (over.isEmpty) return index
-
-    val members = index.assigned
-      .filter(col("centroid_id").isin(over.map(Int.box): _*))
-      .withColumn("__v", asDouble(col(vecCol)))
-    // per-(list, dim) moment stats — ≤ |over| × dim rows to the driver
-    val stats = members
-      .select(col("centroid_id"), posexplode(col("__v")).as(Seq("__d", "__x")))
-      .groupBy(col("centroid_id"), col("__d"))
-      .agg(sum(col("__x")).as("__s"), sum(col("__x") * col("__x")).as("__s2"),
-        count(lit(1)).as("__n"))
-      .collect()
-      .groupBy(_.getInt(0))
-    // per over-full list: (split dim, threshold = mean, degenerate?)
-    val splitSpec: Map[Int, (Int, Double, Boolean)] = stats.map { case (cid, rows) =>
-      val byDim = rows.map(r => (r.getInt(1),
-        r.getDouble(2), r.getDouble(3), r.getLong(4)))
-      val (bestD, bestVar, mean) = byDim.map { case (d, s, s2, n) =>
-        val m = s / n
-        (d, s2 / n - m * m, m)
-      }.maxBy { case (d, v, _) => (v, -d) } match {
-        case (d, v, m) => (d, v, m)
-      }
-      cid -> (bestD, mean, bestVar <= 0.0)
-    }
-    // child-1 membership predicate per parent
-    def sideOf(cid: Int): Column = {
-      val (d, thr, degenerate) = splitSpec(cid)
-      if (degenerate)
-        graft.functions.HashFunctions.md5Int60(
-          concat(lit("ivfsplit:"), col(idCol).cast("string"))) % 2 === 1
-      else element_at(col("__v"), d + 1) >= thr
-    }
-    val newIdOf: Map[Int, Int] = over.zipWithIndex
-      .map { case (cid, i) => cid -> (nOld + i) }.toMap
-    val withSide = members.withColumn("__newcid",
-      over.foldRight(col("centroid_id")) { (cid, rest) =>
-        when(col("centroid_id") === cid,
-          when(sideOf(cid), lit(newIdOf(cid))).otherwise(lit(cid)))
-          .otherwise(rest)
-      })
-    // child centroids: per-(new list, dim) member means — bounded rows
-    val childMeans = withSide
-      .select(col("__newcid"), posexplode(col("__v")).as(Seq("__d", "__x")))
-      .groupBy(col("__newcid"), col("__d"))
-      .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (cid, rows) =>
-        val c = new Array[Double](dim)
-        rows.foreach(r => c(r.getInt(1)) = r.getDouble(2) / r.getLong(3))
-        cid -> c
-      }
-    val newCenters = Array.tabulate(nOld + over.length) { i =>
-      childMeans.getOrElse(i,
-        if (i < nOld) index.centers(i)
-        // a one-sided degenerate split leaves the new slot empty; keep
-        // the parent's centroid so probes of either id stay meaningful
-        else index.centers(newIdOf.collectFirst { case (p, n) if n == i => p }.get))
-    }
-    val untouched = index.assigned
-      .filter(!col("centroid_id").isin(over.map(Int.box): _*))
-    val reassigned = withSide
-      .withColumn("centroid_id", col("__newcid").cast("int"))
-      .drop("__newcid", "__v")
-    IvfIndex(untouched.unionByName(
-      reassigned.select(index.assigned.columns.map(col): _*)), newCenters)
-  }
-
-  /** [[rebalanceIvf]] to a fixed point (or `maxRounds`): skewed lists
-    * can need several bisections before every list fits the cap.
-    */
-  def rebalanceIvfUntil(index: IvfIndex, maxListSize: Long,
-                        maxRounds: Int = 8,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): IvfIndex = {
-    var cur = index
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      val next = rebalanceIvf(cur, maxListSize, idCol, vecCol)
-      changed = next.centers.length != cur.centers.length
-      if (changed)
-        cur = IvfIndex(next.assigned.localCheckpoint(eager = true), next.centers)
-      round += 1
-    }
-    cur
   }
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at

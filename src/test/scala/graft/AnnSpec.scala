@@ -413,58 +413,6 @@ class AnnSpec extends SparkSpec {
     assert(got == Set(0L, 1L, 2L, 3L, 4L), s"got $got")
   }
 
-  test("rebalanceIvf splits over-full lists; corpus preserved; probes still exact") {
-    // one tight cluster of 12 near (1,0), one of 3 near (0,1): k=2 puts
-    // 12 members in one list — cap 8 forces a bisection of that list
-    val rnd = new scala.util.Random(13)
-    val data = ((0L until 12L).map { i =>
-      (i, Seq((1.0 + rnd.nextGaussian() * 0.05).toFloat,
-        (i.toDouble / 12.0).toFloat)) // spread along dim 1 → split there
-    } ++ (20L until 23L).map(i =>
-      (i, Seq(rnd.nextGaussian().toFloat * 0.05f, 1.0f)))).toDF("vec_id", "embedding")
-    val idx = Ann.buildIvf(data, nCentroids = 2, initMode = "random")
-    val sizes0 = idx.assigned.groupBy("centroid_id").count()
-      .as[(Int, Long)].collect().toMap
-    assume(sizes0.values.max == 12L, s"clustering surprise: $sizes0")
-
-    val bal = Ann.rebalanceIvf(idx, maxListSize = 8)
-    val sizes1 = bal.assigned.groupBy("centroid_id").count()
-      .as[(Int, Long)].collect().toMap
-    // one new list appended; every member still present exactly once
-    assert(bal.centers.length == idx.centers.length + 1)
-    assert(sizes1.values.sum == 15L)
-    assert(sizes1.size == 3, s"expected 3 lists: $sizes1")
-    // the split parent's members divided into two nonempty children
-    val parent = sizes0.maxBy(_._2)._1
-    assert(sizes1(parent) > 0 && sizes1(idx.centers.length) > 0)
-    assert(sizes1(parent) + sizes1(idx.centers.length) == 12L)
-    assert(bal.assigned.select("vec_id").as[Long].collect().sorted.toSeq ==
-      data.select("vec_id").as[Long].collect().sorted.toSeq)
-    // probing every list still finds the true nearest neighbors
-    val q = Seq(1.0, 0.3)
-    val got = Ann.ivfSearch(bal, q, k = 3, nprobe = bal.centers.length)
-      .select("vec_id").as[Long].collect().toSet
-    val want = Search.topK(data.select($"vec_id",
-        $"embedding".cast("array<double>").as("embedding")), q, k = 3,
-        threshold = -2.0)
-      .select("vec_id").as[Long].collect().toSet
-    assert(got == want, s"got $got want $want")
-  }
-
-  test("rebalanceIvf: no-op under the cap; degenerate identical list splits by parity") {
-    val data = (0L until 6L).map(i => (i, Seq(1.0f, 1.0f)))
-      .toDF("vec_id", "embedding")
-    // identical points: both centroids coincide, ties assign every
-    // member to the first list → one 6-member degenerate list
-    val idx = Ann.buildIvf(data, nCentroids = 2, initMode = "random")
-    assert(Ann.rebalanceIvf(idx, maxListSize = 10) eq idx) // untouched
-    val bal = Ann.rebalanceIvfUntil(idx, maxListSize = 4)
-    val sizes = bal.assigned.groupBy("centroid_id").count()
-      .as[(Int, Long)].collect().toMap
-    assert(sizes.values.sum == 6L)
-    assert(sizes.values.max <= 4L, s"cap not reached: $sizes")
-  }
-
   test("hubness matches a brute-force within-bucket k-occurrence count") {
     val rnd = new scala.util.Random(5)
     val data = (0L until 24L).map(i =>

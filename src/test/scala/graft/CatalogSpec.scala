@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * function must appear in README.md, so adding an operator without
   * cataloguing it fails the build instead of leaving users to read
   * SparkEntry. The query table is kept by hand: add a row for each new
-  * query. No SparkSession needed — the registries are plain maps and the
-  * function list is read from the extensions source.
+  * query. No SparkSession needed — building the registry runs no query,
+  * and the function list is read from the extensions source.
   */
 class CatalogSpec extends AnyFunSuite {
 
@@ -24,6 +24,14 @@ class CatalogSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"queries missing from README catalog (add a row to README.md's " +
         s"query table): ${missing.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the registry holds 250 distinct names and queries is its view") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"duplicate registry names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(names.size == 250, s"registry size ${names.size}")
   }
 
   test("every GraftExtensions SQL function appears in the README catalog") {

@@ -132,66 +132,4 @@ class VectorDbSpec extends SparkSpec {
     db.addDocuments(sampleCorpus())
     assert(db.health().documents == 3L)
   }
-
-  test("compact collapses append-accumulated small files; corpus identical") {
-    val (db, dir) = freshDb()
-    // 5 appends → 5+ separate file groups
-    (1 to 5).foreach(_ => db.addDocuments(sampleCorpus()))
-    val before = db.corpus().orderBy("path", "chunk_index", "ingested_at")
-      .drop("ingested_at").collect().toSeq
-    val (rows, filesBefore, filesAfter) = db.compact(targetFiles = 1)
-    assert(rows == 15L)
-    assert(filesBefore > filesAfter, s"$filesBefore !> $filesAfter")
-    assert(filesAfter == 1L)
-    val after = db.corpus().orderBy("path", "chunk_index", "ingested_at")
-      .drop("ingested_at").collect().toSeq
-    assert(after == before, "compaction must not change the corpus")
-    // no leftover swap directories
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".old")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir + ".compact-tmp")))
-    // the store still serves queries and appends afterwards
-    assert(db.query("vector database", topK = 2).count() > 0)
-    db.addDocuments(sampleCorpus())
-    assert(db.health().documents == 18L)
-  }
-
-  test("recoverCompact heals every crash state a compact can leave") {
-    import java.nio.file.{Files => F, Paths => P}
-    val (db, dir) = freshDb()
-    db.addDocuments(sampleCorpus())
-    val want = db.corpus().drop("ingested_at")
-      .orderBy("path", "chunk_index").collect().toSeq
-
-    // crash window between the two moves: no live store, data in .old
-    F.move(P.get(dir), P.get(dir + ".old"))
-    assert(!F.exists(P.get(dir)))
-    val r1 = db.recoverCompact()
-    assert(r1.exists(_.contains("restored")), r1.toString)
-    assert(db.corpus().drop("ingested_at")
-      .orderBy("path", "chunk_index").collect().toSeq == want)
-
-    // stale .old beside a live store (crash after swap, before cleanup):
-    // compact must recover and proceed instead of failing at Files.move
-    F.createDirectories(P.get(dir + ".old"))
-    F.write(P.get(dir + ".old", "junk.txt"), "stale".getBytes)
-    // stale rewrite dir from an aborted run is also dropped
-    F.createDirectories(P.get(dir + ".compact-tmp"))
-    val (rows, _, _) = db.compact(targetFiles = 1)
-    assert(rows == 3L)
-    assert(!F.exists(P.get(dir + ".old")))
-    assert(!F.exists(P.get(dir + ".compact-tmp")))
-    assert(db.corpus().drop("ingested_at")
-      .orderBy("path", "chunk_index").collect().toSeq == want)
-
-    // idempotent no-op on a clean store
-    assert(db.recoverCompact().isEmpty)
-  }
-
-  test("compact validates input and refuses an unknown order column") {
-    val (db, _) = freshDb()
-    intercept[IllegalArgumentException] { db.compact() } // empty store
-    db.addDocuments(sampleCorpus())
-    intercept[IllegalArgumentException] { db.compact(targetFiles = 0) }
-    intercept[IllegalArgumentException] { db.compact(orderCol = "nope") }
-  }
 }
