@@ -755,21 +755,14 @@ object SparkEntry {
       all.unpersist()
     }
 
-  private val dupGraphCache =
-    collection.mutable.Map.empty[String, (DataFrame, DataFrame, DataFrame)]
-
   /** (pairs_all, pairs05, clusters) at the shared cap, built + persisted
     * once per corpus snapshot (the q28/q65 build-once discipline).
     */
   private def dupGraphFor(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val path = dupGraphPathFor(s, dir)
-    dupGraphCache.synchronized {
-      dupGraphCache.getOrElseUpdate(path,
-        (s.read.parquet(s"$path/pairs_all"),
-          s.read.parquet(s"$path/pairs05"),
-          s.read.parquet(s"$path/clusters")))
-    }
+    memo("dupgraph", path)((s.read.parquet(s"$path/pairs_all"),
+      s.read.parquet(s"$path/pairs05"), s.read.parquet(s"$path/clusters")))
   }
 
   /** Embedding-cosine near-dup pairs within sign-LSH buckets. */
@@ -799,20 +792,6 @@ object SparkEntry {
   private def qIvfKmeans(s: SparkSession, dir: String): DataFrame =
     Ann.ivfSearch(ivfIndexFor(s, dir), queryVec(rd(s, dir, "embeddings")),
       k = 5, nprobe = 2)
-
-  /** Build-once / probe-many seam for q28: the index is trained and
-    * persisted (`Ann.writeIvf`, partitioned by inverted list) the first
-    * time a session touches a given data dir, and every subsequent q28
-    * run — bench passes 2..n, repeated verify calls — reopens it with
-    * `Ann.readIvf` and pays only the partition-pruned probe. This is the
-    * production split: at 100 TB the quantizer is trained by an indexing
-    * job, not inside every query. The index is a [[built]] artifact
-    * keyed by the data dir (container-lifetime; a fresh container
-    * retrains). Build time is logged to stderr so the bench JSON's q28
-    * number is probe-only while the build cost stays observable.
-    */
-  private val ivfIndexCache =
-    collection.mutable.Map.empty[String, Ann.IvfIndex]
 
   /** Cache key for a data dir, so a dir whose parquet is regenerated in
     * place gets a NEW cache entry instead of being served stale
@@ -876,6 +855,20 @@ object SparkEntry {
 
   private val builtLock = new Object
 
+  /** The in-memory side of build-once: `f`'s value for `key`, computed
+    * once per process. `tag` names the cache, so two caches never share
+    * a key. The lock is [[built]]'s (reentrant), so a value may look up
+    * another one (q174's PQ reads q28's IVF index) or a build may read a
+    * memoized value (the SQ8-augmented IVF lists read the SQ8 model)
+    * without two locks taken in opposite orders.
+    */
+  private def memo[A](tag: String, key: String)(f: => A): A =
+    builtLock.synchronized {
+      memos.getOrElseUpdate(s"$tag|$key", f).asInstanceOf[A]
+    }
+
+  private val memos = scala.collection.mutable.HashMap.empty[String, Any]
+
   /** The directory under the JVM temp dir that holds every published
     * root. Its name changes whenever the on-disk form of an artifact
     * changes, so no root written in an older form is ever read.
@@ -906,10 +899,20 @@ object SparkEntry {
         nCentroids = 16, seed = 42L, maxIter = 4, initMode = "random"), p)
     }
 
+  /** Build-once / probe-many seam for q28: the index is trained and
+    * persisted (`Ann.writeIvf`, partitioned by inverted list) the first
+    * time a session touches a given data dir, and every subsequent q28
+    * run — bench passes 2..n, repeated verify calls — reopens it with
+    * `Ann.readIvf` and pays only the partition-pruned probe. This is the
+    * production split: at 100 TB the quantizer is trained by an indexing
+    * job, not inside every query. The index is a [[built]] artifact
+    * keyed by the data dir (container-lifetime; a fresh container
+    * retrains). Build time is logged to stderr so the bench JSON's q28
+    * number is probe-only while the build cost stays observable.
+    */
   private def ivfIndexFor(s: SparkSession, dir: String): Ann.IvfIndex = {
     val path = ivfPathFor(s, dir)
-    ivfIndexCache.synchronized(
-      ivfIndexCache.getOrElseUpdate(path, Ann.readIvf(s, path)))
+    memo("ivf", path)(Ann.readIvf(s, path))
   }
 
   /** The BATCHED probe over the persisted q28 index, exposed uncollected
@@ -1591,8 +1594,6 @@ object SparkEntry {
     * one — per-subspace training cost dominates even the BUILD otherwise
     * (each subspace is one spark.ml KMeans fit).
     */
-  private val pqCache = collection.mutable.Map.empty[String, Ann.PqIndex]
-
   private[graft] def pqPathFor(s: SparkSession, dir: String): String =
     built(s, dir, "embeddings", "pq") { p =>
       Ann.writePq(Ann.buildPq(rd(s, dir, "embeddings"), m = 2, ks = 16,
@@ -1601,7 +1602,7 @@ object SparkEntry {
 
   private[graft] def pqIndexFor(s: SparkSession, dir: String): Ann.PqIndex = {
     val path = pqPathFor(s, dir)
-    pqCache.synchronized(pqCache.getOrElseUpdate(path, Ann.readPq(s, path)))
+    memo("pq", path)(Ann.readPq(s, path))
   }
 
   /** PQ quantization-distortion audit over q65's build-once index (per
@@ -1673,26 +1674,20 @@ object SparkEntry {
     * bench median reflects the serving path, which is what an index
     * measures at 100 TB (an indexing job trains; queries probe).
     */
-  private val ivfPqCache =
-    collection.mutable.Map.empty[String, Ann.IvfPqIndex]
-
   private def ivfPqIndexFor(s: SparkSession, dir: String): Ann.IvfPqIndex =
-    ivfPqCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings")
-      ivfPqCache.getOrElseUpdate(key, {
-        val ivf = ivfIndexFor(s, dir)
-        val t0 = System.nanoTime()
-        // the persisted lists' row order follows their random part-file
-        // names; k-means' seeded sample and sums must not, so the
-        // training input is one partition in vec_id order
-        val pq = Ann.buildPq(
-          ivf.assigned.repartition(1).sortWithinPartitions("vec_id"),
-          m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random")
-        val enc = pq.encoded.localCheckpoint()
-        System.err.println(
-          f"[graft] q174 PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        Ann.IvfPqIndex(enc, ivf.centers, pq.codebooks)
-      })
+    memo("ivfpq", dirCacheKey(s, dir, "embeddings")) {
+      val ivf = ivfIndexFor(s, dir)
+      val t0 = System.nanoTime()
+      // the persisted lists' row order follows their random part-file
+      // names; k-means' seeded sample and sums must not, so the
+      // training input is one partition in vec_id order
+      val pq = Ann.buildPq(
+        ivf.assigned.repartition(1).sortWithinPartitions("vec_id"),
+        m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random")
+      val enc = pq.encoded.localCheckpoint()
+      System.err.println(
+        f"[graft] q174 PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      Ann.IvfPqIndex(enc, ivf.centers, pq.codebooks)
     }
 
   /** Residual-coded IVF-PQ gate (VERDICT r15 item 4's follow-through):
@@ -1712,22 +1707,16 @@ object SparkEntry {
     * trained once per data dir, encoded table localCheckpointed, every
     * later run pays probe + per-probe ADC + rerank only.
     */
-  private val ivfPqResCache =
-    collection.mutable.Map.empty[String, Ann.IvfPqIndex]
-
   private def ivfPqResIndexFor(s: SparkSession, dir: String): Ann.IvfPqIndex =
-    ivfPqResCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings")
-      ivfPqResCache.getOrElseUpdate(key, {
-        val t0 = System.nanoTime()
-        val idx = Ann.buildIvfPq(rd(s, dir, "embeddings"), nCentroids = 16,
-          m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random",
-          residual = true)
-        val enc = idx.encoded.localCheckpoint()
-        System.err.println(
-          f"[graft] q211 residual IVF-PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        idx.copy(encoded = enc)
-      })
+    memo("ivfpqres", dirCacheKey(s, dir, "embeddings")) {
+      val t0 = System.nanoTime()
+      val idx = Ann.buildIvfPq(rd(s, dir, "embeddings"), nCentroids = 16,
+        m = 2, ks = 16, seed = 42L, maxIter = 2, initMode = "random",
+        residual = true)
+      val enc = idx.encoded.localCheckpoint()
+      System.err.println(
+        f"[graft] q211 residual IVF-PQ train+encode ($dir): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      idx.copy(encoded = enc)
     }
 
   /** DuckDB replay of the residual-coded probe (q211): q174's oracle
@@ -3061,13 +3050,9 @@ object SparkEntry {
       shortlist = 32)
   }
 
-  private val sq8Cache = collection.mutable.Map.empty[String, Ann.Sq8Model]
-
   private def sq8ModelFor(s: SparkSession, dir: String): Ann.Sq8Model =
-    sq8Cache.synchronized {
-      sq8Cache.getOrElseUpdate(dirCacheKey(s, dir, "embeddings"),
-        Ann.sq8Train(rd(s, dir, "embeddings")))
-    }
+    memo("sq8", dirCacheKey(s, dir, "embeddings"))(
+      Ann.sq8Train(rd(s, dir, "embeddings")))
 
   /** DuckDB replay of the SQ8 path with the trained lo/span injected as
     * DOUBLE[] literals into BOTH engines: the query AND every corpus
@@ -3466,14 +3451,13 @@ object SparkEntry {
     * reachable from plain SQL.
     */
   private def qSqlSurface(s: SparkSession, dir: String): DataFrame = {
-    // q62-private names: registering plain "chunk_text"/"simhash32" here
-    // would SHADOW the GraftExtensions registrations for the rest of the
-    // session with a builder that drops the size/overlap arguments
+    // GraftExtensions' builders under q62-private names: registering the
+    // plain names here would shadow a session's own registrations
     val reg = s.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_q62_chunk_text",
-      exprs => graft.functions.ChunkText(exprs.head, 200, 50), "built-in")
-    reg.createOrReplaceTempFunction("graft_q62_simhash32",
-      exprs => graft.functions.SimHash(exprs.head), "built-in")
+    Seq("chunk_text", "simhash32").foreach { f =>
+      reg.createOrReplaceTempFunction(s"graft_q62_$f",
+        GraftExtensions.builder(f), "built-in")
+    }
     rdWide(s, dir, "documents").createOrReplaceTempView("graft_q62_docs")
     s.sql(
       """SELECT source, count(*) AS n_chunks,
@@ -3483,7 +3467,7 @@ object SparkEntry {
         |    split(lower(trim(content)), '\\s+'),
         |    x -> cast(conv(substr(md5(cast(x as binary)), 1, 8), 16, 10) as bigint))) AS sim
         | FROM graft_q62_docs
-        | LATERAL VIEW graft_q62_chunk_text(text) c AS chunk_index, total_chunks, content)
+        | LATERAL VIEW graft_q62_chunk_text(text, 200, 50) c AS chunk_index, total_chunks, content)
         |GROUP BY source""".stripMargin)
   }
 
@@ -3772,15 +3756,10 @@ object SparkEntry {
     * data dir ([[dirCacheKey]]) and shared by both queries and their
     * oracles.
     */
-  private val workingSetClusters =
-    collection.mutable.Map.empty[String, Ann.IvfIndex]
-
   private def workingSetClustersFor(s: SparkSession, dir: String): Ann.IvfIndex =
-    workingSetClusters.synchronized {
-      workingSetClusters.getOrElseUpdate(dirCacheKey(s, dir, "embeddings"),
-        Ann.buildIvf(rd(s, dir, "embeddings").filter(col("vec_id") < 2000),
-          nCentroids = 8, seed = 42L, maxIter = 4, initMode = "random"))
-    }
+    memo("workingset", dirCacheKey(s, dir, "embeddings"))(
+      Ann.buildIvf(rd(s, dir, "embeddings").filter(col("vec_id") < 2000),
+        nCentroids = 8, seed = 42L, maxIter = 4, initMode = "random"))
 
   /** DuckDB replay of everything downstream of SemDeDup training:
     * nearest-centroid assignment over the exported centroid literals,
@@ -6091,20 +6070,14 @@ object SparkEntry {
     * (same build-once discipline as the q28 IVF index): the fit is one
     * pass over the corpus; serving queries must not pay it again.
     */
-  private val whitenCache =
-    scala.collection.mutable.HashMap.empty[String, (Array[Array[Double]], Array[Double])]
-
   private def whitenModelFor(s: SparkSession, dir: String,
                              dims: Int): (Array[Array[Double]], Array[Double]) =
-    whitenCache.synchronized {
-      val key = dirCacheKey(s, dir, "embeddings") + s"|$dims"
-      whitenCache.getOrElseUpdate(key, {
-        val emb = rd(s, dir, "embeddings")
-        val (c, mean) = graft.search.Whiten.covMatrix(
-          graft.search.Whiten.covarianceFixedPoint(emb, dims = dims),
-          graft.search.Whiten.momentsFixedPoint(emb, dims = dims), dims)
-        (graft.search.Whiten.whiteningMatrix(c), mean)
-      })
+    memo("whiten", dirCacheKey(s, dir, "embeddings") + s"|$dims") {
+      val emb = rd(s, dir, "embeddings")
+      val (c, mean) = graft.search.Whiten.covMatrix(
+        graft.search.Whiten.covarianceFixedPoint(emb, dims = dims),
+        graft.search.Whiten.momentsFixedPoint(emb, dims = dims), dims)
+      (graft.search.Whiten.whiteningMatrix(c), mean)
     }
 
   /** End-to-end whitened retrieval: ZCA-whiten the 16-dim embedding

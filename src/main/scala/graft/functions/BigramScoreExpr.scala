@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -76,44 +77,21 @@ case class BigramWeightSum(child: Expression, weights: IndexedSeq[Long])
   * composed `element_at` form kept them too). Sub-2-token text yields
   * an empty array.
   */
-case class TokenBigramHashes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_bigram_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenBigramHashes.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenBigramHashes.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenBigramHashes {
 
   def apply(c: Column): Column =
-    ColumnShim.column(TokenBigramHashes(ColumnShim.expression(c)))
+    Kernel.column(this, "token_bigram_hashes",
+      ArrayType(LongType, containsNull = false), Seq(c -> StringType))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < 2)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.emptyLongArray)
+      return new GenericArrayData(Array.emptyLongArray)
     val bytes = new Array[Array[Byte]](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -135,7 +113,7 @@ object TokenBigramHashes {
       out(j) = (h << 4) | ((d(7) & 0xf0L) >> 4)
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -151,46 +129,23 @@ object TokenBigramHashes {
   * (tokenNgrams' `size >= n` semantics); tokenization is
   * `split(lower(trim(text)), '\s+')` limit -1, no empty filter.
   */
-case class TokenNgramHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_ngram_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName needs n >= 1, got $n")
-    else child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects a string column, got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenNgramHashes.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenNgramHashes.compute($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenNgramHashes {
 
-  def apply(c: Column, n: Int): Column =
-    ColumnShim.column(TokenNgramHashes(ColumnShim.expression(c), n))
+  def apply(c: Column, n: Int): Column = {
+    require(n >= 1, s"token_ngram_hashes needs n >= 1, got $n")
+    Kernel.column(this, "token_ngram_hashes",
+      ArrayType(LongType, containsNull = false), Seq(c -> StringType), Seq(n))
+  }
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String, n: Int): ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.emptyLongArray)
+      return new GenericArrayData(Array.emptyLongArray)
     val bytes = new Array[Array[Byte]](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -215,7 +170,7 @@ object TokenNgramHashes {
       out(j) = (h << 4) | ((d(7) & 0xf0L) >> 4)
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -240,29 +195,6 @@ object TokenNgramHashes {
   * vocabulary are ~V²/2^61 (V = 10⁶ → 4·10⁻⁷) — and the oracle replays
   * the identical hash, so a collision changes both engines identically.
   */
-case class TokenPairHashes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = TokenPairHashes.Schema
-
-  override def prettyName: String = "token_pair_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenPairHashes.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenPairHashes.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenPairHashes {
 
   val Schema: DataType = ArrayType(StructType(Seq(
@@ -270,7 +202,7 @@ object TokenPairHashes {
     StructField("h2", LongType, nullable = false))), containsNull = false)
 
   def apply(c: Column): Column =
-    ColumnShim.column(TokenPairHashes(ColumnShim.expression(c)))
+    Kernel.column(this, "token_pair_hashes", Schema, Seq(c -> StringType))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -290,11 +222,10 @@ object TokenPairHashes {
     (h << 4) | ((d(7) & 0xf0L) >> 4)
   }
 
-  def compute(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     if (toks.length < 2)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     val md = digestLocal.get()
     // hash each token slot once; pair j reuses slot j+1's hash as its h2
     val hs = new Array[Long](toks.length)
@@ -310,7 +241,7 @@ object TokenPairHashes {
       out(j) = new GenericInternalRow(Array[Any](hs(j), hs(j + 1)))
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 
@@ -321,40 +252,18 @@ object TokenPairHashes {
   * per-token md5-hex-parse expression tree; DedupSpec's simhash tests
   * pin kernel == composed.
   */
-case class TokenHashes32(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "token_hashes32"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TokenHashes32.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.TokenHashes32.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenHashes32 {
 
   def apply(c: Column): Column =
-    ColumnShim.column(TokenHashes32(ColumnShim.expression(c)))
+    Kernel.column(this, "token_hashes32",
+      ArrayType(LongType, containsNull = false), Seq(c -> StringType))
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val toks = s.trim().toLowerCase.toString.split("\\s+", -1)
     val md = digestLocal.get()
     val out = new Array[Long](toks.length)
@@ -366,7 +275,7 @@ object TokenHashes32 {
         ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 }
 

@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native count of BPE-ish pre-tokens in an ALREADY-LOWERCASED string:
@@ -20,33 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the Java/RE2 ASCII class `[ \t\n\x0B\f\r]`, matching what the regex
   * form (and the DuckDB oracle) treats as whitespace.
   */
-case class BpeTokenCount(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def prettyName: String = "bpe_token_count"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BpeTokenCount.count(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.BpeTokenCount.count($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BpeTokenCount {
 
   def apply(c: Column): Column =
-    ColumnShim.column(BpeTokenCount(ColumnShim.expression(c)))
+    Kernel.column(this, "bpe_token_count", IntegerType, Seq(c -> StringType))
 
   private final val S_OTHER = 0
   private final val S_LETTER = 1
@@ -55,7 +28,7 @@ object BpeTokenCount {
   /** Linear scan; iterates code points so astral-plane symbols count
     * once, exactly as a regex `.`-class match would.
     */
-  def count(s: UTF8String): Int = {
+  def compute(s: UTF8String): Int = {
     val str = s.toString
     var n = 0
     var state = S_OTHER

@@ -2,11 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types._
 
 /** Per-row bucket histogram of a hash array: counts of `h % buckets`
@@ -26,42 +22,20 @@ import org.apache.spark.sql.types._
   * histogram is computed before any exchange. DsirSpec pins the
   * kernel-histogram path == the composed per-occurrence phrasing.
   */
-case class BucketCounts(child: Expression, buckets: Int)
-    extends UnaryExpression {
+object BucketCounts {
 
-  override def dataType: DataType = ArrayType(
+  private val OutType: DataType = ArrayType(
     StructType(Seq(StructField("b", IntegerType, nullable = false),
       StructField("c", LongType, nullable = false))), containsNull = false)
 
-  override def prettyName: String = "bucket_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) if buckets >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs buckets >= 1, got $buckets")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint> hashes, got ${other.catalogString}")
+  def apply(hashes: Column, buckets: Int): Column = {
+    require(buckets >= 1, s"bucket_counts needs buckets >= 1, got $buckets")
+    Kernel.column(this, "bucket_counts", OutType,
+      Seq(hashes -> ArrayType(LongType)), Seq(buckets))
   }
-
-  override def nullSafeEval(input: Any): Any =
-    BucketCounts.compute(input.asInstanceOf[ArrayData], buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.BucketCounts.compute($a, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BucketCounts {
-
-  def apply(hashes: Column, buckets: Int): Column =
-    ColumnShim.column(BucketCounts(ColumnShim.expression(hashes), buckets))
 
   /** Single-pass histogram; input hashes are non-negative md5 prefixes
     * (containsNull = false arrays), so `% buckets` stays non-negative.
-    * Called from both interpreted eval and generated code.
     */
   def compute(hashes: ArrayData, buckets: Int): GenericArrayData = {
     val n = hashes.numElements()

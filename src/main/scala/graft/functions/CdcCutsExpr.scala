@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native CDC boundary scan: the q175 cut-position detector as ONE
@@ -27,36 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat(array(0), filter(...), array(len))`, with texts shorter than
   * 4 chars yielding `[0, len]`.
   */
-case class CdcCutPositions(child: Expression, modulus: Int)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def prettyName: String = "cdc_cut_positions"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if modulus >= 2 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs modulus >= 2, got $modulus")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    CdcCutPositions.compute(input.asInstanceOf[UTF8String], modulus)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.CdcCutPositions.compute($a, $modulus);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CdcCutPositions {
 
-  def apply(c: Column, modulus: Int): Column =
-    ColumnShim.column(CdcCutPositions(ColumnShim.expression(c), modulus))
+  def apply(c: Column, modulus: Int): Column = {
+    require(modulus >= 2, s"cdc_cut_positions needs modulus >= 2, got $modulus")
+    Kernel.column(this, "cdc_cut_positions",
+      ArrayType(IntegerType, containsNull = false), Seq(c -> StringType),
+      Seq(modulus))
+  }
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native character-class counter for the entropy profile
@@ -23,42 +19,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns `array<long>` of length 28 in class order (a..z, space,
   * other).
   */
-case class CharClassCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "char_class_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    CharClassCounts.counts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.CharClassCounts.counts($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CharClassCounts {
 
   /** Number of class slots: 26 letters + space + other. */
   val NumClasses: Int = 28
 
   def apply(c: Column): Column =
-    ColumnShim.column(CharClassCounts(ColumnShim.expression(c)))
+    Kernel.column(this, "char_class_counts",
+      ArrayType(LongType, containsNull = false), Seq(c -> StringType))
 
   /** One byte pass; the other-bucket is numChars − Σ(class counts), so
     * multi-byte code points count once each (code-point semantics, the
     * same unit as Spark's `length`).
     */
-  def counts(s: UTF8String): GenericArrayData = {
+  def compute(s: UTF8String): GenericArrayData = {
     val bytes = s.getBytes
     val out = new Array[Long](NumClasses)
     var i = 0

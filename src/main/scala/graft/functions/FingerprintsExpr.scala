@@ -3,12 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MOSS-style fingerprints over an ALREADY-NORMALIZED text
@@ -29,37 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * window to UTF-8 for hashing exactly as `cast(substr(...) as binary)`
   * does.
   */
-case class Fingerprints(child: Expression, k: Int = 16, modulo: Int = 16)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "fingerprints"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    Fingerprints.compute(input.asInstanceOf[UTF8String], k, modulo)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.Fingerprints.compute($a, $k, $modulo);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Fingerprints {
 
-  def apply(normalized: Column): Column =
-    ColumnShim.column(Fingerprints(ColumnShim.expression(normalized)))
-
-  def apply(normalized: Column, k: Int, modulo: Int): Column =
-    ColumnShim.column(Fingerprints(ColumnShim.expression(normalized), k, modulo))
+  def apply(normalized: Column, k: Int = 16, modulo: Int = 16): Column =
+    Kernel.column(this, "fingerprints", ArrayType(LongType, containsNull = false),
+      Seq(normalized -> StringType), Seq(k, modulo))
 
   private val digestLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")

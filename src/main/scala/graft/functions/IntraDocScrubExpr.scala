@@ -4,12 +4,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,32 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * until a driver GC. This kernel does the whole scrub per row
   * map-side; the only exchange left in q133 is the final top-k.
   */
-case class IntraDocScrub(child: Expression, w: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = IntraDocScrub.OutType
-
-  override def prettyName: String = "intra_doc_scrub"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if w >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs w >= 1, got $w")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> tokens, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    IntraDocScrub.compute(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.IntraDocScrub.compute($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object IntraDocScrub {
 
   val OutType: StructType = StructType(Seq(
@@ -69,8 +39,11 @@ object IntraDocScrub {
     StructField("cleaned_n_chars", LongType, nullable = false),
     StructField("cleaned_hash", LongType, nullable = false)))
 
-  def apply(tokens: Column, w: Int): Column =
-    ColumnShim.column(IntraDocScrub(ColumnShim.expression(tokens), w))
+  def apply(tokens: Column, w: Int): Column = {
+    require(w >= 1, s"intra_doc_scrub needs w >= 1, got $w")
+    Kernel.column(this, "intra_doc_scrub", OutType,
+      Seq(tokens -> ArrayType(StringType)), Seq(w))
+  }
 
   private val digestLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native k-gram hash array: every overlapping k-character window's
@@ -26,35 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * windows are CODE-POINT based (Spark substring semantics). Texts
   * shorter than k yield an empty array.
   */
-case class KgramHashes(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "kgram_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if k >= 2 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs k >= 2, got $k")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    KgramHashes.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.KgramHashes.compute($a, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object KgramHashes {
 
-  def apply(c: Column, k: Int): Column =
-    ColumnShim.column(KgramHashes(ColumnShim.expression(c), k))
+  def apply(c: Column, k: Int): Column = {
+    require(k >= 2, s"kgram_hashes needs k >= 2, got $k")
+    Kernel.column(this, "kgram_hashes", ArrayType(LongType, containsNull = false),
+      Seq(c -> StringType), Seq(k))
+  }
 
   private val digestLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =

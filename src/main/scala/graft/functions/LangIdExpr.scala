@@ -1,13 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.text.TextAnalysis
@@ -24,49 +19,14 @@ import graft.text.TextAnalysis
   * a static kernel. Value-identical by construction (same lists, same
   * counts, same tie order) — asserted by spec and the q16 DuckDB oracle.
   */
-case class LangId(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-
-  override def prettyName: String = "lang_id"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> tokens, got ${other.catalogString}")
-  }
+object LangId {
 
   // a null token array classifies as "unknown", matching the expression
   // form (its when-chain falls through null comparisons to the otherwise
-  // branch) — so this expression never returns null
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    LangId.classifyNullable(
-      if (v == null) null else v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val code =
-      code"""
-        ${c.code}
-        UTF8String ${ev.value} = graft.functions.LangId.classifyNullable(
-          ${c.isNull} ? null : ${c.value});
-      """
-    ev.copy(code = code,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object LangId {
-
+  // branch), so the output is never null and `compute` takes the null
   def apply(tokens: Column): Column =
-    ColumnShim.column(LangId(ColumnShim.expression(tokens)))
+    Kernel.column(this, "lang_id", StringType,
+      Seq(tokens -> ArrayType(StringType)), propagateNull = false)
 
   private val langs: Array[UTF8String] =
     TextAnalysis.StopwordLists.map(l => UTF8String.fromString(l._1)).toArray
@@ -88,11 +48,8 @@ object LangId {
 
   private val unknown = UTF8String.fromString("unknown")
 
-  /** Null-tolerant entry used by eval and generated code. */
-  def classifyNullable(tokens: ArrayData): UTF8String =
-    if (tokens == null) unknown else classify(tokens)
-
-  def classify(tokens: ArrayData): UTF8String = {
+  def compute(tokens: ArrayData): UTF8String = {
+    if (tokens == null) return unknown
     val n = tokens.numElements()
     val scores = new Array[Int](langs.length)
     var i = 0

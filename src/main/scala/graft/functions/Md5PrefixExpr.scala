@@ -41,7 +41,8 @@ case class Md5PrefixLong(child: Expression, hexLen: Int)
       s"$prettyName expects string or binary, got ${other.catalogString}")
   }
 
-  private val isString = child.dataType == StringType
+  // lazy: the child of a Column-API call is unresolved until analysis
+  private lazy val isString = child.dataType == StringType
 
   override def nullSafeEval(input: Any): Any =
     if (isString) Md5PrefixLong.computeString(input.asInstanceOf[UTF8String], hexLen)

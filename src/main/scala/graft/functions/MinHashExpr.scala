@@ -3,12 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.HashFunctions.{minhashA, minhashB, MinhashPrime}
@@ -36,49 +32,20 @@ import graft.functions.HashFunctions.{minhashA, minhashB, MinhashPrime}
   * microseconds, which is the difference between a day and minutes over
   * a 100 TB corpus.
   */
-case class MinHashSignature(child: Expression, n: Int = 3,
-                            numHashes: Int = MinHashSignature.DefaultNumHashes)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "minhash_signature"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> tokens, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSignature.compute(input.asInstanceOf[ArrayData], n, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.MinHashSignature.compute($a, $n, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
 
   val DefaultNumHashes: Int = 16
 
   /** Column-API entry point over a token-array column. */
-  def apply(tokens: Column): Column =
-    ColumnShim.column(MinHashSignature(ColumnShim.expression(tokens)))
-
-  def apply(tokens: Column, n: Int, numHashes: Int): Column =
-    ColumnShim.column(MinHashSignature(ColumnShim.expression(tokens), n, numHashes))
+  def apply(tokens: Column, n: Int = 3, numHashes: Int = DefaultNumHashes): Column =
+    Kernel.column(this, "minhash_signature", ArrayType(LongType, containsNull = false),
+      Seq(tokens -> ArrayType(StringType)), Seq(n, numHashes))
 
   private val digestLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  /** One-pass shingle→hash→minima kernel; called from both interpreted
-    * eval and generated code.
-    */
+  /** One-pass shingle→hash→minima kernel. */
   def compute(tokens: ArrayData, n: Int, k: Int): GenericArrayData = {
     val nTok = tokens.numElements()
     val md = digestLocal.get()

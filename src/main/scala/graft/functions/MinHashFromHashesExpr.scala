@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 import graft.functions.HashFunctions.{minhashA, minhashB, MinhashPrime}
 
@@ -36,43 +32,17 @@ import graft.functions.HashFunctions.{minhashA, minhashB, MinhashPrime}
   * Previously the signature pass and each verify side re-digested the
   * corpus independently (3 kernel passes per nearDupPairs call).
   */
-case class MinHashFromHashes(child: Expression,
-                             numHashes: Int = MinHashSignature.DefaultNumHashes)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "minhash_from_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) if numHashes >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs numHashes >= 1, got $numHashes")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint> shingle hashes, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashFromHashes.compute(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.MinHashFromHashes.compute($a, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashFromHashes {
 
-  def apply(hashes: Column): Column =
-    ColumnShim.column(MinHashFromHashes(ColumnShim.expression(hashes)))
-
-  def apply(hashes: Column, numHashes: Int): Column =
-    ColumnShim.column(MinHashFromHashes(ColumnShim.expression(hashes), numHashes))
+  def apply(hashes: Column,
+            numHashes: Int = MinHashSignature.DefaultNumHashes): Column = {
+    require(numHashes >= 1, s"minhash_from_hashes needs numHashes >= 1, got $numHashes")
+    Kernel.column(this, "minhash_from_hashes", ArrayType(LongType, containsNull = false),
+      Seq(hashes -> ArrayType(LongType)), Seq(numHashes))
+  }
 
   /** k affine minima over the 32-bit prefixes (h60 >>> 28) of the input
-    * hashes; called from both interpreted eval and generated code.
+    * hashes.
     */
   def compute(hashes: ArrayData, k: Int): GenericArrayData = {
     val n = hashes.numElements()

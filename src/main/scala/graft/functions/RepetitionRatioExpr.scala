@@ -1,11 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word n-gram repetition ratio (the Gopher-style boilerplate
@@ -22,39 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Gram identity stays STRING equality (not hash equality), so the
   * distinct count cannot diverge from the witness under collisions.
   */
-case class RepetitionRatio(child: Expression, n: Int = 5)
-    extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def prettyName: String = "repetition_ratio"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType =>
-      if (n >= 1) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"$prettyName n must be >= 1, got $n")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    RepetitionRatio.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.RepetitionRatio.compute($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepetitionRatio {
 
-  def apply(text: Column): Column =
-    ColumnShim.column(RepetitionRatio(ColumnShim.expression(text)))
-
-  def apply(text: Column, n: Int): Column =
-    ColumnShim.column(RepetitionRatio(ColumnShim.expression(text), n))
+  def apply(text: Column, n: Int = 5): Column = {
+    require(n >= 1, s"repetition_ratio n must be >= 1, got $n")
+    Kernel.column(this, "repetition_ratio", DoubleType,
+      Seq(text -> StringType), Seq(n))
+  }
 
   def compute(text: UTF8String, n: Int): Double = {
     // trim (ASCII space, like Spark trim) then lower (Unicode, like

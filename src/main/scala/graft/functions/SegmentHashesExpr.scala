@@ -3,12 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native hashes of the FULL non-overlapping `segLen`-token segments of
@@ -34,36 +30,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * segment — purely to hash and drop the string; the rewrite side needs
   * those strings (the output text), the counting side never did.
   */
-case class SegmentHashes(child: Expression, segLen: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "segment_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if segLen >= 1 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs segLen >= 1, got $segLen")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string column, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SegmentHashes.compute(input.asInstanceOf[UTF8String], segLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SegmentHashes.compute($a, $segLen);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SegmentHashes {
 
-  def apply(text: Column, segLen: Int): Column =
-    ColumnShim.column(SegmentHashes(ColumnShim.expression(text), segLen))
+  def apply(text: Column, segLen: Int): Column = {
+    require(segLen >= 1, s"segment_hashes needs segLen >= 1, got $segLen")
+    Kernel.column(this, "segment_hashes", ArrayType(LongType, containsNull = false),
+      Seq(text -> StringType), Seq(segLen))
+  }
 
   private val digestLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")

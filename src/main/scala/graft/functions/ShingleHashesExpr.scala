@@ -3,12 +3,8 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native distinct word-n-gram shingle hashes over a token array: the
@@ -33,44 +29,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * tight digest loop with zero intermediate strings and stays inside
   * whole-stage codegen via a static helper call.
   */
-case class ShingleHashes(child: Expression, n: Int = 3)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "shingle_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs n >= 1, got $n")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string> tokens, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashes.compute(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.ShingleHashes.compute($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ShingleHashes {
 
-  def apply(tokens: Column, n: Int): Column =
-    ColumnShim.column(ShingleHashes(ColumnShim.expression(tokens), n))
+  def apply(tokens: Column, n: Int): Column = {
+    require(n >= 1, s"shingle_hashes needs n >= 1, got $n")
+    Kernel.column(this, "shingle_hashes", ArrayType(LongType, containsNull = false),
+      Seq(tokens -> ArrayType(StringType)), Seq(n))
+  }
 
   private val digestLocal = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  /** One-pass shingle→md5Int60→distinct kernel; called from both
-    * interpreted eval and generated code.
-    */
+  /** One-pass shingle→md5Int60→distinct kernel. */
   def compute(tokens: ArrayData, n: Int): GenericArrayData = {
     val nTok = tokens.numElements()
     val md = digestLocal.get()

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Native 32-bit SimHash over an array of (non-negative) token hashes.
   *
@@ -18,20 +14,12 @@ import org.apache.spark.sql.types._
   * into whole-stage codegen: the shape you want when fingerprinting a
   * 100 TB corpus.
   */
-case class SimHash(child: Expression) extends UnaryExpression {
+object SimHash {
+  /** Column-API entry point: `SimHash(col("token_hashes"))`. */
+  def apply(c: Column): Column =
+    Kernel.column(this, "simhash32", LongType, Seq(c -> ArrayType(LongType)))
 
-  override def dataType: DataType = LongType
-
-  override def prettyName: String = "simhash32"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<bigint>, got ${other.catalogString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def compute(arr: ArrayData): Long = {
     val n = arr.numElements()
     val votes = new Array[Int](32)
     var i = 0
@@ -61,42 +49,4 @@ case class SimHash(child: Expression) extends UnaryExpression {
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      s"""
-         |final int $n = $a.numElements();
-         |final int[] $votes = new int[32];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    final long $h = $a.getLong($i);
-         |    for (int $b = 0; $b < 32; $b++) {
-         |      if ((($h >>> $b) & 1L) == 1L) $votes[$b]++; else $votes[$b]--;
-         |    }
-         |  } else {
-         |    // null element = -1 vote on every bit (witness parity)
-         |    for (int $b = 0; $b < 32; $b++) { $votes[$b]--; }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 32; $b++) {
-         |  if ($votes[$b] > 0) $out |= (1L << $b);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object SimHash {
-  /** Column-API entry point: `SimHash(col("token_hashes"))`. */
-  def apply(c: Column): Column = ColumnShim.column(SimHash(ColumnShim.expression(c)))
 }

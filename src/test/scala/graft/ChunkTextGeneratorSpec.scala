@@ -24,15 +24,13 @@ class ChunkTextGeneratorSpec extends SparkSpec {
 
   test("SQL LATERAL VIEW surface") {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "chunk_text",
-      exprs => graft.functions.ChunkText(exprs.head, 10, 2),
-      "built-in")
+      "chunk_text", GraftExtensions.builder("chunk_text"), "built-in")
     Seq((1L, "aaaa bbbb cccc dddd")).toDF("id", "text")
       .createOrReplaceTempView("chunk_docs")
     val got = spark.sql(
       """SELECT id, chunk_index, total_chunks, content
         |FROM chunk_docs
-        |LATERAL VIEW chunk_text(text) AS chunk_index, total_chunks, content
+        |LATERAL VIEW chunk_text(text, 10, 2) AS chunk_index, total_chunks, content
         |""".stripMargin).collect()
     assert(got.length > 1)
     assert(got.forall(_.getInt(2) == got.length)) // total_chunks consistent

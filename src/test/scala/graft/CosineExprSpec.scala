@@ -7,6 +7,11 @@ import graft.functions.{CosineSimilarity, VectorFunctions}
 class CosineExprSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Registers the builder GraftExtensions ships for `name`. */
+  private def register(name: String): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name, GraftExtensions.builder(name), "built-in")
+
   private def pairs = Seq(
     (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
     (Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0)),
@@ -55,10 +60,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface via function registration") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => graft.functions.CosineSimilarity(exprs(0), exprs(1)),
-      "built-in")
+    register("cosine_sim")
     val got = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS s")
       .as[Double].head()
@@ -71,13 +73,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface: bpe_token_count / lang_id / minhash_signature") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      exprs => graft.functions.BpeTokenCount(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("lang_id",
-      exprs => graft.functions.LangId(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => graft.functions.MinHashSignature(exprs.head), "built-in")
+    Seq("bpe_token_count", "lang_id", "minhash_signature").foreach(register)
     assert(spark.sql("SELECT bpe_token_count('ab1 cd!') AS n")
       .as[Int].head() == 4) // ab, 1, cd, !
     assert(spark.sql("SELECT lang_id(array('the','of','and')) AS l")
@@ -89,15 +85,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface: sign_bucket / fingerprints") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sign_bucket",
-      exprs => {
-        val bits = if (exprs.length < 2) 8
-          else exprs(1).eval().asInstanceOf[Number].intValue
-        graft.functions.SignBucket(exprs.head, bits)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("fingerprints",
-      exprs => graft.functions.Fingerprints(exprs.head), "built-in")
+    Seq("sign_bucket", "fingerprints").foreach(register)
     // bits 0,1,3 positive → 1 + 2 + 8
     assert(spark.sql(
       "SELECT sign_bucket(array(1.0f, 2.0f, -3.0f, 0.5f), 4) AS b")
@@ -108,14 +96,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface: kgram_hashes / cdc_cuts agree with the Column forms") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("kgram_hashes",
-      exprs => graft.functions.KgramHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue), "built-in")
-    reg.createOrReplaceTempFunction("cdc_cuts",
-      exprs => graft.functions.CdcCutPositions(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue),
-      "built-in")
+    Seq("kgram_hashes", "cdc_cuts").foreach(register)
     val hs = spark.sql("SELECT kgram_hashes('abcdef', 3) AS h")
       .as[Seq[Long]].head()
     // 4 windows: abc bcd cde def — each equal to md5Int60 of the window
@@ -131,13 +112,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface: repetition_ratio with default and explicit n") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("repetition_ratio",
-      exprs => {
-        val n = if (exprs.length < 2) 5
-          else exprs(1).eval().asInstanceOf[Number].intValue
-        graft.functions.RepetitionRatio(exprs.head, n)
-      }, "built-in")
+    register("repetition_ratio")
     assert(spark.sql("SELECT repetition_ratio('a b c') AS r")
       .as[Double].head() == 0.0) // < 5 tokens
     val r2 = spark.sql("SELECT repetition_ratio('a b a b a b', 2) AS r")
@@ -147,10 +122,7 @@ class CosineExprSpec extends SparkSpec {
   }
 
   test("SQL surface: sniff_format (built-in composition, not a custom expr)") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sniff_format",
-      exprs => graft.multimodal.Multimodal.sniffFormatExpr(exprs.head),
-      "built-in")
+    register("sniff_format")
     val got = spark.sql(
       """SELECT sniff_format(concat(unhex('89504E47'), cast('rest' as binary)))
         |  AS png,

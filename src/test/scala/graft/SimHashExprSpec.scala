@@ -50,9 +50,7 @@ class SimHashExprSpec extends SparkSpec {
 
   test("SQL surface: simhash32 registered via function registry") {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash32",
-      exprs => graft.functions.SimHash(exprs.head),
-      "built-in")
+      "simhash32", GraftExtensions.builder("simhash32"), "built-in")
     val got = spark.sql("SELECT simhash32(array(5L)) AS h").as[Long].head()
     assert(got == 5L)
   }
