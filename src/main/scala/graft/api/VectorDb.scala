@@ -1,10 +1,18 @@
 package graft.api
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.atomic.AtomicReference
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType, TimestampType}
 
 import graft.embed.Embedder
 import graft.search.Search
@@ -31,6 +39,13 @@ import graft.stats.Stats
   * batch (its measured O(corpus) bottleneck, SURVEY.md §1.4), this
   * facade appends parquet — O(batch) — and inherits Spark's scan
   * parallelism for every read path.
+  *
+  * Reads go through one snapshot per store state: the data-file listing,
+  * the corpus frame opened over it and the probed embedding dimension.
+  * Every read lists the store (a driver-side directory walk, no job) and
+  * reuses the snapshot while the listing is unchanged, so a warm query
+  * runs one Spark job, the top-k. Writers outside this object (an
+  * external append or overwrite) are seen by the next read.
   */
 final class VectorDb(spark: SparkSession, path: String,
                      embedder: Embedder = Embedder.Default) {
@@ -50,22 +65,91 @@ final class VectorDb(spark: SparkSession, path: String,
 
   private def storeDir: Path = Paths.get(path)
 
-  /** Run `f` over the store's file listing, closing the stream (a leaked
-    * DirectoryStream exhausts fds in a long-lived service).
+  /** One state of the store: its data files (path relative to the store
+    * → (size, mtime)), the corpus frame over them (None while the store
+    * holds no data file) and, once a query has sampled a stored row, the
+    * embedding dimension.
     */
-  private def withListing[A](f: java.util.stream.Stream[Path] => A): A = {
-    val s = Files.list(storeDir)
-    try f(s) finally s.close()
+  private final case class Snapshot(files: Map[String, (Long, Long)],
+                                    frame: Option[DataFrame], dim: Option[Int])
+
+  // the server's pool reads and replaces the snapshot from several threads
+  private val current = new AtomicReference(Snapshot(Map.empty, None, None))
+
+  /** The store's data files as Spark's file index lists them: names that
+    * start with `_` or `.` (commit markers, checksums, a write's
+    * in-flight `_temporary` output) are skipped and partition
+    * directories are walked. A file that vanishes mid-listing is left out.
+    */
+  private def dataFiles(): Map[String, (Long, Long)] = {
+    val files = Map.newBuilder[String, (Long, Long)]
+    def walk(dir: Path): Unit = {
+      val entries =
+        try { val s = Files.list(dir); try s.iterator.asScala.toList finally s.close() }
+        catch { case _: NoSuchFileException => Nil }
+      entries.foreach { p =>
+        val name = p.getFileName.toString
+        if (!name.startsWith("_") && !name.startsWith(".")) try {
+          val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+          if (a.isDirectory) walk(p)
+          else files += storeDir.relativize(p).toString ->
+            (a.size, a.lastModifiedTime.toMillis)
+        } catch { case _: NoSuchFileException => }
+      }
+    }
+    walk(storeDir)
+    files.result()
   }
 
-  private def exists: Boolean =
-    Files.exists(storeDir) && withListing(_.findFirst().isPresent)
-
-  /** The corpus as a DataFrame (empty-schema-free: callers should check
-    * [[health]] first; reads of a never-written store throw like a
-    * missing table would).
+  /** The corpus frame over `files`. A flat store is read with the schema
+    * Spark wrote into the footer of its first file by path, the file
+    * Spark's own schema inference reads, so opening it runs no job. A
+    * partitioned store, or a first file without Spark's schema, is read
+    * with inference.
     */
-  def corpus(): DataFrame = spark.read.parquet(path)
+  private def open(files: Map[String, (Long, Long)]): Option[DataFrame] =
+    if (files.isEmpty) None
+    else Some {
+      val flat = !files.keys.exists(_.contains(java.io.File.separator))
+      val schema = if (flat) footerSchema(storeDir.resolve(files.keys.min)) else None
+      schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    }
+
+  private def footerSchema(file: Path): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new HadoopPath(file.toUri), spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+    Option(json).flatMap(j => Try(DataType.fromJson(j)).toOption).collect {
+      case s: StructType => s
+    }
+  }
+
+  /** The snapshot of the store as it is now: the current one while the
+    * listing is unchanged, else a new one. A new snapshot keeps the
+    * probed dimension when every file of the old one is still there
+    * unchanged, since an append-only change leaves the sampled row
+    * stored; any other change drops it, so the next query samples the
+    * new store (quirk 8 always checks a stored row).
+    */
+  private def snapshot(): Snapshot = {
+    val files = dataFiles()
+    val old = current.get
+    if (files == old.files) old
+    else {
+      val appended = old.files.forall { case (f, st) => files.get(f).contains(st) }
+      val next = Snapshot(files, open(files), if (appended) old.dim else None)
+      current.compareAndSet(old, next)
+      next
+    }
+  }
+
+  /** The corpus as a DataFrame, read through the current snapshot. A
+    * store with no data file throws an IllegalStateException.
+    */
+  def corpus(): DataFrame = snapshot().frame.getOrElse(
+    throw new IllegalStateException(s"the store at $path holds no data files"))
 
   /** S7/F5: validate (embedding + content present) and append. Duplicate
     * content accumulates — append is the reference's contract (§2.9.5),
@@ -97,23 +181,35 @@ final class VectorDb(spark: SparkSession, path: String,
   /** Query with a caller-supplied vector; its dimension must match the
     * corpus's (checked against one stored row, like the reference checks
     * `embeddings[0]` — §2.9.8) and an empty corpus is a hard error
-    * (`mock_vector_db_api.py:258-260`).
+    * (`mock_vector_db_api.py:258-260`), thrown without a job when the
+    * store holds no data file. The stored row is sampled once per
+    * snapshot, so a warm query runs one job.
     */
   def queryVec(vec: Seq[Double], topK: Int = 5, idCol: String = "path"): DataFrame = {
     val k = if (topK <= 0) 5 else topK // quirk 7: silent coercion
-    val c = corpus()
-    // Sample a non-null embedding: rows written by paths other than
-    // addDocuments may carry nulls, and size(null) would NPE here.
-    val sample = c.filter(col("embedding").isNotNull)
-      .select(size(col("embedding"))).head(1)
-    if (sample.isEmpty) throw new IllegalStateException(
-      "query against a corpus with no embeddings (reference returns HTTP 400 here)")
-    val dim = sample.head.getInt(0)
+    val snap = snapshot()
+    val c = snap.frame.getOrElse(throw noEmbeddings)
+    val dim = snap.dim.getOrElse {
+      // Sample a non-null embedding: rows written by paths other than
+      // addDocuments may carry nulls, and size(null) would NPE here.
+      val sample = c.filter(col("embedding").isNotNull)
+        .select(size(col("embedding"))).head(1)
+      if (sample.isEmpty) throw noEmbeddings
+      val d = sample.head.getInt(0)
+      current.compareAndSet(snap, snap.copy(dim = Some(d)))
+      d
+    }
     require(vec.length == dim,
       s"query vector dimension ${vec.length} != corpus dimension $dim")
-    Search.topK(c, vec, k = k, threshold = 0.1, idCol = idCol,
+    // the reference requires only content and embedding (§1.2): a store
+    // without the id column breaks score ties on the content
+    val tieBreak = if (c.columns.contains(idCol)) idCol else "content"
+    Search.topK(c, vec, k = k, threshold = 0.1, idCol = tieBreak,
       vecCol = "embedding")
   }
+
+  private def noEmbeddings = new IllegalStateException(
+    "query against a corpus with no embeddings (reference returns HTTP 400 here)")
 
   /** A1-A5: the `/stats` report in one pass over the corpus (plus the
     * tiny per-extension histogram), computed with the same last-wins
@@ -169,7 +265,7 @@ final class VectorDb(spark: SparkSession, path: String,
     if (!Files.exists(storeDir)) return None
     val entries = walkTree(storeDir)
     val bak =
-      if (backup && exists) {
+      if (backup && entries.nonEmpty) {
         val dst = Paths.get(s"$path.backup_${System.currentTimeMillis()}")
         Files.createDirectories(dst)
         entries.foreach { f =>
@@ -188,10 +284,13 @@ final class VectorDb(spark: SparkSession, path: String,
     bak
   }
 
-  /** S9: row count + store existence (the reference's health payload). */
-  def health(): Health = {
-    val ok = exists
-    val n = if (ok) corpus().count() else 0L
-    Health(if (ok) "healthy" else "empty", n, ok)
+  /** S9: row count + store existence (the reference's health payload);
+    * a store with no data file is "empty".
+    */
+  def health(): Health = snapshot().frame match {
+    // per-partition row counts summed on the driver: one job, where
+    // count()'s exchange takes two under adaptive execution
+    case Some(c) => Health("healthy", c.select().rdd.count(), true)
+    case None => Health("empty", 0L, false)
   }
 }

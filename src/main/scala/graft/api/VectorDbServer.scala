@@ -3,6 +3,12 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -12,11 +18,13 @@ import org.apache.spark.sql.SparkSession
   * GET /health) as an actual socket listener over [[VectorDb]],
   * closing the "facade only, no listener" gap noted in round-5's
   * verdict. Zero new dependencies: the JDK's built-in
-  * `com.sun.net.httpserver` serves, and Spark itself is the JSON
-  * codec — request bodies parse through `spark.read.json` (schema
-  * inference handles the embedding arrays) and result rows serialize
-  * through `DataFrame.toJSON`, so the wire format can never drift
-  * from the engine's own JSON dialect.
+  * `com.sun.net.httpserver` serves. `/add_documents` bodies parse
+  * through `spark.read.json` (schema inference handles the document
+  * rows) and result rows serialize through `DataFrame.toJSON`, so stored
+  * and answered rows keep the engine's own JSON dialect. A `/query` body
+  * is two fields, so it parses on the driver with Jackson (already on
+  * Spark's classpath) under the leniency and the cast rules Spark's
+  * reader would apply: a warm query then runs one Spark job, the top-k.
   *
   * Error contract mirrors the reference: malformed/empty JSON → 400
   * `{"error": ...}`; querying an empty corpus → 400 (the reference's
@@ -63,7 +71,7 @@ final class VectorDbServer(spark: SparkSession, db: VectorDb, port: Int = 0) {
     new String(out.toByteArray, UTF_8)
   }
 
-  /** Parse one JSON object through Spark (the engine IS the codec). */
+  /** Parse an `/add_documents` body through Spark (the engine is the codec). */
   private def parseJson(s: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     spark.read.json(Seq(s).toDS())
@@ -116,27 +124,14 @@ final class VectorDbServer(spark: SparkSession, db: VectorDb, port: Int = 0) {
         }
 
       case ("POST", "/query") =>
-        val parsed = parseJson(body(ex))
-        if (!parsed.columns.contains("query_embedding"))
-          respond(ex, 400, """{"error": "No query_embedding provided"}""")
-        else {
-          // coalesce handles "top_k": null (quirk-7 coercion happens in
-          // queryVec anyway; this keeps a JSON null from NPE-ing to 500)
-          val row = parsed.selectExpr(
-            "cast(query_embedding as array<double>) as q",
-            if (parsed.columns.contains("top_k"))
-              "coalesce(cast(top_k as int), 5) as k"
-            else "5 as k").head()
-          if (row.isNullAt(0))
+        VectorDbServer.parseQuery(body(ex)) match {
+          case None =>
             respond(ex, 400, """{"error": "No query_embedding provided"}""")
-          else {
-            val vec = row.getSeq[Double](0)
-            val k = row.getInt(1)
+          case Some((vec, k)) =>
             val results = db.queryVec(vec, topK = k).toJSON.collect()
             respond(ex, 200,
               s"""{"results": ${results.mkString("[", ",", "]")},""" +
               s""" "total_results": ${results.length}}""")
-          }
         }
 
       case _ => respond(ex, 404, """{"error": "not found"}""")
@@ -171,6 +166,68 @@ object VectorDbServer {
 
   final class BodyTooLarge(got: Long) extends RuntimeException(
     s"request body too large ($got bytes > cap $MaxBodyBytes)")
+
+  // Spark's JSON reader allows single quotes and NaN/Infinity by default
+  private val mapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /** A `/query` body as (query vector, top_k), None when it carries no
+    * `query_embedding` or is not JSON. It reads as `spark.read.json` plus
+    * `cast(query_embedding as array<double>)` and
+    * `coalesce(cast(top_k as int), 5)` read it: a top-level array stands
+    * for its first element and what follows the first value is ignored;
+    * a missing or null top_k is 5, a number truncates, a string parses
+    * as an int, true is 1; a null vector element is 0.0 and a string
+    * element parses as a double. A value that does not convert throws
+    * IllegalArgumentException in Spark's cast wording.
+    */
+  private[api] def parseQuery(body: String): Option[(Seq[Double], Int)] = {
+    val root = Try(mapper.readTree(body)).getOrElse(null)
+    val req = if (root != null && root.isArray) root.get(0) else root
+    if (req == null || !req.isObject || !req.has("query_embedding")) None
+    else Some((vector(req.get("query_embedding")), topK(req.get("top_k"))))
+  }
+
+  private def vector(n: JsonNode): Seq[Double] = {
+    if (!n.isArray) throw mismatch("query_embedding", n, "ARRAY<DOUBLE>")
+    n.elements.asScala.map { e =>
+      if (e.isNumber) e.asDouble
+      else if (e.isNull) 0.0
+      else if (e.isTextual) Try(e.asText.trim.toDouble).getOrElse(
+        throw malformed(e.asText, "DOUBLE"))
+      else throw mismatch("query_embedding", e, "DOUBLE")
+    }.toSeq
+  }
+
+  private def topK(n: JsonNode): Int =
+    if (n == null || n.isNull) 5
+    else if (n.isBoolean) (if (n.asBoolean) 1 else 0)
+    else if (n.isTextual) n.asText.trim.toIntOption.getOrElse(
+      throw malformed(n.asText, "INT"))
+    else if (n.isNumber) {
+      val d = n.asDouble
+      if (!(d > Int.MinValue - 1.0 && d < Int.MaxValue + 1.0))
+        throw new IllegalArgumentException(
+          s"""The value $n of the type "${sparkType(n)}" cannot be cast to "INT" due to an overflow.""")
+      d.toInt
+    }
+    else throw mismatch("top_k", n, "INT")
+
+  private def sparkType(n: JsonNode): String =
+    if (n.isNull || n.isTextual) "STRING" // Spark infers an all-null field as a string
+    else if (n.isIntegralNumber) "BIGINT"
+    else if (n.isNumber) "DOUBLE"
+    else if (n.isBoolean) "BOOLEAN"
+    else if (n.isArray) "ARRAY"
+    else "STRUCT"
+
+  private def mismatch(field: String, n: JsonNode, to: String) =
+    new IllegalArgumentException(s"""Cannot resolve "$field" due to data type """ +
+      s"""mismatch: cannot cast "${sparkType(n)}" to "$to".""")
+
+  private def malformed(v: String, to: String) = new IllegalArgumentException(
+    s"""The value '$v' of the type "STRING" cannot be cast to "$to" because it is malformed.""")
 
   /** JSON string literal: escapes backslash, quote and ALL control chars
     * (< 0x20); a null becomes the string `"null"`. Also the escaper of
