@@ -182,7 +182,7 @@ object VectorDbServer {
     * element parses as a double. A value that does not convert throws
     * IllegalArgumentException in Spark's cast wording.
     */
-  private[api] def parseQuery(body: String): Option[(Seq[Double], Int)] = {
+  private def parseQuery(body: String): Option[(Seq[Double], Int)] = {
     val root = Try(mapper.readTree(body)).getOrElse(null)
     val req = if (root != null && root.isArray) root.get(0) else root
     if (req == null || !req.isObject || !req.has("query_embedding")) None
